@@ -94,49 +94,17 @@ def load_history(fp: str, n_pages: int) -> tuple[dict[str, list[dict]], list[dic
 def lc_summary(fp: str, n_pages: int) -> str:
     """Markdown section summarizing the EXECUTOR-axis evidence (real
     executor JVMs via local-cluster, bench/scaling_lc.py) for this engine
-    fingerprint — pooled minima over the LATEST lc-harness fingerprint only,
-    so a harness fix (e.g. per-executor GC-pool sizing) never pools with
-    rows measured before it. Full methodology in BENCH/LOCAL_CLUSTER.md."""
-    rows = []
-    if HISTORY.exists():
-        for line in HISTORY.read_text().splitlines():
-            if not line.strip():
-                continue
-            r = json.loads(line)
-            if (
-                r.get("kind") == "round_lc"
-                and r.get("fp") == fp
-                and r.get("n_pages") == n_pages
-            ):
-                rows.append(r)
-    if not rows:
+    fingerprint and the CURRENT lc-harness source (scaling_lc.lc_fingerprint),
+    forced-distributed rows only — the same pool bench/scaling_lc.py
+    reports, through the same formatter. Empty when no row matches. Full
+    methodology in BENCH/LOCAL_CLUSTER.md."""
+    from scaling_lc import lc_fingerprint, load_rounds, pooled
+
+    lcfp = lc_fingerprint()
+    rounds = load_rounds(fp, lcfp, n_pages, "distributed")
+    if not rounds:
         return ""
-    lcfp = max(rows, key=lambda r: r["ts"])["lcfp"]
-    rows = [r for r in rows if r["lcfp"] == lcfp]
-    levels = sorted({r["level"] for r in rows}, key=lambda s: int(s.split("x")[0]))
-    best = {
-        lv: min((r for r in rows if r["level"] == lv), key=lambda r: r["secs"])
-        for lv in levels
-    }
-    pairs = [
-        (a, b)
-        for i, a in enumerate(levels)
-        for b in levels[i + 1:]
-        if int(b.split("x")[0]) == 4 * int(a.split("x")[0])
-        and b.split("x")[1] == a.split("x")[1]
-    ]
-    table = "\n".join(
-        f"| local-cluster[{lv.replace('x', ' exec x ')} cores] | "
-        f"{best[lv]['secs']} | {round(n_pages / best[lv]['secs'], 1)} | "
-        f"{round(best[lv]['triples'] / best[lv]['secs'], 1)} | "
-        f"{sum(1 for r in rows if r['level'] == lv)} |"
-        for lv in levels
-    )
-    effs = "\n".join(
-        f"- **{a} -> {b} executors (x4 executors): "
-        f"{(best[a]['secs'] / best[b]['secs']) / 4:.3f}**"
-        for a, b in pairs
-    )
+    pool = pooled(rounds, n_pages)
     return f"""## N -> 4N EXECUTORS (real executor JVMs, local-cluster proxy)
 
 The tables above scale THREADS in one shared JVM heap; the north rule
@@ -149,11 +117,9 @@ cores and heap fixed. Same forced-distributed job, same corpus, same
 pooled-minima methodology (lc-harness fingerprint {lcfp}; full
 methodology + bias notes in BENCH/LOCAL_CLUSTER.md):
 
-| cluster size | wall (s) | pages/s | triples/s | rounds pooled |
-|---|---|---|---|---|
-{table}
+{pool["table"]}
 
-{effs}
+{pool["eff_lines"]}
 
 """
 

@@ -81,6 +81,50 @@ def load_rounds(fp: str, lcfp: str, n_pages: int, mode: str) -> list[dict]:
     return rounds
 
 
+def pooled(rounds: list[dict], n_pages: int) -> dict:
+    """Per-level pooled minima of `rounds`: the levels (by executor count),
+    best row and round count per level, the efficiency of every 4x-executor
+    pair, and the markdown table and efficiency lines that both this
+    report and BENCH/BASELINE.md (scaling.lc_summary) print."""
+    levels = sorted({r["level"] for r in rounds}, key=lambda s: int(s.split("x")[0]))
+    best = {
+        lv: min((r for r in rounds if r["level"] == lv), key=lambda r: r["secs"])
+        for lv in levels
+    }
+    n_rounds = {lv: sum(1 for r in rounds if r["level"] == lv) for lv in levels}
+    effs = {
+        (a, b): (best[a]["secs"] / best[b]["secs"]) / 4
+        for i, a in enumerate(levels)
+        for b in levels[i + 1:]
+        if int(b.split("x")[0]) == 4 * int(a.split("x")[0])
+        and b.split("x")[1] == a.split("x")[1]
+    }
+    table = "\n".join(
+        [
+            "| cluster size | wall (s) | pages/s | triples/s | rounds pooled |",
+            "|---|---|---|---|---|",
+        ]
+        + [
+            f"| local-cluster[{lv.replace('x', ' exec x ')} cores] | "
+            f"{best[lv]['secs']} | {round(n_pages / best[lv]['secs'], 1)} | "
+            f"{round(best[lv]['triples'] / best[lv]['secs'], 1)} | {n_rounds[lv]} |"
+            for lv in levels
+        ]
+    )
+    eff_lines = "\n".join(
+        f"- **{a} -> {b} executors (x4 executors, per-executor cores+heap "
+        f"fixed): {e:.3f}**" for (a, b), e in effs.items()
+    )
+    return {
+        "levels": levels,
+        "best": best,
+        "n_rounds": n_rounds,
+        "effs": effs,
+        "table": table,
+        "eff_lines": eff_lines,
+    }
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     report_only = "--report-only" in sys.argv[1:]
@@ -127,24 +171,11 @@ def main() -> int:
               file=sys.stderr)
         return 1
 
-    levels_m = sorted({r["level"] for r in rounds},
-                      key=lambda s: int(s.split("x")[0]))
-    best = {
-        lv: min((r for r in rounds if r["level"] == lv), key=lambda r: r["secs"])
-        for lv in levels_m
-    }
-    n_rounds = {lv: sum(1 for r in rounds if r["level"] == lv) for lv in levels_m}
+    pool = pooled(rounds, n_pages)
+    levels_m, best, n_rounds, effs = (
+        pool["levels"], pool["best"], pool["n_rounds"], pool["effs"]
+    )
     windows = sorted({r["run"] for r in rounds})
-    pairs = [
-        (a, b)
-        for i, a in enumerate(levels_m)
-        for b in levels_m[i + 1:]
-        if int(b.split("x")[0]) == 4 * int(a.split("x")[0])
-        and b.split("x")[1] == a.split("x")[1]
-    ]
-    effs = {
-        (a, b): (best[a]["secs"] / best[b]["secs"]) / 4 for a, b in pairs
-    }
     by_run: dict[str, dict[str, float]] = {}
     for r in rounds:
         w = by_run.setdefault(r["run"], {})
@@ -155,7 +186,7 @@ def main() -> int:
             for w in by_run.values()
             if p[0] in w and p[1] in w
         )
-        for p in pairs
+        for p in effs
     }
 
     def _median(vs):
@@ -163,16 +194,6 @@ def main() -> int:
             vs[len(vs) // 2 - 1] + vs[len(vs) // 2]
         ) / 2
 
-    rows = "\n".join(
-        f"| local-cluster[{lv.replace('x', ' exec x ')} cores] | "
-        f"{best[lv]['secs']} | {round(n_pages / best[lv]['secs'], 1)} | "
-        f"{round(best[lv]['triples'] / best[lv]['secs'], 1)} | {n_rounds[lv]} |"
-        for lv in levels_m
-    )
-    eff_rows = "\n".join(
-        f"- **{a} -> {b} executors (x4 executors, per-executor cores+heap "
-        f"fixed): {e:.3f}**" for (a, b), e in effs.items()
-    )
     paired_rows = "\n".join(
         f"- {a} -> {b}: median {_median(v):.3f}, best window {v[-1]:.3f}, "
         f"worst {v[0]:.3f} ({len(v)} windows with both levels)"
@@ -206,13 +227,11 @@ sizes, so the pair below UNDER-states true executor scaling.
 Pooled per-level minima over {len(rounds)} interleaved rounds across
 {len(windows)} windows:
 
-| cluster size | wall (s) | pages/s | triples/s | rounds pooled |
-|---|---|---|---|---|
-{rows}
+{pool["table"]}
 
 Scaling efficiency per 4x-executor pair ((thr_4N/thr_N)/4):
 
-{eff_rows}
+{pool["eff_lines"]}
 
 Paired within-window ratios (drift cancels inside a window):
 

@@ -10,7 +10,7 @@ DataFrame resolved via MinHash-LSH blocking + connected components.
 
 Pipeline: pages(url, warc_ts, html, text, lang)
   -> extract_text (Arrow pandas UDF, byte-stable per url)
-  -> detect_mentions (JVM regexp fast path; pandas-UDF parity impl)
+  -> mention/membership span regexes (fused into the same Arrow pass)
   -> classify (broadcast CSV override join + keyword/suffix rules)
   -> entity merge (groupBy(entity_id) — reference extract.js upserts)
   -> MinHash-LSH blocking -> candidate scoring -> connected components

@@ -12,26 +12,15 @@ SURVEY.md §2.9) for the web-scale pipeline. Precedence:
    reference extract.js:28) — suffix match on the slugged name;
 4. default person (reference extract.js:31-32).
 
-Two implementations of the heuristic part with identical output:
-- `with_entity_type` — pure Column expressions (JVM, codegen). DEFAULT.
-- `classify_names_pandas` — Arrow-batched pandas UDF (the batched
-  mention-type classifier surface the north star names).
+The heuristic part is pure Column expressions (`with_entity_type`: JVM,
+codegen), run once per distinct surface.
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StringType
 
-from ocds_entity_extract_spark.functions.text import (
-    _ACC_DST,
-    _ACC_SRC,
-    collapse_ws,
-    simple_name,
-)
+from ocds_entity_extract_spark.functions.text import collapse_ws
 
 # institution first-word keywords, accent-stripped lowercase
 INSTITUTION_KEYWORDS = [
@@ -145,35 +134,3 @@ def with_entity_type(
     return joined.withColumn(
         "entity_type", F.coalesce(F.col("override_type"), heur)
     ).drop("override_type")
-
-
-# ---- pandas-UDF parity implementation -----------------------------------
-
-_SUFFIX_RE_PY = re.compile(COMPANY_SUFFIX_SLUG_RE)
-_KW = frozenset(INSTITUTION_KEYWORDS)
-_TRANS = str.maketrans(_ACC_SRC, _ACC_DST)
-_NON_ALNUM = re.compile(r"[^a-z0-9]+")
-
-
-def _slug_py(s: str) -> str:
-    """Same translate-table slug as functions.text.simple_name."""
-    return _NON_ALNUM.sub("-", s.translate(_TRANS).lower()).strip("-")
-
-
-@F.pandas_udf(StringType())
-def classify_names_pandas(name: pd.Series) -> pd.Series:
-    """Vectorized heuristic classifier (no override): Arrow-batched analogue
-    of laundry.isCompany/companyType + institution keywords."""
-
-    def one(s: str | None) -> str | None:
-        if s is None:
-            return None
-        slug = _slug_py(s)
-        first = slug.split("-", 1)[0]
-        if first in _KW:
-            return "institution"
-        if _SUFFIX_RE_PY.search(slug):
-            return "company"
-        return "person"
-
-    return name.map(one)

@@ -66,15 +66,10 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _cc_driver_side(edges: DataFrame) -> DataFrame:
-    """Small-graph fast path: union-find on the collected edge list.
-
-    The size-adaptive analogue of a broadcast join: below the threshold the
-    distributed star loop is pure scheduling overhead (dozens of tiny jobs),
-    while the edge list fits trivially in driver memory. Same output
-    contract as the distributed path (canonical = component min id).
-    """
-    spark = edges.sparkSession
+def union_find(pairs) -> dict:
+    """Undirected (a, b) pairs -> {node: component min node} for every node
+    in a pair. Shared by the small-graph CC fast path below and the
+    driver-side linking (operators/linking.linking_canon_dict)."""
     parent: dict = {}
 
     def find(x):
@@ -85,19 +80,28 @@ def _cc_driver_side(edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for row in edges.collect():
-        a, b = row["src"], row["dst"]
+    for a, b in pairs:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
 
-    mapping = [(n, find(n)) for n in parent]
+
+def _cc_driver_side(edges: DataFrame) -> DataFrame:
+    """Small-graph fast path: union-find on the collected edge list.
+
+    The size-adaptive analogue of a broadcast join: below the threshold the
+    distributed star loop is pure scheduling overhead (dozens of tiny jobs),
+    while the edge list fits trivially in driver memory. Same output
+    contract as the distributed path (canonical = component min id).
+    """
+    roots = union_find((r["src"], r["dst"]) for r in edges.collect())
     schema = edges.select(
         F.col("src").alias("entity_id"), F.col("src").alias("canonical_id")
     ).schema
-    return spark.createDataFrame(mapping, schema=schema)
+    return edges.sparkSession.createDataFrame(list(roots.items()), schema=schema)
 
 
 def connected_components(

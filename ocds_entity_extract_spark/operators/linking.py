@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ocds_entity_extract_spark.operators.cc import union_find
+
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BAND_SIZE = 2          # r: minhashes per band -> B = K / r bands
 # verification: overlap coefficient |A∩B| / min(|A|,|B|) — robust for the
@@ -485,35 +487,7 @@ def linking_canon_dict(
     identity entries for singletons. The driver-side twin of
     `canonical_mapping(ids, verified_edges(ids, hash_family=...))` as a
     plain dict — the zero-shuffle assembly path (plans/pipeline.py)
-    broadcasts it to the Python workers, and `linking_mapping_driver_side`
-    wraps it as a DataFrame for join consumers."""
+    broadcasts it to the Python workers."""
     edges = verified_edges_py(slugs, hash_family=hash_family)
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for src, dst, _c, _j in edges:
-        parent.setdefault(src, src)
-        parent.setdefault(dst, dst)
-        ra, rb = find(src), find(dst)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    return {s: (find(s) if s in parent else s) for s in sorted(set(slugs))}
-
-
-def linking_mapping_driver_side(
-    spark, slugs: list[str], hash_family: str = "portable"
-) -> "DataFrame":
-    """ids -> (entity_id, canonical_id) via `linking_canon_dict`. Output
-    contract identical to `canonical_mapping(ids, verified_edges(ids))`."""
-    canon = linking_canon_dict(slugs, hash_family=hash_family)
-    return spark.createDataFrame(
-        sorted(canon.items()), "entity_id string, canonical_id string"
-    )
+    roots = union_find((src, dst) for src, dst, _c, _j in edges)
+    return {s: roots.get(s, s) for s in sorted(set(slugs))}

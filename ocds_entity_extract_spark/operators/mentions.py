@@ -5,15 +5,12 @@ extract.js:8-10): where OCDS hands the reference a parties array per record,
 a web page hands us raw text, so mentions are detected as capitalized name
 spans (persons, companies with legal suffixes, keyword-led institutions).
 
-Two implementations with identical output (parity-tested):
-- `detect_mentions`       — JVM fast path: `regexp_extract_all` inside
-  WholeStageCodegen; zero Python in the hot loop. DEFAULT.
-- `detect_mentions_pandas`— Arrow-batched pandas UDF (`input_hint` surface:
-  batched mention detection as pandas UDFs over Arrow record batches).
-
-The regex is a single pattern valid under BOTH Java and Python `re`
-semantics (only char classes / non-capturing groups / \\s), so the two paths
-and the datagen golden derivation can never drift.
+The batch pipeline extracts spans in one Arrow-batched pandas UDF
+(`detect_spans_fused`); `detect_mentions` is the JVM path over extracted
+text (`regexp_extract_all` inside WholeStageCodegen) that the streaming
+jobs use. The regex is a single pattern valid under BOTH Java and Python
+`re` semantics (only char classes / non-capturing groups / \\s), so the two
+paths and the datagen golden derivation can never drift (parity-tested).
 
 Membership detection (analogue of the six membership constructors,
 reference extract.js:1102-1218): sentences "X, <role> de Y" -> memberOf
@@ -24,7 +21,6 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 from ocds_entity_extract_spark.functions.text import collapse_ws, simple_name, url_domain
 
@@ -206,18 +202,6 @@ def detect_spans_fused(
         url_domain("url").alias("domain"),
         _spans(F.col(html_col), text_expr).alias("_s"),
     ).select("url", "warc_ts", "domain", "_s.*")
-
-
-def mentions_from_spans(spans: DataFrame) -> DataFrame:
-    """detect_spans output -> one row per mention (explode + normalize)."""
-    return _finish(
-        spans.select(
-            "url",
-            "warc_ts",
-            "domain",
-            F.explode("mention_spans").alias("surface"),
-        )
-    )
 
 
 def surface_dim(spans: DataFrame) -> DataFrame:
@@ -582,29 +566,6 @@ def detect_mentions(pages: DataFrame, text_col: str = "text") -> DataFrame:
             "surface"
         ),
     )
-    return _finish(spans)
-
-
-def detect_mentions_pandas(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow pandas-UDF path; identical output to `detect_mentions`."""
-    import re
-
-    pat = re.compile(MENTION_RE)
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def find_spans(text: pd.Series) -> pd.Series:
-        return text.map(lambda t: [] if t is None else pat.findall(t))
-
-    spans = pages.select(
-        "url",
-        "warc_ts",
-        url_domain("url").alias("domain"),
-        F.explode(find_spans(F.col(text_col))).alias("surface"),
-    )
-    return _finish(spans)
-
-
-def _finish(spans: DataFrame) -> DataFrame:
     return spans.select(
         "url",
         "warc_ts",
@@ -613,23 +574,3 @@ def _finish(spans: DataFrame) -> DataFrame:
         collapse_ws("surface").alias("name_norm"),
         simple_name("surface").alias("entity_id"),
     ).filter(F.col("entity_id") != "")
-
-
-def detect_memberships(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """pages -> (url, person span, role, org span) membership candidates.
-
-    regexp_extract_all(group 0) then per-group re-extract on the (short)
-    matched span — keeps the heavy scan single-pass over `text`.
-    """
-    m = pages.select(
-        "url",
-        F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(MEMBERSHIP_RE), 0)
-        ).alias("m"),
-    )
-    return m.select(
-        "url",
-        simple_name(F.regexp_extract("m", MEMBERSHIP_RE, 1)).alias("person_id"),
-        F.regexp_extract("m", MEMBERSHIP_RE, 2).alias("role"),
-        simple_name(F.regexp_extract("m", MEMBERSHIP_RE, 3)).alias("org_id"),
-    ).filter((F.col("person_id") != "") & (F.col("org_id") != ""))

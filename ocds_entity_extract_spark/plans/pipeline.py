@@ -43,13 +43,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocds_entity_extract_spark.functions.classify import with_entity_type
 from ocds_entity_extract_spark.operators.cc import canonical_mapping
-from ocds_entity_extract_spark.operators.linking import verified_edges
+from ocds_entity_extract_spark.operators.linking import (
+    linking_canon_dict,
+    verified_edges,
+)
 from ocds_entity_extract_spark.operators.mentions import (
     contacts_from_spans,
     detect_spans_fused,
     memberships_from_spans,
     mentions_via_dim,
-    surface_dim,
 )
 from ocds_entity_extract_spark.operators.merge import (
     merge_entities,
@@ -80,15 +82,12 @@ def build_triples(
     spark: SparkSession,
     pages: DataFrame,
     classifier_override: DataFrame | None = None,
-    salted_merge: bool = False,
     cache_intermediates: bool = True,
     max_broadcast_surfaces: int = 2_000_000,
-    surface_broadcast: str = "auto",   # auto | force | aqe
-    emit_areas: bool = True,
+    surface_broadcast: str = "auto",   # auto | aqe
     max_driver_linking: int = 100_000,
     cc_small_graph_threshold: int = 1_000_000,
     linking_hash_family: str = "portable",
-    emit_contact_persons: bool | None = None,
 ) -> PipelineResult:
     """Run the full plan; all returned DataFrames are lazy except cached
     intermediates.
@@ -100,13 +99,10 @@ def build_triples(
     families clear the golden P/R gate and emit identical triples on the
     test corpora (pytest-gated).
 
-    `emit_contact_persons`: the contactPoint-person branch (≙ reference
-    extract.js:372-390). None (default) = size-adaptive auto: one cheap
-    columnar pass over the cached spans table checks whether any
-    person-named contact email exists at all, and the branch's ~4 tiny
-    stages are skipped entirely on corpora without them (most crawl slices;
-    keeps the measured scaling window free of empty-stage latency).
-    True/False force it on/off."""
+    `surface_broadcast`: "auto" (default) counts the cached surface dim and
+    takes the size-adaptive driver paths below under the thresholds;
+    "aqe" skips the count, so every join is left to AQE and linking runs
+    distributed — the plan a corpus too big to count cheaply would run."""
     # ONE pass over pages computes all three span arrays inside the Python
     # worker (html -> text -> spans; the text never crosses Arrow back to
     # the JVM — see detect_spans_fused). The small span table is cached so
@@ -135,15 +131,10 @@ def build_triples(
     # size-adaptive driver fast path that "aqe" exists to bypass
     if cache_intermediates:
         dim = dim.cache()
-    if surface_broadcast == "force":
-        use_broadcast = True
-    elif surface_broadcast == "aqe":
-        use_broadcast = False
-    elif cache_intermediates:
+    use_broadcast = False
+    if surface_broadcast == "auto" and cache_intermediates:
         dim_count = dim.count()
         use_broadcast = dim_count <= max_broadcast_surfaces
-    else:
-        use_broadcast = False
     # NOTE: the mention stream is deliberately NOT cached. It is the one
     # corpus-sized intermediate (O(mentions) rows), and every consumer can
     # rebuild it with a narrow explode + broadcast probe over the CACHED
@@ -156,12 +147,7 @@ def build_triples(
     # "persist the mention stream".
     mentions = mentions_via_dim(spans, dim, broadcast=use_broadcast)
 
-    if salted_merge:
-        from ocds_entity_extract_spark.operators.merge import merge_entities_salted
-
-        entities = merge_entities_salted(mentions)
-    else:
-        entities = merge_entities(mentions)
+    entities = merge_entities(mentions)
 
     # the DISTINCT entity-id universe is exactly the dim's id column
     # (mentions_via_dim is an inner join on surface), so linking and CC
@@ -172,18 +158,35 @@ def build_triples(
     # linking + CC are SIZE-ADAPTIVE like the broadcast decision: under
     # `max_driver_linking` distinct ids (known from the dim count — a
     # surface count, an upper bound on ids) the whole LSH-block-verify +
-    # union-find chain runs driver-side on the collected id list (exact
-    # Python twin, parity-tested) — the distributed version of this stage
-    # is ~15 sub-second shuffles whose scheduling latency dominates any
-    # sub-web-scale corpus. Above the threshold: the distributed path.
-    ids = dim.select("entity_id")
-    surf2canon = None
-    dim_pdf = None
-    if dim_count is not None and dim_count <= max_driver_linking:
-        from ocds_entity_extract_spark.operators.linking import (
-            linking_canon_dict,
+    # union-find chain runs driver-side on the dim collected by the dict
+    # block below (exact Python twin, parity-tested) — the distributed
+    # version of this stage is ~15 sub-second shuffles whose scheduling
+    # latency dominates any sub-web-scale corpus. Above the threshold: the
+    # distributed path.
+    def distributed_mapping() -> DataFrame:
+        ids = dim.select("entity_id")
+        edges = verified_edges(ids, hash_family=linking_hash_family)
+        m = canonical_mapping(
+            ids, edges, small_graph_threshold=cc_small_graph_threshold
         )
+        return m.cache() if cache_intermediates else m
 
+    # DICT assembly: whether the assembly can use the zero-shuffle Arrow
+    # dict pass depends only on the surf->canon dict fitting the same
+    # budget that already justified broadcasting the dim
+    # (`max_broadcast_surfaces`). On a real cluster this is exactly the
+    # right call at 100 TB: the surface dim is Zipf-bounded (~10^8-10^9
+    # surfaces even for a trillion pages), so broadcasting a canonical dict
+    # is routine, while the alternative — the join + corpus-sized (url,
+    # canon) distinct — shuffles ~the whole mention stream. Measured on the
+    # 4M-page scaling corpus (110k surfaces, just past the linking
+    # threshold): the join+distinct assembly added ~50 s of
+    # memory-bus-bound exchange that does not parallelize on one box. Only
+    # a dim too big to collect (true 10^9-surface crawls, or
+    # surface_broadcast='aqe' which skips the count) takes the
+    # join+distinct path below.
+    surf2canon = None
+    if dim_count is not None and dim_count <= max_broadcast_surfaces:
         # ONE bounded collect serves linking, the zero-shuffle assembly
         # AND the driver-side small branches below: (surface, entity_id,
         # entity_type) rows give the slug universe for union-find, the
@@ -193,63 +196,32 @@ def build_triples(
         # buffers instead of a Python Row object per row — an order of
         # magnitude less driver allocation at the threshold sizes.
         dim_pdf = dim.select("surface", "entity_id", "entity_type").toPandas()
-        canon = linking_canon_dict(
-            sorted(set(dim_pdf["entity_id"])), hash_family=linking_hash_family
-        )
+        if dim_count <= max_driver_linking:
+            canon = linking_canon_dict(
+                sorted(set(dim_pdf["entity_id"])), hash_family=linking_hash_family
+            )
+            mapping_plain = spark.createDataFrame(
+                sorted(canon.items()), "entity_id string, canonical_id string"
+            )
+            if cache_intermediates:
+                mapping_plain = mapping_plain.cache()
+        else:
+            mapping_plain = distributed_mapping()
+            _mp = mapping_plain.toPandas()
+            canon = dict(zip(_mp["entity_id"], _mp["canonical_id"]))
         surf2canon = {
             s: canon[e]
             for s, e in zip(dim_pdf["surface"], dim_pdf["entity_id"])
         }
-        mapping_plain = spark.createDataFrame(
-            sorted(canon.items()), "entity_id string, canonical_id string"
-        )
-        if cache_intermediates:
-            mapping_plain = mapping_plain.cache()
-        # bounded by max_driver_linking rows -> always broadcastable: the
-        # hint turns every downstream mapping JOIN (canon mentions, type
-        # rank, membership x2, contacts) into a map-side probe instead of
-        # a shuffle of the corpus-sized mention stream. Non-join consumers
+        # bounded by the dim budget -> always broadcastable: the hint turns
+        # every downstream mapping JOIN (canon mentions, type rank,
+        # membership x2, contacts) into a map-side probe instead of a
+        # shuffle of the corpus-sized mention stream. Non-join consumers
         # (the sameAs filter below) read the UNHINTED frame so the hint
         # never dangles on a non-join relation.
         mapping = F.broadcast(mapping_plain)
     else:
-        edges = verified_edges(ids, hash_family=linking_hash_family)
-        mapping_plain = canonical_mapping(
-            ids, edges, small_graph_threshold=cc_small_graph_threshold
-        )
-        if cache_intermediates:
-            mapping_plain = mapping_plain.cache()
-        # DISTRIBUTED linking + DICT assembly: the two thresholds are
-        # orthogonal. `max_driver_linking` picks the linking ALGORITHM
-        # (driver union-find vs distributed LSH + star CC); whether the
-        # ASSEMBLY can use the zero-shuffle Arrow dict pass depends only on
-        # the surf->canon dict fitting the same budget that already
-        # justified broadcasting the dim (`max_broadcast_surfaces`). On a
-        # real cluster this is exactly the right call at 100 TB: the
-        # surface dim is Zipf-bounded (~10^8-10^9 surfaces even for a
-        # trillion pages), so broadcasting a canonical dict is routine,
-        # while the alternative — the join + corpus-sized (url, canon)
-        # distinct — shuffles ~the whole mention stream. Measured on the
-        # 4M-page scaling corpus (110k surfaces, just past the linking
-        # threshold): the join+distinct assembly added ~50 s of
-        # memory-bus-bound exchange that does not parallelize on one box.
-        # Only a dim too big to collect (true 10^9-surface crawls, or
-        # surface_broadcast='aqe' which skips the count) takes the
-        # join+distinct path below. Both collects go through Arrow
-        # (toPandas) — columnar buffers, not 2M Python Row objects.
-        if dim_count is not None and dim_count <= max_broadcast_surfaces:
-            _mp = mapping_plain.toPandas()
-            canon = dict(zip(_mp["entity_id"], _mp["canonical_id"]))
-            dim_pdf = dim.select(
-                "surface", "entity_id", "entity_type"
-            ).toPandas()
-            surf2canon = {
-                s: canon[e]
-                for s, e in zip(dim_pdf["surface"], dim_pdf["entity_id"])
-            }
-            mapping = F.broadcast(mapping_plain)
-        else:
-            mapping = mapping_plain
+        mapping = mapping_plain = distributed_mapping()
 
     # --- triple assembly (canonical ids everywhere) ---
     # Dedup at the NARROWEST point first: duplicate (url, entity) pairs are
@@ -304,24 +276,19 @@ def build_triples(
     # entity_type is a function of the SURFACE and every dim surface occurs
     # in >= 1 mention, so the dim-level max equals the mention-level max —
     # computed over the tiny dim, not the mention stream.
-    _addr_schema = (
-        "entity_id string, country_name string, region string,"
-        " locality string, gov_level string"
-    )
-    _nodes_schema = (
-        "area_id string, name string, classification string, parent_id string"
-    )
-    _triple_schema = "subj string, pred string, obj string"
     if surf2canon is not None:
         # driver-side small branches: the dim rows, canonical dict and the
         # (static) geo dims are all already on the driver, so the
         # type/sameAs/area triples — a few thousand rows at most under
         # `max_driver_linking` — are computed in plain Python and shipped
         # back as ONE createDataFrame. The Spark branch below runs these as
-        # ~10 broadcast-join/agg stages whose scheduling latency is pure
-        # fixed cost at ANY corpus size (measured ~5-6s per run regardless
-        # of core count — the single biggest non-scaling term in the
-        # 2->8-core evidence). Parity with the Spark branch is gated by
+        # broadcast-join/agg stages whose scheduling latency is pure fixed
+        # cost at ANY corpus size. Measured on a 4-vCPU box (8000-page
+        # crawl_adaptive benchmark, seed 1), routing these blocks and the
+        # contact-person institution lookup through the Spark branch
+        # instead: warm job 2.75-3.05 s -> 6.86-7.17 s, job CPU 8.4-9.7 s ->
+        # 22.6-23.3 s, pipeline stages 11 -> 29, tasks 35 -> 91. Parity
+        # with the Spark branch is gated by
         # test_build_triples_driver_vs_distributed_linking.
         _rank = {"institution": 3, "company": 2}
         _type = {3: "institution", 2: "company", 1: "person"}
@@ -337,19 +304,22 @@ def build_triples(
         sameas_rows = sorted(
             (s, "sameAs", c) for s, c in canon.items() if s != c
         )
-        if emit_areas:
-            from ocds_entity_extract_spark.plans.areas import area_branch_py
+        from ocds_entity_extract_spark.plans.areas import area_branch_py
 
-            inst_pairs = sorted(
-                (c, s)
-                for s, c in canon.items()
-                if rank_by_canon.get(c) == 3
-            )
-            addr_rows, node_rows, area_rows = area_branch_py(inst_pairs)
-        else:
-            addr_rows, node_rows, area_rows = [], [], []
-        addrs = spark.createDataFrame(addr_rows, _addr_schema)
-        areas_tbl = spark.createDataFrame(node_rows, _nodes_schema)
+        inst_pairs = sorted(
+            (c, s) for s, c in canon.items() if rank_by_canon.get(c) == 3
+        )
+        addr_rows, node_rows, area_rows = area_branch_py(inst_pairs)
+        addrs = spark.createDataFrame(
+            addr_rows,
+            "entity_id string, country_name string, region string,"
+            " locality string, gov_level string",
+        )
+        areas_tbl = spark.createDataFrame(
+            node_rows,
+            "area_id string, name string, classification string, parent_id string",
+        )
+        _triple_schema = "subj string, pred string, obj string"
         small_triples = spark.createDataFrame(
             type_rows + sameas_rows + area_rows, _triple_schema
         )
@@ -382,18 +352,13 @@ def build_triples(
             infer_institution_regions,
         )
 
-        if emit_areas:
-            inst_aliases = mapping.join(
-                canon_rank.filter(F.col("_rank") == 3).select("canonical_id"),
-                "canonical_id",
-            ).select("canonical_id", F.col("entity_id").alias("alias_slug"))
-            addrs = infer_institution_regions(inst_aliases, spark)
-            area_triples = area_edges(addrs, spark).select("subj", "pred", "obj")
-            areas_tbl = area_nodes(addrs, spark)
-        else:
-            addrs = spark.createDataFrame([], _addr_schema)
-            area_triples = spark.createDataFrame([], _triple_schema)
-            areas_tbl = spark.createDataFrame([], _nodes_schema)
+        inst_aliases = mapping.join(
+            canon_rank.filter(F.col("_rank") == 3).select("canonical_id"),
+            "canonical_id",
+        ).select("canonical_id", F.col("entity_id").alias("alias_slug"))
+        addrs = infer_institution_regions(inst_aliases, spark)
+        area_triples = area_edges(addrs, spark).select("subj", "pred", "obj")
+        areas_tbl = area_nodes(addrs, spark)
 
         sameas = (
             mapping_plain.filter(F.col("entity_id") != F.col("canonical_id"))
@@ -447,12 +412,7 @@ def build_triples(
     contact_persons = None
     cp_type_triples = None
     cp = contact_person_candidates(spans)
-    has_cp = (
-        emit_contact_persons
-        if emit_contact_persons is not None
-        else not cp.isEmpty()
-    )
-    if has_cp:
+    if not cp.isEmpty():
         if cache_intermediates:
             cp = cp.cache()
         cp_urls = F.broadcast(cp.select("url").distinct())

@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ocds_entity_extract_spark.functions.text import collapse_ws, simple_name
+from ocds_entity_extract_spark.functions.text import collapse_ws, simple_name, simple_name_py
 from ocds_entity_extract_spark.queries import (
     ORACLE_SQL,
     SPARK_QUERIES,
@@ -1609,7 +1609,6 @@ def _kg_seeded_triples_oracle_sql(n_pages: int = 300) -> str:
     from ocds_entity_extract_spark.functions.classify import (
         COMPANY_SUFFIX_SLUG_RE,
         INSTITUTION_KEYWORDS,
-        _slug_py,
     )
     from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
     from ocds_entity_extract_spark.operators.linking import (
@@ -1632,8 +1631,8 @@ def _kg_seeded_triples_oracle_sql(n_pages: int = 300) -> str:
     sig_ctes, band_selects = _minhash_sig_ctes(
         "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
     )
-    dim_rows = [(n, c, _slug_py(n)) for n, c in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], _slug_py(alias))
+    dim_rows = [(n, c, simple_name_py(n)) for n, c in MX_STATES] + [
+        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
         for alias, canon in MX_STATE_ALIASES
     ]
     statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
@@ -1866,7 +1865,6 @@ def _kg_seeded_entities_oracle_sql(n_pages: int = 300) -> str:
     from ocds_entity_extract_spark.functions.classify import (
         COMPANY_SUFFIX_SLUG_RE,
         INSTITUTION_KEYWORDS,
-        _slug_py,
     )
     from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
     from ocds_entity_extract_spark.operators.linking import (
@@ -1890,8 +1888,8 @@ def _kg_seeded_entities_oracle_sql(n_pages: int = 300) -> str:
     sig_ctes, band_selects = _minhash_sig_ctes(
         "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
     )
-    dim_rows = [(n, c, _slug_py(n)) for n, c in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], _slug_py(alias))
+    dim_rows = [(n, c, simple_name_py(n)) for n, c in MX_STATES] + [
+        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
         for alias, canon in MX_STATE_ALIASES
     ]
     statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
@@ -2316,7 +2314,6 @@ def _kg_triples_oracle_sql() -> str:
     from ocds_entity_extract_spark.functions.classify import (
         COMPANY_SUFFIX_SLUG_RE,
         INSTITUTION_KEYWORDS,
-        _slug_py,
     )
     from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
     from ocds_entity_extract_spark.operators.linking import (
@@ -2348,8 +2345,8 @@ def _kg_triples_oracle_sql() -> str:
     )
     # state dim VALUES from the same constants mx_state_dim() loads
     # (canonical rows + alias rows, slug via the same translate table)
-    dim_rows = [(name, code, _slug_py(name)) for name, code in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], _slug_py(alias))
+    dim_rows = [(name, code, simple_name_py(name)) for name, code in MX_STATES] + [
+        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
         for alias, canon in MX_STATE_ALIASES
     ]
     statedim = ", ".join(
@@ -2615,7 +2612,6 @@ def _kg_entities_oracle_sql() -> str:
     from ocds_entity_extract_spark.functions.classify import (
         COMPANY_SUFFIX_SLUG_RE,
         INSTITUTION_KEYWORDS,
-        _slug_py,
     )
     from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
     from ocds_entity_extract_spark.operators.linking import (
@@ -2649,8 +2645,8 @@ def _kg_entities_oracle_sql() -> str:
         )
         + f" ELSE '{_KG_TPL_STATES[-1]}' END"
     )
-    dim_rows = [(name, code, _slug_py(name)) for name, code in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], _slug_py(alias))
+    dim_rows = [(name, code, simple_name_py(name)) for name, code in MX_STATES] + [
+        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
         for alias, canon in MX_STATE_ALIASES
     ]
     statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)

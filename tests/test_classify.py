@@ -1,6 +1,6 @@
 """Classification precedence (SURVEY.md §2.9, reference extract.js:13-33):
-override CSV > institution keyword > company suffix > person; pandas-UDF
-parity; override whitespace normalization + last-wins duplicates
+override CSV > institution keyword > company suffix > person; override
+whitespace normalization + last-wins duplicates
 (reference classify.js:19-21)."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocds_entity_extract_spark.functions.classify import (
-    classify_names_pandas,
     load_classifier_override,
     with_entity_type,
 )
@@ -41,17 +40,6 @@ def test_heuristic_precedence(spark):
     got = {r["name_norm"]: r["entity_type"] for r in df.collect()}
     for name, expected in CASES:
         assert got[" ".join(name.split())] == expected, name
-
-
-def test_pandas_udf_parity(spark):
-    names = [c[0] for c in CASES]
-    df = spark.createDataFrame([(n,) for n in names], "surface string")
-    got = {
-        r["surface"]: r["t"]
-        for r in df.select("surface", classify_names_pandas("surface").alias("t")).collect()
-    }
-    for name, expected in CASES:
-        assert got[name] == expected, name
 
 
 def test_override_beats_heuristic(spark):

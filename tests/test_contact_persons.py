@@ -62,7 +62,19 @@ def _by_id(docs_df):
     return {r["id"]: r.asDict(recursive=True) for r in docs_df.collect()}
 
 
-@pytest.mark.parametrize("kw", [{}, {"max_driver_linking": 0}])
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {},
+        {"max_driver_linking": 0},
+        # fully forced plan: its contact-person branch takes the dim join
+        {
+            "max_driver_linking": 0,
+            "cc_small_graph_threshold": 0,
+            "surface_broadcast": "aqe",
+        },
+    ],
+)
 def test_contact_person_edges_and_triples(spark, cp_corpus, kw):
     res = build_triples(spark, cp_corpus, **kw)
     triples = {(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()}

@@ -123,7 +123,7 @@ def test_driver_side_linking_matches_distributed(spark, pages_df):
     verification, same union contract) on the corpus surface dim."""
     from ocds_entity_extract_spark.operators.cc import canonical_mapping
     from ocds_entity_extract_spark.operators.linking import (
-        linking_mapping_driver_side,
+        linking_canon_dict,
         verified_edges,
         verified_edges_py,
     )
@@ -145,22 +145,28 @@ def test_driver_side_linking_matches_distributed(spark, pages_df):
     dist_map = sorted(
         map(tuple, canonical_mapping(ids, verified_edges(ids)).collect())
     )
-    py_map = sorted(
-        map(tuple, linking_mapping_driver_side(spark, slugs).collect())
-    )
-    assert dist_map == py_map
+    assert dist_map == sorted(linking_canon_dict(slugs).items())
 
 
 def test_build_triples_driver_vs_distributed_linking(spark, pages_df):
-    """build_triples emits the identical triple set whichever linking path
-    the size threshold selects."""
+    """build_triples emits the identical triple set whichever linking and
+    assembly path the size thresholds select."""
     from ocds_entity_extract_spark.plans.pipeline import build_triples
 
-    fast = build_triples(spark, pages_df)
-    slow = build_triples(spark, pages_df, max_driver_linking=0)
-    t_fast = {tuple(r) for r in fast.triples.collect()}
-    t_slow = {tuple(r) for r in slow.triples.collect()}
-    assert t_fast == t_slow and len(t_fast) > 0
+    t_fast = {tuple(r) for r in build_triples(spark, pages_df).triples.collect()}
+    assert len(t_fast) > 0
+    for kw in (
+        {"max_driver_linking": 0},
+        # the fully forced plan: distributed linking, star CC, and the
+        # join + distinct assembly with AQE-decided joins
+        {
+            "max_driver_linking": 0,
+            "cc_small_graph_threshold": 0,
+            "surface_broadcast": "aqe",
+        },
+    ):
+        slow = build_triples(spark, pages_df, **kw)
+        assert {tuple(r) for r in slow.triples.collect()} == t_fast, kw
 
 
 def test_build_triples_parity_on_coined_corpus(spark, monkeypatch):

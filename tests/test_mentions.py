@@ -1,26 +1,19 @@
-"""Mention detection: JVM regexp path == pandas-UDF path (parity), and
-detection hits the embedded entity surfaces."""
+"""Mention detection: detection hits the embedded entity surfaces and
+memberships; the dim, probe and fused span paths agree with their plain
+references."""
 
 from __future__ import annotations
 
 from ocds_entity_extract_spark.functions.html import with_extracted_text
 from ocds_entity_extract_spark.operators.mentions import (
-    detect_memberships,
     detect_mentions,
-    detect_mentions_pandas,
+    detect_spans,
+    memberships_from_spans,
 )
 
 
 def _collect_set(df):
     return {tuple(r) for r in df.collect()}
-
-
-def test_jvm_vs_pandas_parity(spark, pages_df):
-    pages_t = with_extracted_text(pages_df).cache()
-    jvm = _collect_set(detect_mentions(pages_t).select("url", "surface"))
-    pdu = _collect_set(detect_mentions_pandas(pages_t).select("url", "surface"))
-    assert jvm == pdu
-    assert len(jvm) > 100
 
 
 def test_detects_embedded_entities(spark, pages_df, small_corpus):
@@ -44,7 +37,7 @@ def test_memberships_detected(spark, pages_df, small_corpus):
     _, golden, _ = small_corpus
     pages_t = with_extracted_text(pages_df)
     got = _collect_set(
-        detect_memberships(pages_t).select("person_id", "org_id")
+        memberships_from_spans(detect_spans(pages_t)).select("person_id", "org_id")
     )
     assert len(got) > 10
 

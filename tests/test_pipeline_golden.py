@@ -92,18 +92,3 @@ def test_permutation_invariance(spark, small_corpus):
     got_a, _ = _run(spark, pages_rows[:120], aux)
     got_b, _ = _run(spark, list(reversed(pages_rows[:120])), aux)
     assert got_a == got_b
-
-
-def test_salted_merge_same_entities(spark, small_corpus):
-    pages_rows, _, aux = small_corpus
-    _, res_plain = _run(spark, pages_rows[:120], aux, salted_merge=False)
-    _, res_salt = _run(spark, pages_rows[:120], aux, salted_merge=True)
-
-    def freeze(rows):
-        return {
-            tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows
-        }
-
-    a = freeze(res_plain.entities.collect())
-    b = freeze(res_salt.entities.collect())
-    assert a == b
