@@ -54,8 +54,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # CORRECTNESS_r01-r04), so the flagship kg family, the newest operators and
 # the LLM-data ops lead; the long-stable TPC-H-ish basics (every one green
 # in r01-r04 and pytest-covered) fill from the back. Full coverage of all
-# entries stays in tools/check_queries.py.
+# entries stays in tools/check_queries.py. Rule: every NEW query goes at
+# the HEAD of this list, so the newest code is always in the sample.
 _SAMPLE_FIRST = [
+    "tfidf_top_terms",
     "kg_pipeline_triples", "kg_pipeline_entities", "kg_pipeline_products",
     "kg_triples", "kg_entities", "kg_merged_entities",
     "kg_merged_entities_salted", "entity_source_runs", "linking_signatures",

@@ -20,6 +20,7 @@ under the full rows+schema+value-hash gate instead.
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 from pyspark.sql import functions as F
@@ -53,6 +54,11 @@ def fast_hash64(col) -> F.Column:
     families is pytest-gated (test_dedup_similarity)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.xxhash64(c)
+
+
+def portable_hash64_py(s: str) -> int:
+    """Driver-side twin of ``portable_hash64``."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def portable_hash64_sql(expr: str) -> str:
@@ -130,6 +136,24 @@ def xxh64_py(data: bytes, seed: int = 42) -> int:
 def fast_hash64_py(s: str) -> int:
     """Driver-side twin of ``fast_hash64`` (Spark ``xxhash64``, seed 42)."""
     return xxh64_py(s.encode("utf-8"))
+
+
+def _family(name: str, portable, fast):
+    if name not in ("portable", "fast"):
+        raise ValueError(f"unknown hash_family {name!r} (portable | fast)")
+    return fast if name == "fast" else portable
+
+
+def shingle_hash(family: str):
+    """Spark Column hash function of a per-shingle hash family: "portable"
+    (md5-derived, DuckDB-twin-able — the oracle-gated default) or "fast"
+    (xxhash64). Any other name raises ValueError."""
+    return _family(family, portable_hash64, fast_hash64)
+
+
+def shingle_hash_py(family: str):
+    """Python twin of ``shingle_hash`` (bit-identical per family)."""
+    return _family(family, portable_hash64_py, fast_hash64_py)
 
 
 def affine_minhash(h31_col, a: int, b: int) -> F.Column:

@@ -33,6 +33,84 @@ def with_word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> Dat
     ).drop("_toks")
 
 
+def _hashed_shingles(
+    docs: DataFrame, id_col: str, text_col: str, hash_family: str, *carry: str
+) -> DataFrame:
+    """ONE corpus pass: (id, *carry, hs) with `hs` the hashed word-shingle
+    array, materialized so signatures and verification both reuse it.
+
+    Right-sizes the scan first: a small/compacted parquet input can come
+    back as fewer partitions than cores (one file => ONE task), serializing
+    the expensive shingle+hash projection. It repartitions up to the
+    default parallelism only when the scan under-splits — a real multi-TB
+    input already has >= cores partitions and skips this (the shuffle ships
+    raw text, so it must never trigger when the scan is already wide).
+
+    The table is a localCheckpoint (blocks GC-released when the query
+    ends, no harness-lifetime cache leak; an intermediate table at cluster
+    scale), so shingling+hashing never run twice and the signature explode
+    reads cheap materialized arrays — ~10x cheaper than exploding the fused
+    shingle-construction+hash chain (measured 2.7s vs 0.24s for 260k
+    shingles at sf0.1)."""
+    from ocds_entity_extract_spark.functions.phash import shingle_hash
+
+    hash_fn = shingle_hash(hash_family)
+    src = docs.select(id_col, text_col, *carry)
+    target = docs.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < target:
+        src = src.repartition(target)
+    return (
+        with_word_shingles(src, text_col)
+        .select(
+            id_col,
+            *carry,
+            F.transform("shingles", lambda s: hash_fn(s)).alias("hs"),
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def _verified(
+    sh: DataFrame, pairs: DataFrame, id_col: str, threshold: float, *carry: str
+) -> DataFrame:
+    """Candidate (id_a, id_b, *carry) pairs -> (id_a, id_b, *carry,
+    jaccard) with exact Jaccard >= threshold over the hashed shingle sets.
+
+    Verification touches only CANDIDATES: each pair explodes to two
+    (pair, side) rows which join the materialized shingle table via a
+    BROADCAST probe — full-corpus shingle arrays never leave their input
+    partitions; only candidate rows reach the (tiny) regroup shuffle. The
+    groupBy also dedups pairs emitted by several LSH bands, so no separate
+    distinct pass is needed."""
+    pe = pairs.select(
+        "id_a",
+        "id_b",
+        *carry,
+        F.explode(
+            F.array(
+                F.struct(F.col("id_a").alias(id_col), F.lit("a").alias("side")),
+                F.struct(F.col("id_b").alias(id_col), F.lit("b").alias("side")),
+            )
+        ).alias("m"),
+    ).select("id_a", "id_b", *carry, F.col(f"m.{id_col}").alias(id_col), "m.side")
+    joined = (
+        sh.select(id_col, "hs")
+        .join(F.broadcast(pe), id_col)
+        .groupBy("id_a", "id_b")
+        .agg(
+            F.first(F.when(F.col("side") == "a", F.col("hs")), True).alias("sh_a"),
+            F.first(F.when(F.col("side") == "b", F.col("hs")), True).alias("sh_b"),
+            *[F.first(c).alias(c) for c in carry],
+        )
+    )
+    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    return joined.withColumn("jaccard", F.round(jac, 4)).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
 def minhash_candidate_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -41,103 +119,43 @@ def minhash_candidate_pairs(
     band_size: int = 2,
     max_bucket: int = 64,
     jaccard_threshold: float = 0.5,
-    broadcast_pairs: bool = True,
     hash_family: str = "portable",
 ) -> DataFrame:
     """documents -> verified near-dup pairs (id_a, id_b, jaccard).
 
-    Signature build is the codegen path (explode -> portable md5 hash once
-    -> grouped affine mins, see linking.minhash_signature_table) WITHOUT
-    shingle sets riding the shuffle: at document granularity each set is
-    O(tokens), so shipping every doc's set through the signature agg
+    Signature build is the codegen path (explode the materialized hashed
+    shingles -> grouped affine mins, see linking.minhash_signatures)
+    WITHOUT shingle sets riding the shuffle: at document granularity each
+    set is O(tokens), so shipping every doc's set through the signature agg
     re-ships ~the corpus (the round-1 bottleneck — 6.3s of a 38s bench).
+    Verification instead broadcast-probes only the candidates (`_verified`).
 
-    Verification instead touches only CANDIDATES: each pair explodes to
-    two (pair, side) rows which join the narrow shingle recompute via a
-    BROADCAST probe — full-corpus shingle arrays never leave their input
-    partitions; only candidate rows reach the (tiny) regroup shuffle. The
-    groupBy also dedups pairs emitted by several LSH bands, so no separate
-    distinct pass is needed. With `broadcast_pairs=False` (pair table too
-    big to broadcast — pathological corpus duplication) the probe becomes
-    an AQE-planned shuffle join, same semantics.
-
-    The hash family is md5-derived (functions/phash), so the DuckDB oracle
-    reproduces the FULL path — shingles, signatures, banding, bucket cap,
-    exact-Jaccard verification — value-for-value.
+    The default hash family is md5-derived (functions/phash), so the DuckDB
+    oracle reproduces the FULL path — shingles, signatures, banding, bucket
+    cap, exact-Jaccard verification — value-for-value. hash_family='fast'
+    swaps the per-shingle md5 for xxhash64 — the production path at 100 TB
+    (md5 buys DuckDB value-hash parity, not quality). Signatures/buckets
+    differ between families, but the verified pair OUTPUT is
+    equality-tested between the two in test_dedup_similarity; the
+    exact-Jaccard verification is on the chosen family's hashed shingle
+    sets either way. Any other family name raises ValueError.
     """
-    from ocds_entity_extract_spark.functions.phash import (
-        fast_hash64,
-        portable_hash64,
-    )
     from ocds_entity_extract_spark.operators.linking import (
         _lsh_pairs,
-        minhash_signature_from_hashes,
+        minhash_signatures,
     )
 
-    # hash_family='fast' swaps the per-shingle md5 for xxhash64 — the
-    # production path at 100 TB (md5 buys DuckDB value-hash parity, not
-    # quality). Signatures/buckets differ between families, but the
-    # verified pair OUTPUT is equality-tested between the two in
-    # test_dedup_similarity; the exact-Jaccard verification is on the
-    # chosen family's hashed shingle sets either way.
-    hash_fn = fast_hash64 if hash_family == "fast" else portable_hash64
-
-    # Right-size the scan: a small/compacted parquet input can come back as
-    # fewer partitions than cores (one file => ONE task), serializing the
-    # expensive shingle+md5 projection below. Repartition up to the default
-    # parallelism only when the scan under-splits — a real multi-TB input
-    # already has >= cores partitions and skips this (the shuffle ships
-    # raw text, so it must never trigger when the scan is already wide).
-    src = docs.select(id_col, text_col)
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-
-    # ONE corpus pass computes the hashed-shingle arrays; the materialized
-    # table (localCheckpoint — blocks GC-released when the query ends, no
-    # harness-lifetime cache leak; an intermediate table at cluster scale)
-    # feeds BOTH the signature build and candidate verification, so
-    # shingling+md5 never run twice and the signature explode reads cheap
-    # materialized arrays (see minhash_signature_from_hashes).
-    sh = (
-        with_word_shingles(src, text_col)
-        .select(
-            id_col,
-            F.transform("shingles", lambda s: hash_fn(s)).alias("hs"),
-        )
-        .localCheckpoint(eager=False)
+    sh = _hashed_shingles(docs, id_col, text_col, hash_family)
+    sig = minhash_signatures(
+        sh.select(id_col, F.explode("hs").alias("_h")), id_col, num_hashes, band_size
     )
-    sig = minhash_signature_from_hashes(sh, id_col, "hs", num_hashes, band_size)
     pairs = (
         _lsh_pairs(sig, id_col, max_bucket)
         .withColumnRenamed("src", "id_a")
         .withColumnRenamed("dst", "id_b")
     )
-    pe = pairs.select(
-        "id_a",
-        "id_b",
-        F.explode(
-            F.array(
-                F.struct(F.col("id_a").alias(id_col), F.lit("a").alias("side")),
-                F.struct(F.col("id_b").alias(id_col), F.lit("b").alias("side")),
-            )
-        ).alias("m"),
-    ).select("id_a", "id_b", F.col(f"m.{id_col}").alias(id_col), "m.side")
-    joined = (
-        sh.join(F.broadcast(pe) if broadcast_pairs else pe, id_col)
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.first(F.when(F.col("side") == "a", F.col("hs")), True).alias("sh_a"),
-            F.first(F.when(F.col("side") == "b", F.col("hs")), True).alias("sh_b"),
-        )
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        joined.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _verified(sh, pairs, id_col, jaccard_threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -150,7 +168,6 @@ def minhash_incremental_pairs(
     band_size: int = 2,
     max_bucket: int = 64,
     jaccard_threshold: float = 0.5,
-    broadcast_pairs: bool = True,
     hash_family: str = "portable",
 ) -> DataFrame:
     """Incremental dedup: verified near-dup pairs TOUCHING a new document.
@@ -177,33 +194,14 @@ def minhash_incremental_pairs(
     """
     from pyspark.sql.window import Window
 
-    from ocds_entity_extract_spark.functions.phash import (
-        fast_hash64,
-        portable_hash64,
-    )
-    from ocds_entity_extract_spark.operators.linking import (
-        minhash_signature_from_hashes,
-    )
+    from ocds_entity_extract_spark.operators.linking import minhash_signatures
 
-    hash_fn = fast_hash64 if hash_family == "fast" else portable_hash64
-
-    src = docs.select(id_col, text_col, F.col(is_new_col).alias("_new"))
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-
-    # one corpus pass for hashed shingles (reused by verification below)
-    sh = (
-        with_word_shingles(src, text_col)
-        .select(
-            id_col,
-            "_new",
-            F.transform("shingles", lambda s: hash_fn(s)).alias("hs"),
-        )
-        .localCheckpoint(eager=False)
+    sh = _hashed_shingles(
+        docs.withColumn("_new", F.col(is_new_col)), id_col, text_col,
+        hash_family, "_new",
     )
-    sig = minhash_signature_from_hashes(
-        sh.select(id_col, "hs"), id_col, "hs", num_hashes, band_size
+    sig = minhash_signatures(
+        sh.select(id_col, F.explode("hs").alias("_h")), id_col, num_hashes, band_size
     )
     buckets = (
         sig.join(sh.select(id_col, "_new"), id_col)
@@ -243,44 +241,13 @@ def minhash_incremental_pairs(
         .filter(F.col("na") | F.col("nb"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    pe = pairs.select(
-        "id_a",
-        "id_b",
-        "na",
-        "nb",
-        F.explode(
-            F.array(
-                F.struct(F.col("id_a").alias(id_col), F.lit("a").alias("side")),
-                F.struct(F.col("id_b").alias(id_col), F.lit("b").alias("side")),
-            )
-        ).alias("m"),
-    ).select("id_a", "id_b", "na", "nb", F.col(f"m.{id_col}").alias(id_col), "m.side")
-    joined = (
-        sh.select(id_col, "hs")
-        # pairs are bounded by new-touching candidates; pass
-        # broadcast_pairs=False when even that exceeds the broadcast budget
-        # (pathological batch duplication) and AQE plans the probe join
-        .join(F.broadcast(pe) if broadcast_pairs else pe, id_col)
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.first(F.when(F.col("side") == "a", F.col("hs")), True).alias("sh_a"),
-            F.first(F.when(F.col("side") == "b", F.col("hs")), True).alias("sh_b"),
-            F.first("na").alias("na"),
-            F.first("nb").alias("nb"),
-        )
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
     new_side = (
         F.when(F.col("na") & F.col("nb"), F.lit("both"))
         .when(F.col("na"), F.lit("a"))
         .otherwise(F.lit("b"))
     )
-    return (
-        joined.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard", new_side.alias("new_side"))
+    return _verified(sh, pairs, id_col, jaccard_threshold, "na", "nb").select(
+        "id_a", "id_b", "jaccard", new_side.alias("new_side")
     )
 
 

@@ -6,8 +6,8 @@ alias resolution. Design:
 
 1. slug -> character 3-gram shingle array (computed once per DISTINCT
    entity id — dedup first, so the cost is O(|entities|), not O(|mentions|)).
-2. Shingles are EXPLODED to rows and hashed once (`xxhash64`), then the K
-   minhashes are `groupBy(id).agg(min(xxhash64(h, i)) ... )` — the classic
+2. Shingles are EXPLODED to rows and hashed once, then the K minhashes
+   are `groupBy(id).agg(min((a_i * h + b_i) mod p) ...)` — the classic
    MapReduce minhash. This keeps every expression inside WholeStageCodegen
    with map-side partial aggregation; the alternative (K higher-order
    `transform` columns) is interpreted, and Catalyst's CollapseProject
@@ -71,102 +71,31 @@ def with_shingles(df: DataFrame, col: str = "entity_id", n: int = 3) -> DataFram
     )
 
 
-def minhash_signature_from_hashes(
-    hs_tbl: DataFrame,
-    id_col: str,
-    hs_col: str = "hs",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-) -> DataFrame:
-    """(id, pre-hashed shingle array<long>) -> (id, bands) signature table.
-
-    For DOCUMENT-granularity minhashing: the caller materializes the
-    hashed-shingle table once (localCheckpoint or an intermediate table)
-    and reuses it for candidate verification. Exploding a MATERIALIZED
-    array is ~10x cheaper than exploding the fused
-    shingle-construction+hash expression chain (measured 2.7s vs 0.24s
-    for 260k shingles at sf0.1 — the generator path re-evaluates far more
-    than the one-pass projection does), and the verification reuse means
-    shingles+md5 run exactly once per corpus pass.
-    """
-    from ocds_entity_extract_spark.functions.phash import (
-        MERSENNE_P,
-        affine_minhash,
-        minhash_params,
-    )
-
-    hashed = hs_tbl.select(id_col, F.explode(hs_col).alias("_h")).withColumn(
-        "_h31", F.pmod(F.col("_h"), F.lit(MERSENNE_P))
-    )
-    aggs = [
-        F.min(affine_minhash(F.col("_h31"), a, b)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(minhash_params(num_hashes))
-    ]
-    sig = hashed.groupBy(id_col).agg(*aggs)
-    n_bands = num_hashes // band_size
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{b * band_size + j}").cast("string")
-                        for j in range(band_size)
-                    ],
-                ).alias("band_hash"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sig.withColumn("bands", bands).drop(
-        *[f"mh{i}" for i in range(num_hashes)]
-    )
-
-
-def minhash_signature_table(
-    df_with_shingles: DataFrame,
+def minhash_signatures(
+    hashed: DataFrame,
     id_col: str,
     num_hashes: int = DEFAULT_NUM_HASHES,
     band_size: int = DEFAULT_BAND_SIZE,
-    keep_shingle_sets: bool = True,
+    keep_shingle_sets: bool = False,
     keep_minhashes: bool = False,
-    hash_family: str = "portable",
 ) -> DataFrame:
-    """(id, shingles) -> (id, [n_shingles, sh_hashed,] bands) in ONE shuffle.
+    """(id, _h) rows, one hashed shingle per row -> (id, [sh_hashed,
+    n_shingles,] bands [, mh0..]) in ONE shuffle: a grouped min per affine
+    family member (codegen + map-side combine; see functions/phash). The
+    one signature builder of entity linking and document dedup.
 
-    explode -> portable md5 hash once per shingle -> grouped min per
-    affine family member (codegen + map-side combine; see functions/phash
-    — the md5-derived family is bit-identical in DuckDB, so signatures sit
-    under the driver's value-hash gate). With `keep_shingle_sets` the
-    distinct hashed shingle set rides along in the same aggregation for
-    later exact verification (right for small per-id sets like entity
-    slugs; for document-granularity sets pass False and verify on a
-    candidate subset instead — shipping every doc's full shingle set
-    through the shuffle re-ships ~the corpus).
-
-    `hash_family` picks the per-shingle hash: "portable" (md5-derived,
-    DuckDB-twin-able — the oracle-gated default) or "fast" (xxhash64,
-    ~5x cheaper per shingle — the production family; see
-    functions/phash.fast_hash64). Verification is family-independent
-    (containment over an injectively hashed shingle set equals containment
-    over the raw set), so only LSH candidate RECALL can move between
-    families — the golden P/R gate is pytest-run for both
-    (tests/test_linking_cc.py)."""
+    With `keep_shingle_sets` the distinct hashed shingle set rides along
+    for later exact verification (small per-id sets like entity slugs;
+    document dedup verifies a candidate subset instead, see
+    operators/dedup.minhash_candidate_pairs)."""
     from ocds_entity_extract_spark.functions.phash import (
         MERSENNE_P,
         affine_minhash,
-        fast_hash64,
         minhash_params,
-        portable_hash64,
     )
 
-    hash_fn = fast_hash64 if hash_family == "fast" else portable_hash64
-    hashed = (
-        df_with_shingles.select(id_col, F.explode("shingles").alias("_s"))
-        .select(id_col, hash_fn("_s").alias("_h"))
-        .withColumn("_h31", F.pmod(F.col("_h"), F.lit(MERSENNE_P)))
-    )
+    # projected once, not re-derived inside each of the K aggregates
+    hashed = hashed.withColumn("_h31", F.pmod(F.col("_h"), F.lit(MERSENNE_P)))
     aggs = [
         F.min(affine_minhash(F.col("_h31"), a, b)).alias(f"mh{i}")
         for i, (a, b) in enumerate(minhash_params(num_hashes))
@@ -200,21 +129,38 @@ def minhash_signature_table(
     return sig
 
 
-def with_minhash_bands(
-    df: DataFrame,
-    id_col: str = "entity_id",
+def minhash_signature_table(
+    df_with_shingles: DataFrame,
+    id_col: str,
     num_hashes: int = DEFAULT_NUM_HASHES,
     band_size: int = DEFAULT_BAND_SIZE,
+    keep_shingle_sets: bool = True,
+    keep_minhashes: bool = False,
+    hash_family: str = "portable",
 ) -> DataFrame:
-    """Per-row `bands` column via the signature table (join back on id).
+    """(id, shingles) -> (id, [n_shingles, sh_hashed,] bands) in ONE shuffle.
 
-    Kept for API/testing symmetry; `candidate_pairs` uses
-    `minhash_signature_table` directly (one shuffle, no join-back).
-    `id_col` is explicit — inferring it positionally silently joins on the
-    wrong key for callers whose id is not the first column.
-    """
-    sig = minhash_signature_table(df, id_col, num_hashes, band_size)
-    return df.join(sig.select(id_col, "bands"), id_col, "left")
+    explode -> hash once per shingle -> `minhash_signatures` (the
+    md5-derived "portable" family is bit-identical in DuckDB, so
+    signatures sit under the driver's value-hash gate).
+
+    `hash_family` picks the per-shingle hash: "portable" (md5-derived,
+    DuckDB-twin-able — the oracle-gated default) or "fast" (xxhash64,
+    ~5x cheaper per shingle — the production family; see
+    functions/phash.shingle_hash); any other name raises ValueError.
+    Verification is family-independent (containment over an injectively
+    hashed shingle set equals containment over the raw set), so only LSH
+    candidate RECALL can move between families — the golden P/R gate is
+    pytest-run for both (tests/test_linking_cc.py)."""
+    from ocds_entity_extract_spark.functions.phash import shingle_hash
+
+    hash_fn = shingle_hash(hash_family)
+    hashed = df_with_shingles.select(
+        id_col, F.explode("shingles").alias("_s")
+    ).select(id_col, hash_fn("_s").alias("_h"))
+    return minhash_signatures(
+        hashed, id_col, num_hashes, band_size, keep_shingle_sets, keep_minhashes
+    )
 
 
 def _bucket_pairs(
@@ -299,29 +245,6 @@ def _prefix_pairs(
     return _bucket_pairs(_spread(pref, ["pfx"]), ["pfx"], id_col, max_bucket)
 
 
-def candidate_pairs(
-    entities: DataFrame,
-    id_col: str = "entity_id",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    prefix_len: int = DEFAULT_PREFIX_LEN,
-    hash_family: str = "portable",
-) -> DataFrame:
-    """DISTINCT ids -> candidate (src, dst) pairs, src < dst, deduped."""
-    base = entities.select(id_col).distinct()
-    sig = minhash_signature_table(
-        _spread(with_shingles(base, id_col)), id_col, num_hashes, band_size,
-        hash_family=hash_family,
-    )
-    lsh_pairs = _lsh_pairs(sig, id_col, max_bucket)
-    return (
-        lsh_pairs.unionByName(_prefix_pairs(base, id_col, max_bucket, prefix_len))
-        .transform(lambda df: _spread(df, ["src", "dst"]))
-        .dropDuplicates()
-    )
-
-
 def verified_edges(
     entities: DataFrame,
     id_col: str = "entity_id",
@@ -331,7 +254,6 @@ def verified_edges(
     band_size: int = DEFAULT_BAND_SIZE,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     prefix_len: int = DEFAULT_PREFIX_LEN,
-    cache_signatures: bool = True,
     hash_family: str = "portable",
 ) -> DataFrame:
     """Candidate pairs -> exact-similarity-verified sameAs edges.
@@ -343,25 +265,18 @@ def verified_edges(
     consumers -> cached; it is O(|distinct entities|), far smaller than
     the mention stream — at cluster scale persist to DISK_ONLY instead).
 
-    `hash_family="fast"` swaps the per-shingle md5 for xxhash64 (the
-    production family, ~5x cheaper per shingle; no DuckDB twin — the
-    oracled queries keep "portable"). Containment verification is
-    family-independent, so changing the family can only move LSH
-    candidate recall; both families clear the golden P/R gate in pytest.
+    `hash_family`: "portable" (the oracled default) or "fast" (xxhash64,
+    the production family) — see `minhash_signature_table`.
 
-    Cache lifecycle: the cached signature table is attached to the
-    returned DataFrame as ``_cached_deps`` — long-lived sessions (query
-    harnesses) should unpersist those after materializing the edges, or
-    call ``spark.catalog.clearCache()`` between jobs; otherwise repeated
+    Cache lifecycle: long-lived sessions (query harnesses) should call
+    ``spark.catalog.clearCache()`` between jobs; otherwise repeated
     invocations accumulate executor storage.
     """
     base = entities.select(id_col).distinct()
     sig = minhash_signature_table(
         _spread(with_shingles(base, id_col)), id_col, num_hashes, band_size,
         hash_family=hash_family,
-    )
-    if cache_signatures:
-        sig = sig.cache()
+    ).cache()
 
     pairs = (
         _lsh_pairs(sig, id_col, max_bucket)
@@ -383,7 +298,7 @@ def verified_edges(
     inter = F.size(F.array_intersect("sh_src", "sh_dst"))
     containment = inter / F.least(F.size("sh_src"), F.size("sh_dst"))
     jac = inter / F.size(F.array_union("sh_src", "sh_dst"))
-    edges = (
+    return (
         joined.withColumn("containment", containment)
         .withColumn("jaccard", jac)
         .filter(
@@ -391,9 +306,6 @@ def verified_edges(
         )
         .select("src", "dst", "containment", "jaccard")
     )
-    if cache_signatures:
-        edges._cached_deps = [sig]  # caller-managed unpersist (see docstring)
-    return edges
 
 
 def verified_edges_py(
@@ -420,21 +332,15 @@ def verified_edges_py(
     stages of pure scheduling latency; this is the size-adaptive escape
     hatch, the same argument as `cc._cc_driver_side` and a broadcast join.
     """
-    import hashlib
     from collections import defaultdict
 
     from ocds_entity_extract_spark.functions.phash import (
         MERSENNE_P,
-        fast_hash64_py,
         minhash_params,
+        shingle_hash_py,
     )
 
-    if hash_family == "fast":
-        _h64 = fast_hash64_py
-    else:
-        _h64 = lambda g: int(  # noqa: E731
-            hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16
-        )
+    _h64 = shingle_hash_py(hash_family)
 
     ids = sorted(set(slugs))
     params = minhash_params(num_hashes)

@@ -103,6 +103,8 @@ def build_triples(
     takes the size-adaptive driver paths below under the thresholds;
     "aqe" skips the count, so every join is left to AQE and linking runs
     distributed — the plan a corpus too big to count cheaply would run."""
+    if surface_broadcast not in ("auto", "aqe"):
+        raise ValueError(f"unknown surface_broadcast {surface_broadcast!r} (auto|aqe)")
     # ONE pass over pages computes all three span arrays inside the Python
     # worker (html -> text -> spans; the text never crosses Arrow back to
     # the JVM — see detect_spans_fused). The small span table is cached so

@@ -3,6 +3,7 @@ and similarity search operators."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocds_entity_extract_spark.operators.dedup import (
@@ -67,6 +68,9 @@ def test_minhash_fast_family_pair_parity(spark, small_corpus):
 
     toy = _docs(spark)
     assert pairs(toy, "portable") == pairs(toy, "fast") != {}
+    # an unknown family name is an error, not a silent fallback to md5
+    with pytest.raises(ValueError, match="hash_family"):
+        minhash_candidate_pairs(toy, hash_family="xxhash")
 
     pages, _, _ = small_corpus
     texts = [extract_text_bytes(p["html"]) for p in pages[:120]]
@@ -174,7 +178,10 @@ def test_portable_hash_matches_python_md5(spark):
 
     from pyspark.sql import functions as F
 
-    from ocds_entity_extract_spark.functions.phash import portable_hash64
+    from ocds_entity_extract_spark.functions.phash import (
+        portable_hash64,
+        portable_hash64_py,
+    )
 
     vals = ["hello", "ab cd ef", "Grupo Aurora S.A.", "ñandú", ""]
     rows = (
@@ -184,6 +191,7 @@ def test_portable_hash_matches_python_md5(spark):
     )
     for r in rows:
         assert r["h"] == int(hashlib.md5(r["s"].encode()).hexdigest()[:15], 16)
+        assert r["h"] == portable_hash64_py(r["s"])
 
 
 def test_ann_ivf_contains_bucket_topk(spark):
@@ -267,6 +275,8 @@ def test_incremental_equals_restricted_full(spark):
     }
     assert inc == full
     assert len(inc) > 0
+    with pytest.raises(ValueError, match="hash_family"):
+        minhash_incremental_pairs(docs, "is_new", hash_family="xxhash")
 
 
 def test_incremental_boundary_batches(spark):

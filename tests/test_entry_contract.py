@@ -34,5 +34,6 @@ def test_registry_reorder_is_complete_and_sample_leads_with_flagship():
         "dedup_minhash_docs_fast",
         "url_dedup_canonical",
         "ann_topk_lsh",
+        "tfidf_top_terms",
     ):
         assert k in first50, k

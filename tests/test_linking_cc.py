@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocds_entity_extract_spark.operators.cc import (
@@ -9,9 +10,9 @@ from ocds_entity_extract_spark.operators.cc import (
     connected_components,
 )
 from ocds_entity_extract_spark.operators.linking import (
-    candidate_pairs,
+    _bucket_pairs,
+    minhash_signature_table,
     verified_edges,
-    with_minhash_bands,
     with_shingles,
 )
 
@@ -26,9 +27,13 @@ def test_shingles(spark):
 
 
 def test_minhash_deterministic(spark):
-    df1 = with_minhash_bands(with_shingles(_ids(spark, ["grupo-aurora"])))
-    df2 = with_minhash_bands(with_shingles(_ids(spark, ["grupo-aurora"])))
-    assert df1.collect()[0]["bands"] == df2.collect()[0]["bands"]
+    def bands():
+        sig = minhash_signature_table(
+            with_shingles(_ids(spark, ["grupo-aurora"])), "entity_id"
+        )
+        return sig.collect()[0]["bands"]
+
+    assert bands() == bands()
 
 
 def test_alias_pairs_found_and_verified(spark):
@@ -59,11 +64,18 @@ def test_alias_pairs_found_and_verified(spark):
 
 
 def test_bucket_cap_guards_hot_buckets(spark):
-    # 100 identical-prefix ids -> prefix bucket larger than cap -> dropped
-    ids = [f"same-prefix-aaaa-{i:03d}" for i in range(100)]
-    pairs = candidate_pairs(_ids(spark, ids), max_bucket=10)
-    # capped: no quadratic blowup (uncapped would be ~4950 prefix pairs)
-    assert pairs.count() < 4000
+    # a 100-member bucket is over the cap of 10 and emits nothing (uncapped
+    # it would emit 4950 pairs); a 5-member bucket emits exactly its 10
+    hot = [("hot", f"h{i:03d}") for i in range(100)]
+    small = [("small", f"s{i}") for i in range(5)]
+    buckets = spark.createDataFrame(hot + small, "key string, entity_id string")
+    pairs = {
+        (r["src"], r["dst"])
+        for r in _bucket_pairs(buckets, ["key"], "entity_id", 10).collect()
+    }
+    assert pairs == {
+        (f"s{i}", f"s{j}") for i in range(5) for j in range(i + 1, 5)
+    }
 
 
 def test_connected_components_basic(spark):
@@ -167,6 +179,9 @@ def test_build_triples_driver_vs_distributed_linking(spark, pages_df):
     ):
         slow = build_triples(spark, pages_df, **kw)
         assert {tuple(r) for r in slow.triples.collect()} == t_fast, kw
+    # an unknown mode name is an error, not a silent fallback to "auto"
+    with pytest.raises(ValueError, match="surface_broadcast"):
+        build_triples(spark, pages_df, surface_broadcast="x")
 
 
 def test_build_triples_parity_on_coined_corpus(spark, monkeypatch):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocds_entity_extract_spark.functions.phash import fast_hash64_py, xxh64_py
@@ -73,3 +74,8 @@ def test_linking_families_same_golden_edges(spark):
         assert ("constructora-aurora-del-norte",
                 "constructora-aurora-del-norte-s-a-de-c-v") in dist
         assert ("grupo-balderas-victoria", "grupo-balderas-victoria-s-a") in dist
+    # an unknown family name is an error, not a silent fallback to md5
+    with pytest.raises(ValueError, match="hash_family"):
+        verified_edges(df, hash_family="xxhash")
+    with pytest.raises(ValueError, match="hash_family"):
+        verified_edges_py(slugs, hash_family="xxhash")

@@ -51,7 +51,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = get_spark(app_name="check-queries", master="local[8]")
+    spark = get_spark(app_name="check-queries")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
