@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocds_entity_extract_spark.functions.text import launder, simple_name
+from ocds_entity_extract_spark.session import local_frame
 
 # (iso2, spanish name) — ISO-3166 at reference parity (~80+ entries, ≙ the
 # reference's getCountryName switch arms, extract.js:1384-1467; re-derived
@@ -85,15 +86,16 @@ MX_STATE_ALIASES: list[tuple[str, str]] = [
 
 def country_dim(spark: SparkSession) -> DataFrame:
     """(code, name_es, name_slug) — join on code or slugged name."""
-    df = spark.createDataFrame(COUNTRIES, "code string, name_es string")
+    df = local_frame(spark, COUNTRIES, "code string, name_es string")
     return df.withColumn("name_slug", simple_name("name_es"))
 
 
 def mx_state_dim(spark: SparkSession) -> DataFrame:
     """(state_name, iso_code, name_slug) with alias rows folded in —
     one broadcast dim replaces both reference switches (extract.js:991-1100)."""
-    base = spark.createDataFrame(MX_STATES, "state_name string, iso_code string")
-    alias = spark.createDataFrame(
+    base = local_frame(spark, MX_STATES, "state_name string, iso_code string")
+    alias = local_frame(
+        spark,
         MX_STATE_ALIASES, "alias string, canonical string"
     ).join(base, F.col("canonical") == F.col("state_name")).select(
         F.col("alias").alias("state_name"), "iso_code"

@@ -21,6 +21,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, functions as F
 
+from ocds_entity_extract_spark.session import local_frame
 from ocds_entity_extract_spark.sources.catalog import Catalog
 
 
@@ -65,7 +66,8 @@ def materialize_triples(
     counts = {r["partition_key"]: r["row_count"] for r in lineage.collect()}
     metrics = {f"triples_{k}": float(v) for k, v in counts.items()}
     metrics["triples_total"] = float(sum(counts.values()))
-    mdf = cat.spark.createDataFrame(
+    mdf = local_frame(
+        cat.spark,
         [(run_id, k, v) for k, v in metrics.items()],
         "run_id string, metric string, value double",
     )

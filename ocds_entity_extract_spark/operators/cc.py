@@ -21,13 +21,19 @@ Scale notes (north_rule: hot-domain/hot-entity skew):
   (enabled in session.py);
 - `localCheckpoint()` each round truncates the logical-plan lineage, which
   otherwise grows exponentially and stalls the driver at scale;
-- convergence = stable (count, xor-hash) signature of the edge set — one
-  lightweight action per round.
+- convergence: the input is oriented larger -> smaller id and both star
+  steps only emit edges to a smaller id, so the edge set is the fixpoint
+  exactly when it is a star forest — every src has one dst and no dst is
+  also a src (each centre is then its component's minimum). One aggregate
+  `isEmpty()` before each round checks that, so an input that already is
+  a star forest (e.g. disjoint pairs) runs no round at all.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ocds_entity_extract_spark.session import local_frame
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -58,12 +64,17 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return lo_edges.union(hi_edges).filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _signature(edges: DataFrame) -> tuple[int, int]:
-    row = edges.select(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Every src has exactly one dst and no dst is also a src."""
+    ends = edges.select(F.col("src").alias("node"), "dst").unionByName(
+        edges.select(F.col("dst").alias("node"), F.lit(None).alias("dst"))
+    )
+    deg = ends.groupBy("node").agg(
+        F.count("dst").alias("n_out"), F.count(F.lit(1)).alias("n_all")
+    )
+    return deg.filter(
+        (F.col("n_out") > 1) | ((F.col("n_out") == 1) & (F.col("n_all") > 1))
+    ).isEmpty()
 
 
 def union_find(pairs) -> dict:
@@ -101,7 +112,7 @@ def _cc_driver_side(edges: DataFrame) -> DataFrame:
     schema = edges.select(
         F.col("src").alias("entity_id"), F.col("src").alias("canonical_id")
     ).schema
-    return edges.sparkSession.createDataFrame(list(roots.items()), schema=schema)
+    return local_frame(edges.sparkSession, roots.items(), schema)
 
 
 def connected_components(
@@ -116,27 +127,36 @@ def connected_components(
     component's minimum id. Nodes not present in `edges` are their own
     canonical id (callers coalesce on join).
 
-    Size-adaptive strategy: the deduped edge set is counted once (an action
-    we need anyway to seed convergence detection); at or below
-    `small_graph_threshold` edges the component structure is solved
+    Size-adaptive strategy: the deduped edge set is counted once; at or
+    below `small_graph_threshold` edges the component structure is solved
     driver-side (union-find — O(E α(E)), one collect), above it the
     alternating-star distributed loop runs. Pass ``small_graph_threshold=0``
-    to force the distributed path.
+    to force the distributed path. The loop runs until the edge set is a
+    star forest (see the module docstring) and raises RuntimeError if
+    `max_iter` rounds do not reach one; rounds grow about as log2 of the
+    longest path.
     """
-    cur = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+    cur = (
+        edges.select(
+            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
     if checkpoint:
         cur = cur.localCheckpoint(eager=True)
     if small_graph_threshold and cur.count() <= small_graph_threshold:
         return _cc_driver_side(cur)
-    prev_sig = None
-    for _ in range(max_iter):
+    rounds = 0
+    while not _is_star_forest(cur):
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"connected_components: no star-forest fixpoint after {max_iter} rounds"
+            )
         cur = _small_star(_large_star(cur))
         if checkpoint:
             cur = cur.localCheckpoint(eager=True)
-        sig = _signature(cur)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+        rounds += 1
 
     # converged star edges: src -> dst(=component min). Roots map to selves.
     children = cur.select(F.col("src").alias("entity_id"), F.col("dst").alias("canonical_id"))

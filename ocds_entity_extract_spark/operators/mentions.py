@@ -302,8 +302,8 @@ def canon_mention_rows(spans: DataFrame, surf2canon_bc) -> DataFrame:
     — the pipeline's one big shuffle — disappears entirely. Valid only
     when (a) pages are url-unique (the input table's key per the north
     rule's input_hint) and (b) the surface dim fits a driver dict (the
-    caller gates on the same `max_driver_linking` threshold as driver-side
-    linking; at web scale the join path runs instead).
+    caller gates on `max_broadcast_surfaces`, the budget that already
+    broadcasts the dim; above it the join path runs instead).
 
     Implemented as `mapInArrow` with batch-level vectorization: surfaces
     are dictionary-encoded per Arrow batch (Zipf: ~10-100x fewer uniques
@@ -388,8 +388,7 @@ def member_edge_rows(spans: DataFrame, slug2canon_bc) -> DataFrame:
     the Column version in test_text_fns), then probed against the broadcast
     slug->canonical dict. A missing slug drops the edge — exactly the join
     path's INNER join against the mapping (whose keys are all dim slugs).
-    Gated on the same `max_driver_linking` threshold as driver-side
-    linking.
+    Gated on `max_broadcast_surfaces`, like `canon_mention_rows`.
 
     Member sentences repeat heavily across a crawl (boilerplate, syndicated
     articles), so parses are memoized in a worker-persistent cache keyed by

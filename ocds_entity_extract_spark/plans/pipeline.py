@@ -58,6 +58,7 @@ from ocds_entity_extract_spark.operators.merge import (
     rank_type,
     type_rank,
 )
+from ocds_entity_extract_spark.session import local_frame
 
 
 @dataclass
@@ -202,11 +203,9 @@ def build_triples(
             canon = linking_canon_dict(
                 sorted(set(dim_pdf["entity_id"])), hash_family=linking_hash_family
             )
-            mapping_plain = spark.createDataFrame(
-                sorted(canon.items()), "entity_id string, canonical_id string"
+            mapping_plain = local_frame(
+                spark, sorted(canon.items()), "entity_id string, canonical_id string"
             )
-            if cache_intermediates:
-                mapping_plain = mapping_plain.cache()
         else:
             mapping_plain = distributed_mapping()
             _mp = mapping_plain.toPandas()
@@ -237,8 +236,8 @@ def build_triples(
     # shuffle (the pipeline's one corpus-sized exchange) carries two
     # narrow columns, not a per-row literal.
     if surf2canon is not None:
-        # zero-shuffle fast path (size-adaptive, same threshold as
-        # driver-side linking): the surface->canonical dict rides a
+        # zero-shuffle fast path (size-adaptive, gated on
+        # `max_broadcast_surfaces`): the surface->canonical dict rides a
         # SparkContext broadcast into one pandas pass over the cached
         # spans table, which dedups canonical ids WITHIN each page —
         # globally complete because spans is url-unique — so neither the
@@ -281,9 +280,9 @@ def build_triples(
     if surf2canon is not None:
         # driver-side small branches: the dim rows, canonical dict and the
         # (static) geo dims are all already on the driver, so the
-        # type/sameAs/area triples — a few thousand rows at most under
-        # `max_driver_linking` — are computed in plain Python and shipped
-        # back as ONE createDataFrame. The Spark branch below runs these as
+        # type/sameAs/area triples — bounded by the dim under
+        # `max_broadcast_surfaces` — are computed in plain Python and shipped
+        # back as `local_frame` tables. The Spark branch below runs these as
         # broadcast-join/agg stages whose scheduling latency is pure fixed
         # cost at ANY corpus size. Measured on a 4-vCPU box (8000-page
         # crawl_adaptive benchmark, seed 1), routing these blocks and the
@@ -312,20 +311,22 @@ def build_triples(
             (c, s) for s, c in canon.items() if rank_by_canon.get(c) == 3
         )
         addr_rows, node_rows, area_rows = area_branch_py(inst_pairs)
-        addrs = spark.createDataFrame(
+        addrs = local_frame(
+            spark,
             addr_rows,
             "entity_id string, country_name string, region string,"
             " locality string, gov_level string",
         )
-        areas_tbl = spark.createDataFrame(
+        areas_tbl = local_frame(
+            spark,
             node_rows,
             "area_id string, name string, classification string, parent_id string",
         )
         _triple_schema = "subj string, pred string, obj string"
-        small_triples = spark.createDataFrame(
-            type_rows + sameas_rows + area_rows, _triple_schema
+        small_triples = local_frame(
+            spark, type_rows + sameas_rows + area_rows, _triple_schema
         )
-        sameas = spark.createDataFrame(sameas_rows, _triple_schema)
+        sameas = local_frame(spark, sameas_rows, _triple_schema)
     else:
         canon_rank = (
             dim.select("entity_id", type_rank("entity_type").alias("_rank"))
@@ -421,7 +422,8 @@ def build_triples(
         # institutions on the contact-bearing pages only (tiny subset):
         # the semi join broadcasts the contact urls, so no corpus shuffle
         if surf2canon is not None:
-            inst_df = spark.createDataFrame(
+            inst_df = local_frame(
+                spark,
                 [(c,) for c, rk in sorted(rank_by_canon.items()) if rk == 3],
                 "org_canon string",
             )

@@ -13,8 +13,12 @@ Scale stance (100 TB / 1000-executor design, tested on local[N]):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -66,6 +70,29 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """Driver-side rows -> DataFrame, via an Arrow table.
+
+    `spark.createDataFrame(<list>)` parallelizes pickled rows, so every scan
+    of the frame starts Python-worker tasks to unpickle them. An Arrow table
+    becomes a JVM `LocalRelation` (planned as `LocalTableScan`, broadcast
+    from the driver with no job) below
+    `spark.sql.execution.arrow.localRelationThreshold`, and a JVM-only RDD of
+    Arrow batches above it. `schema` is a DDL string or a StructType; naive
+    datetimes are read as UTC wall-clock time.
+    """
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _local_n(master: str, default: int) -> int:

@@ -25,6 +25,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, functions as F
 
+from ocds_entity_extract_spark.session import local_frame
 from ocds_entity_extract_spark.sources.catalog import Catalog
 
 CHECKPOINT_TABLE = "checkpoints"
@@ -36,7 +37,7 @@ def with_chunk(pages: DataFrame, n_chunks: int = 64) -> DataFrame:
 
 def committed_chunks(cat: Catalog, scope: str) -> DataFrame:
     if not cat.exists(CHECKPOINT_TABLE):
-        return cat.spark.createDataFrame([], "chunk bigint")
+        return local_frame(cat.spark, [], "chunk bigint")
     return (
         cat.read(CHECKPOINT_TABLE)
         .filter(F.col("run_scope") == scope)
@@ -56,7 +57,8 @@ def commit_chunks(
     cat: Catalog, scope: str, chunks: list[int], ts: dt.datetime | None = None
 ) -> None:
     ts = ts or dt.datetime.now(dt.timezone.utc)
-    df = cat.spark.createDataFrame(
+    df = local_frame(
+        cat.spark,
         [(scope, int(c), ts) for c in chunks],
         "run_scope string, chunk bigint, committed_ts timestamp",
     )

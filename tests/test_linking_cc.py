@@ -100,6 +100,10 @@ def test_connected_components_chain_and_star(spark):
     }
     assert set(cc.values()) == {"n00"}
     assert len(cc) == 16
+    # the distributed loop needs more than 2 rounds here: running out of
+    # rounds must fail loudly, not map from a non-converged edge set
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        connected_components(edges, small_graph_threshold=0, max_iter=2)
 
 
 def test_cc_driver_vs_distributed_parity(spark):
@@ -110,16 +114,23 @@ def test_cc_driver_vs_distributed_parity(spark):
     rng = random.Random(7)
     edges_py = {(f"n{rng.randint(0, 60):02d}", f"n{rng.randint(0, 60):02d}") for _ in range(80)}
     edges_py = [(a, b) for a, b in edges_py if a != b]
-    edges = spark.createDataFrame(edges_py, "src string, dst string")
-    fast = {
-        (r["entity_id"], r["canonical_id"])
-        for r in connected_components(edges).collect()
-    }
-    dist = {
-        (r["entity_id"], r["canonical_id"])
-        for r in connected_components(edges, small_graph_threshold=0).collect()
-    }
-    assert fast == dist
+    # path n1-n4-n2-n5-n0: before and after one star round no dst is also
+    # a src, but one src has two dsts (n4 -> n1, n2; then n2 -> n0, n1) — a
+    # stop rule without the one-dst-per-src condition would stop there and
+    # map n4 to n1 or n2
+    path = [("n1", "n4"), ("n4", "n2"), ("n5", "n0"), ("n5", "n2")]
+    for graph in (edges_py, path):
+        edges = spark.createDataFrame(graph, "src string, dst string")
+        fast = {
+            (r["entity_id"], r["canonical_id"])
+            for r in connected_components(edges).collect()
+        }
+        dist = {
+            (r["entity_id"], r["canonical_id"])
+            for r in connected_components(edges, small_graph_threshold=0).collect()
+        }
+        assert fast == dist
+    assert dist == {(n, "n0") for n in ("n0", "n1", "n2", "n4", "n5")}
 
 
 def test_canonical_mapping_includes_singletons(spark):

@@ -5,10 +5,14 @@ These guard the 100 TB design properties, not just correctness."""
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
+
+from ocds_entity_extract_spark.session import local_frame
 
 
 def plan_of(df) -> str:
@@ -132,3 +136,71 @@ def test_corpus_curation_dedup_is_pure_hash_agg(spark, sf_dir):
     assert "- Sort" not in plan  # no sort anywhere in the tree
     assert "BroadcastHashJoin" in plan  # lang decode is map-side
     assert plan.count("partial_min_by") >= 1  # map-side combine present
+
+
+def _rdd_scans(plan: str) -> list[str]:
+    """For each `Scan ExistingRDD` node, the call that made its RDD, as its
+    formatted Arguments line names it: `localCheckpoint`, or the Python
+    parallelize path of a list-built createDataFrame."""
+    return re.findall(
+        r"\) Scan ExistingRDD.*\n(?:.*\n)*?Arguments: .*?RDD\[\d+\] at (\w+)", plan
+    )
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{}, dict(max_driver_linking=0, cc_small_graph_threshold=0, surface_broadcast="aqe")],
+)
+def test_triples_plan_reads_no_python_rdd(spark, small_corpus, kw):
+    """Driver-built tables (geo dims, the driver-side mapping and small
+    triples, the CC fast path) plan as JVM LocalTableScans: the triple plan
+    scans no RDD except the forced plan's own localCheckpoints, so no task
+    starts a Python worker to unpickle driver rows."""
+    from ocds_entity_extract_spark.plans.pipeline import build_triples
+    from ocds_entity_extract_spark.schemas import PAGES_SCHEMA
+
+    pages, _, _ = small_corpus
+    pages_df = local_frame(
+        spark, [tuple(p[f] for f in PAGES_SCHEMA.names) for p in pages], PAGES_SCHEMA
+    )
+    plan = plan_of(build_triples(spark, pages_df, **kw).triples)
+    scans = _rdd_scans(plan)
+    assert set(scans) <= {"localCheckpoint"}
+    assert bool(scans) == bool(kw)  # only the forced plan checkpoints
+    assert "LocalTableScan" in plan
+
+
+def test_geo_dims_are_local_table_scans(spark):
+    from ocds_entity_extract_spark.functions.geo import country_dim, mx_state_dim
+
+    for dim in (country_dim(spark), mx_state_dim(spark)):
+        plan = plan_of(dim)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_local_frame_round_trip(spark):
+    """local_frame keeps values, nulls and types for zero rows, a null
+    string, and the bigint/double/timestamp columns of the metrics and
+    checkpoints tables, from a DDL string or a StructType."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    ts = dt.datetime(2025, 1, 2, 3, 4, 5, tzinfo=dt.timezone.utc)
+    rows = [("a", 2**40, 1.5, ts), (None, -1, None, None)]
+    ddl = "s string, n bigint, d double, ts timestamp"
+    df = local_frame(spark, rows, ddl)
+    assert df.schema.simpleString() == "struct<s:string,n:bigint,d:double,ts:timestamp>"
+    got = df.withColumn("ts", F.date_format("ts", "yyyy-MM-dd HH:mm:ss")).collect()
+    assert [tuple(r) for r in got] == [
+        ("a", 2**40, 1.5, "2025-01-02 03:04:05"),
+        (None, -1, None, None),
+    ]
+
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == df.schema and empty.collect() == []
+
+    schema = StructType(
+        [StructField(c, LongType(), False) for c in ("entity_id", "canonical_id")]
+    )
+    ids = local_frame(spark, [(7, 3), (3, 3)], schema)
+    assert ids.schema == schema
+    assert sorted(tuple(r) for r in ids.collect()) == [(3, 3), (7, 3)]
