@@ -391,10 +391,10 @@ def member_edge_rows(spans: DataFrame, slug2canon_bc) -> DataFrame:
     Gated on `max_broadcast_surfaces`, like `canon_mention_rows`.
 
     Member sentences repeat heavily across a crawl (boilerplate, syndicated
-    articles), so parses are memoized in a worker-persistent cache keyed by
-    the span string (capped — a pathological corpus can't grow it
-    unboundedly); spans are dictionary-encoded per batch so each distinct
-    span parses once per batch even on a cold cache.
+    articles), so parses are memoized in a per-task cache keyed by the span
+    string (capped — a pathological corpus can't grow it unboundedly);
+    spans are dictionary-encoded per batch so each distinct span parses
+    once per batch, and once per task across batches.
     """
     import re
 

@@ -4,15 +4,20 @@ Scale stance (100 TB / 1000-executor design, tested on local[N]):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting for
   hot domains/entities (north_rule requirement), dynamic join strategy.
 - Arrow enabled for all pandas-UDF stages (the only Python in the hot path).
-- `spark.sql.shuffle.partitions` sized by caller (cores*4 locally; on a real
-  cluster this is ~2-3x total cores and AQE coalesces down).
+- `spark.sql.shuffle.partitions` sized by caller (max(8, 2N) for local[N];
+  on a real cluster this is ~2-3x total cores and AQE coalesces down).
 - Nested schema pruning stays on (default) so struct-typed mention columns
   prune at the parquet scan.
+- In local mode the Python workers come from `pyworker` (Spark's daemon with
+  Spark's archives off `sys.path`) wherever that module is importable when
+  Spark starts the daemon; see `_daemon_module`.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import site
 from collections.abc import Iterable
 
 import pyarrow as pa
@@ -67,6 +72,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.createHiveTableByDefault", "false")
     )
+    daemon = _daemon_module(master)
+    if daemon:
+        builder = builder.config("spark.python.daemon.module", daemon)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -93,6 +101,36 @@ def local_frame(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, schema)
+
+
+def _daemon_module(master: str) -> str | None:
+    """`pyworker` as Spark's Python daemon, where Spark can import it.
+
+    Spark starts the daemon as `python -m <module>` once per executor, with
+    the executor's working directory and environment. Under a `local[...]`
+    master that is this process's, so the module is importable when the
+    engine was imported from a plain directory that is the working
+    directory, on `PYTHONPATH`, or a site-packages directory. An engine
+    shipped by `--py-files` reaches a worker's `sys.path` per task, after
+    the daemon started, and `local-cluster` or cluster executors run
+    elsewhere: those keep Spark's own daemon.
+    """
+    if not re.fullmatch(r"local(\[.*\])?", master):
+        return None
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg)
+    if not os.path.isdir(pkg):
+        return None
+    importable = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    real = os.path.realpath(root)
+    if any(p and os.path.realpath(p) == real for p in importable):
+        return f"{__package__}.pyworker"
+    return None
 
 
 def _local_n(master: str, default: int) -> int:
