@@ -68,8 +68,6 @@ _SAMPLE_FIRST = [
     "ann_topk_ivf", "lang_id_heuristic", "quality_scores",
     "token_stats_total", "token_stats_bpe", "top_ngrams", "doc_fingerprints",
     "dataset_split", "events_sessionize", "contact_spans",
-    "multimodal_meta", "multimodal_decode_stub", "multimodal_features",
-    "multimodal_frame_sample", "multimodal_resize_stub",
 ]
 
 

@@ -38,7 +38,6 @@ HEADLINE = [
     "ann_topk_ivf",
     "token_stats_total",
     "doc_fingerprints",
-    "multimodal_decode_stub",
     "dedup_clusters",
     "kg_merged_entities",
     "kg_merged_entities_salted",
@@ -64,7 +63,7 @@ _BEST = {
     "simhash_docs": 0.129,
     "ann_topk_bruteforce": 0.39, "ann_topk_lsh": 0.759,
     "ann_topk_ivf": 1.051, "token_stats_total": 0.126,
-    "doc_fingerprints": 0.112, "multimodal_decode_stub": 0.303,
+    "doc_fingerprints": 0.112,
     "dedup_clusters": 4.14, "kg_merged_entities": 1.559,
     "kg_merged_entities_salted": 1.511,
     "kg_pipeline_triples": 1.827, "kg_pipeline_products": 1.203,

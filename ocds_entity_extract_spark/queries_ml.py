@@ -2,9 +2,9 @@
 
 Deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding
 near-dup), similarity search (brute-force cosine top-k + LSH-bucketed ANN),
-text analysis (lang-id, quality, token stats, fingerprinting), multimodal
-binary plumbing — over the driver-provided `documents` and `embeddings`
-tables (TESTDATA.md).
+text analysis (lang-id, quality, token stats, fingerprinting), and the
+KG pipeline queries with their DuckDB oracles — over the driver-provided
+`documents` and `embeddings` tables (TESTDATA.md).
 
 SQL-expressible ops carry DuckDB oracles; hash-family ops (xxhash64-based
 LSH/SimHash) are rows-only by design (the driver records the weaker check).
@@ -92,7 +92,9 @@ def _minhash_sig_ctes(
     """Shared DuckDB CTE text for the portable minhash family: expects a
     CTE `{src_cte}` with (id, shingles list<varchar>); emits `hsh` (hashed
     shingle lists) and `sig` (the K affine minhashes). Constants are the
-    SAME seeded literals the Spark plan bakes in (functions/phash)."""
+    SAME seeded literals the Spark plan bakes in (functions/phash). `hsh`
+    is MATERIALIZED: DuckDB otherwise re-evaluates a CTE at each reference,
+    and a verify join reads it again after `sig`."""
     from ocds_entity_extract_spark.functions.phash import (
         MERSENNE_P as P,
         minhash_params,
@@ -103,7 +105,7 @@ def _minhash_sig_ctes(
         for i, (a, b) in enumerate(minhash_params(num_hashes))
     )
     ctes = f"""
-      hsh AS (
+      hsh AS MATERIALIZED (
         SELECT id, [CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)
                     for s in shingles] AS hs
         FROM {src_cte}
@@ -1126,165 +1128,853 @@ def q_contact_spans(spark, sf_dir):
 
 
 # =====================================================================
-# multimodal binary plumbing
+# similarity search over embeddings (LSH-bucketed)
 # =====================================================================
 
-@query(
-    "multimodal_meta",
-    """
-    SELECT doc_id,
-           CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
-           sha256(text) AS content_sha
-    FROM documents
-    """,
-)
-def q_multimodal_meta(spark, sf_dir):
-    """Opaque-binary metadata pass: byte length + content hash over a
-    binary payload column (the schema/partitioning side of multimodal)."""
-    d = _t(spark, sf_dir, "documents")
-    payload = F.encode("text", "UTF-8")
-    return d.select(
-        "doc_id",
-        F.octet_length(payload).cast("bigint").alias("n_bytes"),
-        F.sha2(payload, 256).alias("content_sha"),
+def _embed_neardup_lsh_oracle_sql(
+    dim: int = 64, n_planes: int = 4, seed: int = 7, threshold: float = 0.45
+) -> str:
+    """DuckDB twin of the LSH-bucketed embedding near-dup: the same seeded
+    hyperplane literals -> sign bucket -> bucket-local self-join -> cosine
+    verify (the _ann_lsh_oracle_sql bucket construction, applied to
+    pairwise dedup instead of top-k)."""
+    from ocds_entity_extract_spark.operators.similarity import _hyperplanes
+
+    planes = _hyperplanes(dim, n_planes, seed)
+    cases = "\n           + ".join(
+        f"CASE WHEN list_dot_product(embedding, {[round(x, 17) for x in p]}) > 0 "
+        f"THEN {1 << i} ELSE 0 END"
+        for i, p in enumerate(planes)
     )
-
-
-@query(
-    "multimodal_decode_stub",
-    """
-    SELECT doc_id,
-           CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
-           sha256(text) AS content_sha,
-           CAST(16 + CAST(('0x' || substr(sha256(text), 1, 2)) AS INT) % 64 AS BIGINT)
-             AS fake_width,
-           CAST(16 + CAST(('0x' || substr(sha256(text), 3, 2)) AS INT) % 64 AS BIGINT)
-             AS fake_height
-    FROM documents
-    """,
-)
-def q_multimodal_decode_stub(spark, sf_dir):
-    """mapInPandas over binary payloads through the (stubbed) decoder —
-    the Spark-side plumbing (schema, batching, UDF signature) is real.
-    The stub derives fake dims from sha256 bytes 0/1, so the DuckDB oracle
-    mirrors it exactly (hex-byte arithmetic) — full value-hash gate."""
-    from ocds_entity_extract_spark.operators.multimodal import decode_binary_meta
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    return decode_binary_meta(d)
-
-
-@query(
-    "multimodal_features",
-    """
-    SELECT doc_id,
-           array_to_string(
-             [printf('%.6f', CAST(('0x' || substr(sha256(text), 2*i+1, 2)) AS INT) / 255.0)
-              for i in range(0, 8)], ',') AS features
-    FROM documents
-    """,
-)
-def q_multimodal_features(spark, sf_dir):
-    """mapInPandas featurizer (stub model: sha256-byte vector) — the SQL
-    oracle mirrors the fake exactly, so even this mapInPandas path sits
-    under the full value-hash gate. The vector is rendered as a fixed-
-    format comma-joined string per the repo convention (queries.py:13) —
-    raw array columns crash the driver's pandas canonicalizer."""
-    from ocds_entity_extract_spark.operators.multimodal import extract_features
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    feats = extract_features(d, dim=8)
-    return feats.select(
-        "doc_id",
-        F.array_join(
-            F.transform("features", lambda v: F.format_number(v, 6)), ","
-        ).alias("features"),
-    )
-
-
-@query(
-    "multimodal_frame_sample",
-    """
-    WITH f AS (
-      SELECT doc_id, text, length(text) AS len,
-             CASE WHEN length(text) >= 4 THEN 4 ELSE 1 END AS k
-      FROM documents
-    )
-    SELECT doc_id, CAST(t.i AS BIGINT) AS frame_idx,
-           CAST((t.i * len) // k AS BIGINT) AS offset_bytes,
-           sha256(substring(text, CAST((t.i * len) // k AS BIGINT) + 1, 256)) AS frame_sha
-    FROM f CROSS JOIN unnest(range(f.k)) AS t(i)
-    """,
-)
-def q_multimodal_frame_sample(spark, sf_dir):
-    """mapInPandas FAN-OUT (1 payload row -> k frame rows): the video
-    frame-sampling plumbing. Oracle slices the VARCHAR text — byte-exact
-    here because the driver corpus is pure ASCII (verified); the operator
-    itself is byte-offset-correct for any binary."""
-    from ocds_entity_extract_spark.operators.multimodal import sample_frames
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    return sample_frames(d, n_frames=4, frame_bytes=256)
-
-
-def _resize_oracle_sql(out_width: int = 16, out_height: int = 16) -> str:
-    """DuckDB twin of the resize stub: the hex-iterated sha256 keystream
-    (block_{i+1} = sha256(hex(block_i)), 32 bytes per block) as chained
-    CTEs; the output payload is compared as its lowercase hex rendering."""
-    n_out = out_width * out_height
-    n_blocks = -(-n_out // 32)
-    ctes = ["k1 AS (SELECT doc_id, sha256(text) AS b1 FROM documents)"]
-    for i in range(2, n_blocks + 1):
-        ctes.append(f"k{i} AS (SELECT *, sha256(b{i-1}) AS b{i} FROM k{i-1})")
-    concat = "||".join(f"b{i}" for i in range(1, n_blocks + 1))
-    cte_sql = ",\n         ".join(ctes)
     return f"""
-    WITH {cte_sql}
-    SELECT doc_id,
-           CAST({out_width} AS BIGINT) AS out_width,
-           CAST({out_height} AS BIGINT) AS out_height,
-           substr({concat}, 1, {2 * n_out}) AS payload_hex,
-           CAST({n_out} AS BIGINT) AS payload_bytes
-    FROM k{n_blocks}
+    WITH b AS (
+      SELECT vec_id, embedding,
+             ({cases}) AS bucket
+      FROM embeddings
+    )
+    SELECT a.vec_id AS vid_a, x.vec_id AS vid_b,
+           round(list_cosine_similarity(a.embedding, x.embedding), 3) AS score
+    FROM b a JOIN b x ON a.bucket = x.bucket AND a.vec_id < x.vec_id
+    WHERE round(list_cosine_similarity(a.embedding, x.embedding), 3)
+          >= {threshold}
     """
 
 
-@query("multimodal_resize_stub", _resize_oracle_sql(16, 16))
-def q_multimodal_resize_stub(spark, sf_dir):
-    """mapInPandas binary->binary transform (stub resize): exercises the
-    Arrow binary-output path that would carry real pixel buffers. The
-    output bytes are rendered as lowercase hex so the DuckDB oracle (which
-    mirrors the keystream on VARCHAR digests) hash-matches byte-for-byte."""
-    from ocds_entity_extract_spark.operators.multimodal import resize_payload
+def _bucket_centroids_oracle_sql(
+    dim: int = 64, n_planes: int = 4, seed: int = 7
+) -> str:
+    """DuckDB twin of per-LSH-bucket embedding centroids: same seeded
+    hyperplane sign bucket, then positional mean per bucket."""
+    from ocds_entity_extract_spark.operators.similarity import _hyperplanes
 
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
+    planes = _hyperplanes(dim, n_planes, seed)
+    cases = "\n           + ".join(
+        f"CASE WHEN list_dot_product(embedding, {[round(x, 17) for x in p]}) > 0 "
+        f"THEN {1 << i} ELSE 0 END"
+        for i, p in enumerate(planes)
     )
-    resized = resize_payload(d, out_width=16, out_height=16)
-    return resized.select(
-        "doc_id",
-        F.col("out_width").cast("bigint").alias("out_width"),
-        F.col("out_height").cast("bigint").alias("out_height"),
-        F.lower(F.hex("payload")).alias("payload_hex"),
-        F.octet_length("payload").cast("bigint").alias("payload_bytes"),
+    return f"""
+    WITH b AS (
+      SELECT embedding, ({cases}) AS bucket FROM embeddings
+    ),
+    px AS (
+      SELECT bucket,
+             unnest([{{'p': i - 1, 'v': embedding[i]}}
+                     for i in range(1, len(embedding) + 1)],
+                    recursive := true)
+      FROM b
+    )
+    SELECT bucket, p AS pos,
+           round(avg(v), 4) + 0.0 AS c,  -- +0.0 folds IEEE -0.0 to 0.0
+           CAST(count(*) AS BIGINT) AS n_vecs
+    FROM px GROUP BY bucket, p
+    """
+
+
+@query("embedding_bucket_centroids", _bucket_centroids_oracle_sql())
+def q_embedding_bucket_centroids(spark, sf_dir):
+    """Per-LSH-bucket embedding centroids — the coarse-quantizer training
+    step an IVF index build runs over the corpus (and the aggregation shape
+    of any 'mean vector per cluster' stage). posexplode -> (bucket, pos)
+    hash-agg: ONE shuffle with map-side combine, never a collect_list of
+    vectors per bucket — state per reducer key is a running (sum, count),
+    so a billion-vector bucket costs the same per-key memory as a ten-vector
+    one. Output stays positional (bucket, pos, mean) so no array
+    re-assembly rides the plan."""
+    from ocds_entity_extract_spark.operators.similarity import with_lsh_bucket
+
+    e = _t(spark, sf_dir, "embeddings")
+    b = with_lsh_bucket(e, "embedding", dim=EMBEDDING_DIM, n_planes=4)
+    pos = b.select("bucket", F.posexplode("embedding").alias("pos", "v"))
+    return pos.groupBy("bucket", "pos").agg(
+        # +0.0 folds IEEE -0.0 to 0.0 (engines disagree on the sign of a
+        # rounded-to-zero negative mean; the value hash compares strings)
+        (F.round(F.avg("v"), 4) + F.lit(0.0)).alias("c"),
+        F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
+    )
+
+
+@query("dedup_near_embedding_lsh", _embed_neardup_lsh_oracle_sql(dim=EMBEDDING_DIM))
+def q_dedup_near_embedding_lsh(spark, sf_dir):
+    """Embedding near-dup with LSH-bucket blocking — the 100 TB version of
+    q:dedup_near_embedding (label-blocking degenerates when one label
+    dominates; hyperplane buckets bound every block at ~n/2^planes
+    regardless of label skew). Same seeded hyperplanes as the ANN family,
+    so the DuckDB twin reproduces bucket assignment exactly; candidates
+    are verified by exact cosine inside the bucket."""
+    from ocds_entity_extract_spark.operators.similarity import with_lsh_bucket
+
+    e = _t(spark, sf_dir, "embeddings")
+    b = with_lsh_bucket(e, "embedding", dim=EMBEDDING_DIM, n_planes=4)
+    a = b.select(
+        "bucket", F.col("vec_id").alias("vid_a"), F.col("embedding").alias("va")
+    )
+    x = b.select(
+        "bucket", F.col("vec_id").alias("vid_b"), F.col("embedding").alias("vb")
+    )
+    score = F.round(cosine(F.col("va"), F.col("vb")), 3)
+    return (
+        a.join(x, "bucket")
+        .filter(F.col("vid_a") < F.col("vid_b"))
+        .withColumn("score", score)
+        .filter(F.col("score") >= 0.45)
+        .select("vid_a", "vid_b", "score")
     )
 
 
 # =====================================================================
 # KG pipeline (flagship)
 # =====================================================================
+#
+# Every KG query runs the real Spark pipeline over pages whose extracted
+# text is known in SQL, and its DuckDB oracle re-derives the same output
+# from that text. The oracles are assembled from one set of CTE
+# fragments, each mirroring a stage of plans/pipeline.build_triples:
+#
+#   _kg_page_ctes     page source -> `pages`, whitespace-collapsed `norm`
+#   _kg_mention_ctes  MENTION_RE spans -> slug + rank -> per-slug `ent`
+#   _kg_link_ctes     linking/closure `mapping`, per-canonical `crank`,
+#                     membership + contact-person edges, state dim, areas
+#   _kg_product_ctes  PRODUCT_RE items with CBMEI ids
+#   _kg_entity_ctes   canonical entity-document columns (`doc`)
+#
+# A page source is a SELECT of (url, warc_ts, text): the template corpus
+# over `documents` (_kg_tpl_pages_sql) or the seeded datagen corpus as
+# VALUES (_kg_seed_pages_sql). `typed` and `mapping` are MATERIALIZED:
+# DuckDB otherwise re-evaluates a CTE at each reference, and the recursive
+# closure behind `mapping` is read about ten times (at sf0.001 on a 4-core
+# box a KG oracle took 27-128 s without, about 1 s with these and `hsh`).
+
+_KG_TPL_STATES = ["Jalisco", "Sonora", "Durango", "Colima"]
+
+_SLUG_SQL = (
+    "trim(regexp_replace(lower(strip_accents({e})), '[^a-z0-9]+', '-', 'g'), '-')"
+)
+_TYPE_SQL = (
+    "CASE {r} WHEN 3 THEN 'institution' WHEN 2 THEN 'company' ELSE 'person' END"
+)
+# classifier-override dim with no match: the pipeline run without override
+_KG_NO_OVERRIDE = "(VALUES ('__none__', 'company')) AS ov(name_norm, override_type)"
+
+
+def _kg_pages(spark, n_pages: int = 300):
+    from ocds_entity_extract_spark.datagen import generate_corpus
+    from ocds_entity_extract_spark.schemas import PAGES_SCHEMA
+
+    pages, _, aux = generate_corpus(n_pages=n_pages, seed=42)
+    return spark.createDataFrame(pages, schema=PAGES_SCHEMA), aux
+
+
+def _kg_template_pages(docs):
+    """documents -> deterministic template pages exercising every pipeline
+    path: company aliasing (S.A. variant), a hot cross-page entity,
+    place-suffixed institutions (area inference), membership sentences
+    (person, role de org), plus the free-text tail."""
+    d = F.col("doc_id")
+    surface = F.concat(
+        F.lit("Grupo Alfa"),
+        (d % 50).cast("string"),
+        F.when(d % 3 == 0, F.lit(" S.A.")).otherwise(F.lit("")),
+    )
+    hot = F.when(
+        d % 10 == 0, F.lit(" También participó Grupo Alfa0 en la sesión.")
+    ).otherwise(F.lit(""))
+    state = F.element_at(
+        F.array(*[F.lit(s) for s in _KG_TPL_STATES]), (d % 4 + 1).cast("int")
+    )
+    inst = F.when(
+        d % 5 == 0,
+        F.concat(
+            F.lit("<p>Secretaría de Salud"),
+            (d % 40).cast("string"),
+            F.lit(" de "),
+            state,
+            F.lit(" informó.</p>"),
+        ),
+    ).otherwise(F.lit(""))
+    memb = F.when(
+        d % 7 == 0,
+        F.concat(
+            F.lit("<p>Juan Pérez"),
+            (d % 30).cast("string"),
+            F.lit(", presidente de Grupo Beta"),
+            (d % 15).cast("string"),
+            F.lit(" S.A. encabezó la reunión.</p>"),
+        ),
+    ).otherwise(F.lit(""))
+    over = (
+        F.when(d % 3 == 0, F.lit("0.00"))
+        .when(d % 3 == 1, F.concat((d % 4).cast("string"), F.lit(".25")))
+        .otherwise(F.lit("-1.75"))
+    )
+    prod = F.when(
+        d % 6 == 0,
+        F.concat(
+            F.lit("<p>Producto 4401"),
+            F.lpad((d % 25).cast("string"), 4, "0"),
+            F.lit("23456: material de curación, "),
+            (d % 9 + 1).cast("string"),
+            F.lit(" unidades a $"),
+            (d % 7 + 5).cast("string"),
+            F.lit(".50 con sobreprecio $"),
+            over,
+            F.lit(" y promedio $"),
+            (d % 5).cast("string"),
+            F.lit(".00 según el acta.</p>"),
+        ),
+    ).otherwise(F.lit(""))
+    # person-named contact email (≙ party.contactPoint, extract.js:372-390):
+    # every 15th doc — always an institution page (15 ≡ 0 mod 5), so the
+    # 'funcionario' membership fires; every 30th is also a product page, so
+    # the purchase_count family fires too
+    contact = F.when(
+        d % 15 == 0,
+        F.concat(
+            F.lit("<p>contacto: maria.lopez"),
+            (d % 8).cast("string"),
+            F.lit("@docs.example.mx para prensa.</p>"),
+        ),
+    ).otherwise(F.lit(""))
+    html = F.encode(
+        F.concat(
+            F.lit(
+                "<html><head><title>doc</title><script>var x=1;"
+                "</script></head><body><p>hoy "
+            ),
+            surface,
+            F.lit(" anunció resultados."),
+            hot,
+            F.lit("</p>"),
+            inst,
+            memb,
+            prod,
+            contact,
+            F.lit("<p>"),
+            F.col("text"),
+            F.lit("</p></body></html>"),
+        ),
+        "UTF-8",
+    )
+    return docs.select(
+        F.concat(F.lit("https://docs.example.mx/"), d.cast("string")).alias("url"),
+        (
+            F.lit("2025-01-01 00:00:00").cast("timestamp")
+            + F.make_interval(secs=d)
+        ).alias("warc_ts"),
+        html.alias("html"),
+        F.lit(None).cast("string").alias("text"),
+    )
+
+
+def _kg_tpl_text_sql() -> str:
+    """The template page text as one DuckDB expression over `documents` —
+    the segments `_kg_template_pages` concatenates, in its order (company
+    surface, hot entity, place-suffixed institution, membership sentence,
+    product sentence, contact email, free-text tail). Whitespace-collapsed,
+    it equals the extractor's text of the template html byte for byte
+    (tests/test_kg_oracle_query.py)."""
+    state_case = (
+        "CASE CAST(doc_id % 4 AS INT) "
+        + " ".join(
+            f"WHEN {i} THEN '{s}'" for i, s in enumerate(_KG_TPL_STATES[:-1])
+        )
+        + f" ELSE '{_KG_TPL_STATES[-1]}' END"
+    )
+    return f"""'doc hoy Grupo Alfa' || CAST(doc_id % 50 AS VARCHAR)
+               || (CASE WHEN doc_id % 3 = 0 THEN ' S.A.' ELSE '' END)
+               || ' anunció resultados.'
+               || (CASE WHEN doc_id % 10 = 0
+                   THEN ' También participó Grupo Alfa0 en la sesión.'
+                   ELSE '' END)
+               || (CASE WHEN doc_id % 5 = 0
+                   THEN ' Secretaría de Salud' || CAST(doc_id % 40 AS VARCHAR)
+                        || ' de ' || {state_case} || ' informó.'
+                   ELSE '' END)
+               || (CASE WHEN doc_id % 7 = 0
+                   THEN ' Juan Pérez' || CAST(doc_id % 30 AS VARCHAR)
+                        || ', presidente de Grupo Beta'
+                        || CAST(doc_id % 15 AS VARCHAR)
+                        || ' S.A. encabezó la reunión.'
+                   ELSE '' END)
+               || (CASE WHEN doc_id % 6 = 0
+                   THEN ' Producto 4401'
+                        || lpad(CAST(doc_id % 25 AS VARCHAR), 4, '0')
+                        || '23456: material de curación, '
+                        || CAST(doc_id % 9 + 1 AS VARCHAR)
+                        || ' unidades a $' || CAST(doc_id % 7 + 5 AS VARCHAR)
+                        || '.50 con sobreprecio $'
+                        || (CASE WHEN doc_id % 3 = 0 THEN '0.00'
+                                 WHEN doc_id % 3 = 1
+                                 THEN CAST(doc_id % 4 AS VARCHAR) || '.25'
+                                 ELSE '-1.75' END)
+                        || ' y promedio $' || CAST(doc_id % 5 AS VARCHAR)
+                        || '.00 según el acta.'
+                   ELSE '' END)
+               || (CASE WHEN doc_id % 15 = 0
+                   THEN ' contacto: maria.lopez' || CAST(doc_id % 8 AS VARCHAR)
+                        || '@docs.example.mx para prensa.'
+                   ELSE '' END)
+               || ' ' || text"""
+
+
+def _kg_doc_pages_sql(text: str) -> str:
+    """Page source over `documents`: the url and warc_ts the template
+    pages give each doc, and `text`, a SQL expression over the doc row."""
+    return f"""
+      SELECT 'https://docs.example.mx/' || CAST(doc_id AS VARCHAR) AS url,
+             TIMESTAMP '2025-01-01 00:00:00'
+               + doc_id * INTERVAL 1 SECOND AS warc_ts,
+             {text} AS text
+      FROM documents"""
+
+
+def _kg_tpl_pages_sql() -> str:
+    """Page source: the template corpus (`_kg_template_pages`)."""
+    return _kg_doc_pages_sql(_kg_tpl_text_sql())
+
+
+def _kg_seed_pages_sql(n_pages: int = 300) -> str:
+    """Page source: the seeded datagen corpus as VALUES. The html -> text
+    step uses the pinned Python extractor (`extract_text_bytes`,
+    golden-file + HTMLParser-parity locked) at oracle-build time, so
+    everything downstream is an independent DuckDB re-computation over the
+    exact page texts the pipeline's own extractor produces."""
+    from ocds_entity_extract_spark.datagen import generate_corpus
+    from ocds_entity_extract_spark.functions.html import extract_text_bytes
+
+    pages, _, _ = generate_corpus(n_pages=n_pages, seed=42)
+
+    def q(v: str) -> str:
+        return "'" + v.replace("'", "''") + "'"
+
+    rows = ",\n      ".join(
+        "({}, TIMESTAMP '{}', {})".format(
+            q(pg["url"]),
+            pg["warc_ts"].strftime("%Y-%m-%d %H:%M:%S"),
+            q(extract_text_bytes(pg["html"]) or ""),
+        )
+        for pg in pages
+    )
+    return f"SELECT * FROM (VALUES\n      {rows}) AS p(url, warc_ts, text)"
+
+
+def _kg_seed_override_values_sql(n_pages: int = 300) -> str:
+    """classifier_override rows (name_norm -> type, last-write-wins) as a
+    VALUES dim — the reference's in-memory classifier dict."""
+    import re as _re
+
+    from ocds_entity_extract_spark.datagen import generate_corpus
+
+    _, _, aux = generate_corpus(n_pages=n_pages, seed=42)
+    last: dict[str, str] = {}
+    for row in aux["classifier_override"]:
+        last[_re.sub(r"\s+", " ", row["name"]).strip()] = row["type"]
+    if not last:
+        return _KG_NO_OVERRIDE
+    rows = ", ".join(
+        f"('{n}', '{t}')" for n, t in sorted(last.items())
+    )
+    return f"(VALUES {rows}) AS ov(name_norm, override_type)"
+
+
+def _kg_page_ctes(pages: str) -> str:
+    """`pages` from a page source; `norm`: its text whitespace-collapsed
+    as the extractor does, plus the page's PRODUCT_RE purchase flag."""
+    from ocds_entity_extract_spark.operators.mentions import PRODUCT_RE
+
+    return rf"""
+    pages AS ({pages}
+    ),
+    norm AS (
+      SELECT url, warc_ts,
+             trim(regexp_replace(text, '\s+', ' ', 'g')) AS text,
+             regexp_matches(text, '{PRODUCT_RE}') AS is_purchase
+      FROM pages
+    )"""
+
+
+def _kg_mention_ctes(pages: str) -> str:
+    """Stages 2-4 (detect -> normalize/slug -> classify -> merge): one
+    `typed` row per MENTION_RE span (name_norm, slug, keyword/suffix rank,
+    domain) and `ent`, the per-slug merge aggregates with the first-wins
+    name (ordered by warc_ts, url, name_norm)."""
+    from ocds_entity_extract_spark.functions.classify import (
+        COMPANY_SUFFIX_SLUG_RE,
+        INSTITUTION_KEYWORDS,
+    )
+    from ocds_entity_extract_spark.operators.mentions import MENTION_RE
+
+    kw = ", ".join(f"'{k}'" for k in INSTITUTION_KEYWORDS)
+    return _kg_page_ctes(pages) + rf""",
+    m AS (
+      SELECT url, warc_ts,
+             unnest(regexp_extract_all(text, '{MENTION_RE}')) AS surface
+      FROM norm
+    ),
+    feat AS (
+      SELECT url, warc_ts,
+             regexp_replace(trim(surface), '\s+', ' ', 'g') AS name_norm,
+             {_SLUG_SQL.format(e='surface')} AS entity_id,
+             regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS domain
+      FROM m
+    ),
+    typed AS MATERIALIZED (
+      SELECT *,
+             CASE WHEN split_part(entity_id, '-', 1) IN ({kw}) THEN 3
+                  WHEN regexp_matches(entity_id, '{COMPANY_SUFFIX_SLUG_RE}') THEN 2
+                  ELSE 1 END AS rank
+      FROM feat WHERE entity_id <> ''
+    ),
+    rankedocc AS (
+      SELECT *, row_number() OVER (
+        PARTITION BY entity_id ORDER BY warc_ts, url, name_norm
+      ) AS rn
+      FROM typed
+    ),
+    ent AS (
+      SELECT entity_id,
+             max(CASE WHEN rn = 1 THEN name_norm END) AS name,
+             max(rank) AS rank,
+             CAST(count(*) AS BIGINT) AS mention_count,
+             CAST(count(DISTINCT url) AS BIGINT) AS page_count,
+             min(warc_ts) AS first_seen,
+             max(warc_ts) AS last_seen,
+             list_distinct(list(name_norm)) AS names,
+             list_distinct(list(domain)) AS sources
+      FROM rankedocc GROUP BY entity_id
+    )"""
+
+
+def _kg_link_ctes(pages: str, override: str) -> str:
+    """Everything both KG outputs derive from the mention stream (needs
+    WITH RECURSIVE):
+    - `mapping` (slug -> canonical): char-3-gram shingles -> portable md5
+      minhash -> LSH bands (capped buckets) + slug-prefix blocking (capped)
+      -> containment/min-intersect verification -> recursive transitive
+      closure (component-min canonical, the operators/cc contract);
+    - `crank`: per-canonical max rank, the `override` dim (name_norm ->
+      type) applied per surface;
+    - `medges_all`: MEMBERSHIP_RE edges plus the 'funcionario' edges of
+      person-named contact emails (PERSON_EMAIL_RE) to the page's
+      institutions; `cpnew`: contact persons with no mention of their own;
+    - `statedim` (from the functions/geo constants the Spark dim loads) and
+      the place-suffix areas `regions`/`rcode` of institution groups."""
+    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
+    from ocds_entity_extract_spark.operators.linking import (
+        DEFAULT_BAND_SIZE,
+        DEFAULT_CONTAINMENT_THRESHOLD,
+        DEFAULT_MAX_BUCKET,
+        DEFAULT_MIN_INTERSECT,
+        DEFAULT_NUM_HASHES,
+        DEFAULT_PREFIX_LEN,
+    )
+    from ocds_entity_extract_spark.operators.mentions import (
+        CONTACT_RE,
+        MEMBERSHIP_RE,
+        PERSON_EMAIL_RE,
+    )
+
+    sig_ctes, band_selects = _minhash_sig_ctes(
+        "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
+    )
+    dim_rows = [(n, c, simple_name_py(n)) for n, c in MX_STATES] + [
+        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
+        for alias, canon in MX_STATE_ALIASES
+    ]
+    statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
+    slug = lambda e: _SLUG_SQL.format(e=e)  # noqa: E731
+    email = lambda g: f"regexp_extract(cspan, '{PERSON_EMAIL_RE}', {g})"  # noqa: E731
+    return _kg_mention_ctes(pages) + rf""",
+    idu AS (SELECT entity_id AS id FROM ent),
+    shw AS (
+      SELECT id, list_distinct([substr(id, i, 3)
+                 for i in range(1, greatest(length(id) - 2, 1) + 1)]) AS shingles
+      FROM idu
+    ),{sig_ctes},
+    bands AS (
+      {band_selects}
+    ),
+    capped AS (
+      SELECT * FROM (
+        SELECT *, count(*) OVER (PARTITION BY band_id, band_hash) AS bsz FROM bands
+      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
+    ),
+    lshp AS (
+      SELECT DISTINCT a.id AS src, b.id AS dst
+      FROM capped a JOIN capped b
+        ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.id < b.id
+    ),
+    pfx AS (
+      SELECT id, substr(id, 1, {DEFAULT_PREFIX_LEN}) AS pfx FROM idu
+      WHERE length(id) >= {DEFAULT_PREFIX_LEN}
+    ),
+    pcap AS (
+      SELECT * FROM (
+        SELECT *, count(*) OVER (PARTITION BY pfx) AS bsz FROM pfx
+      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
+    ),
+    pfxp AS (
+      SELECT DISTINCT a.id AS src, b.id AS dst
+      FROM pcap a JOIN pcap b ON a.pfx = b.pfx AND a.id < b.id
+    ),
+    cand AS (SELECT src, dst FROM lshp UNION SELECT src, dst FROM pfxp),
+    edges AS (
+      SELECT c.src, c.dst FROM cand c
+      JOIN hsh ha ON ha.id = c.src
+      JOIN hsh hb ON hb.id = c.dst
+      WHERE len(list_intersect(ha.hs, hb.hs)) >= {DEFAULT_MIN_INTERSECT}
+        AND CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)
+            / least(len(ha.hs), len(hb.hs)) >= {DEFAULT_CONTAINMENT_THRESHOLD}
+    ),
+    sym AS (
+      SELECT src AS a, dst AS b FROM edges
+      UNION ALL
+      SELECT dst AS a, src AS b FROM edges
+    ),
+    reach(src, dst) AS (
+      SELECT a, b FROM sym
+      UNION
+      SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a
+    ),
+    comp AS (
+      SELECT src AS member, least(src, min(dst)) AS canonical
+      FROM reach GROUP BY src
+    ),
+    mapping AS MATERIALIZED (
+      SELECT i.id AS entity_id, coalesce(c.canonical, i.id) AS canonical_id
+      FROM idu i LEFT JOIN comp c ON c.member = i.id
+    ),
+    crank AS (
+      SELECT mp.canonical_id,
+             max(CASE WHEN ov.override_type IS NULL THEN t.rank
+                      WHEN ov.override_type = 'institution' THEN 3
+                      WHEN ov.override_type = 'company' THEN 2
+                      ELSE 1 END) AS rnk
+      FROM typed t
+      JOIN mapping mp ON t.entity_id = mp.entity_id
+      LEFT JOIN {override} ON t.name_norm = ov.name_norm
+      GROUP BY mp.canonical_id
+    ),
+    mm AS (
+      SELECT url, is_purchase,
+             unnest(regexp_extract_all(text, '{MEMBERSHIP_RE}')) AS mspan
+      FROM norm
+    ),
+    medges0 AS (
+      SELECT url, is_purchase,
+             {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 1)")} AS person_id,
+             regexp_extract(mspan, '{MEMBERSHIP_RE}', 2) AS role,
+             {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 3)")} AS org_id
+      FROM mm
+    ),
+    medges AS (
+      SELECT m0.url, p.canonical_id AS member_canon, m0.role,
+             o2.canonical_id AS org_canon, m0.is_purchase
+      FROM medges0 m0
+      JOIN mapping p ON m0.person_id = p.entity_id
+      JOIN mapping o2 ON m0.org_id = o2.entity_id
+      WHERE m0.person_id <> '' AND m0.org_id <> ''
+    ),
+    cmail AS (
+      SELECT url, warc_ts, is_purchase,
+             regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS domain,
+             unnest(regexp_extract_all(text, '{CONTACT_RE}')) AS cspan
+      FROM norm
+    ),
+    cpe AS (
+      SELECT DISTINCT url, warc_ts, domain, is_purchase,
+             {email(1)} || '-' || {email(2)} AS person_slug,
+             upper(substr({email(1)}, 1, 1)) || substr({email(1)}, 2)
+               || ' '
+               || upper(substr({email(2)}, 1, 1)) || substr({email(2)}, 2)
+               AS person_name
+      FROM cmail WHERE regexp_matches(cspan, '{PERSON_EMAIL_RE}')
+    ),
+    pinst AS (
+      SELECT DISTINCT t.url, mp.canonical_id AS org_canon
+      FROM typed t
+      JOIN mapping mp ON t.entity_id = mp.entity_id
+      JOIN crank cr ON cr.canonical_id = mp.canonical_id AND cr.rnk = 3
+      WHERE t.url IN (SELECT url FROM cpe)
+    ),
+    fedges AS (
+      SELECT DISTINCT c.url,
+             coalesce(mp.canonical_id, c.person_slug) AS member_canon,
+             'funcionario' AS role, pi.org_canon, c.is_purchase
+      FROM cpe c
+      JOIN pinst pi ON pi.url = c.url
+      LEFT JOIN mapping mp ON mp.entity_id = c.person_slug
+    ),
+    medges_all AS (
+      SELECT url, member_canon, role, org_canon, is_purchase FROM medges
+      UNION ALL
+      SELECT url, member_canon, role, org_canon, is_purchase FROM fedges
+    ),
+    cpnew AS (
+      SELECT person_slug AS canonical_id,
+             min(person_name) AS name,
+             1 AS rank,
+             [min(person_name)] AS all_names,
+             [person_slug] AS alias_slugs,
+             CAST(NULL AS VARCHAR) AS subtype,
+             CAST(0 AS BIGINT) AS mentions,
+             CAST(count(DISTINCT url) AS BIGINT) AS pages,
+             min(warc_ts) AS first_seen,
+             max(warc_ts) AS last_seen,
+             list_sort(list_distinct(list(domain))) AS sources
+      FROM cpe
+      WHERE person_slug NOT IN (SELECT entity_id FROM mapping)
+      GROUP BY person_slug
+    ),
+    statedim(state_name, iso_code, name_slug) AS (VALUES {statedim}),
+    ia AS (
+      SELECT mp.canonical_id, mp.entity_id AS alias_slug
+      FROM mapping mp JOIN crank cr ON mp.canonical_id = cr.canonical_id
+      WHERE cr.rnk = 3
+    ),
+    amatch AS (
+      SELECT ia.canonical_id, sd.state_name
+      FROM ia JOIN statedim sd ON ia.alias_slug LIKE '%-de-' || sd.name_slug
+    ),
+    regions AS (
+      SELECT canonical_id, min(state_name) AS region FROM amatch
+      GROUP BY canonical_id
+    ),
+    rcode AS (
+      SELECT r.canonical_id,
+             coalesce(sd2.iso_code, 'MX-' || {slug('r.region')}) AS state_code
+      FROM regions r
+      LEFT JOIN statedim sd2 ON sd2.name_slug = {slug('r.region')}
+    )"""
+
+
+def _kg_product_ctes() -> str:
+    """`items`: one row per PRODUCT_RE span of `norm` — the typed item
+    fields and the product_id with CBMEI 12-digit ids dotted 3.3.4.rest
+    (plans/products.py, reference extract.js:142-153)."""
+    from ocds_entity_extract_spark.operators.mentions import PRODUCT_RE
+
+    g = lambda i: f"regexp_extract(s, '{PRODUCT_RE}', {i})"  # noqa: E731
+    return rf""",
+    pm AS (
+      SELECT url, warc_ts,
+             unnest(regexp_extract_all(text, '{PRODUCT_RE}')) AS s
+      FROM norm
+    ),
+    it AS (
+      SELECT url, warc_ts,
+             {g(1)} AS pid,
+             {g(2)} AS description,
+             CAST({g(3)} AS BIGINT) AS quantity,
+             CAST({g(4)} AS DOUBLE) AS unit_price,
+             CAST({g(5)} AS DOUBLE) AS overprice,
+             CAST({g(6)} AS DOUBLE) AS avg_value
+      FROM pm
+    ),
+    items AS (
+      SELECT *,
+             CASE WHEN strpos(pid, '.') > 0 THEN pid
+                  WHEN length(pid) >= 12
+                  THEN substr(pid, 1, 3) || '.' || substr(pid, 4, 3) || '.'
+                       || substr(pid, 7, 4) || '.' || substr(pid, 11)
+                  ELSE pid END AS product_id
+      FROM it WHERE pid <> ''
+    )"""
+
+
+def _kg_entity_ctes(pages: str) -> str:
+    """The entity-document chain of plans/documents.entity_documents over
+    the link CTEs (no classifier override — both document queries run
+    build_triples without one): canonical-group first-wins name, all
+    names, alias slugs, summed counters (`canon`, plus `cpnew`), per-role
+    membership counters and parent link (`as_member`), member counts
+    (`as_parent`), CONTACT_RE page contacts attributed through the mention
+    stream (`ccol`), and `doc`: every document column both renderings
+    share, with identifiers as unsorted [id, scheme] pairs."""
+    from ocds_entity_extract_spark.functions.classify import (
+        COMPANY_SUFFIX_SLUG_RE,
+        INSTITUTION_KEYWORDS,
+    )
+
+    kw_nobanco = ", ".join(
+        f"'{k}'" for k in INSTITUTION_KEYWORDS if k != "banco"
+    )
+    return _kg_link_ctes(pages, _KG_NO_OVERRIDE) + rf""",
+    cranked AS (
+      SELECT e.*, mp.canonical_id,
+             row_number() OVER (
+               PARTITION BY mp.canonical_id ORDER BY e.first_seen, e.entity_id
+             ) AS crn
+      FROM ent e JOIN mapping mp ON e.entity_id = mp.entity_id
+    ),
+    canon AS (
+      SELECT canonical_id,
+             max(CASE WHEN crn = 1 THEN name END) AS name,
+             max(rank) AS rank,
+             list_sort(list_distinct(flatten(list(names)))) AS all_names,
+             list_sort(list(entity_id)) AS alias_slugs,
+             max(nullif(regexp_extract(entity_id,
+                                       '{COMPANY_SUFFIX_SLUG_RE}', 1), ''))
+               AS subtype,
+             CAST(sum(mention_count) AS BIGINT) AS mentions,
+             CAST(sum(page_count) AS BIGINT) AS pages,
+             min(first_seen) AS first_seen,
+             max(last_seen) AS last_seen,
+             list_sort(list_distinct(flatten(list(sources)))) AS sources
+      FROM cranked GROUP BY canonical_id
+    ),
+    canon2 AS (
+      SELECT canonical_id, name, rank, all_names, alias_slugs, subtype,
+             mentions, pages, first_seen, last_seen, sources
+      FROM canon
+      UNION ALL
+      SELECT canonical_id, name, rank, all_names, alias_slugs, subtype,
+             mentions, pages, first_seen, last_seen, sources
+      FROM cpnew
+    ),
+    as_member AS (
+      SELECT member_canon AS canonical_id,
+             CAST(sum(CASE WHEN role IN ('director general', 'directora general')
+                      THEN 1 ELSE 0 END) AS BIGINT) AS n_director_general,
+             CAST(sum(CASE WHEN role = 'titular' THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_titular,
+             CAST(sum(CASE WHEN role IN ('presidente', 'presidenta')
+                      THEN 1 ELSE 0 END) AS BIGINT) AS n_presidente,
+             CAST(sum(CASE WHEN role = 'gerente' THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_gerente,
+             CAST(sum(CASE WHEN role = 'funcionario' THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_funcionario,
+             CAST(sum(CASE WHEN role = 'funcionario' AND NOT is_purchase
+                      THEN 1 ELSE 0 END) AS BIGINT) AS n_funcionario_contract,
+             CAST(sum(CASE WHEN role = 'funcionario' AND is_purchase
+                      THEN 1 ELSE 0 END) AS BIGINT) AS n_funcionario_purchase,
+             CAST(sum(CASE WHEN role IN ('presidente', 'presidenta')
+                      AND NOT is_purchase
+                      THEN 1 ELSE 0 END) AS BIGINT) AS n_presidente_contract,
+             CAST(sum(CASE WHEN role IN ('presidente', 'presidenta')
+                      AND is_purchase
+                      THEN 1 ELSE 0 END) AS BIGINT) AS n_presidente_purchase,
+             min(CASE WHEN org_canon <> member_canon THEN org_canon END)
+               AS parent_id
+      FROM medges_all GROUP BY member_canon
+    ),
+    as_parent AS (
+      SELECT org_canon AS canonical_id,
+             CAST(count(DISTINCT member_canon) AS BIGINT) AS member_count
+      FROM medges_all GROUP BY org_canon
+    ),
+    contacts AS (
+      SELECT DISTINCT url,
+             CASE WHEN strpos(cspan, '@') > 0 THEN 'email' ELSE 'tel' END AS ctype,
+             cspan AS cv
+      FROM cmail
+    ),
+    centity AS (
+      SELECT DISTINCT mp.canonical_id, c.ctype, c.cv
+      FROM (SELECT DISTINCT url, entity_id FROM typed) o
+      JOIN contacts c ON c.url = o.url
+      JOIN mapping mp ON mp.entity_id = o.entity_id
+    ),
+    ccol AS (
+      SELECT canonical_id,
+             array_to_string(
+               [x[1] || ':' || x[2]
+                for x in list_sort(list([ctype, cv]))], ',') AS contact_details
+      FROM centity GROUP BY canonical_id
+    ),
+    doc AS (
+      SELECT c.canonical_id AS id,
+             c.name,
+             {_TYPE_SQL.format(r='c.rank')} AS entity_type,
+             coalesce(
+               CASE WHEN c.rank = 3 THEN
+                 CASE WHEN split_part(c.canonical_id, '-', 1) = 'banco' THEN 'banco'
+                      WHEN split_part(c.canonical_id, '-', 1) IN ({kw_nobanco})
+                        THEN split_part(c.canonical_id, '-', 1)
+                      WHEN am.parent_id IS NOT NULL THEN 'unidad-compradora'
+                      ELSE 'dependencia' END
+                    WHEN c.rank = 2 THEN c.subtype END, '') AS subclassification,
+             CASE WHEN c.rank > 1 THEN am.parent_id END AS parent_id,
+             CASE WHEN c.rank = 3 THEN
+               CASE WHEN split_part(c.canonical_id, '-', 1)
+                         IN ('municipio', 'ayuntamiento') THEN 'city'
+                    WHEN rg.region IS NOT NULL THEN 'region'
+                    WHEN split_part(c.canonical_id, '-', 1) = 'gobierno'
+                      THEN 'region'
+                    ELSE 'country' END
+             END AS gov_level,
+             coalesce(cc.contact_details, '') AS contact_details,
+             [[s, 'slug'] for s in c.alias_slugs]
+               || [[d, 'domain'] for d in c.sources]
+               || (CASE WHEN c.rank = 3 AND len(c.words) >= 2
+                   THEN [[array_to_string(list_transform(
+                           c.words, t -> substr(t, 1, 1)), ''), 'initials']]
+                   ELSE CAST([] AS VARCHAR[][]) END) AS idents,
+             coalesce(array_to_string(
+               list_sort(list_filter(c.all_names, x -> x <> c.name)), ','
+             ), '') AS other_names,
+             c.mentions, c.pages,
+             coalesce(am.n_director_general, 0) AS n_director_general,
+             coalesce(am.n_titular, 0) AS n_titular,
+             coalesce(am.n_presidente, 0) AS n_presidente,
+             coalesce(am.n_gerente, 0) AS n_gerente,
+             coalesce(am.n_funcionario, 0) AS n_funcionario,
+             coalesce(am.n_funcionario_contract, 0) AS n_funcionario_contract,
+             coalesce(am.n_funcionario_purchase, 0) AS n_funcionario_purchase,
+             coalesce(am.n_presidente_contract, 0) AS n_presidente_contract,
+             coalesce(am.n_presidente_purchase, 0) AS n_presidente_purchase,
+             coalesce(ap.member_count, 0) AS members,
+             array_to_string(c.sources, ',') AS sources,
+             c.first_seen, c.last_seen
+      FROM (
+        SELECT *,
+               list_filter(string_split(canonical_id, '-'),
+                 t -> t NOT IN ('de','del','la','las','los','y','e')
+                      AND regexp_matches(t, '^[a-z]')) AS words
+        FROM canon2
+      ) c
+      LEFT JOIN as_member am ON am.canonical_id = c.canonical_id
+      LEFT JOIN as_parent ap ON ap.canonical_id = c.canonical_id
+      LEFT JOIN ccol cc ON cc.canonical_id = c.canonical_id
+      LEFT JOIN regions rg ON rg.canonical_id = c.canonical_id
+    )"""
+
+
+# stages 1-4 under the oracle (linking/CC excluded): a smaller template
+# with a deliberately HOT key, Grupo Alfa0, mentioned on every 10th page
+_KG_MERGED_TEXT_SQL = """'doc hoy Grupo Alfa' || CAST(doc_id % 50 AS VARCHAR)
+               || (CASE WHEN doc_id % 3 = 0 THEN ' S.A.' ELSE '' END)
+               || ' anunció resultados.'
+               || (CASE WHEN doc_id % 10 = 0
+                   THEN ' También participó Grupo Alfa0 en la sesión.'
+                   ELSE '' END)
+               || ' ' || text"""
+
 
 def _kg_merged_oracle_sql() -> str:
     """DuckDB twin of the flagship chain extract_text -> detect mentions ->
     normalize/slug -> classify -> merge (stages 1-4 of plans/pipeline;
-    linking/CC are oracled separately via linking_signatures and excluded
-    here because CC is iterative).
+    linking/CC are oracled by the kg_pipeline_* queries).
 
     The page synthesis is the oracle's lever: pages are built from
     documents.parquet with a KNOWN html template, so the expected
@@ -1294,78 +1984,18 @@ def _kg_merged_oracle_sql() -> str:
     twins proven by q:scalar_text_fns, the §2.9 heuristic, the A1-A17
     merge aggregates — runs value-for-value in both engines.
     """
-    from ocds_entity_extract_spark.functions.classify import (
-        COMPANY_SUFFIX_SLUG_RE,
-        INSTITUTION_KEYWORDS,
-    )
-    from ocds_entity_extract_spark.operators.mentions import MENTION_RE
-
-    kw = ", ".join(f"'{k}'" for k in INSTITUTION_KEYWORDS)
-    return rf"""
-    WITH pages AS (
-      SELECT 'https://docs.example.mx/' || CAST(doc_id AS VARCHAR) AS url,
-             TIMESTAMP '2025-01-01 00:00:00'
-               + doc_id * INTERVAL 1 SECOND AS warc_ts,
-             'doc hoy Grupo Alfa' || CAST(doc_id % 50 AS VARCHAR)
-               || (CASE WHEN doc_id % 3 = 0 THEN ' S.A.' ELSE '' END)
-               || ' anunció resultados.'
-               || (CASE WHEN doc_id % 10 = 0
-                   THEN ' También participó Grupo Alfa0 en la sesión.'
-                   ELSE '' END)
-               || ' ' || text AS text
-      FROM documents
-    ),
-    norm AS (
-      SELECT url, warc_ts,
-             trim(regexp_replace(text, '\s+', ' ', 'g')) AS text
-      FROM pages
-    ),
-    m AS (
-      SELECT url, warc_ts,
-             unnest(regexp_extract_all(text, '{MENTION_RE}')) AS surface
-      FROM norm
-    ),
-    feat AS (
-      SELECT url, warc_ts,
-             regexp_replace(trim(surface), '\s+', ' ', 'g') AS name_norm,
-             trim(regexp_replace(lower(strip_accents(surface)),
-                                 '[^a-z0-9]+', '-', 'g'), '-') AS entity_id,
-             regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS domain
-      FROM m
-    ),
-    typed AS (
-      SELECT *,
-             CASE
-               WHEN split_part(entity_id, '-', 1) IN ({kw}) THEN 3
-               WHEN regexp_matches(entity_id, '{COMPANY_SUFFIX_SLUG_RE}') THEN 2
-               ELSE 1
-             END AS rank
-      FROM feat
-      WHERE entity_id <> ''
-    ),
-    ranked AS (
-      SELECT *,
-             row_number() OVER (
-               PARTITION BY entity_id
-               ORDER BY warc_ts, url, name_norm
-             ) AS rn
-      FROM typed
-    )
+    return f"""
+    WITH {_kg_mention_ctes(_kg_doc_pages_sql(_KG_MERGED_TEXT_SQL))}
     SELECT entity_id,
-           max(CASE WHEN rn = 1 THEN name_norm END) AS name,
-           CASE max(rank) WHEN 3 THEN 'institution'
-                          WHEN 2 THEN 'company'
-                          ELSE 'person' END AS entity_type,
-           CAST(count(*) AS BIGINT) AS mention_count,
-           CAST(count(DISTINCT url) AS BIGINT) AS page_count,
-           strftime(min(warc_ts), '%Y-%m-%d %H:%M:%S') AS first_seen,
-           strftime(max(warc_ts), '%Y-%m-%d %H:%M:%S') AS last_seen,
-           array_to_string(list_sort(list_distinct(list(name_norm))), ',')
-             AS all_names,
-           array_to_string(list_sort(list_distinct(list(domain))), ',')
-             AS sources
-    FROM ranked
-    GROUP BY entity_id
+           name,
+           {_TYPE_SQL.format(r='rank')} AS entity_type,
+           mention_count,
+           page_count,
+           strftime(first_seen, '%Y-%m-%d %H:%M:%S') AS first_seen,
+           strftime(last_seen, '%Y-%m-%d %H:%M:%S') AS last_seen,
+           array_to_string(list_sort(names), ',') AS all_names,
+           array_to_string(list_sort(sources), ',') AS sources
+    FROM ent
     """
 
 
@@ -1538,266 +2168,28 @@ def q_entity_source_runs(spark, sf_dir):
     )
 
 
-# =====================================================================
-# KG full pipeline (rows-only — pandas UDF + LSH + CC)
-# =====================================================================
-
-def _kg_pages(spark, n_pages: int = 300):
-    from ocds_entity_extract_spark.datagen import generate_corpus
-    from ocds_entity_extract_spark.schemas import PAGES_SCHEMA
-
-    pages, _, aux = generate_corpus(n_pages=n_pages, seed=42)
-    return spark.createDataFrame(pages, schema=PAGES_SCHEMA), aux
-
-
-_SLUG_SQL = (
-    "trim(regexp_replace(lower(strip_accents({e})), '[^a-z0-9]+', '-', 'g'), '-')"
-)
-
-
-def _kg_seed_pages_values_sql(n_pages: int = 300) -> str:
-    """The seeded datagen corpus as a DuckDB VALUES table of
-    (url, extracted text). The html -> text step uses the pinned Python
-    extractor (`extract_text_bytes`, golden-file + HTMLParser-parity
-    locked) at ORACLE-BUILD time, so everything downstream — mention/
-    membership/product regexes, slugging, minhash/LSH/CC, areas — is an
-    INDEPENDENT DuckDB re-computation over the exact page texts the
-    pipeline's own extractor produces."""
-    from ocds_entity_extract_spark.datagen import generate_corpus
-    from ocds_entity_extract_spark.functions.html import extract_text_bytes
-
-    pages, _, _ = generate_corpus(n_pages=n_pages, seed=42)
-
-    def q(v: str) -> str:
-        return "'" + v.replace("'", "''") + "'"
-
-    rows = ",\n      ".join(
-        f"({q(pg['url'])}, {q(extract_text_bytes(pg['html']) or '')})"
-        for pg in pages
-    )
-    return f"(VALUES\n      {rows}) AS pages(url, text)"
-
-
-def _kg_seed_override_values_sql(n_pages: int = 300) -> str:
-    """classifier_override rows (name_norm -> type, last-write-wins) as a
-    VALUES dim — the reference's in-memory classifier dict."""
-    import re as _re
-
-    from ocds_entity_extract_spark.datagen import generate_corpus
-
-    _, _, aux = generate_corpus(n_pages=n_pages, seed=42)
-    last: dict[str, str] = {}
-    for row in aux["classifier_override"]:
-        last[_re.sub(r"\s+", " ", row["name"]).strip()] = row["type"]
-    if not last:
-        return "(VALUES ('__none__', 'company')) AS ov(name_norm, override_type)"
-    rows = ", ".join(
-        f"('{n}', '{t}')" for n, t in sorted(last.items())
-    )
-    return f"(VALUES {rows}) AS ov(name_norm, override_type)"
-
-
-def _kg_seeded_triples_oracle_sql(n_pages: int = 300) -> str:
-    """DuckDB twin of the FULL build_triples plan on the SEEDED corpus
-    (the same 300 pages q_kg_triples runs, override included): mention
-    extraction -> surface-level classification with the override dim ->
-    slug universe -> portable-md5 minhash -> capped LSH + prefix blocking
-    -> containment verification -> recursive transitive closure ->
-    mentions/type/sameAs/memberOf/area/product triples. Same machinery as
-    _kg_triples_oracle_sql, applied to real datagen pages instead of the
-    template — closing the last rows-only gap in the registry."""
-    from ocds_entity_extract_spark.functions.classify import (
-        COMPANY_SUFFIX_SLUG_RE,
-        INSTITUTION_KEYWORDS,
-    )
-    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
-    from ocds_entity_extract_spark.operators.linking import (
-        DEFAULT_BAND_SIZE,
-        DEFAULT_CONTAINMENT_THRESHOLD,
-        DEFAULT_MAX_BUCKET,
-        DEFAULT_MIN_INTERSECT,
-        DEFAULT_NUM_HASHES,
-        DEFAULT_PREFIX_LEN,
-    )
-    from ocds_entity_extract_spark.operators.mentions import (
-        CONTACT_RE,
-        MEMBERSHIP_RE,
-        MENTION_RE,
-        PERSON_EMAIL_RE,
-        PRODUCT_RE,
-    )
-
-    kw = ", ".join(f"'{k}'" for k in INSTITUTION_KEYWORDS)
-    sig_ctes, band_selects = _minhash_sig_ctes(
-        "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
-    )
-    dim_rows = [(n, c, simple_name_py(n)) for n, c in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
-        for alias, canon in MX_STATE_ALIASES
-    ]
-    statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
-    slug = lambda e: _SLUG_SQL.format(e=e)  # noqa: E731
-    return rf"""
-    WITH RECURSIVE pages AS (
-      SELECT url, text FROM {_kg_seed_pages_values_sql(n_pages)}
-    ),
-    m AS (
-      SELECT url, unnest(regexp_extract_all(text, '{MENTION_RE}')) AS surface
-      FROM pages
-    ),
-    occ AS (
-      SELECT url, surface, {slug('surface')} AS entity_id FROM m
-      WHERE {slug('surface')} <> ''
-    ),
-    idu AS (SELECT DISTINCT entity_id AS id FROM occ),
-    shw AS (
-      SELECT id, list_distinct([substr(id, i, 3)
-                 for i in range(1, greatest(length(id) - 2, 1) + 1)]) AS shingles
-      FROM idu
-    ),{sig_ctes},
-    bands AS (
-      {band_selects}
-    ),
-    capped AS (
-      SELECT * FROM (
-        SELECT *, count(*) OVER (PARTITION BY band_id, band_hash) AS bsz FROM bands
-      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
-    ),
-    lshp AS (
-      SELECT DISTINCT a.id AS src, b.id AS dst
-      FROM capped a JOIN capped b
-        ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.id < b.id
-    ),
-    pfx AS (
-      SELECT id, substr(id, 1, {DEFAULT_PREFIX_LEN}) AS pfx FROM idu
-      WHERE length(id) >= {DEFAULT_PREFIX_LEN}
-    ),
-    pcap AS (
-      SELECT * FROM (
-        SELECT *, count(*) OVER (PARTITION BY pfx) AS bsz FROM pfx
-      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
-    ),
-    pfxp AS (
-      SELECT DISTINCT a.id AS src, b.id AS dst
-      FROM pcap a JOIN pcap b ON a.pfx = b.pfx AND a.id < b.id
-    ),
-    cand AS (SELECT src, dst FROM lshp UNION SELECT src, dst FROM pfxp),
-    edges AS (
-      SELECT c.src, c.dst FROM cand c
-      JOIN hsh ha ON ha.id = c.src
-      JOIN hsh hb ON hb.id = c.dst
-      WHERE len(list_intersect(ha.hs, hb.hs)) >= {DEFAULT_MIN_INTERSECT}
-        AND CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)
-            / least(len(ha.hs), len(hb.hs)) >= {DEFAULT_CONTAINMENT_THRESHOLD}
-    ),
-    sym AS (
-      SELECT src AS a, dst AS b FROM edges
-      UNION ALL
-      SELECT dst AS a, src AS b FROM edges
-    ),
-    reach(src, dst) AS (
-      SELECT a, b FROM sym
-      UNION
-      SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a
-    ),
-    comp AS (
-      SELECT src AS member, least(src, min(dst)) AS canonical
-      FROM reach GROUP BY src
-    ),
-    mapping AS (
-      SELECT i.id AS entity_id, coalesce(c.canonical, i.id) AS canonical_id
-      FROM idu i LEFT JOIN comp c ON c.member = i.id
-    ),
-    surf AS (
-      SELECT DISTINCT
-             trim(regexp_replace(surface, '\s+', ' ', 'g')) AS name_norm,
-             entity_id
-      FROM occ
-    ),
-    sranks AS (
-      SELECT sf.entity_id,
-             CASE coalesce(
-                    ov.override_type,
-                    CASE WHEN split_part(sf.entity_id, '-', 1) IN ({kw})
-                         THEN 'institution'
-                         WHEN regexp_matches(sf.entity_id,
-                                             '{COMPANY_SUFFIX_SLUG_RE}')
-                         THEN 'company'
-                         ELSE 'person' END)
-               WHEN 'institution' THEN 3 WHEN 'company' THEN 2 ELSE 1
-             END AS rnk
-      FROM surf sf
-      LEFT JOIN {_kg_seed_override_values_sql(n_pages)}
-        ON sf.name_norm = ov.name_norm
-    ),
-    crank AS (
-      SELECT mp.canonical_id, max(r.rnk) AS rnk
-      FROM sranks r JOIN mapping mp ON r.entity_id = mp.entity_id
-      GROUP BY mp.canonical_id
-    ),
-    mm AS (
-      SELECT url, unnest(regexp_extract_all(text, '{MEMBERSHIP_RE}')) AS mspan
-      FROM pages
-    ),
-    medges AS (
-      SELECT {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 1)")} AS person_id,
-             {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 3)")} AS org_id
-      FROM mm
-    ),
-    statedim(state_name, iso_code, name_slug) AS (VALUES {statedim}),
-    ia AS (
-      SELECT mp.canonical_id, mp.entity_id AS alias_slug
-      FROM mapping mp JOIN crank cr ON mp.canonical_id = cr.canonical_id
-      WHERE cr.rnk = 3
-    ),
-    amatch AS (
-      SELECT ia.canonical_id, sd.state_name
-      FROM ia JOIN statedim sd ON ia.alias_slug LIKE '%-de-' || sd.name_slug
-    ),
-    regions AS (
-      SELECT canonical_id, min(state_name) AS region FROM amatch
-      GROUP BY canonical_id
-    ),
-    rcode AS (
-      SELECT r.canonical_id,
-             coalesce(sd2.iso_code, 'MX-' || {slug('r.region')}) AS state_code
-      FROM regions r
-      LEFT JOIN statedim sd2 ON sd2.name_slug = {slug('r.region')}
-    ),
-    prodm AS (
-      SELECT url, unnest(regexp_extract_all(text, '{PRODUCT_RE}')) AS pspan
-      FROM pages
-    ),
-    prodid AS (
-      SELECT url, regexp_extract(pspan, '{PRODUCT_RE}', 1) AS pid FROM prodm
-    ),
-    prodt AS (
-      SELECT DISTINCT url,
-             CASE WHEN strpos(pid, '.') > 0 THEN pid
-                  WHEN length(pid) >= 12
-                  THEN substr(pid, 1, 3) || '.' || substr(pid, 4, 3) || '.'
-                       || substr(pid, 7, 4) || '.' || substr(pid, 11)
-                  ELSE pid END AS product_id
-      FROM prodid WHERE pid <> ''
-    )
+def _kg_triples_oracle_sql(pages: str, override: str = _KG_NO_OVERRIDE) -> str:
+    """DuckDB twin of the FULL build_triples plan over a page source with a
+    classifier-override dim: the link and product CTEs, then the
+    mentions/type/sameAs/memberOf/inArea/partOf/mentionsProduct triples
+    (contact persons with no mention of their own are typed 'person')."""
+    return f"""
+    WITH RECURSIVE {_kg_link_ctes(pages, override)}{_kg_product_ctes()}
     SELECT subj, pred, obj FROM (
-      SELECT DISTINCT o.url AS subj, 'mentions' AS pred, mp.canonical_id AS obj
-      FROM occ o JOIN mapping mp ON o.entity_id = mp.entity_id
+      SELECT DISTINCT t.url AS subj, 'mentions' AS pred, mp.canonical_id AS obj
+      FROM typed t JOIN mapping mp ON t.entity_id = mp.entity_id
       UNION ALL
       SELECT canonical_id AS subj, 'type' AS pred,
-             CASE rnk WHEN 3 THEN 'institution'
-                      WHEN 2 THEN 'company' ELSE 'person' END AS obj
+             {_TYPE_SQL.format(r='rnk')} AS obj
       FROM crank
+      UNION ALL
+      SELECT canonical_id AS subj, 'type' AS pred, 'person' AS obj FROM cpnew
       UNION ALL
       SELECT entity_id AS subj, 'sameAs' AS pred, canonical_id AS obj
       FROM mapping WHERE entity_id <> canonical_id
       UNION ALL
-      SELECT DISTINCT p.canonical_id AS subj, 'memberOf' AS pred,
-             o2.canonical_id AS obj
-      FROM medges e
-      JOIN mapping p ON e.person_id = p.entity_id
-      JOIN mapping o2 ON e.org_id = o2.entity_id
-      WHERE e.person_id <> '' AND e.org_id <> ''
+      SELECT DISTINCT member_canon AS subj, 'memberOf' AS pred, org_canon AS obj
+      FROM medges_all
       UNION ALL
       SELECT subj, pred, obj FROM (
         SELECT canonical_id AS subj, 'inArea' AS pred, state_code AS obj
@@ -1806,18 +2198,20 @@ def _kg_seeded_triples_oracle_sql(n_pages: int = 300) -> str:
         SELECT state_code AS subj, 'partOf' AS pred, 'mx' AS obj FROM rcode
       )
       UNION ALL
-      SELECT url AS subj, 'mentionsProduct' AS pred, product_id AS obj
-      FROM prodt
+      SELECT DISTINCT url AS subj, 'mentionsProduct' AS pred, product_id AS obj
+      FROM items
     )
     """
 
 
-@query("kg_triples", _kg_seeded_triples_oracle_sql())
+@query("kg_triples", _kg_triples_oracle_sql(
+    _kg_seed_pages_sql(), _kg_seed_override_values_sql()
+))
 def q_kg_triples(spark, sf_dir):
     """Full KG pipeline on the deterministic seeded corpus (pages ->
-    triples, classifier override applied) — now under the full value-hash
-    gate via _kg_seeded_triples_oracle_sql (the page texts ride the oracle
-    as a VALUES table; everything downstream recomputes in DuckDB)."""
+    triples, classifier override applied) under the full value-hash gate:
+    the page texts ride the oracle as a VALUES table, everything
+    downstream recomputes in DuckDB."""
     from ocds_entity_extract_spark.functions.classify import load_classifier_override
     from ocds_entity_extract_spark.plans.pipeline import build_triples
     from ocds_entity_extract_spark.schemas import CLASSIFIER_SCHEMA
@@ -1829,314 +2223,32 @@ def q_kg_triples(spark, sf_dir):
     return build_triples(spark, pages, override).triples
 
 
-def _kg_seed_pages_values_ts_sql(n_pages: int = 300) -> str:
-    """Seeded corpus as VALUES of (url, warc_ts, extracted text) — the
-    timestamped variant for the entity-document oracle (warc_ts drives the
-    first-wins name ordering)."""
-    from ocds_entity_extract_spark.datagen import generate_corpus
-    from ocds_entity_extract_spark.functions.html import extract_text_bytes
+@query("kg_pipeline_triples", _kg_triples_oracle_sql(_kg_tpl_pages_sql()))
+def q_kg_pipeline_triples(spark, sf_dir):
+    """THE flagship chain end-to-end under the full value-hash gate:
+    documents -> template pages -> real build_triples (fused pandas-UDF
+    extraction, dictionary-encoded classify, merge, MinHash-LSH linking,
+    connected components, membership + area edges, triple assembly) — the
+    exact plan `entry()` runs, compared triple-for-triple against the
+    DuckDB twin in _kg_triples_oracle_sql."""
+    from ocds_entity_extract_spark.plans.pipeline import build_triples
 
-    pages, _, _ = generate_corpus(n_pages=n_pages, seed=42)
-
-    def q(v: str) -> str:
-        return "'" + v.replace("'", "''") + "'"
-
-    rows = ",\n      ".join(
-        "({}, TIMESTAMP '{}', {})".format(
-            q(pg["url"]),
-            pg["warc_ts"].strftime("%Y-%m-%d %H:%M:%S"),
-            q(extract_text_bytes(pg["html"]) or ""),
-        )
-        for pg in pages
-    )
-    return f"(VALUES\n      {rows}) AS pages(url, warc_ts, text)"
+    docs = _t(spark, sf_dir, "documents")
+    return build_triples(spark, _kg_template_pages(docs)).triples
 
 
 def _kg_seeded_entities_oracle_sql(n_pages: int = 300) -> str:
-    """DuckDB twin of the full entity-DOCUMENT assembly on the SEEDED
-    corpus (the exact chain q_kg_entities runs: build_triples ->
-    entity_documents WITH contact_edges): merged per-alias aggregates ->
-    LSH + recursive-closure canonical mapping -> first-wins name,
-    identifiers (sorted by (id, scheme), rendered scheme:id),
-    subclassification chain, gov level, per-role membership counters,
-    parent/member links, and CONTACT_RE page contacts attributed through
-    the mention stream. Same machinery as _kg_entities_oracle_sql with
-    the seeded VALUES pages and the contact branch added."""
-    from ocds_entity_extract_spark.functions.classify import (
-        COMPANY_SUFFIX_SLUG_RE,
-        INSTITUTION_KEYWORDS,
-    )
-    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
-    from ocds_entity_extract_spark.operators.linking import (
-        DEFAULT_BAND_SIZE,
-        DEFAULT_CONTAINMENT_THRESHOLD,
-        DEFAULT_MAX_BUCKET,
-        DEFAULT_MIN_INTERSECT,
-        DEFAULT_NUM_HASHES,
-        DEFAULT_PREFIX_LEN,
-    )
-    from ocds_entity_extract_spark.operators.mentions import (
-        CONTACT_RE,
-        MEMBERSHIP_RE,
-        MENTION_RE,
-    )
-
-    kw = ", ".join(f"'{k}'" for k in INSTITUTION_KEYWORDS)
-    kw_nobanco = ", ".join(
-        f"'{k}'" for k in INSTITUTION_KEYWORDS if k != "banco"
-    )
-    sig_ctes, band_selects = _minhash_sig_ctes(
-        "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
-    )
-    dim_rows = [(n, c, simple_name_py(n)) for n, c in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
-        for alias, canon in MX_STATE_ALIASES
-    ]
-    statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
-    slug = lambda e: _SLUG_SQL.format(e=e)  # noqa: E731
-    return rf"""
-    WITH RECURSIVE norm AS (
-      SELECT url, warc_ts, text FROM {_kg_seed_pages_values_ts_sql(n_pages)}
-    ),
-    m AS (
-      SELECT url, warc_ts,
-             unnest(regexp_extract_all(text, '{MENTION_RE}')) AS surface
-      FROM norm
-    ),
-    feat AS (
-      SELECT url, warc_ts,
-             regexp_replace(trim(surface), '\s+', ' ', 'g') AS name_norm,
-             {slug('surface')} AS entity_id,
-             regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS domain
-      FROM m
-    ),
-    typed AS (
-      SELECT *,
-             CASE WHEN split_part(entity_id, '-', 1) IN ({kw}) THEN 3
-                  WHEN regexp_matches(entity_id, '{COMPANY_SUFFIX_SLUG_RE}') THEN 2
-                  ELSE 1 END AS rank
-      FROM feat WHERE entity_id <> ''
-    ),
-    rankedocc AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY entity_id ORDER BY warc_ts, url, name_norm
-      ) AS rn
-      FROM typed
-    ),
-    ent AS (
-      SELECT entity_id,
-             max(CASE WHEN rn = 1 THEN name_norm END) AS name,
-             max(rank) AS rank,
-             CAST(count(*) AS BIGINT) AS mention_count,
-             CAST(count(DISTINCT url) AS BIGINT) AS page_count,
-             min(warc_ts) AS first_seen,
-             max(warc_ts) AS last_seen,
-             list_distinct(list(name_norm)) AS names,
-             list_distinct(list(domain)) AS sources
-      FROM rankedocc GROUP BY entity_id
-    ),
-    idu AS (SELECT entity_id AS id FROM ent),
-    shw AS (
-      SELECT id, list_distinct([substr(id, i, 3)
-                 for i in range(1, greatest(length(id) - 2, 1) + 1)]) AS shingles
-      FROM idu
-    ),{sig_ctes},
-    bands AS (
-      {band_selects}
-    ),
-    capped AS (
-      SELECT * FROM (
-        SELECT *, count(*) OVER (PARTITION BY band_id, band_hash) AS bsz FROM bands
-      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
-    ),
-    lshp AS (
-      SELECT DISTINCT a.id AS src, b.id AS dst
-      FROM capped a JOIN capped b
-        ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.id < b.id
-    ),
-    pfx AS (
-      SELECT id, substr(id, 1, {DEFAULT_PREFIX_LEN}) AS pfx FROM idu
-      WHERE length(id) >= {DEFAULT_PREFIX_LEN}
-    ),
-    pcap AS (
-      SELECT * FROM (
-        SELECT *, count(*) OVER (PARTITION BY pfx) AS bsz FROM pfx
-      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
-    ),
-    pfxp AS (
-      SELECT DISTINCT a.id AS src, b.id AS dst
-      FROM pcap a JOIN pcap b ON a.pfx = b.pfx AND a.id < b.id
-    ),
-    cand AS (SELECT src, dst FROM lshp UNION SELECT src, dst FROM pfxp),
-    edges AS (
-      SELECT c.src, c.dst FROM cand c
-      JOIN hsh ha ON ha.id = c.src
-      JOIN hsh hb ON hb.id = c.dst
-      WHERE len(list_intersect(ha.hs, hb.hs)) >= {DEFAULT_MIN_INTERSECT}
-        AND CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)
-            / least(len(ha.hs), len(hb.hs)) >= {DEFAULT_CONTAINMENT_THRESHOLD}
-    ),
-    sym AS (
-      SELECT src AS a, dst AS b FROM edges
-      UNION ALL
-      SELECT dst AS a, src AS b FROM edges
-    ),
-    reach(src, dst) AS (
-      SELECT a, b FROM sym
-      UNION
-      SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a
-    ),
-    comp AS (
-      SELECT src AS member, least(src, min(dst)) AS canonical
-      FROM reach GROUP BY src
-    ),
-    mapping AS (
-      SELECT i.id AS entity_id, coalesce(c.canonical, i.id) AS canonical_id
-      FROM idu i LEFT JOIN comp c ON c.member = i.id
-    ),
-    cranked AS (
-      SELECT e.*, mp.canonical_id,
-             row_number() OVER (
-               PARTITION BY mp.canonical_id ORDER BY e.first_seen, e.entity_id
-             ) AS crn
-      FROM ent e JOIN mapping mp ON e.entity_id = mp.entity_id
-    ),
-    canon AS (
-      SELECT canonical_id,
-             max(CASE WHEN crn = 1 THEN name END) AS name,
-             max(rank) AS rank,
-             list_sort(list_distinct(flatten(list(names)))) AS all_names,
-             list_sort(list(entity_id)) AS alias_slugs,
-             max(nullif(regexp_extract(entity_id,
-                                       '{COMPANY_SUFFIX_SLUG_RE}', 1), ''))
-               AS subtype,
-             CAST(sum(mention_count) AS BIGINT) AS mentions,
-             CAST(sum(page_count) AS BIGINT) AS pages,
-             min(first_seen) AS first_seen,
-             max(last_seen) AS last_seen,
-             list_sort(list_distinct(flatten(list(sources)))) AS sources
-      FROM cranked GROUP BY canonical_id
-    ),
-    mm AS (
-      SELECT url, unnest(regexp_extract_all(text, '{MEMBERSHIP_RE}')) AS mspan
-      FROM norm
-    ),
-    medges0 AS (
-      SELECT url,
-             {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 1)")} AS person_id,
-             regexp_extract(mspan, '{MEMBERSHIP_RE}', 2) AS role,
-             {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 3)")} AS org_id
-      FROM mm
-    ),
-    medges AS (
-      SELECT m0.url, p.canonical_id AS member_canon, m0.role,
-             o2.canonical_id AS org_canon
-      FROM medges0 m0
-      JOIN mapping p ON m0.person_id = p.entity_id
-      JOIN mapping o2 ON m0.org_id = o2.entity_id
-      WHERE m0.person_id <> '' AND m0.org_id <> ''
-    ),
-    as_member AS (
-      SELECT member_canon AS canonical_id,
-             CAST(sum(CASE WHEN role IN ('director general', 'directora general')
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_director_general,
-             min(CASE WHEN org_canon <> member_canon THEN org_canon END)
-               AS parent_id
-      FROM medges GROUP BY member_canon
-    ),
-    as_parent AS (
-      SELECT org_canon AS canonical_id,
-             CAST(count(DISTINCT member_canon) AS BIGINT) AS member_count
-      FROM medges GROUP BY org_canon
-    ),
-    cm AS (
-      SELECT url, unnest(regexp_extract_all(text, '{CONTACT_RE}')) AS cv
-      FROM norm
-    ),
-    contacts AS (
-      SELECT DISTINCT url,
-             CASE WHEN strpos(cv, '@') > 0 THEN 'email' ELSE 'tel' END AS ctype,
-             cv
-      FROM cm
-    ),
-    centity AS (
-      SELECT DISTINCT mp.canonical_id, c.ctype, c.cv
-      FROM (SELECT DISTINCT url, entity_id FROM typed) o
-      JOIN contacts c ON c.url = o.url
-      JOIN mapping mp ON mp.entity_id = o.entity_id
-    ),
-    ccol AS (
-      SELECT canonical_id,
-             array_to_string(
-               [x[1] || ':' || x[2]
-                for x in list_sort(list([ctype, cv]))], ',') AS contact_details
-      FROM centity GROUP BY canonical_id
-    ),
-    statedim(state_name, iso_code, name_slug) AS (VALUES {statedim}),
-    ia AS (
-      SELECT c2.canonical_id, mp.entity_id AS alias_slug
-      FROM canon c2 JOIN mapping mp ON mp.canonical_id = c2.canonical_id
-      WHERE c2.rank = 3
-    ),
-    amatch AS (
-      SELECT ia.canonical_id, sd.state_name
-      FROM ia JOIN statedim sd ON ia.alias_slug LIKE '%-de-' || sd.name_slug
-    ),
-    regions AS (
-      SELECT canonical_id, 'region' AS region_gov FROM amatch
-      GROUP BY canonical_id
-    )
-    SELECT c.canonical_id AS id,
-           c.name,
-           CASE c.rank WHEN 3 THEN 'institution'
-                       WHEN 2 THEN 'company' ELSE 'person' END AS entity_type,
-           CASE c.rank WHEN 3 THEN 'institution'
-                       WHEN 2 THEN 'company' ELSE 'person' END AS classification,
-           coalesce(
-             CASE WHEN c.rank = 3 THEN
-               CASE WHEN split_part(c.canonical_id, '-', 1) = 'banco' THEN 'banco'
-                    WHEN split_part(c.canonical_id, '-', 1) IN ({kw_nobanco})
-                      THEN split_part(c.canonical_id, '-', 1)
-                    WHEN am.parent_id IS NOT NULL THEN 'unidad-compradora'
-                    ELSE 'dependencia' END
-                  WHEN c.rank = 2 THEN c.subtype END, '') AS subclassification,
-           CASE WHEN c.rank > 1 THEN am.parent_id END AS parent_id,
-           CASE WHEN c.rank = 3 THEN
-             CASE WHEN split_part(c.canonical_id, '-', 1)
-                       IN ('municipio', 'ayuntamiento') THEN 'city'
-                  WHEN rg.region_gov IS NOT NULL THEN rg.region_gov
-                  WHEN split_part(c.canonical_id, '-', 1) = 'gobierno'
-                    THEN 'region'
-                  ELSE 'country' END
-           END AS gov_level,
-           coalesce(cc.contact_details, '') AS contact_details,
-           array_to_string(
-             [x[2] || ':' || x[1]
-              for x in list_sort(
-                [[s, 'slug'] for s in c.alias_slugs]
-                || [[d, 'domain'] for d in c.sources]
-                || (CASE WHEN c.rank = 3
-                    AND len(list_filter(string_split(c.canonical_id, '-'),
-                        t -> t NOT IN ('de','del','la','las','los','y','e')
-                             AND regexp_matches(t, '^[a-z]'))) >= 2
-                    THEN [[array_to_string(list_transform(
-                           list_filter(string_split(c.canonical_id, '-'),
-                             t -> t NOT IN ('de','del','la','las','los','y','e')
-                                  AND regexp_matches(t, '^[a-z]')),
-                           t -> substr(t, 1, 1)), ''), 'initials']]
-                    ELSE CAST([] AS VARCHAR[][]) END))], ',') AS identifiers,
-           coalesce(array_to_string(
-             list_sort(list_filter(c.all_names, x -> x <> c.name)), ','
-           ), '') AS other_names,
-           c.mentions, c.pages,
-           coalesce(am.n_director_general, 0) AS n_director_general,
-           coalesce(ap.member_count, 0) AS members,
-           array_to_string(c.sources, ',') AS sources
-    FROM canon c
-    LEFT JOIN as_member am ON am.canonical_id = c.canonical_id
-    LEFT JOIN as_parent ap ON ap.canonical_id = c.canonical_id
-    LEFT JOIN ccol cc ON cc.canonical_id = c.canonical_id
-    LEFT JOIN regions rg ON rg.canonical_id = c.canonical_id
+    """DuckDB twin of q_kg_entities' document rendering on the seeded
+    corpus: entity_documents WITH contact_edges, identifiers sorted by
+    (id, scheme) and rendered scheme:id."""
+    return f"""
+    WITH RECURSIVE {_kg_entity_ctes(_kg_seed_pages_sql(n_pages))}
+    SELECT id, name, entity_type, entity_type AS classification,
+           subclassification, parent_id, gov_level, contact_details,
+           array_to_string([x[2] || ':' || x[1] for x in list_sort(idents)],
+                           ',') AS identifiers,
+           other_names, mentions, pages, n_director_general, members, sources
+    FROM doc
     """
 
 
@@ -2182,831 +2294,29 @@ def q_kg_entities(spark, sf_dir):
     )
 
 
-# =====================================================================
-# KG full pipeline UNDER the value-hash gate (template corpus)
-# =====================================================================
-#
-# `kg_merged_entities` put stages 1-4 (extract -> mention -> classify ->
-# merge) under the oracle; this puts the WHOLE of plans/pipeline.build_triples
-# — including the MinHash-LSH linking self-join, the iterative connected
-# components, membership-edge canonicalization and the area machinery —
-# under the same gate. The lever is the same: pages synthesized from
-# `documents` with a KNOWN html template, so every stage has an exact
-# DuckDB twin (the linking math via the portable md5-derived hash family,
-# CC via a recursive transitive closure, areas via the inlined state dim).
-
-_KG_TPL_STATES = ["Jalisco", "Sonora", "Durango", "Colima"]
-
-
-
-def _kg_template_pages(docs):
-    """documents -> deterministic template pages exercising every pipeline
-    path: company aliasing (S.A. variant), a hot cross-page entity,
-    place-suffixed institutions (area inference), membership sentences
-    (person, role de org), plus the free-text tail."""
-    d = F.col("doc_id")
-    surface = F.concat(
-        F.lit("Grupo Alfa"),
-        (d % 50).cast("string"),
-        F.when(d % 3 == 0, F.lit(" S.A.")).otherwise(F.lit("")),
-    )
-    hot = F.when(
-        d % 10 == 0, F.lit(" También participó Grupo Alfa0 en la sesión.")
-    ).otherwise(F.lit(""))
-    state = F.element_at(
-        F.array(*[F.lit(s) for s in _KG_TPL_STATES]), (d % 4 + 1).cast("int")
-    )
-    inst = F.when(
-        d % 5 == 0,
-        F.concat(
-            F.lit("<p>Secretaría de Salud"),
-            (d % 40).cast("string"),
-            F.lit(" de "),
-            state,
-            F.lit(" informó.</p>"),
-        ),
-    ).otherwise(F.lit(""))
-    memb = F.when(
-        d % 7 == 0,
-        F.concat(
-            F.lit("<p>Juan Pérez"),
-            (d % 30).cast("string"),
-            F.lit(", presidente de Grupo Beta"),
-            (d % 15).cast("string"),
-            F.lit(" S.A. encabezó la reunión.</p>"),
-        ),
-    ).otherwise(F.lit(""))
-    over = (
-        F.when(d % 3 == 0, F.lit("0.00"))
-        .when(d % 3 == 1, F.concat((d % 4).cast("string"), F.lit(".25")))
-        .otherwise(F.lit("-1.75"))
-    )
-    prod = F.when(
-        d % 6 == 0,
-        F.concat(
-            F.lit("<p>Producto 4401"),
-            F.lpad((d % 25).cast("string"), 4, "0"),
-            F.lit("23456: material de curación, "),
-            (d % 9 + 1).cast("string"),
-            F.lit(" unidades a $"),
-            (d % 7 + 5).cast("string"),
-            F.lit(".50 con sobreprecio $"),
-            over,
-            F.lit(" y promedio $"),
-            (d % 5).cast("string"),
-            F.lit(".00 según el acta.</p>"),
-        ),
-    ).otherwise(F.lit(""))
-    # person-named contact email (≙ party.contactPoint, extract.js:372-390):
-    # every 15th doc — always an institution page (15 ≡ 0 mod 5), so the
-    # 'funcionario' membership fires; every 30th is also a product page, so
-    # the purchase_count family fires too
-    contact = F.when(
-        d % 15 == 0,
-        F.concat(
-            F.lit("<p>contacto: maria.lopez"),
-            (d % 8).cast("string"),
-            F.lit("@docs.example.mx para prensa.</p>"),
-        ),
-    ).otherwise(F.lit(""))
-    html = F.encode(
-        F.concat(
-            F.lit(
-                "<html><head><title>doc</title><script>var x=1;"
-                "</script></head><body><p>hoy "
-            ),
-            surface,
-            F.lit(" anunció resultados."),
-            hot,
-            F.lit("</p>"),
-            inst,
-            memb,
-            prod,
-            contact,
-            F.lit("<p>"),
-            F.col("text"),
-            F.lit("</p></body></html>"),
-        ),
-        "UTF-8",
-    )
-    return docs.select(
-        F.concat(F.lit("https://docs.example.mx/"), d.cast("string")).alias("url"),
-        (
-            F.lit("2025-01-01 00:00:00").cast("timestamp")
-            + F.make_interval(secs=d)
-        ).alias("warc_ts"),
-        html.alias("html"),
-        F.lit(None).cast("string").alias("text"),
-    )
-
-
-def _kg_triples_oracle_sql() -> str:
-    """DuckDB twin of the FULL build_triples plan on the template corpus.
-
-    Stage-for-stage: template text -> MENTION_RE extraction -> slug ->
-    id universe -> char-3-gram shingles -> portable md5 hashes -> affine
-    minhash signatures -> LSH bands (capped buckets) + slug-prefix blocking
-    (capped) -> containment/min-intersect verification -> recursive
-    transitive closure (component-min canonical, the operators/cc contract)
-    -> mentions/type/sameAs triples + MEMBERSHIP_RE memberOf edges + the
-    place-suffix area inference (state dim inlined as VALUES from the same
-    functions/geo constants the Spark dim is built from)."""
-    from ocds_entity_extract_spark.functions.classify import (
-        COMPANY_SUFFIX_SLUG_RE,
-        INSTITUTION_KEYWORDS,
-    )
-    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
-    from ocds_entity_extract_spark.operators.linking import (
-        DEFAULT_BAND_SIZE,
-        DEFAULT_CONTAINMENT_THRESHOLD,
-        DEFAULT_MAX_BUCKET,
-        DEFAULT_MIN_INTERSECT,
-        DEFAULT_NUM_HASHES,
-        DEFAULT_PREFIX_LEN,
-    )
-    from ocds_entity_extract_spark.operators.mentions import (
-        CONTACT_RE,
-        MEMBERSHIP_RE,
-        MENTION_RE,
-        PERSON_EMAIL_RE,
-        PRODUCT_RE,
-    )
-
-    kw = ", ".join(f"'{k}'" for k in INSTITUTION_KEYWORDS)
-    sig_ctes, band_selects = _minhash_sig_ctes(
-        "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
-    )
-    state_case = (
-        "CASE CAST(doc_id % 4 AS INT) "
-        + " ".join(
-            f"WHEN {i} THEN '{s}'" for i, s in enumerate(_KG_TPL_STATES[:-1])
-        )
-        + f" ELSE '{_KG_TPL_STATES[-1]}' END"
-    )
-    # state dim VALUES from the same constants mx_state_dim() loads
-    # (canonical rows + alias rows, slug via the same translate table)
-    dim_rows = [(name, code, simple_name_py(name)) for name, code in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
-        for alias, canon in MX_STATE_ALIASES
-    ]
-    statedim = ", ".join(
-        f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows
-    )
-    slug = lambda e: _SLUG_SQL.format(e=e)  # noqa: E731
-    return rf"""
-    WITH RECURSIVE pages AS (
-      SELECT 'https://docs.example.mx/' || CAST(doc_id AS VARCHAR) AS url,
-             'doc hoy Grupo Alfa' || CAST(doc_id % 50 AS VARCHAR)
-               || (CASE WHEN doc_id % 3 = 0 THEN ' S.A.' ELSE '' END)
-               || ' anunció resultados.'
-               || (CASE WHEN doc_id % 10 = 0
-                   THEN ' También participó Grupo Alfa0 en la sesión.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 5 = 0
-                   THEN ' Secretaría de Salud' || CAST(doc_id % 40 AS VARCHAR)
-                        || ' de ' || {state_case} || ' informó.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 7 = 0
-                   THEN ' Juan Pérez' || CAST(doc_id % 30 AS VARCHAR)
-                        || ', presidente de Grupo Beta'
-                        || CAST(doc_id % 15 AS VARCHAR)
-                        || ' S.A. encabezó la reunión.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 6 = 0
-                   THEN ' Producto 4401'
-                        || lpad(CAST(doc_id % 25 AS VARCHAR), 4, '0')
-                        || '23456: material de curación, '
-                        || CAST(doc_id % 9 + 1 AS VARCHAR)
-                        || ' unidades a $' || CAST(doc_id % 7 + 5 AS VARCHAR)
-                        || '.50 con sobreprecio $'
-                        || (CASE WHEN doc_id % 3 = 0 THEN '0.00'
-                                 WHEN doc_id % 3 = 1
-                                 THEN CAST(doc_id % 4 AS VARCHAR) || '.25'
-                                 ELSE '-1.75' END)
-                        || ' y promedio $' || CAST(doc_id % 5 AS VARCHAR)
-                        || '.00 según el acta.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 15 = 0
-                   THEN ' contacto: maria.lopez' || CAST(doc_id % 8 AS VARCHAR)
-                        || '@docs.example.mx para prensa.'
-                   ELSE '' END)
-               || ' ' || text AS text
-      FROM documents
-    ),
-    norm AS (
-      SELECT url, trim(regexp_replace(text, '\s+', ' ', 'g')) AS text FROM pages
-    ),
-    m AS (
-      SELECT url, unnest(regexp_extract_all(text, '{MENTION_RE}')) AS surface
-      FROM norm
-    ),
-    occ AS (
-      SELECT url, {slug('surface')} AS entity_id FROM m
-      WHERE {slug('surface')} <> ''
-    ),
-    idu AS (SELECT DISTINCT entity_id AS id FROM occ),
-    shw AS (
-      SELECT id, list_distinct([substr(id, i, 3)
-                 for i in range(1, greatest(length(id) - 2, 1) + 1)]) AS shingles
-      FROM idu
-    ),{sig_ctes},
-    bands AS (
-      {band_selects}
-    ),
-    capped AS (
-      SELECT * FROM (
-        SELECT *, count(*) OVER (PARTITION BY band_id, band_hash) AS bsz FROM bands
-      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
-    ),
-    lshp AS (
-      SELECT DISTINCT a.id AS src, b.id AS dst
-      FROM capped a JOIN capped b
-        ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.id < b.id
-    ),
-    pfx AS (
-      SELECT id, substr(id, 1, {DEFAULT_PREFIX_LEN}) AS pfx FROM idu
-      WHERE length(id) >= {DEFAULT_PREFIX_LEN}
-    ),
-    pcap AS (
-      SELECT * FROM (
-        SELECT *, count(*) OVER (PARTITION BY pfx) AS bsz FROM pfx
-      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
-    ),
-    pfxp AS (
-      SELECT DISTINCT a.id AS src, b.id AS dst
-      FROM pcap a JOIN pcap b ON a.pfx = b.pfx AND a.id < b.id
-    ),
-    cand AS (SELECT src, dst FROM lshp UNION SELECT src, dst FROM pfxp),
-    edges AS (
-      SELECT c.src, c.dst FROM cand c
-      JOIN hsh ha ON ha.id = c.src
-      JOIN hsh hb ON hb.id = c.dst
-      WHERE len(list_intersect(ha.hs, hb.hs)) >= {DEFAULT_MIN_INTERSECT}
-        AND CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)
-            / least(len(ha.hs), len(hb.hs)) >= {DEFAULT_CONTAINMENT_THRESHOLD}
-    ),
-    sym AS (
-      SELECT src AS a, dst AS b FROM edges
-      UNION ALL
-      SELECT dst AS a, src AS b FROM edges
-    ),
-    reach(src, dst) AS (
-      SELECT a, b FROM sym
-      UNION
-      SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a
-    ),
-    comp AS (
-      SELECT src AS member, least(src, min(dst)) AS canonical
-      FROM reach GROUP BY src
-    ),
-    mapping AS (
-      SELECT i.id AS entity_id, coalesce(c.canonical, i.id) AS canonical_id
-      FROM idu i LEFT JOIN comp c ON c.member = i.id
-    ),
-    ranks AS (
-      SELECT id AS entity_id,
-             CASE WHEN split_part(id, '-', 1) IN ({kw}) THEN 3
-                  WHEN regexp_matches(id, '{COMPANY_SUFFIX_SLUG_RE}') THEN 2
-                  ELSE 1 END AS rnk
-      FROM idu
-    ),
-    crank AS (
-      SELECT mp.canonical_id, max(r.rnk) AS rnk
-      FROM ranks r JOIN mapping mp ON r.entity_id = mp.entity_id
-      GROUP BY mp.canonical_id
-    ),
-    mm AS (
-      SELECT url, unnest(regexp_extract_all(text, '{MEMBERSHIP_RE}')) AS mspan
-      FROM norm
-    ),
-    medges AS (
-      SELECT {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 1)")} AS person_id,
-             {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 3)")} AS org_id
-      FROM mm
-    ),
-    statedim(state_name, iso_code, name_slug) AS (VALUES {statedim}),
-    ia AS (
-      SELECT mp.canonical_id, mp.entity_id AS alias_slug
-      FROM mapping mp JOIN crank cr ON mp.canonical_id = cr.canonical_id
-      WHERE cr.rnk = 3
-    ),
-    amatch AS (
-      SELECT ia.canonical_id, sd.state_name
-      FROM ia JOIN statedim sd ON ia.alias_slug LIKE '%-de-' || sd.name_slug
-    ),
-    regions AS (
-      SELECT canonical_id, min(state_name) AS region FROM amatch
-      GROUP BY canonical_id
-    ),
-    rcode AS (
-      SELECT r.canonical_id,
-             coalesce(sd2.iso_code, 'MX-' || {slug('r.region')}) AS state_code
-      FROM regions r
-      LEFT JOIN statedim sd2 ON sd2.name_slug = {slug('r.region')}
-    ),
-    prodm AS (
-      SELECT url, unnest(regexp_extract_all(text, '{PRODUCT_RE}')) AS pspan
-      FROM norm
-    ),
-    prodid AS (
-      SELECT url, regexp_extract(pspan, '{PRODUCT_RE}', 1) AS pid FROM prodm
-    ),
-    prodt AS (
-      SELECT DISTINCT url,
-             CASE WHEN strpos(pid, '.') > 0 THEN pid
-                  WHEN length(pid) >= 12
-                  THEN substr(pid, 1, 3) || '.' || substr(pid, 4, 3) || '.'
-                       || substr(pid, 7, 4) || '.' || substr(pid, 11)
-                  ELSE pid END AS product_id
-      FROM prodid WHERE pid <> ''
-    ),
-    cmail AS (
-      SELECT url, unnest(regexp_extract_all(text, '{CONTACT_RE}')) AS cspan
-      FROM norm
-    ),
-    cp AS (
-      SELECT DISTINCT url,
-             regexp_extract(cspan, '{PERSON_EMAIL_RE}', 1) || '-'
-               || regexp_extract(cspan, '{PERSON_EMAIL_RE}', 2) AS person_slug
-      FROM cmail WHERE regexp_matches(cspan, '{PERSON_EMAIL_RE}')
-    ),
-    pinst AS (
-      SELECT DISTINCT o.url, mp.canonical_id AS org_canon
-      FROM occ o
-      JOIN mapping mp ON o.entity_id = mp.entity_id
-      JOIN crank cr ON cr.canonical_id = mp.canonical_id AND cr.rnk = 3
-      WHERE o.url IN (SELECT url FROM cp)
-    ),
-    fedges AS (
-      SELECT DISTINCT coalesce(mp.canonical_id, c.person_slug) AS member_canon,
-             pi.org_canon
-      FROM cp c
-      JOIN pinst pi ON pi.url = c.url
-      LEFT JOIN mapping mp ON mp.entity_id = c.person_slug
-    ),
-    cpnew AS (
-      SELECT DISTINCT person_slug FROM cp
-      WHERE person_slug NOT IN (SELECT entity_id FROM mapping)
-    )
-    SELECT subj, pred, obj FROM (
-      SELECT DISTINCT o.url AS subj, 'mentions' AS pred, mp.canonical_id AS obj
-      FROM occ o JOIN mapping mp ON o.entity_id = mp.entity_id
-      UNION ALL
-      SELECT canonical_id AS subj, 'type' AS pred,
-             CASE rnk WHEN 3 THEN 'institution'
-                      WHEN 2 THEN 'company' ELSE 'person' END AS obj
-      FROM crank
-      UNION ALL
-      SELECT person_slug AS subj, 'type' AS pred, 'person' AS obj FROM cpnew
-      UNION ALL
-      SELECT entity_id AS subj, 'sameAs' AS pred, canonical_id AS obj
-      FROM mapping WHERE entity_id <> canonical_id
-      UNION ALL
-      SELECT DISTINCT subj, pred, obj FROM (
-        SELECT p.canonical_id AS subj, 'memberOf' AS pred,
-               o2.canonical_id AS obj
-        FROM medges e
-        JOIN mapping p ON e.person_id = p.entity_id
-        JOIN mapping o2 ON e.org_id = o2.entity_id
-        WHERE e.person_id <> '' AND e.org_id <> ''
-        UNION ALL
-        SELECT member_canon AS subj, 'memberOf' AS pred, org_canon AS obj
-        FROM fedges
-      )
-      UNION ALL
-      SELECT subj, pred, obj FROM (
-        SELECT canonical_id AS subj, 'inArea' AS pred, state_code AS obj
-        FROM rcode
-        UNION
-        SELECT state_code AS subj, 'partOf' AS pred, 'mx' AS obj FROM rcode
-      )
-      UNION ALL
-      SELECT url AS subj, 'mentionsProduct' AS pred, product_id AS obj
-      FROM prodt
-    )
-    """
-
-
-@query("kg_pipeline_triples", _kg_triples_oracle_sql())
-def q_kg_pipeline_triples(spark, sf_dir):
-    """THE flagship chain end-to-end under the full value-hash gate:
-    documents -> template pages -> real build_triples (fused pandas-UDF
-    extraction, dictionary-encoded classify, merge, MinHash-LSH linking,
-    connected components, membership + area edges, triple assembly) — the
-    exact plan `entry()` runs, compared triple-for-triple against the
-    DuckDB twin in _kg_triples_oracle_sql."""
-    from ocds_entity_extract_spark.plans.pipeline import build_triples
-
-    docs = _t(spark, sf_dir, "documents")
-    return build_triples(spark, _kg_template_pages(docs)).triples
-
-
 def _kg_entities_oracle_sql() -> str:
-    """DuckDB twin of the flagship ENTITY-DOCUMENT assembly on the template
-    corpus (plans/documents.entity_documents over the full build_triples
-    result): merged per-entity aggregates -> LSH+closure canonical mapping
-    -> canonical-group name/other_names/identifiers/counters -> membership
-    role buckets + parent/member counts -> subclassification chain + gov
-    level. Shares the template/page/linking CTE text with
-    _kg_triples_oracle_sql (same constants, same hash family)."""
-    from ocds_entity_extract_spark.functions.classify import (
-        COMPANY_SUFFIX_SLUG_RE,
-        INSTITUTION_KEYWORDS,
-    )
-    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
-    from ocds_entity_extract_spark.operators.linking import (
-        DEFAULT_BAND_SIZE,
-        DEFAULT_CONTAINMENT_THRESHOLD,
-        DEFAULT_MAX_BUCKET,
-        DEFAULT_MIN_INTERSECT,
-        DEFAULT_NUM_HASHES,
-        DEFAULT_PREFIX_LEN,
-    )
-    from ocds_entity_extract_spark.operators.mentions import (
-        CONTACT_RE,
-        MEMBERSHIP_RE,
-        MENTION_RE,
-        PERSON_EMAIL_RE,
-        PRODUCT_RE,
-    )
+    """DuckDB twin of q_kg_pipeline_entities' document rendering on the
+    template corpus: entity_documents WITH contact persons, classification
+    gaining 'funcionario', identifiers as sorted distinct id|scheme, every
+    per-role counter and the first/last-seen range."""
     from ocds_entity_extract_spark.queries import TS_FMT_DUCK
 
-    kw = ", ".join(f"'{k}'" for k in INSTITUTION_KEYWORDS)
-    kw_nobanco = ", ".join(
-        f"'{k}'" for k in INSTITUTION_KEYWORDS if k != "banco"
-    )
-    sig_ctes, band_selects = _minhash_sig_ctes(
-        "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
-    )
-    state_case = (
-        "CASE CAST(doc_id % 4 AS INT) "
-        + " ".join(
-            f"WHEN {i} THEN '{s}'" for i, s in enumerate(_KG_TPL_STATES[:-1])
-        )
-        + f" ELSE '{_KG_TPL_STATES[-1]}' END"
-    )
-    dim_rows = [(name, code, simple_name_py(name)) for name, code in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
-        for alias, canon in MX_STATE_ALIASES
-    ]
-    statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
-    slug = lambda e: _SLUG_SQL.format(e=e)  # noqa: E731
-    return rf"""
-    WITH RECURSIVE pages AS (
-      SELECT 'https://docs.example.mx/' || CAST(doc_id AS VARCHAR) AS url,
-             TIMESTAMP '2025-01-01 00:00:00'
-               + doc_id * INTERVAL 1 SECOND AS warc_ts,
-             'doc hoy Grupo Alfa' || CAST(doc_id % 50 AS VARCHAR)
-               || (CASE WHEN doc_id % 3 = 0 THEN ' S.A.' ELSE '' END)
-               || ' anunció resultados.'
-               || (CASE WHEN doc_id % 10 = 0
-                   THEN ' También participó Grupo Alfa0 en la sesión.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 5 = 0
-                   THEN ' Secretaría de Salud' || CAST(doc_id % 40 AS VARCHAR)
-                        || ' de ' || {state_case} || ' informó.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 7 = 0
-                   THEN ' Juan Pérez' || CAST(doc_id % 30 AS VARCHAR)
-                        || ', presidente de Grupo Beta'
-                        || CAST(doc_id % 15 AS VARCHAR)
-                        || ' S.A. encabezó la reunión.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 6 = 0
-                   THEN ' Producto 4401'
-                        || lpad(CAST(doc_id % 25 AS VARCHAR), 4, '0')
-                        || '23456: material de curación, '
-                        || CAST(doc_id % 9 + 1 AS VARCHAR)
-                        || ' unidades a $' || CAST(doc_id % 7 + 5 AS VARCHAR)
-                        || '.50 con sobreprecio $'
-                        || (CASE WHEN doc_id % 3 = 0 THEN '0.00'
-                                 WHEN doc_id % 3 = 1
-                                 THEN CAST(doc_id % 4 AS VARCHAR) || '.25'
-                                 ELSE '-1.75' END)
-                        || ' y promedio $' || CAST(doc_id % 5 AS VARCHAR)
-                        || '.00 según el acta.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 15 = 0
-                   THEN ' contacto: maria.lopez' || CAST(doc_id % 8 AS VARCHAR)
-                        || '@docs.example.mx para prensa.'
-                   ELSE '' END)
-               || ' ' || text AS text
-      FROM documents
-    ),
-    norm AS (
-      SELECT url, warc_ts,
-             trim(regexp_replace(text, '\s+', ' ', 'g')) AS text,
-             regexp_matches(text, '{PRODUCT_RE}') AS is_purchase
-      FROM pages
-    ),
-    m AS (
-      SELECT url, warc_ts,
-             unnest(regexp_extract_all(text, '{MENTION_RE}')) AS surface
-      FROM norm
-    ),
-    feat AS (
-      SELECT url, warc_ts,
-             regexp_replace(trim(surface), '\s+', ' ', 'g') AS name_norm,
-             {slug('surface')} AS entity_id,
-             regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS domain
-      FROM m
-    ),
-    typed AS (
-      SELECT *,
-             CASE WHEN split_part(entity_id, '-', 1) IN ({kw}) THEN 3
-                  WHEN regexp_matches(entity_id, '{COMPANY_SUFFIX_SLUG_RE}') THEN 2
-                  ELSE 1 END AS rank
-      FROM feat WHERE entity_id <> ''
-    ),
-    rankedocc AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY entity_id ORDER BY warc_ts, url, name_norm
-      ) AS rn
-      FROM typed
-    ),
-    ent AS (
-      SELECT entity_id,
-             max(CASE WHEN rn = 1 THEN name_norm END) AS name,
-             max(rank) AS rank,
-             CAST(count(*) AS BIGINT) AS mention_count,
-             CAST(count(DISTINCT url) AS BIGINT) AS page_count,
-             min(warc_ts) AS first_seen,
-             max(warc_ts) AS last_seen,
-             list_distinct(list(name_norm)) AS names,
-             list_distinct(list(domain)) AS sources
-      FROM rankedocc GROUP BY entity_id
-    ),
-    idu AS (SELECT entity_id AS id FROM ent),
-    shw AS (
-      SELECT id, list_distinct([substr(id, i, 3)
-                 for i in range(1, greatest(length(id) - 2, 1) + 1)]) AS shingles
-      FROM idu
-    ),{sig_ctes},
-    bands AS (
-      {band_selects}
-    ),
-    capped AS (
-      SELECT * FROM (
-        SELECT *, count(*) OVER (PARTITION BY band_id, band_hash) AS bsz FROM bands
-      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
-    ),
-    lshp AS (
-      SELECT DISTINCT a.id AS src, b.id AS dst
-      FROM capped a JOIN capped b
-        ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.id < b.id
-    ),
-    pfx AS (
-      SELECT id, substr(id, 1, {DEFAULT_PREFIX_LEN}) AS pfx FROM idu
-      WHERE length(id) >= {DEFAULT_PREFIX_LEN}
-    ),
-    pcap AS (
-      SELECT * FROM (
-        SELECT *, count(*) OVER (PARTITION BY pfx) AS bsz FROM pfx
-      ) WHERE bsz <= {DEFAULT_MAX_BUCKET}
-    ),
-    pfxp AS (
-      SELECT DISTINCT a.id AS src, b.id AS dst
-      FROM pcap a JOIN pcap b ON a.pfx = b.pfx AND a.id < b.id
-    ),
-    cand AS (SELECT src, dst FROM lshp UNION SELECT src, dst FROM pfxp),
-    edges AS (
-      SELECT c.src, c.dst FROM cand c
-      JOIN hsh ha ON ha.id = c.src
-      JOIN hsh hb ON hb.id = c.dst
-      WHERE len(list_intersect(ha.hs, hb.hs)) >= {DEFAULT_MIN_INTERSECT}
-        AND CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)
-            / least(len(ha.hs), len(hb.hs)) >= {DEFAULT_CONTAINMENT_THRESHOLD}
-    ),
-    sym AS (
-      SELECT src AS a, dst AS b FROM edges
-      UNION ALL
-      SELECT dst AS a, src AS b FROM edges
-    ),
-    reach(src, dst) AS (
-      SELECT a, b FROM sym
-      UNION
-      SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a
-    ),
-    comp AS (
-      SELECT src AS member, least(src, min(dst)) AS canonical
-      FROM reach GROUP BY src
-    ),
-    mapping AS (
-      SELECT i.id AS entity_id, coalesce(c.canonical, i.id) AS canonical_id
-      FROM idu i LEFT JOIN comp c ON c.member = i.id
-    ),
-    cranked AS (
-      SELECT e.*, mp.canonical_id,
-             row_number() OVER (
-               PARTITION BY mp.canonical_id ORDER BY e.first_seen, e.entity_id
-             ) AS crn
-      FROM ent e JOIN mapping mp ON e.entity_id = mp.entity_id
-    ),
-    canon AS (
-      SELECT canonical_id,
-             max(CASE WHEN crn = 1 THEN name END) AS name,
-             max(rank) AS rank,
-             list_sort(list_distinct(flatten(list(names)))) AS all_names,
-             list_sort(list(entity_id)) AS alias_slugs,
-             max(nullif(regexp_extract(entity_id,
-                                       '{COMPANY_SUFFIX_SLUG_RE}', 1), ''))
-               AS subtype,
-             CAST(sum(mention_count) AS BIGINT) AS mentions,
-             CAST(sum(page_count) AS BIGINT) AS pages,
-             min(first_seen) AS first_seen,
-             max(last_seen) AS last_seen,
-             list_sort(list_distinct(flatten(list(sources)))) AS sources
-      FROM cranked GROUP BY canonical_id
-    ),
-    mm AS (
-      SELECT url, is_purchase,
-             unnest(regexp_extract_all(text, '{MEMBERSHIP_RE}')) AS mspan
-      FROM norm
-    ),
-    medges0 AS (
-      SELECT url, is_purchase,
-             {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 1)")} AS person_id,
-             regexp_extract(mspan, '{MEMBERSHIP_RE}', 2) AS role,
-             {slug(f"regexp_extract(mspan, '{MEMBERSHIP_RE}', 3)")} AS org_id
-      FROM mm
-    ),
-    medges AS (
-      SELECT m0.url, p.canonical_id AS member_canon, m0.role,
-             o2.canonical_id AS org_canon, m0.is_purchase
-      FROM medges0 m0
-      JOIN mapping p ON m0.person_id = p.entity_id
-      JOIN mapping o2 ON m0.org_id = o2.entity_id
-      WHERE m0.person_id <> '' AND m0.org_id <> ''
-    ),
-    cmail AS (
-      SELECT url, warc_ts, is_purchase,
-             regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS domain,
-             unnest(regexp_extract_all(text, '{CONTACT_RE}')) AS cspan
-      FROM norm
-    ),
-    cpe AS (
-      SELECT DISTINCT url, warc_ts, domain, is_purchase,
-             regexp_extract(cspan, '{PERSON_EMAIL_RE}', 1) || '-'
-               || regexp_extract(cspan, '{PERSON_EMAIL_RE}', 2) AS person_slug,
-             upper(substr(regexp_extract(cspan, '{PERSON_EMAIL_RE}', 1), 1, 1))
-               || substr(regexp_extract(cspan, '{PERSON_EMAIL_RE}', 1), 2)
-               || ' '
-               || upper(substr(regexp_extract(cspan, '{PERSON_EMAIL_RE}', 2), 1, 1))
-               || substr(regexp_extract(cspan, '{PERSON_EMAIL_RE}', 2), 2)
-               AS person_name
-      FROM cmail WHERE regexp_matches(cspan, '{PERSON_EMAIL_RE}')
-    ),
-    pinst AS (
-      SELECT DISTINCT t.url, mp.canonical_id AS org_canon
-      FROM typed t
-      JOIN mapping mp ON t.entity_id = mp.entity_id
-      JOIN (SELECT canonical_id, max(rank) AS rnk FROM cranked
-            GROUP BY canonical_id) cr
-        ON cr.canonical_id = mp.canonical_id AND cr.rnk = 3
-      WHERE t.url IN (SELECT url FROM cpe)
-    ),
-    fedges AS (
-      SELECT DISTINCT c.url,
-             coalesce(mp.canonical_id, c.person_slug) AS member_canon,
-             'funcionario' AS role, pi.org_canon, c.is_purchase
-      FROM cpe c
-      JOIN pinst pi ON pi.url = c.url
-      LEFT JOIN mapping mp ON mp.entity_id = c.person_slug
-    ),
-    medges_all AS (
-      SELECT url, member_canon, role, org_canon, is_purchase FROM medges
-      UNION ALL
-      SELECT url, member_canon, role, org_canon, is_purchase FROM fedges
-    ),
-    cpnew AS (
-      SELECT person_slug AS canonical_id,
-             min(person_name) AS name,
-             1 AS rank,
-             [min(person_name)] AS all_names,
-             [person_slug] AS alias_slugs,
-             CAST(NULL AS VARCHAR) AS subtype,
-             CAST(0 AS BIGINT) AS mentions,
-             CAST(count(DISTINCT url) AS BIGINT) AS pages,
-             min(warc_ts) AS first_seen,
-             max(warc_ts) AS last_seen,
-             list_sort(list_distinct(list(domain))) AS sources
-      FROM cpe
-      WHERE person_slug NOT IN (SELECT entity_id FROM mapping)
-      GROUP BY person_slug
-    ),
-    canon2 AS (
-      SELECT canonical_id, name, rank, all_names, alias_slugs, subtype,
-             mentions, pages, first_seen, last_seen, sources
-      FROM canon
-      UNION ALL
-      SELECT canonical_id, name, rank, all_names, alias_slugs, subtype,
-             mentions, pages, first_seen, last_seen, sources
-      FROM cpnew
-    ),
-    as_member AS (
-      SELECT member_canon AS canonical_id,
-             CAST(sum(CASE WHEN role IN ('director general', 'directora general')
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_director_general,
-             CAST(sum(CASE WHEN role = 'titular' THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_titular,
-             CAST(sum(CASE WHEN role IN ('presidente', 'presidenta')
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_presidente,
-             CAST(sum(CASE WHEN role = 'gerente' THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_gerente,
-             CAST(sum(CASE WHEN role = 'funcionario' THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_funcionario,
-             CAST(sum(CASE WHEN role = 'funcionario' AND NOT is_purchase
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_funcionario_contract,
-             CAST(sum(CASE WHEN role = 'funcionario' AND is_purchase
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_funcionario_purchase,
-             CAST(sum(CASE WHEN role IN ('presidente', 'presidenta')
-                      AND NOT is_purchase
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_presidente_contract,
-             CAST(sum(CASE WHEN role IN ('presidente', 'presidenta')
-                      AND is_purchase
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_presidente_purchase,
-             min(CASE WHEN org_canon <> member_canon THEN org_canon END)
-               AS parent_id
-      FROM medges_all GROUP BY member_canon
-    ),
-    as_parent AS (
-      SELECT org_canon AS canonical_id,
-             CAST(count(DISTINCT member_canon) AS BIGINT) AS member_count
-      FROM medges_all GROUP BY org_canon
-    ),
-    statedim(state_name, iso_code, name_slug) AS (VALUES {statedim}),
-    ia AS (
-      SELECT c2.canonical_id, mp.entity_id AS alias_slug
-      FROM canon c2 JOIN mapping mp ON mp.canonical_id = c2.canonical_id
-      WHERE c2.rank = 3
-    ),
-    amatch AS (
-      SELECT ia.canonical_id, sd.state_name
-      FROM ia JOIN statedim sd ON ia.alias_slug LIKE '%-de-' || sd.name_slug
-    ),
-    regions AS (
-      SELECT canonical_id, 'region' AS region_gov FROM amatch
-      GROUP BY canonical_id
-    )
-    SELECT c.canonical_id AS id,
-           c.name,
-           CASE c.rank WHEN 3 THEN 'institution'
-                       WHEN 2 THEN 'company' ELSE 'person' END AS entity_type,
-           CASE c.rank WHEN 3 THEN 'institution'
-                       WHEN 2 THEN 'company' ELSE 'person' END
-             || CASE WHEN coalesce(am.n_funcionario, 0) > 0
-                     THEN ',funcionario' ELSE '' END AS classification,
-           coalesce(
-             CASE WHEN c.rank = 3 THEN
-               CASE WHEN split_part(c.canonical_id, '-', 1) = 'banco' THEN 'banco'
-                    WHEN split_part(c.canonical_id, '-', 1) IN ({kw_nobanco})
-                      THEN split_part(c.canonical_id, '-', 1)
-                    WHEN am.parent_id IS NOT NULL THEN 'unidad-compradora'
-                    ELSE 'dependencia' END
-                  WHEN c.rank = 2 THEN c.subtype END, '') AS subclassification,
-           CASE WHEN c.rank > 1 THEN am.parent_id END AS parent_id,
-           CASE WHEN c.rank = 3 THEN
-             CASE WHEN split_part(c.canonical_id, '-', 1)
-                       IN ('municipio', 'ayuntamiento') THEN 'city'
-                  WHEN rg.region_gov IS NOT NULL THEN rg.region_gov
-                  WHEN split_part(c.canonical_id, '-', 1) = 'gobierno'
-                    THEN 'region'
-                  ELSE 'country' END
-           END AS gov_level,
+    return f"""
+    WITH RECURSIVE {_kg_entity_ctes(_kg_tpl_pages_sql())}
+    SELECT id, name, entity_type,
+           entity_type || CASE WHEN n_funcionario > 0
+                               THEN ',funcionario' ELSE '' END
+             AS classification,
+           subclassification, parent_id, gov_level,
            array_to_string(list_sort(list_distinct(
-             [s || '|slug' for s in c.alias_slugs]
-             || [d || '|domain' for d in c.sources]
-             || (CASE WHEN c.rank = 3
-                 AND len(list_filter(string_split(c.canonical_id, '-'),
-                     t -> t NOT IN ('de','del','la','las','los','y','e')
-                          AND regexp_matches(t, '^[a-z]'))) >= 2
-                 THEN [array_to_string(list_transform(
-                        list_filter(string_split(c.canonical_id, '-'),
-                          t -> t NOT IN ('de','del','la','las','los','y','e')
-                               AND regexp_matches(t, '^[a-z]')),
-                        t -> substr(t, 1, 1)), '') || '|initials']
-                 ELSE CAST([] AS VARCHAR[]) END))), ',') AS identifiers,
-           coalesce(array_to_string(
-             list_sort(list_filter(c.all_names, x -> x <> c.name)), ','
-           ), '') AS other_names,
-           c.mentions, c.pages,
-           coalesce(am.n_director_general, 0) AS n_director_general,
-           coalesce(am.n_titular, 0) AS n_titular,
-           coalesce(am.n_presidente, 0) AS n_presidente,
-           coalesce(am.n_gerente, 0) AS n_gerente,
-           coalesce(am.n_funcionario, 0) AS n_funcionario,
-           coalesce(am.n_funcionario_contract, 0) AS n_funcionario_contract,
-           coalesce(am.n_funcionario_purchase, 0) AS n_funcionario_purchase,
-           coalesce(am.n_presidente_contract, 0) AS n_presidente_contract,
-           coalesce(am.n_presidente_purchase, 0) AS n_presidente_purchase,
-           coalesce(ap.member_count, 0) AS members,
-           array_to_string(c.sources, ',') AS sources,
-           strftime(c.first_seen, '{TS_FMT_DUCK}') AS first_seen,
-           strftime(c.last_seen, '{TS_FMT_DUCK}') AS last_seen
-    FROM canon2 c
-    LEFT JOIN as_member am ON am.canonical_id = c.canonical_id
-    LEFT JOIN as_parent ap ON ap.canonical_id = c.canonical_id
-    LEFT JOIN regions rg ON rg.canonical_id = c.canonical_id
+             [x[1] || '|' || x[2] for x in idents])), ',') AS identifiers,
+           other_names, mentions, pages,
+           n_director_general, n_titular, n_presidente, n_gerente,
+           n_funcionario, n_funcionario_contract, n_funcionario_purchase,
+           n_presidente_contract, n_presidente_purchase, members, sources,
+           strftime(first_seen, '{TS_FMT_DUCK}') AS first_seen,
+           strftime(last_seen, '{TS_FMT_DUCK}') AS last_seen
+    FROM doc
     """
 
 
@@ -3077,208 +2387,14 @@ def q_kg_pipeline_entities(spark, sf_dir):
     )
 
 
-def _embed_neardup_lsh_oracle_sql(
-    dim: int = 64, n_planes: int = 4, seed: int = 7, threshold: float = 0.45
-) -> str:
-    """DuckDB twin of the LSH-bucketed embedding near-dup: the same seeded
-    hyperplane literals -> sign bucket -> bucket-local self-join -> cosine
-    verify (the _ann_lsh_oracle_sql bucket construction, applied to
-    pairwise dedup instead of top-k)."""
-    from ocds_entity_extract_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_planes, seed)
-    cases = "\n           + ".join(
-        f"CASE WHEN list_dot_product(embedding, {[round(x, 17) for x in p]}) > 0 "
-        f"THEN {1 << i} ELSE 0 END"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-    WITH b AS (
-      SELECT vec_id, embedding,
-             ({cases}) AS bucket
-      FROM embeddings
-    )
-    SELECT a.vec_id AS vid_a, x.vec_id AS vid_b,
-           round(list_cosine_similarity(a.embedding, x.embedding), 3) AS score
-    FROM b a JOIN b x ON a.bucket = x.bucket AND a.vec_id < x.vec_id
-    WHERE round(list_cosine_similarity(a.embedding, x.embedding), 3)
-          >= {threshold}
-    """
-
-
-def _bucket_centroids_oracle_sql(
-    dim: int = 64, n_planes: int = 4, seed: int = 7
-) -> str:
-    """DuckDB twin of per-LSH-bucket embedding centroids: same seeded
-    hyperplane sign bucket, then positional mean per bucket."""
-    from ocds_entity_extract_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_planes, seed)
-    cases = "\n           + ".join(
-        f"CASE WHEN list_dot_product(embedding, {[round(x, 17) for x in p]}) > 0 "
-        f"THEN {1 << i} ELSE 0 END"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-    WITH b AS (
-      SELECT embedding, ({cases}) AS bucket FROM embeddings
-    ),
-    px AS (
-      SELECT bucket,
-             unnest([{{'p': i - 1, 'v': embedding[i]}}
-                     for i in range(1, len(embedding) + 1)],
-                    recursive := true)
-      FROM b
-    )
-    SELECT bucket, p AS pos,
-           round(avg(v), 4) + 0.0 AS c,  -- +0.0 folds IEEE -0.0 to 0.0
-           CAST(count(*) AS BIGINT) AS n_vecs
-    FROM px GROUP BY bucket, p
-    """
-
-
-@query("embedding_bucket_centroids", _bucket_centroids_oracle_sql())
-def q_embedding_bucket_centroids(spark, sf_dir):
-    """Per-LSH-bucket embedding centroids — the coarse-quantizer training
-    step an IVF index build runs over the corpus (and the aggregation shape
-    of any 'mean vector per cluster' stage). posexplode -> (bucket, pos)
-    hash-agg: ONE shuffle with map-side combine, never a collect_list of
-    vectors per bucket — state per reducer key is a running (sum, count),
-    so a billion-vector bucket costs the same per-key memory as a ten-vector
-    one. Output stays positional (bucket, pos, mean) so no array
-    re-assembly rides the plan."""
-    from ocds_entity_extract_spark.operators.similarity import with_lsh_bucket
-
-    e = _t(spark, sf_dir, "embeddings")
-    b = with_lsh_bucket(e, "embedding", dim=EMBEDDING_DIM, n_planes=4)
-    pos = b.select("bucket", F.posexplode("embedding").alias("pos", "v"))
-    return pos.groupBy("bucket", "pos").agg(
-        # +0.0 folds IEEE -0.0 to 0.0 (engines disagree on the sign of a
-        # rounded-to-zero negative mean; the value hash compares strings)
-        (F.round(F.avg("v"), 4) + F.lit(0.0)).alias("c"),
-        F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-    )
-
-
-@query("dedup_near_embedding_lsh", _embed_neardup_lsh_oracle_sql(dim=EMBEDDING_DIM))
-def q_dedup_near_embedding_lsh(spark, sf_dir):
-    """Embedding near-dup with LSH-bucket blocking — the 100 TB version of
-    q:dedup_near_embedding (label-blocking degenerates when one label
-    dominates; hyperplane buckets bound every block at ~n/2^planes
-    regardless of label skew). Same seeded hyperplanes as the ANN family,
-    so the DuckDB twin reproduces bucket assignment exactly; candidates
-    are verified by exact cosine inside the bucket."""
-    from ocds_entity_extract_spark.operators.similarity import with_lsh_bucket
-
-    e = _t(spark, sf_dir, "embeddings")
-    b = with_lsh_bucket(e, "embedding", dim=EMBEDDING_DIM, n_planes=4)
-    a = b.select(
-        "bucket", F.col("vec_id").alias("vid_a"), F.col("embedding").alias("va")
-    )
-    x = b.select(
-        "bucket", F.col("vec_id").alias("vid_b"), F.col("embedding").alias("vb")
-    )
-    score = F.round(cosine(F.col("va"), F.col("vb")), 3)
-    return (
-        a.join(x, "bucket")
-        .filter(F.col("vid_a") < F.col("vid_b"))
-        .withColumn("score", score)
-        .filter(F.col("score") >= 0.45)
-        .select("vid_a", "vid_b", "score")
-    )
-
-
-def _kg_tpl_text_sql() -> str:
-    """The template page text as one DuckDB expression — the same segments
-    `_kg_template_pages` concatenates (company surface + hot entity +
-    place-suffixed institution + membership sentence + product sentence +
-    free-text tail), so an oracle over any span family can re-derive the
-    expected extracted text exactly."""
-    state_case = (
-        "CASE CAST(doc_id % 4 AS INT) "
-        + " ".join(
-            f"WHEN {i} THEN '{s}'" for i, s in enumerate(_KG_TPL_STATES[:-1])
-        )
-        + f" ELSE '{_KG_TPL_STATES[-1]}' END"
-    )
-    return f"""'doc hoy Grupo Alfa' || CAST(doc_id % 50 AS VARCHAR)
-               || (CASE WHEN doc_id % 3 = 0 THEN ' S.A.' ELSE '' END)
-               || ' anunció resultados.'
-               || (CASE WHEN doc_id % 10 = 0
-                   THEN ' También participó Grupo Alfa0 en la sesión.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 5 = 0
-                   THEN ' Secretaría de Salud' || CAST(doc_id % 40 AS VARCHAR)
-                        || ' de ' || {state_case} || ' informó.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 7 = 0
-                   THEN ' Juan Pérez' || CAST(doc_id % 30 AS VARCHAR)
-                        || ', presidente de Grupo Beta'
-                        || CAST(doc_id % 15 AS VARCHAR)
-                        || ' S.A. encabezó la reunión.'
-                   ELSE '' END)
-               || (CASE WHEN doc_id % 6 = 0
-                   THEN ' Producto 4401'
-                        || lpad(CAST(doc_id % 25 AS VARCHAR), 4, '0')
-                        || '23456: material de curación, '
-                        || CAST(doc_id % 9 + 1 AS VARCHAR)
-                        || ' unidades a $' || CAST(doc_id % 7 + 5 AS VARCHAR)
-                        || '.50 con sobreprecio $'
-                        || (CASE WHEN doc_id % 3 = 0 THEN '0.00'
-                                 WHEN doc_id % 3 = 1
-                                 THEN CAST(doc_id % 4 AS VARCHAR) || '.25'
-                                 ELSE '-1.75' END)
-                        || ' y promedio $' || CAST(doc_id % 5 AS VARCHAR)
-                        || '.00 según el acta.'
-                   ELSE '' END)
-               || ' ' || text"""
-
-
 def _kg_products_oracle_sql() -> str:
     """DuckDB twin of the product-document branch (plans/products.py,
-    reference extract.js:40-140): PRODUCT_RE spans over the template text,
+    reference extract.js:40-140): PRODUCT_RE items over the template text,
     CBMEI dotted ids (getProductID, extract.js:142-153), and the order-free
     A12-A15 aggregates — decomposed running average, the two conditional
     overprice sums with their ≠0/>0/avg≠0 gates, min/max purchase dates."""
-    from ocds_entity_extract_spark.operators.mentions import PRODUCT_RE
-
-    return rf"""
-    WITH pages AS (
-      SELECT 'https://docs.example.mx/' || CAST(doc_id AS VARCHAR) AS url,
-             TIMESTAMP '2025-01-01 00:00:00'
-               + doc_id * INTERVAL 1 SECOND AS warc_ts,
-             {_kg_tpl_text_sql()} AS text
-      FROM documents
-    ),
-    norm AS (
-      SELECT url, warc_ts,
-             trim(regexp_replace(text, '\s+', ' ', 'g')) AS text
-      FROM pages
-    ),
-    pm AS (
-      SELECT url, warc_ts,
-             unnest(regexp_extract_all(text, '{PRODUCT_RE}')) AS s
-      FROM norm
-    ),
-    it AS (
-      SELECT url, warc_ts,
-             regexp_extract(s, '{PRODUCT_RE}', 1) AS pid,
-             regexp_extract(s, '{PRODUCT_RE}', 2) AS description,
-             CAST(regexp_extract(s, '{PRODUCT_RE}', 3) AS BIGINT) AS quantity,
-             CAST(regexp_extract(s, '{PRODUCT_RE}', 4) AS DOUBLE) AS unit_price,
-             CAST(regexp_extract(s, '{PRODUCT_RE}', 5) AS DOUBLE) AS overprice,
-             CAST(regexp_extract(s, '{PRODUCT_RE}', 6) AS DOUBLE) AS avg_value
-      FROM pm
-    ),
-    typed AS (
-      SELECT *,
-             CASE WHEN strpos(pid, '.') > 0 THEN pid
-                  WHEN length(pid) >= 12
-                  THEN substr(pid, 1, 3) || '.' || substr(pid, 4, 3) || '.'
-                       || substr(pid, 7, 4) || '.' || substr(pid, 11)
-                  ELSE pid END AS product_id
-      FROM it WHERE pid <> ''
-    )
+    return f"""
+    WITH {_kg_page_ctes(_kg_tpl_pages_sql())}{_kg_product_ctes()}
     SELECT product_id,
            min(description) AS description,
            CAST(count(*) AS BIGINT) AS purchase_count,
@@ -3298,7 +2414,7 @@ def _kg_products_oracle_sql() -> str:
                 AS DOUBLE) AS quantity_lost_with_overcost,
            strftime(min(warc_ts), '%Y-%m-%d') AS first_purchase_date,
            strftime(max(warc_ts), '%Y-%m-%d') AS last_purchase_date
-    FROM typed GROUP BY product_id
+    FROM items GROUP BY product_id
     """
 
 
