@@ -32,8 +32,6 @@ import argparse
 import os
 import time
 
-from pyspark.sql import functions as F
-
 
 def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="ocds_entity_extract_spark")
@@ -88,18 +86,9 @@ def main(argv: list[str] | None = None) -> int:
         res.member_edges,
         contact_edges=res.contact_edges,
         inst_regions=res.inst_regions,
+        contact_persons=res.contact_persons,
     )
-    mem_docs = membership_documents(
-        res.member_edges.select(
-            "url",
-            F.col("member_canon").alias("person_id"),
-            "role",
-            F.col("org_canon").alias("org_id"),
-        ),
-        res.mapping.select(
-            F.col("canonical_id").alias("entity_id"), "canonical_id"
-        ).distinct(),
-    )
+    mem_docs = membership_documents(res.member_edges)
 
     if not args.test:
         if args.output == "db":

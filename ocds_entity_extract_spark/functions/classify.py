@@ -18,6 +18,8 @@ codegen), run once per distinct surface.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from ocds_entity_extract_spark.functions.text import collapse_ws
@@ -93,19 +95,21 @@ def load_classifier_override(spark, paths_or_df) -> DataFrame:
     Reference semantics (classify.js): files concatenated in argument order,
     keys whitespace-normalized, duplicate names last-write-wins. Re-expressed
     order-independently: tag each row with (file_order, line_order) and keep
-    `max_by` — same result as sequential overwrite, but distributed.
+    `max_by` — same result as sequential overwrite, but distributed. The file
+    order is each path's argument index: one multi-path read would number
+    rows by scan partition, and Spark packs file splits largest-first, not in
+    argument order.
     """
     if isinstance(paths_or_df, DataFrame):
         df = paths_or_df.withColumn("_ord", F.monotonically_increasing_id())
     else:
-        from pyspark.sql.functions import input_file_name
-
-        df = (
-            spark.read.schema("name string, type string")
-            .csv(list(paths_or_df))
-            .withColumn("_file", input_file_name())
-            .withColumn("_ord", F.monotonically_increasing_id())
-        )
+        reader = spark.read.schema("name string, type string")
+        df = reduce(DataFrame.unionByName, [
+            reader.csv(p).withColumn(
+                "_ord", F.struct(F.lit(i), F.monotonically_increasing_id())
+            )
+            for i, p in enumerate(paths_or_df)
+        ])
     return (
         df.select(collapse_ws("name").alias("name_norm"), "type", "_ord")
         .groupBy("name_norm")

@@ -159,8 +159,3 @@ def shingle_hash_py(family: str):
 def affine_minhash(h31_col, a: int, b: int) -> F.Column:
     """One member of the minhash family over a pre-reduced (mod p) hash."""
     return F.pmod(F.lit(a) * h31_col + F.lit(b), F.lit(MERSENNE_P))
-
-
-def affine_minhash_sql(h_expr: str, a: int, b: int) -> str:
-    """DuckDB twin of ``affine_minhash`` over a raw 60-bit hash expr."""
-    return f"({a} * ({h_expr} % {MERSENNE_P}) + {b}) % {MERSENNE_P}"

@@ -45,25 +45,29 @@ def materialize_triples(
     stamped = with_triple_id(triples)
     cat.overwrite_partitions(table, stamped, partition_by=["pred"])
 
-    written = cat.read(table)
-    lineage = (
-        written.groupBy("pred")
+    # ONE aggregate job over the written table: its rows feed both the
+    # lineage table (appended as a driver-side LocalRelation) and the
+    # metrics
+    per_pred = (
+        cat.read(table)
+        .groupBy("pred")
         .agg(
             F.count(F.lit(1)).alias("row_count"),
-            F.expr("bit_xor(xxhash64(_id))").alias("xh"),
+            F.lower(F.hex(F.expr("bit_xor(xxhash64(_id))"))).alias("content_hash"),
         )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(table).alias("stage"),
-            F.col("pred").alias("partition_key"),
-            F.col("row_count"),
-            F.lower(F.hex("xh")).alias("content_hash"),
-            F.lit(run_ts).alias("committed_ts"),
-        )
+        .collect()
     )
-    cat.append("lineage", lineage)
+    cat.append("lineage", local_frame(
+        cat.spark,
+        [
+            (run_id, table, r["pred"], r["row_count"], r["content_hash"], run_ts)
+            for r in per_pred
+        ],
+        "run_id string, stage string, partition_key string, row_count bigint,"
+        " content_hash string, committed_ts timestamp",
+    ))
 
-    counts = {r["partition_key"]: r["row_count"] for r in lineage.collect()}
+    counts = {r["pred"]: r["row_count"] for r in per_pred}
     metrics = {f"triples_{k}": float(v) for k, v in counts.items()}
     metrics["triples_total"] = float(sum(counts.values()))
     mdf = local_frame(

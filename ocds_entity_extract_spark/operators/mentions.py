@@ -213,58 +213,28 @@ def surface_dim(spans: DataFrame) -> DataFrame:
     and broadcast-joining back beats running the regexes per occurrence,
     in both CPU and memory traffic. Classification composes on top of this
     dim the same way (see plans/pipeline.py).
+
+    The distinct's partial HashAggregate already dedups each task's
+    surfaces map-side, so no Python pre-dedup pass precedes it (SCALE.md
+    "Surface dim" has the measurement that removed one).
     """
-    return (
-        spans.select(F.explode("mention_spans").alias("surface"))
-        .distinct()
-        .select(
-            "surface",
-            collapse_ws("surface").alias("name_norm"),
-            simple_name("surface").alias("entity_id"),
-        )
-        .filter(F.col("entity_id") != "")
+    return _normalized(
+        spans.select(F.explode("mention_spans").alias("surface")).distinct()
     )
 
 
-def surface_dim_batched(spans: DataFrame, max_task_dedup: int = 2_000_000) -> DataFrame:
-    """`surface_dim` with an Arrow-side pre-aggregation: surfaces are
-    deduped per task (across that task's batches) BEFORE the global
-    distinct, so the exchange carries one row per (task, distinct surface)
-    instead of one per mention occurrence — the mapInArrow analogue of a
-    map-side partial aggregate, ~10-100x fewer rows on a Zipf surface
-    distribution. Output is identical to `surface_dim` (same distinct set,
-    same normalization, tested in test_mentions); the per-task `seen` set
-    is capped at `max_task_dedup` entries (beyond it surfaces pass through
-    batch-deduped only — correctness unchanged, the global distinct still
-    collapses them)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _normalized(surfaces: DataFrame, *keep: str) -> DataFrame:
+    """`keep` + surface + (name_norm, entity_id); empty slugs dropped."""
+    return surfaces.select(
+        *keep,
+        "surface",
+        collapse_ws("surface").alias("name_norm"),
+        simple_name("surface").alias("entity_id"),
+    ).filter(F.col("entity_id") != "")
 
-    def _batches(it):
-        seen: set = set()
-        for batch in it:
-            uniq = pc.list_flatten(batch.column(0)).unique().to_pylist()
-            if len(seen) < max_task_dedup:
-                vals = [u for u in uniq if u not in seen]
-                seen.update(vals)
-            else:
-                vals = uniq
-            yield pa.record_batch(
-                [pa.array(vals, type=pa.string())], names=["surface"]
-            )
 
-    uniq_surfaces = spans.select("mention_spans").mapInArrow(
-        _batches, "surface string"
-    )
-    return (
-        uniq_surfaces.distinct()
-        .select(
-            "surface",
-            collapse_ws("surface").alias("name_norm"),
-            simple_name("surface").alias("entity_id"),
-        )
-        .filter(F.col("entity_id") != "")
-    )
+# the name perfbench's layer tracer imports; the one body is `surface_dim`
+surface_dim_batched = surface_dim
 
 
 def mentions_via_dim(
@@ -290,7 +260,7 @@ def mentions_via_dim(
 
 
 def canon_mention_rows(spans: DataFrame, surf2canon_bc) -> DataFrame:
-    """spans -> (subj=url, obj=canonical_id) rows, one per DISTINCT
+    """spans -> (url, canonical_id) rows, one per DISTINCT
     canonical entity per page, resolved through a broadcast
     surface->canonical dict. ZERO shuffle.
 
@@ -356,10 +326,10 @@ def canon_mention_rows(spans: DataFrame, surf2canon_bc) -> DataFrame:
                 pa.array(list(canon_uniq), type=pa.string()),
                 pa.array(keys % k, type=pa.int64()),
             )
-            yield pa.record_batch([subj, obj], names=["subj", "obj"])
+            yield pa.record_batch([subj, obj], names=["url", "canonical_id"])
 
     return spans.select("url", "mention_spans").mapInArrow(
-        _batches, "subj string, obj string"
+        _batches, "url string, canonical_id string"
     )
 
 
@@ -388,7 +358,11 @@ def member_edge_rows(spans: DataFrame, slug2canon_bc) -> DataFrame:
     the Column version in test_text_fns), then probed against the broadcast
     slug->canonical dict. A missing slug drops the edge — exactly the join
     path's INNER join against the mapping (whose keys are all dim slugs).
-    Gated on `max_broadcast_surfaces`, like `canon_mention_rows`.
+    Runs in the dict plan only, like `canon_mention_rows`. The twin earns
+    its place: routing the dict plan through `memberships_from_spans` plus
+    two broadcast mapping joins instead measured, over 6 alternating
+    crawl_adaptive pairs on a 4-vCPU box (perfbench seeds 5-10), cold_job_s
+    median 9.30 -> 10.44 s and job_s median 2.86 -> 2.94 s.
 
     Member sentences repeat heavily across a crawl (boilerplate, syndicated
     articles), so parses are memoized in a per-task cache keyed by the span
@@ -419,12 +393,8 @@ def member_edge_rows(spans: DataFrame, slug2canon_bc) -> DataFrame:
             return (mc, m.group(2), oc) if mc and oc else None
 
         for batch in it:
-            urls = batch.column(0)
-            arrs = batch.column(1)
-            purch = batch.column(2)
-            parents = pc.list_parent_indices(arrs).to_numpy(
-                zero_copy_only=False
-            )
+            urls, arrs, purch = batch.columns
+            parents = pc.list_parent_indices(arrs).to_numpy(zero_copy_only=False)
             enc = pc.list_flatten(arrs).dictionary_encode()
             parsed = []
             for s in enc.dictionary.to_pylist():
@@ -434,25 +404,17 @@ def member_edge_rows(spans: DataFrame, slug2canon_bc) -> DataFrame:
                     if len(cache) < _CACHE_CAP:
                         cache[s] = hit
                 parsed.append(hit)
-            out_idx, mcs, roles, ocs = [], [], [], []
-            for pos, code in enumerate(
-                enc.indices.to_numpy(zero_copy_only=False)
-            ):
-                p = parsed[code]
-                if p is not None:
-                    out_idx.append(parents[pos])
-                    mcs.append(p[0])
-                    roles.append(p[1])
-                    ocs.append(p[2])
-            idx = pa.array(out_idx, type=pa.int64())
+            hits = [
+                (parents[pos], parsed[code])
+                for pos, code in enumerate(enc.indices.to_numpy(zero_copy_only=False))
+                if parsed[code] is not None
+            ]
+            idx = pa.array([pos for pos, _ in hits], type=pa.int64())
+            edge_cols = [
+                pa.array([p[i] for _, p in hits], type=pa.string()) for i in range(3)
+            ]
             yield pa.record_batch(
-                [
-                    pc.take(urls, idx),
-                    pa.array(mcs, type=pa.string()),
-                    pa.array(roles, type=pa.string()),
-                    pa.array(ocs, type=pa.string()),
-                    pc.take(purch, idx),
-                ],
+                [pc.take(urls, idx), *edge_cols, pc.take(purch, idx)],
                 names=["url", "member_canon", "role", "org_canon", "is_purchase"],
             )
 
@@ -557,19 +519,8 @@ def detect_mentions(pages: DataFrame, text_col: str = "text") -> DataFrame:
     explode -> normalize. Narrow (no shuffle); Catalyst prunes every other
     page column at the scan.
     """
+    surfaces = F.explode(F.regexp_extract_all(F.col(text_col), F.lit(MENTION_RE), 0))
     spans = pages.select(
-        "url",
-        "warc_ts",
-        url_domain("url").alias("domain"),
-        F.explode(F.regexp_extract_all(F.col(text_col), F.lit(MENTION_RE), 0)).alias(
-            "surface"
-        ),
+        "url", "warc_ts", url_domain("url").alias("domain"), surfaces.alias("surface")
     )
-    return spans.select(
-        "url",
-        "warc_ts",
-        "domain",
-        "surface",
-        collapse_ws("surface").alias("name_norm"),
-        simple_name("surface").alias("entity_id"),
-    ).filter(F.col("entity_id") != "")
+    return _normalized(spans, "url", "warc_ts", "domain")

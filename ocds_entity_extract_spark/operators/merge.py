@@ -26,23 +26,31 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# A16 precedence order, the ONE table every reader uses (the Column helpers
+# below, the driver-side type branch of plans/pipeline, the document
+# roll-up of plans/documents). Highest rank first; the last entry is the
+# default, so any type not listed ranks as person.
+TYPE_RANK = {"institution": 3, "company": 2, "person": 1}
+RANK_TYPE = {r: t for t, r in TYPE_RANK.items()}
+
+
+def _case(col, pairs, default) -> F.Column:
+    """CASE WHEN col = k THEN v ... ELSE default, in `pairs` order."""
+    c = F.col(col) if isinstance(col, str) else col
+    (k0, v0), *rest = pairs
+    out = F.when(c == k0, F.lit(v0))
+    for k, v in rest:
+        out = out.when(c == k, F.lit(v))
+    return out.otherwise(F.lit(default))
+
+
 def type_rank(col) -> F.Column:
     """person=1 < company=2 < institution=3 (A16 precedence order)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.when(c == "institution", F.lit(3))
-        .when(c == "company", F.lit(2))
-        .otherwise(F.lit(1))
-    )
+    return _case(col, list(TYPE_RANK.items())[:-1], TYPE_RANK["person"])
 
 
 def rank_type(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.when(c == 3, F.lit("institution"))
-        .when(c == 2, F.lit("company"))
-        .otherwise(F.lit("person"))
-    )
+    return _case(col, list(RANK_TYPE.items())[:-1], "person")
 
 
 def source_run(col="warc_ts") -> F.Column:

@@ -21,6 +21,7 @@ from ocds_entity_extract_spark.functions.classify import (
     subclassification_col,
 )
 from ocds_entity_extract_spark.functions.text import membership_id
+from ocds_entity_extract_spark.operators.merge import TYPE_RANK, rank_type, type_rank
 
 # role buckets for per-role counters (≙ the reference's fixed
 # contract_count{buyer,supplier,funder} buckets, extract.js:216-268/546-578).
@@ -125,11 +126,7 @@ def entity_documents(
         .groupBy("canonical_id")
         .agg(
             F.min_by("name", F.struct("first_seen", "entity_id")).alias("name"),
-            F.max(
-                F.when(F.col("entity_type") == "institution", 3)
-                .when(F.col("entity_type") == "company", 2)
-                .otherwise(1)
-            ).alias("_rank"),
+            F.max(type_rank("entity_type")).alias("_rank"),
             F.array_sort(
                 F.array_distinct(
                     F.flatten(
@@ -165,7 +162,7 @@ def entity_documents(
             contact_persons.select(
                 F.col("entity_id").alias("canonical_id"),
                 "name",
-                F.lit(1).alias("_rank"),
+                F.lit(TYPE_RANK["person"]).alias("_rank"),
                 F.array("name").alias("_all_names"),
                 F.array("entity_id").alias("_alias_slugs"),
                 F.lit(None).cast("string").alias("_subtype"),
@@ -249,11 +246,7 @@ def entity_documents(
     else:
         canon = canon.withColumn("_region_gov", F.lit(None).cast("string"))
 
-    etype = (
-        F.when(F.col("_rank") == 3, "institution")
-        .when(F.col("_rank") == 2, "company")
-        .otherwise("person")
-    )
+    etype = rank_type("_rank")
     subclass = subclassification_col(
         F.col("canonical_id"),
         etype,
@@ -361,18 +354,28 @@ def entity_documents(
     )
 
 
-def membership_documents(memberships: DataFrame, mapping: DataFrame) -> DataFrame:
+def membership_documents(
+    memberships: DataFrame, mapping: DataFrame | None = None
+) -> DataFrame:
     """(url, person_id, role, org_id) candidates -> membership edge docs
     {id: person_canon_org_canon, role, person_id, organization_id}
-    (≙ the six membership constructors' common shape, extract.js:1102-1218)."""
-    m = (
-        memberships.join(
-            mapping.withColumnRenamed("entity_id", "person_id"), "person_id"
+    (≙ the six membership constructors' common shape, extract.js:1102-1218).
+
+    With `mapping=None` the input is PipelineResult.member_edges
+    (url, member_canon, role, org_canon), already canonical: re-joining it
+    through the mapping would drop the 'funcionario' edges of NEW contact
+    persons, whose slugs no mapping holds."""
+    if mapping is None:
+        m = memberships.withColumnRenamed("member_canon", "person_canon")
+    else:
+        m = (
+            memberships.join(
+                mapping.withColumnRenamed("entity_id", "person_id"), "person_id"
+            )
+            .withColumnRenamed("canonical_id", "person_canon")
+            .join(mapping.withColumnRenamed("entity_id", "org_id"), "org_id")
+            .withColumnRenamed("canonical_id", "org_canon")
         )
-        .withColumnRenamed("canonical_id", "person_canon")
-        .join(mapping.withColumnRenamed("entity_id", "org_id"), "org_id")
-        .withColumnRenamed("canonical_id", "org_canon")
-    )
     return (
         m.groupBy("person_canon", "org_canon")
         .agg(

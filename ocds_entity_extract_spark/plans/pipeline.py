@@ -42,22 +42,38 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocds_entity_extract_spark.functions.classify import with_entity_type
+from ocds_entity_extract_spark.functions.text import cbmei_id_reformat
 from ocds_entity_extract_spark.operators.cc import canonical_mapping
 from ocds_entity_extract_spark.operators.linking import (
     linking_canon_dict,
     verified_edges,
 )
 from ocds_entity_extract_spark.operators.mentions import (
+    PRODUCT_RE,
+    canon_mention_rows,
+    contact_person_candidates,
     contacts_from_spans,
     detect_spans_fused,
+    member_edge_rows,
     memberships_from_spans,
     mentions_via_dim,
+    surface_dim,
 )
 from ocds_entity_extract_spark.operators.merge import (
+    RANK_TYPE,
+    TYPE_RANK,
     merge_entities,
     rank_type,
+    source_run,
     type_rank,
 )
+from ocds_entity_extract_spark.plans.areas import (
+    area_branch_py,
+    area_edges,
+    area_nodes,
+    infer_institution_regions,
+)
+from ocds_entity_extract_spark.plans.products import product_docs, products_from_spans
 from ocds_entity_extract_spark.session import local_frame
 
 
@@ -117,27 +133,32 @@ def build_triples(
     # dictionary-encoded normalization + classification: the 4-regex slug
     # pipeline and the §2.9 classifier run ONCE per DISTINCT surface (Zipf:
     # orders of magnitude fewer than mentions), then a broadcast probe
-    # resolves each mention occurrence. The broadcast hint is
-    # SIZE-ADAPTIVE: the cached dim is counted (cheap — it materializes a
-    # cache every later stage reuses) and the hint applies only under
-    # `max_broadcast_surfaces`; above it (or uncached) the join is left to
-    # AQE's runtime-size decision so a 10^9-surface crawl can never OOM on
-    # a forced broadcast.
-    from ocds_entity_extract_spark.operators.mentions import surface_dim_batched
-
-    dim = with_entity_type(surface_dim_batched(spans), classifier_override)
-    dim_count = None
+    # resolves each mention occurrence.
+    dim = with_entity_type(surface_dim(spans), classifier_override)
     # the dim is cached in EVERY mode (it has 4+ consumers: the mention
     # probe, linking ids, the type-rank agg, and the assembly join —
     # uncached, each would re-run the corpus-sized surface distinct); only
     # the COUNT is mode-dependent, because counting is what unlocks the
     # size-adaptive driver fast path that "aqe" exists to bypass
+    dim_count = None
     if cache_intermediates:
         dim = dim.cache()
-    use_broadcast = False
-    if surface_broadcast == "auto" and cache_intermediates:
-        dim_count = dim.count()
-        use_broadcast = dim_count <= max_broadcast_surfaces
+        if surface_broadcast == "auto":
+            dim_count = dim.count()
+    # THE plan decision, made once. The DICT plan (dim counted and within
+    # `max_broadcast_surfaces`) broadcasts the dim, collects it to the
+    # driver and assembles through a surface->canonical dict; the JOIN plan
+    # leaves every join to AQE's runtime-size decision, so a 10^9-surface
+    # crawl can never OOM on a forced broadcast. On a real cluster the dict
+    # plan is the right call even at 100 TB: the surface dim is Zipf-bounded
+    # (~10^8-10^9 surfaces even for a trillion pages), so broadcasting a
+    # canonical dict is routine, while the join plan's corpus-sized
+    # (url, canon) distinct shuffles ~the whole mention stream. Measured on
+    # the 4M-page scaling corpus (110k surfaces): the join+distinct assembly
+    # added ~50 s of memory-bus-bound exchange that does not parallelize on
+    # one box. Parity of the two plans (every PipelineResult frame) is
+    # pytest-gated by test_build_triples_driver_vs_distributed_linking.
+    dict_plan = dim_count is not None and dim_count <= max_broadcast_surfaces
     # NOTE: the mention stream is deliberately NOT cached. It is the one
     # corpus-sized intermediate (O(mentions) rows), and every consumer can
     # rebuild it with a narrow explode + broadcast probe over the CACHED
@@ -148,7 +169,7 @@ def build_triples(
     # cache write was the largest single memory-traffic term). At cluster
     # scale the same argument says "rebuild from the spans table" beats
     # "persist the mention stream".
-    mentions = mentions_via_dim(spans, dim, broadcast=use_broadcast)
+    mentions = mentions_via_dim(spans, dim, broadcast=dict_plan)
 
     entities = merge_entities(mentions)
 
@@ -158,14 +179,13 @@ def build_triples(
     # mention stream — two full corpus passes saved (measured: the
     # mention-stream distinct was the CC stage's dominant cost and scaled
     # inversely past 8 cores on one memory bus).
-    # linking + CC are SIZE-ADAPTIVE like the broadcast decision: under
+    # linking + CC are SIZE-ADAPTIVE like the plan decision: under
     # `max_driver_linking` distinct ids (known from the dim count — a
     # surface count, an upper bound on ids) the whole LSH-block-verify +
-    # union-find chain runs driver-side on the dim collected by the dict
-    # block below (exact Python twin, parity-tested) — the distributed
-    # version of this stage is ~15 sub-second shuffles whose scheduling
-    # latency dominates any sub-web-scale corpus. Above the threshold: the
-    # distributed path.
+    # union-find chain runs driver-side on the collected dim (exact Python
+    # twin, parity-tested) — the distributed version of this stage is ~15
+    # sub-second shuffles whose scheduling latency dominates any
+    # sub-web-scale corpus. Above the threshold: the distributed path.
     def distributed_mapping() -> DataFrame:
         ids = dim.select("entity_id")
         edges = verified_edges(ids, hash_family=linking_hash_family)
@@ -174,24 +194,17 @@ def build_triples(
         )
         return m.cache() if cache_intermediates else m
 
-    # DICT assembly: whether the assembly can use the zero-shuffle Arrow
-    # dict pass depends only on the surf->canon dict fitting the same
-    # budget that already justified broadcasting the dim
-    # (`max_broadcast_surfaces`). On a real cluster this is exactly the
-    # right call at 100 TB: the surface dim is Zipf-bounded (~10^8-10^9
-    # surfaces even for a trillion pages), so broadcasting a canonical dict
-    # is routine, while the alternative — the join + corpus-sized (url,
-    # canon) distinct — shuffles ~the whole mention stream. Measured on the
-    # 4M-page scaling corpus (110k surfaces, just past the linking
-    # threshold): the join+distinct assembly added ~50 s of
-    # memory-bus-bound exchange that does not parallelize on one box. Only
-    # a dim too big to collect (true 10^9-surface crawls, or
-    # surface_broadcast='aqe' which skips the count) takes the
-    # join+distinct path below.
-    surf2canon = None
-    if dim_count is not None and dim_count <= max_broadcast_surfaces:
+    # Each plan defines the same pieces: `mapping`, `page_canon` (a spans
+    # subset -> DISTINCT (url, canonical_id) rows), the institution set
+    # `insts`, the type/sameAs/area triples, and the membership edges.
+    # Component-level type: max precedence across ALL mentions of the
+    # component (order-independent A16 fixpoint, reference
+    # extract.js:310-318). entity_type is a function of the SURFACE and
+    # every dim surface occurs in >= 1 mention, so the dim-level max equals
+    # the mention-level max — computed over the tiny dim.
+    if dict_plan:
         # ONE bounded collect serves linking, the zero-shuffle assembly
-        # AND the driver-side small branches below: (surface, entity_id,
+        # AND the driver-side small branches: (surface, entity_id,
         # entity_type) rows give the slug universe for union-find, the
         # surface->canonical dict, and the per-surface type ranks
         # (<= dim_count entries — the same driver budget as the broadcast
@@ -210,107 +223,50 @@ def build_triples(
             mapping_plain = distributed_mapping()
             _mp = mapping_plain.toPandas()
             canon = dict(zip(_mp["entity_id"], _mp["canonical_id"]))
-        surf2canon = {
-            s: canon[e]
-            for s, e in zip(dim_pdf["surface"], dim_pdf["entity_id"])
-        }
         # bounded by the dim budget -> always broadcastable: the hint turns
-        # every downstream mapping JOIN (canon mentions, type rank,
-        # membership x2, contacts) into a map-side probe instead of a
-        # shuffle of the corpus-sized mention stream. Non-join consumers
-        # (the sameAs filter below) read the UNHINTED frame so the hint
-        # never dangles on a non-join relation.
+        # every downstream mapping JOIN (contacts, the contact-person slug)
+        # into a map-side probe instead of a shuffle of the corpus-sized
+        # mention stream. Non-join consumers read the UNHINTED frame so the
+        # hint never dangles on a non-join relation.
         mapping = F.broadcast(mapping_plain)
-    else:
-        mapping = mapping_plain = distributed_mapping()
-
-    # --- triple assembly (canonical ids everywhere) ---
-    # Dedup at the NARROWEST point first: duplicate (url, entity) pairs are
-    # overwhelmingly repeats of the SAME surface on one page, so
-    # array_distinct on the span array (partition-local, pre-explode)
-    # removes them before they cost a probe row or shuffle bytes —
-    # measured 3.5s -> 0.9s for the probe+dedup chain at 2M pages. The
-    # global .distinct() stays (still required for two DIFFERENT surfaces
-    # of one canonical entity on one page) but now receives near-unique
-    # input. distinct BEFORE adding the constant pred column: the dedup
-    # shuffle (the pipeline's one corpus-sized exchange) carries two
-    # narrow columns, not a per-row literal.
-    if surf2canon is not None:
-        # zero-shuffle fast path (size-adaptive, gated on
-        # `max_broadcast_surfaces`): the surface->canonical dict rides a
-        # SparkContext broadcast into one pandas pass over the cached
-        # spans table, which dedups canonical ids WITHIN each page —
-        # globally complete because spans is url-unique — so neither the
-        # dim/mapping joins nor the corpus-sized distinct exchange run at
-        # all. Parity with the join path below is pytest-gated
-        # (test_build_triples_driver_vs_distributed_linking).
-        from ocds_entity_extract_spark.operators.mentions import (
-            canon_mention_rows,
+        surf_bc = spark.sparkContext.broadcast(
+            {s: canon[e] for s, e in zip(dim_pdf["surface"], dim_pdf["entity_id"])}
         )
 
-        bc = spark.sparkContext.broadcast(surf2canon)
-        canon_mentions = canon_mention_rows(spans, bc).select(
-            "subj", F.lit("mentions").alias("pred"), "obj"
-        )
-    else:
-        canon_mention_occ = spans.select(
-            "url", F.explode(F.array_distinct("mention_spans")).alias("surface")
-        ).join(
-            F.broadcast(dim.select("surface", "entity_id"))
-            if use_broadcast
-            else dim.select("surface", "entity_id"),
-            "surface",
-        )
-        canon_mentions = (
-            canon_mention_occ.join(mapping, "entity_id")
-            .select("url", "canonical_id")
-            .distinct()
-            .select(
-                F.col("url").alias("subj"),
-                F.lit("mentions").alias("pred"),
-                F.col("canonical_id").alias("obj"),
-            )
-        )
+        def page_canon(sub: DataFrame) -> DataFrame:
+            # zero shuffle: no dim/mapping join and no corpus-sized
+            # distinct exchange (see canon_mention_rows)
+            return canon_mention_rows(sub, surf_bc)
 
-    # component-level type: max precedence across ALL mentions of the
-    # component (order-independent A16 fixpoint, reference extract.js:310-318).
-    # entity_type is a function of the SURFACE and every dim surface occurs
-    # in >= 1 mention, so the dim-level max equals the mention-level max —
-    # computed over the tiny dim, not the mention stream.
-    if surf2canon is not None:
         # driver-side small branches: the dim rows, canonical dict and the
         # (static) geo dims are all already on the driver, so the
         # type/sameAs/area triples — bounded by the dim under
         # `max_broadcast_surfaces` — are computed in plain Python and shipped
-        # back as `local_frame` tables. The Spark branch below runs these as
+        # back as `local_frame` tables. The join plan runs these as
         # broadcast-join/agg stages whose scheduling latency is pure fixed
         # cost at ANY corpus size. Measured on a 4-vCPU box (8000-page
         # crawl_adaptive benchmark, seed 1), routing these blocks and the
-        # contact-person institution lookup through the Spark branch
-        # instead: warm job 2.75-3.05 s -> 6.86-7.17 s, job CPU 8.4-9.7 s ->
-        # 22.6-23.3 s, pipeline stages 11 -> 29, tasks 35 -> 91. Parity
-        # with the Spark branch is gated by
-        # test_build_triples_driver_vs_distributed_linking.
-        _rank = {"institution": 3, "company": 2}
-        _type = {3: "institution", 2: "company", 1: "person"}
+        # contact-person institution lookup through the join plan instead:
+        # warm job 2.75-3.05 s -> 6.86-7.17 s, job CPU 8.4-9.7 s ->
+        # 22.6-23.3 s, pipeline stages 11 -> 29, tasks 35 -> 91.
         rank_by_canon: dict[str, int] = {}
         for e, t in zip(dim_pdf["entity_id"], dim_pdf["entity_type"]):
-            cid = canon[e]
-            rk = _rank.get(t, 1)
+            cid, rk = canon[e], TYPE_RANK.get(t, TYPE_RANK["person"])
             if rk > rank_by_canon.get(cid, 0):
                 rank_by_canon[cid] = rk
+        inst_ids = {
+            c for c, rk in rank_by_canon.items() if rk == TYPE_RANK["institution"]
+        }
+        insts = F.broadcast(
+            local_frame(spark, [(c,) for c in sorted(inst_ids)], "canonical_id string")
+        )
         type_rows = sorted(
-            (cid, "type", _type[rk]) for cid, rk in rank_by_canon.items()
+            (cid, "type", RANK_TYPE[rk]) for cid, rk in rank_by_canon.items()
         )
-        sameas_rows = sorted(
-            (s, "sameAs", c) for s, c in canon.items() if s != c
+        sameas_rows = sorted((s, "sameAs", c) for s, c in canon.items() if s != c)
+        addr_rows, node_rows, area_rows = area_branch_py(
+            sorted((c, s) for s, c in canon.items() if c in inst_ids)
         )
-        from ocds_entity_extract_spark.plans.areas import area_branch_py
-
-        inst_pairs = sorted(
-            (c, s) for s, c in canon.items() if rank_by_canon.get(c) == 3
-        )
-        addr_rows, node_rows, area_rows = area_branch_py(inst_pairs)
         addrs = local_frame(
             spark,
             addr_rows,
@@ -327,7 +283,32 @@ def build_triples(
             spark, type_rows + sameas_rows + area_rows, _triple_schema
         )
         sameas = local_frame(spark, sameas_rows, _triple_schema)
+        # canonicalized membership edges, one Arrow pass: each member span
+        # is re-parsed and both endpoint slugs dict-probed (see
+        # member_edge_rows for why this twin of the join plan stays)
+        member_edges = member_edge_rows(spans, spark.sparkContext.broadcast(canon))
     else:
+        mapping = mapping_plain = distributed_mapping()
+
+        def page_canon(sub: DataFrame) -> DataFrame:
+            # Dedup at the NARROWEST point first: duplicate (url, entity)
+            # pairs are overwhelmingly repeats of the SAME surface on one
+            # page, so array_distinct on the span array (partition-local,
+            # pre-explode) removes them before they cost a probe row or
+            # shuffle bytes — measured 3.5s -> 0.9s for the probe+dedup
+            # chain at 2M pages. The global distinct stays (two DIFFERENT
+            # surfaces of one canonical entity on one page) but receives
+            # near-unique input.
+            return (
+                sub.select(
+                    "url", F.explode(F.array_distinct("mention_spans")).alias("surface")
+                )
+                .join(dim.select("surface", "entity_id"), "surface")
+                .join(mapping, "entity_id")
+                .select("url", "canonical_id")
+                .distinct()
+            )
+
         canon_rank = (
             dim.select("entity_id", type_rank("entity_type").alias("_rank"))
             .join(mapping, "entity_id")
@@ -335,34 +316,26 @@ def build_triples(
             .agg(F.max("_rank").alias("_rank"))
         )
         if cache_intermediates:
-            # two consumers (type triples + institution filter for areas);
-            # localCheckpoint materializes once, blocks GC-released with
-            # the job
+            # two consumers (type triples + institution set); localCheckpoint
+            # materializes once, blocks GC-released with the job
             canon_rank = canon_rank.localCheckpoint(eager=False)
+        insts = canon_rank.filter(
+            F.col("_rank") == TYPE_RANK["institution"]
+        ).select("canonical_id")
         canon_types = canon_rank.select(
             F.col("canonical_id").alias("subj"),
             F.lit("type").alias("pred"),
             rank_type(F.col("_rank")).alias("obj"),
         )
-
         # area machinery (≙ reference extract.js:785-829, 897-982):
         # institution components -> region inferred from place-suffixed
         # alias slugs -> (inst, inArea, state) + (state, partOf, country)
         # triples + area nodes
-        from ocds_entity_extract_spark.plans.areas import (
-            area_edges,
-            area_nodes,
-            infer_institution_regions,
+        inst_aliases = mapping.join(insts, "canonical_id").select(
+            "canonical_id", F.col("entity_id").alias("alias_slug")
         )
-
-        inst_aliases = mapping.join(
-            canon_rank.filter(F.col("_rank") == 3).select("canonical_id"),
-            "canonical_id",
-        ).select("canonical_id", F.col("entity_id").alias("alias_slug"))
         addrs = infer_institution_regions(inst_aliases, spark)
-        area_triples = area_edges(addrs, spark).select("subj", "pred", "obj")
         areas_tbl = area_nodes(addrs, spark)
-
         sameas = (
             mapping_plain.filter(F.col("entity_id") != F.col("canonical_id"))
             .select(
@@ -372,32 +345,28 @@ def build_triples(
             )
             .distinct()
         )
-        small_triples = None
-
-    # canonicalized membership edges — shared by the memberOf triples AND
-    # the entity-document richness (per-role counters, parent_id)
-    if surf2canon is not None:
-        # zero-shuffle twin: one pandas pass re-parses each member span and
-        # dict-probes both endpoint slugs against the broadcast canonical
-        # mapping — replaces 3 JVM regexp_extract passes + 2 slug regexes
-        # per span + two joins. Parity pytest-gated alongside the mention
-        # fast path.
-        from ocds_entity_extract_spark.operators.mentions import (
-            member_edge_rows,
+        small_triples = canon_types.unionByName(sameas).unionByName(
+            area_edges(addrs, spark).select("subj", "pred", "obj")
         )
-
-        slug_bc = spark.sparkContext.broadcast(canon)
-        member_edges = member_edge_rows(spans, slug_bc)
-    else:
-        memberships = memberships_from_spans(spans)
         member_edges = (
-            memberships
+            memberships_from_spans(spans)
             .join(mapping.withColumnRenamed("entity_id", "person_id"), "person_id")
             .withColumnRenamed("canonical_id", "member_canon")
             .join(mapping.withColumnRenamed("entity_id", "org_id"), "org_id")
             .withColumnRenamed("canonical_id", "org_canon")
             .select("url", "member_canon", "role", "org_canon", "is_purchase")
         )
+
+    # --- triple assembly (canonical ids everywhere); distinct BEFORE adding
+    # the constant pred column: the join plan's dedup shuffle (the
+    # pipeline's one corpus-sized exchange) carries two narrow columns,
+    # not a per-row literal
+    canon_mentions = page_canon(spans).select(
+        F.col("url").alias("subj"),
+        F.lit("mentions").alias("pred"),
+        F.col("canonical_id").alias("obj"),
+    )
+
     # --- contactPoint person branch (≙ reference extract.js:372-390:
     # party.contactPoint -> a PERSON entity + a membership to the
     # institution). Webtext analogue: person-named contact emails
@@ -407,11 +376,6 @@ def build_triples(
     # auto-gate: corpora without person-named emails (most crawl slices,
     # incl. the scaling corpus) skip the branch's ~4 tiny stages entirely
     # after ONE cheap columnar pass over the cached spans table.
-    from ocds_entity_extract_spark.operators.mentions import (
-        contact_person_candidates,
-    )
-    from ocds_entity_extract_spark.operators.merge import source_run
-
     contact_persons = None
     cp_type_triples = None
     cp = contact_person_candidates(spans)
@@ -421,36 +385,11 @@ def build_triples(
         cp_urls = F.broadcast(cp.select("url").distinct())
         # institutions on the contact-bearing pages only (tiny subset):
         # the semi join broadcasts the contact urls, so no corpus shuffle
-        if surf2canon is not None:
-            inst_df = local_frame(
-                spark,
-                [(c,) for c, rk in sorted(rank_by_canon.items()) if rk == 3],
-                "org_canon string",
-            )
-            page_inst = (
-                canon_mention_rows(spans.join(cp_urls, "url", "semi"), bc)
-                .select(F.col("subj").alias("url"), F.col("obj").alias("org_canon"))
-                .join(F.broadcast(inst_df), "org_canon")
-            )
-        else:
-            _sub = spans.join(cp_urls, "url", "semi").select(
-                "url", F.explode(F.array_distinct("mention_spans")).alias("surface")
-            )
-            page_inst = (
-                _sub.join(
-                    F.broadcast(dim.select("surface", "entity_id"))
-                    if use_broadcast
-                    else dim.select("surface", "entity_id"),
-                    "surface",
-                )
-                .join(mapping, "entity_id")
-                .join(
-                    canon_rank.filter(F.col("_rank") == 3).select("canonical_id"),
-                    "canonical_id",
-                )
-                .select("url", F.col("canonical_id").alias("org_canon"))
-                .distinct()
-            )
+        page_inst = (
+            page_canon(spans.join(cp_urls, "url", "semi"))
+            .join(insts, "canonical_id")
+            .select("url", F.col("canonical_id").alias("org_canon"))
+        )
         # canonicalize the person slug through the mapping — an email slug
         # that IS an existing entity reuses it (≙ findObjectInCollection,
         # extract.js:374); unknown slugs are NEW persons (≙ createPerson)
@@ -520,13 +459,6 @@ def build_triples(
     # scaling-efficiency stage in the round-4 phase table) disappears
     # entirely. The doc aggregation stays one partial-aggregated groupBy,
     # computed lazily (not part of the triple DAG).
-    from ocds_entity_extract_spark.functions.text import cbmei_id_reformat
-    from ocds_entity_extract_spark.operators.mentions import PRODUCT_RE
-    from ocds_entity_extract_spark.plans.products import (
-        product_docs,
-        products_from_spans,
-    )
-
     items = products_from_spans(spans)
     _pids = F.array_distinct(
         F.transform(
@@ -562,20 +494,11 @@ def build_triples(
         .distinct()
     )
 
-    if small_triples is not None:
-        triples = (
-            canon_mentions.unionByName(member_triples)
-            .unionByName(product_triples)
-            .unionByName(small_triples)
-        )
-    else:
-        triples = (
-            canon_mentions.unionByName(canon_types)
-            .unionByName(sameas)
-            .unionByName(member_triples)
-            .unionByName(area_triples)
-            .unionByName(product_triples)
-        )
+    triples = (
+        canon_mentions.unionByName(member_triples)
+        .unionByName(product_triples)
+        .unionByName(small_triples)
+    )
     if cp_type_triples is not None:
         # type triples for the NEW contact persons (existing slugs already
         # carry a type triple from the dim-derived rank)

@@ -608,39 +608,30 @@ def q_simhash_near_pairs(spark, sf_dir):
 def _linking_signatures_oracle_sql(num_hashes: int = 16) -> str:
     """DuckDB twin of linking.minhash_signature_table over entity slugs
     derived from part names (slug -> char-3-gram shingles -> affine
-    minhash signature + distinct-shingle count)."""
-    from ocds_entity_extract_spark.functions.phash import (
-        MERSENNE_P as P,
-        minhash_params,
+    minhash signature + distinct-shingle count), on the shared
+    `_minhash_sig_ctes`."""
+    sig_ctes, _ = _minhash_sig_ctes("sh", num_hashes, num_hashes)
+    signature = " || ',' || ".join(
+        f"CAST(mh{i} AS VARCHAR)" for i in range(num_hashes)
     )
-
-    sig_cols = " || ',' || ".join(
-        f"CAST(list_min([({a} * (h % {P}) + {b}) % {P} for h in hs]) AS VARCHAR)"
-        for a, b in minhash_params(num_hashes)
-    )
-    return """
+    return f"""
     WITH slug AS (
         SELECT DISTINCT trim(regexp_replace(lower(p_name), '[^a-z0-9]+', '-', 'g'), '-')
-               AS entity_id
+               AS id
         FROM part
       ),
       sh AS (
-        SELECT entity_id,
-               list_distinct([substr(entity_id, i, 3)
-                              for i in range(1, greatest(length(entity_id) - 2, 1) + 1)])
+        SELECT id,
+               list_distinct([substr(id, i, 3)
+                              for i in range(1, greatest(length(id) - 2, 1) + 1)])
                AS shingles
         FROM slug
-      ),
-      hsh AS (
-        SELECT entity_id,
-               [CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) for s in shingles] AS hs
-        FROM sh
-      )
-    SELECT entity_id,
-           {sig_cols} AS signature,
-           CAST(len(list_distinct(hs)) AS BIGINT) AS n_shingles
-    FROM hsh
-    """.replace("{sig_cols}", sig_cols)
+      ),{sig_ctes}
+    SELECT sig.id AS entity_id,
+           {signature} AS signature,
+           CAST(len(list_distinct(hsh.hs)) AS BIGINT) AS n_shingles
+    FROM sig JOIN hsh ON hsh.id = sig.id
+    """
 
 
 @query("linking_signatures", _linking_signatures_oracle_sql())

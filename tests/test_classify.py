@@ -71,3 +71,21 @@ def test_override_last_wins(spark):
     )
     row = override.collect()
     assert len(row) == 1 and row[0]["override_type"] == "company"
+
+
+def test_override_csv_last_file_wins(spark, tmp_path):
+    """Across CSV files the LAST file in argument order wins, even when a
+    later file is the larger one (Spark plans file splits largest-first)."""
+    a, b = tmp_path / "a.csv", tmp_path / "b.csv"
+    a.write_text("Dup Name,person\n")
+    b.write_text(
+        "Dup Name,company\n"
+        + "".join(f"Filler Name {i},person\n" for i in range(2000))
+    )
+    override = load_classifier_override(spark, [str(a), str(b)])
+    row = override.filter(F.col("name_norm") == "Dup Name").collect()
+    assert len(row) == 1 and row[0]["override_type"] == "company"
+    # and the other order: a.csv last -> person
+    override = load_classifier_override(spark, [str(b), str(a)])
+    row = override.filter(F.col("name_norm") == "Dup Name").collect()
+    assert row[0]["override_type"] == "person"

@@ -1,9 +1,14 @@
 """CLI driver argument/validation parity (S1 — reference index.js:13-31).
 
-Error-path tests run without a SparkSession; the full-run paths are
-exercised by the CLI smoke in the build logs (both sinks + --test)."""
+Error-path tests run without a SparkSession; `test_cli_docs_agree_with_triples`
+runs both sinks end to end on a two-page corpus."""
 
 from __future__ import annotations
+
+import datetime as dt
+import os
+
+import pytest
 
 from ocds_entity_extract_spark.__main__ import build_parser, main
 
@@ -57,3 +62,48 @@ def test_pyfiles_artifact_complete(tmp_path):
     assert on_disk <= names
     assert not [n for n in names if "test" in n or "__pycache__" in n]
     assert "ocds_entity_extract_spark/plans/pipeline.py" in names
+
+
+@pytest.mark.parametrize("output", ["db", "stream"])
+def test_cli_docs_agree_with_triples(spark, tmp_path, output):
+    """The CLI writes an entity doc for every `type` subject and a
+    membership doc for every `memberOf` triple — including a NEW contact
+    person (ana-torres, from her email) and her 'funcionario' edge."""
+    from ocds_entity_extract_spark.schemas import PAGES_SCHEMA
+
+    ts = dt.datetime(2025, 3, 1, tzinfo=dt.timezone.utc)
+    bodies = [
+        "<p>hoy Secretaría de Salud informó avances.</p>"
+        "<p>contacto: ana.torres@salud.gob.mx para dudas.</p>",
+        "<p>hoy Grupo Aurora Delta S.A. firmó.</p>"
+        "<p>contacto: luis.vega@aurora.mx</p>",
+    ]
+    rows = [
+        (f"https://noticias.example.mx/n/{i}", ts + dt.timedelta(seconds=i),
+         f"<html><body>{b}</body></html>".encode(), None, "es")
+        for i, b in enumerate(bodies)
+    ]
+    wh = str(tmp_path / "wh")
+    spark.createDataFrame(rows, schema=PAGES_SCHEMA).write.parquet(
+        os.path.join(wh, "pages")
+    )
+    assert main(["-d", wh, "-c", "pages", "-o", output]) == 0
+
+    if output == "db":
+        read = lambda t: spark.read.parquet(os.path.join(wh, t))  # noqa: E731
+        triples, ents, mems = (
+            read("triples"), read("entity_docs"), read("membership_docs")
+        )
+    else:
+        read = lambda t: spark.read.json(os.path.join(wh, "out", t))  # noqa: E731
+        triples, ents, mems = read("triples"), read("entities"), read("memberships")
+    t = {(r["subj"], r["pred"], r["obj"]) for r in triples.collect()}
+    types = {s for s, p, _o in t if p == "type"}
+    member_of = {(s, o) for s, p, o in t if p == "memberOf"}
+    assert {"ana-torres", "luis-vega"} <= types
+    assert ("ana-torres", "secretaria-de-salud") in member_of
+    assert {r["id"] for r in ents.collect()} == types
+    assert {
+        (r["person_id"], r["organization_id"]) for r in mems.collect()
+    } == member_of
+    spark.catalog.clearCache()

@@ -172,12 +172,22 @@ def test_driver_side_linking_matches_distributed(spark, pages_df):
 
 
 def test_build_triples_driver_vs_distributed_linking(spark, pages_df):
-    """build_triples emits the identical triple set whichever linking and
-    assembly path the size thresholds select."""
+    """build_triples emits the identical triple set — and the identical row
+    set of every frame the documents read — whichever linking and assembly
+    path the size thresholds select."""
     from ocds_entity_extract_spark.plans.pipeline import build_triples
 
-    t_fast = {tuple(r) for r in build_triples(spark, pages_df).triples.collect()}
-    assert len(t_fast) > 0
+    frames = (
+        "triples", "mapping", "sameas_edges", "member_edges", "area_nodes",
+        "inst_regions", "contact_edges",
+    )
+
+    def row_sets(res):
+        return {f: {tuple(r) for r in getattr(res, f).collect()} for f in frames}
+
+    fast = row_sets(build_triples(spark, pages_df))
+    for f in frames:
+        assert len(fast[f]) > 0, f
     for kw in (
         {"max_driver_linking": 0},
         # the fully forced plan: distributed linking, star CC, and the
@@ -188,8 +198,9 @@ def test_build_triples_driver_vs_distributed_linking(spark, pages_df):
             "surface_broadcast": "aqe",
         },
     ):
-        slow = build_triples(spark, pages_df, **kw)
-        assert {tuple(r) for r in slow.triples.collect()} == t_fast, kw
+        slow = row_sets(build_triples(spark, pages_df, **kw))
+        for f in frames:
+            assert slow[f] == fast[f], (kw, f)
     # an unknown mode name is an error, not a silent fallback to "auto"
     with pytest.raises(ValueError, match="surface_broadcast"):
         build_triples(spark, pages_df, surface_broadcast="x")

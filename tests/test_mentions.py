@@ -59,26 +59,6 @@ def test_mentions_via_dim_unhinted_equals_broadcast(spark, pages_df):
     assert a and a == b
 
 
-def test_surface_dim_batched_equals_surface_dim(spark, pages_df):
-    """The Arrow batch-deduped surface dim (per-task pre-aggregation before
-    the global distinct) emits exactly the plain explode+distinct dim —
-    including under a tiny cap that forces the pass-through branch."""
-    from ocds_entity_extract_spark.functions.html import with_extracted_text
-    from ocds_entity_extract_spark.operators.mentions import (
-        detect_spans,
-        surface_dim,
-        surface_dim_batched,
-    )
-
-    spans = detect_spans(with_extracted_text(pages_df))
-    base = {tuple(r) for r in surface_dim(spans).collect()}
-    fast = {tuple(r) for r in surface_dim_batched(spans).collect()}
-    capped = {
-        tuple(r) for r in surface_dim_batched(spans, max_task_dedup=1).collect()
-    }
-    assert base and base == fast == capped
-
-
 def test_detect_spans_fused_matches_jvm_path(spark, pages_df):
     """The all-Python fused span extractor (html -> spans, text never
     returned to the JVM) emits exactly what the JVM regex path emits over
