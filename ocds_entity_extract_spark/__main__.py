@@ -9,7 +9,8 @@ Spark-first remapping (a lakehouse has no Mongo host/port):
     -c/--collection  pages table under the root (≙ the Mongo collection);
                      a parquet directory with the input_hint schema
     -o/--output      'db'     -> materialized catalog tables (triples +
-                                entity/membership docs; ≙ insert.js)
+                                entity/area/membership/product docs;
+                                ≙ insert.js)
                      'stream' -> NDJSON directories grouped by type
                                 (≙ stream.js [SPLIT] groups; parallel
                                 writers instead of a stdout collect)
@@ -89,6 +90,9 @@ def main(argv: list[str] | None = None) -> int:
         contact_persons=res.contact_persons,
     )
     mem_docs = membership_documents(res.member_edges)
+    # states and countries, written between the entity and membership docs
+    # (≙ insert.js:3-45 order persons, companies, institutions, states, ...)
+    area_docs = res.area_nodes.withColumnRenamed("area_id", "id")
 
     if not args.test:
         if args.output == "db":
@@ -98,11 +102,13 @@ def main(argv: list[str] | None = None) -> int:
             cat = Catalog(spark, args.database)
             materialize_triples(cat, res.triples, run_id=f"cli-{int(t0)}")
             cat.replace_table("entity_docs", ent_docs, partition_by=["entity_type"])
+            cat.replace_table("area_docs", area_docs)
             cat.replace_table("membership_docs", mem_docs)
             cat.replace_table("product_docs", res.products)
         else:
             out = args.out_dir or os.path.join(args.database, "out")
             write_ndjson_grouped(ent_docs, os.path.join(out, "entities"))
+            area_docs.write.mode("overwrite").json(os.path.join(out, "areas"))
             mem_docs.write.mode("overwrite").json(os.path.join(out, "memberships"))
             res.products.write.mode("overwrite").json(os.path.join(out, "products"))
             res.triples.write.mode("overwrite").partitionBy("pred").json(

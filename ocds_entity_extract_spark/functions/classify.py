@@ -23,6 +23,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from ocds_entity_extract_spark.functions.text import collapse_ws
+from ocds_entity_extract_spark.schemas import CLASSIFIER_SCHEMA
 
 # institution first-word keywords, accent-stripped lowercase
 INSTITUTION_KEYWORDS = [
@@ -103,7 +104,7 @@ def load_classifier_override(spark, paths_or_df) -> DataFrame:
     if isinstance(paths_or_df, DataFrame):
         df = paths_or_df.withColumn("_ord", F.monotonically_increasing_id())
     else:
-        reader = spark.read.schema("name string, type string")
+        reader = spark.read.schema(CLASSIFIER_SCHEMA)
         df = reduce(DataFrame.unionByName, [
             reader.csv(p).withColumn(
                 "_ord", F.struct(F.lit(i), F.monotonically_increasing_id())
@@ -117,23 +118,18 @@ def load_classifier_override(spark, paths_or_df) -> DataFrame:
     )
 
 
-def with_entity_type(
-    mentions: DataFrame,
-    override: DataFrame | None = None,
-    name_col: str = "name_norm",
-    slug_col: str = "entity_id",
-) -> DataFrame:
+def with_entity_type(mentions: DataFrame, override: DataFrame | None = None) -> DataFrame:
     """mentions -> + entity_type column, full §2.9 precedence.
 
     The override dim joins BROADCAST (it is the reference's in-memory
     classifier dict, reference classify.js:16-24 / extract.js:189-195);
     the heuristic is pure codegen.
     """
-    heur = heuristic_type_col(F.col(name_col), F.col(slug_col))
+    heur = heuristic_type_col(F.col("name_norm"), F.col("entity_id"))
     if override is None:
         return mentions.withColumn("entity_type", heur)
     joined = mentions.join(
-        F.broadcast(override), mentions[name_col] == override["name_norm"], "left"
+        F.broadcast(override), mentions["name_norm"] == override["name_norm"], "left"
     ).drop(override["name_norm"])
     return joined.withColumn(
         "entity_type", F.coalesce(F.col("override_type"), heur)

@@ -107,17 +107,15 @@ def mx_state_dim(spark: SparkSession) -> DataFrame:
     )
 
 
-def with_country_code(
-    df: DataFrame, spark: SparkSession, name_col: str = "country_name"
-) -> DataFrame:
+def with_country_code(df: DataFrame, spark: SparkSession) -> DataFrame:
     """laundry.cleanCountry analogue: match by code or normalized name,
     broadcast join (never an 80-arm CASE)."""
     dim = country_dim(spark)
-    probe = df.withColumn("_cslug", simple_name(F.col(name_col)))
+    probe = df.withColumn("_cslug", simple_name(F.col("country_name")))
     joined = probe.join(
         F.broadcast(dim),
         (probe["_cslug"] == dim["name_slug"])
-        | (F.upper(F.col(name_col)) == dim["code"]),
+        | (F.upper(F.col("country_name")) == dim["code"]),
         "left",
     )
     return joined.withColumn("country_code", F.col("code")).withColumn(
@@ -125,14 +123,12 @@ def with_country_code(
     ).drop("code", "name_es", "name_slug", "_cslug")
 
 
-def with_state_code(
-    df: DataFrame, spark: SparkSession, region_col: str = "region"
-) -> DataFrame:
+def with_state_code(df: DataFrame, spark: SparkSession) -> DataFrame:
     """getStateID analogue: normalized-name broadcast join; unmatched
     regions fall back to 'MX-' + slug (reference builds ids even for
     unknown spellings)."""
     dim = mx_state_dim(spark)
-    probe = df.withColumn("_sslug", simple_name(launder(F.col(region_col))))
+    probe = df.withColumn("_sslug", simple_name(launder(F.col("region"))))
     joined = probe.join(
         F.broadcast(dim), probe["_sslug"] == dim["name_slug"], "left"
     )

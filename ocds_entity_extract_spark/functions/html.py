@@ -116,15 +116,13 @@ def extract_text(html: pd.Series) -> pd.Series:
     return html.map(extract_text_bytes)
 
 
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
-    """pages DF -> pages DF with `out_col` filled from `html_col` where null.
+def with_extracted_text(df):
+    """pages DF -> pages DF with `text` filled from `html` where null.
 
     Keeps pre-extracted text when present (schema allows a precomputed text
     column) — coalesce avoids re-parsing on incremental re-runs.
     """
+    text = extract_text(F.col("html"))
     return df.withColumn(
-        out_col,
-        F.coalesce(F.col(out_col), extract_text(F.col(html_col)))
-        if out_col in df.columns
-        else extract_text(F.col(html_col)),
+        "text", F.coalesce(F.col("text"), text) if "text" in df.columns else text
     )

@@ -78,7 +78,7 @@ def _rotl(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & _M64
 
 
-def xxh64_py(data: bytes, seed: int = 42) -> int:
+def xxh64_py(data: bytes) -> int:
     """Pure-Python XXH64 (Yann Collet's public spec), SIGNED 64-bit result.
 
     Exact twin of Spark's ``F.xxhash64(string_col)`` for a single string
@@ -88,6 +88,7 @@ def xxh64_py(data: bytes, seed: int = 42) -> int:
     the distributed `hash_family="fast"` plan — parity is pytest-gated
     against Spark in tests/test_phash_xxh64.py over random unicode strings.
     """
+    seed = 42
     length = len(data)
     i = 0
     if length >= 32:

@@ -70,11 +70,11 @@ def simple_name_py(s: str) -> str:
     return _NON_ALNUM_PY.sub("-", t).strip("-")
 
 
-def membership_id(child: Column | str, parent: Column | str, sep: str = "_") -> Column:
+def membership_id(child: Column | str, parent: Column | str) -> Column:
     """Edge id `child_parent` (reference extract.js:358,386,442,...)."""
     c = F.col(child) if isinstance(child, str) else child
     p = F.col(parent) if isinstance(parent, str) else parent
-    return F.concat_ws(sep, c, p)
+    return F.concat_ws("_", c, p)
 
 
 def url_domain(col: Column | str) -> Column:

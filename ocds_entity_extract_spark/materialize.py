@@ -37,10 +37,10 @@ def materialize_triples(
     triples: DataFrame,
     run_id: str,
     run_ts: dt.datetime | None = None,
-    table: str = "triples",
 ) -> dict[str, float]:
-    """Write triples partitioned by pred; append lineage + metrics rows.
-    Returns the metrics dict."""
+    """Write the `triples` table partitioned by pred; append lineage +
+    metrics rows. Returns the metrics dict."""
+    table = "triples"
     run_ts = run_ts or dt.datetime.now(dt.timezone.utc)
     stamped = with_triple_id(triples)
     cat.overwrite_partitions(table, stamped, partition_by=["pred"])

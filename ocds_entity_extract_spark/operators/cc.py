@@ -118,7 +118,6 @@ def _cc_driver_side(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
-    checkpoint: bool = True,
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
     """(src, dst) undirected edges -> (entity_id, canonical_id) mapping.
@@ -142,9 +141,8 @@ def connected_components(
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        cur = cur.localCheckpoint(eager=True)
     if small_graph_threshold and cur.count() <= small_graph_threshold:
         return _cc_driver_side(cur)
     rounds = 0
@@ -153,9 +151,7 @@ def connected_components(
             raise RuntimeError(
                 f"connected_components: no star-forest fixpoint after {max_iter} rounds"
             )
-        cur = _small_star(_large_star(cur))
-        if checkpoint:
-            cur = cur.localCheckpoint(eager=True)
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         rounds += 1
 
     # converged star edges: src -> dst(=component min). Roots map to selves.
@@ -169,7 +165,6 @@ def connected_components(
 def canonical_mapping(
     all_ids: DataFrame,
     edges: DataFrame,
-    id_col: str = "entity_id",
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
     """All distinct ids + sameAs edges -> total (entity_id, canonical_id) map
@@ -178,7 +173,7 @@ def canonical_mapping(
     the forced-distributed scaling evidence, bench/pipeline_job.py)."""
     cc = connected_components(edges, small_graph_threshold=small_graph_threshold)
     return (
-        all_ids.select(F.col(id_col).alias("entity_id"))
+        all_ids.select("entity_id")
         .distinct()
         .join(cc, "entity_id", "left")
         .select(

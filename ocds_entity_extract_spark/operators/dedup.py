@@ -20,6 +20,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
 
+# Every dedup entry point reads documents keyed by `doc_id` with body `text`.
+ID_COL, TEXT_COL = "doc_id", "text"
+# MinHash-LSH: K minhashes in bands of r; a bucket over MAX_BUCKET members
+# is dropped (the skew guard of linking._bucket_pairs).
+NUM_HASHES, BAND_SIZE, MAX_BUCKET = 16, 2, 64
+JACCARD_THRESHOLD = 0.5
+
 
 def with_word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Add `shingles`: distinct word n-grams (joined with single spaces)."""
@@ -33,9 +40,7 @@ def with_word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> Dat
     ).drop("_toks")
 
 
-def _hashed_shingles(
-    docs: DataFrame, id_col: str, text_col: str, hash_family: str, *carry: str
-) -> DataFrame:
+def _hashed_shingles(docs: DataFrame, hash_family: str, *carry: str) -> DataFrame:
     """ONE corpus pass: (id, *carry, hs) with `hs` the hashed word-shingle
     array, materialized so signatures and verification both reuse it.
 
@@ -55,14 +60,14 @@ def _hashed_shingles(
     from ocds_entity_extract_spark.functions.phash import shingle_hash
 
     hash_fn = shingle_hash(hash_family)
-    src = docs.select(id_col, text_col, *carry)
+    src = docs.select(ID_COL, TEXT_COL, *carry)
     target = docs.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < target:
         src = src.repartition(target)
     return (
-        with_word_shingles(src, text_col)
+        with_word_shingles(src, TEXT_COL)
         .select(
-            id_col,
+            ID_COL,
             *carry,
             F.transform("shingles", lambda s: hash_fn(s)).alias("hs"),
         )
@@ -71,7 +76,7 @@ def _hashed_shingles(
 
 
 def _verified(
-    sh: DataFrame, pairs: DataFrame, id_col: str, threshold: float, *carry: str
+    sh: DataFrame, pairs: DataFrame, threshold: float, *carry: str
 ) -> DataFrame:
     """Candidate (id_a, id_b, *carry) pairs -> (id_a, id_b, *carry,
     jaccard) with exact Jaccard >= threshold over the hashed shingle sets.
@@ -88,14 +93,14 @@ def _verified(
         *carry,
         F.explode(
             F.array(
-                F.struct(F.col("id_a").alias(id_col), F.lit("a").alias("side")),
-                F.struct(F.col("id_b").alias(id_col), F.lit("b").alias("side")),
+                F.struct(F.col("id_a").alias(ID_COL), F.lit("a").alias("side")),
+                F.struct(F.col("id_b").alias(ID_COL), F.lit("b").alias("side")),
             )
         ).alias("m"),
-    ).select("id_a", "id_b", *carry, F.col(f"m.{id_col}").alias(id_col), "m.side")
+    ).select("id_a", "id_b", *carry, F.col(f"m.{ID_COL}").alias(ID_COL), "m.side")
     joined = (
-        sh.select(id_col, "hs")
-        .join(F.broadcast(pe), id_col)
+        sh.select(ID_COL, "hs")
+        .join(F.broadcast(pe), ID_COL)
         .groupBy("id_a", "id_b")
         .agg(
             F.first(F.when(F.col("side") == "a", F.col("hs")), True).alias("sh_a"),
@@ -113,12 +118,7 @@ def _verified(
 
 def minhash_candidate_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    band_size: int = 2,
-    max_bucket: int = 64,
-    jaccard_threshold: float = 0.5,
+    jaccard_threshold: float = JACCARD_THRESHOLD,
     hash_family: str = "portable",
 ) -> DataFrame:
     """documents -> verified near-dup pairs (id_a, id_b, jaccard).
@@ -145,30 +145,22 @@ def minhash_candidate_pairs(
         minhash_signatures,
     )
 
-    sh = _hashed_shingles(docs, id_col, text_col, hash_family)
+    sh = _hashed_shingles(docs, hash_family)
     sig = minhash_signatures(
-        sh.select(id_col, F.explode("hs").alias("_h")), id_col, num_hashes, band_size
+        sh.select(ID_COL, F.explode("hs").alias("_h")), ID_COL, NUM_HASHES, BAND_SIZE
     )
     pairs = (
-        _lsh_pairs(sig, id_col, max_bucket)
+        _lsh_pairs(sig, ID_COL, MAX_BUCKET)
         .withColumnRenamed("src", "id_a")
         .withColumnRenamed("dst", "id_b")
     )
-    return _verified(sh, pairs, id_col, jaccard_threshold).select(
+    return _verified(sh, pairs, jaccard_threshold).select(
         "id_a", "id_b", "jaccard"
     )
 
 
 def minhash_incremental_pairs(
-    docs: DataFrame,
-    is_new_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    band_size: int = 2,
-    max_bucket: int = 64,
-    jaccard_threshold: float = 0.5,
-    hash_family: str = "portable",
+    docs: DataFrame, is_new_col: str, hash_family: str = "portable"
 ) -> DataFrame:
     """Incremental dedup: verified near-dup pairs TOUCHING a new document.
 
@@ -197,17 +189,16 @@ def minhash_incremental_pairs(
     from ocds_entity_extract_spark.operators.linking import minhash_signatures
 
     sh = _hashed_shingles(
-        docs.withColumn("_new", F.col(is_new_col)), id_col, text_col,
-        hash_family, "_new",
+        docs.withColumn("_new", F.col(is_new_col)), hash_family, "_new"
     )
     sig = minhash_signatures(
-        sh.select(id_col, F.explode("hs").alias("_h")), id_col, num_hashes, band_size
+        sh.select(ID_COL, F.explode("hs").alias("_h")), ID_COL, NUM_HASHES, BAND_SIZE
     )
     buckets = (
-        sig.join(sh.select(id_col, "_new"), id_col)
-        .select(id_col, "_new", F.explode("bands").alias("b"))
+        sig.join(sh.select(ID_COL, "_new"), ID_COL)
+        .select(ID_COL, "_new", F.explode("bands").alias("b"))
         .select(
-            id_col,
+            ID_COL,
             "_new",
             F.col("b.band_id").alias("band_id"),
             F.col("b.band_hash").alias("band_hash"),
@@ -217,11 +208,11 @@ def minhash_incremental_pairs(
     grouped = (
         buckets.withColumn("_bsz", F.count(F.lit(1)).over(w))
         .withColumn("_any_new", F.max(F.col("_new").cast("int")).over(w))
-        .filter((F.col("_bsz") <= max_bucket) & (F.col("_any_new") == 1))
+        .filter((F.col("_bsz") <= MAX_BUCKET) & (F.col("_any_new") == 1))
         .groupBy("band_id", "band_hash")
         .agg(
             F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("i"), "_new"))
+                F.collect_list(F.struct(F.col(ID_COL).alias("i"), "_new"))
             ).alias("_ids")
         )
         .filter(F.size("_ids") >= 2)
@@ -246,7 +237,7 @@ def minhash_incremental_pairs(
         .when(F.col("na"), F.lit("a"))
         .otherwise(F.lit("b"))
     )
-    return _verified(sh, pairs, id_col, jaccard_threshold, "na", "nb").select(
+    return _verified(sh, pairs, JACCARD_THRESHOLD, "na", "nb").select(
         "id_a", "id_b", "jaccard", new_side.alias("new_side")
     )
 
@@ -311,19 +302,17 @@ def simhash64(text: pd.Series) -> pd.Series:
     return out
 
 
-def with_simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn("simhash", simhash64(F.col(text_col)))
+def with_simhash(docs: DataFrame) -> DataFrame:
+    return docs.withColumn("simhash", simhash64(F.col(TEXT_COL)))
 
 
-def simhash_near_pairs(
-    docs: DataFrame, id_col: str = "doc_id", max_hamming: int = 6
-) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     """SimHash near-dup join: block on 4 x 16-bit chunks (pigeonhole: any
     pair within hamming distance <= 6 shares at least one exact chunk when
     split into 4), verify hamming via bit_count(xor)."""
-    sh = with_simhash(docs).select(id_col, "simhash")
+    sh = with_simhash(docs).select(ID_COL, "simhash")
     chunks = sh.select(
-        id_col,
+        ID_COL,
         "simhash",
         F.explode(
             F.array(
@@ -338,12 +327,12 @@ def simhash_near_pairs(
                 ]
             )
         ).alias("c"),
-    ).select(id_col, "simhash", F.col("c.chunk_id").alias("chunk_id"), F.col("c.chunk").alias("chunk"))
+    ).select(ID_COL, "simhash", F.col("c.chunk_id").alias("chunk_id"), F.col("c.chunk").alias("chunk"))
     a = chunks.select(
-        "chunk_id", "chunk", F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a")
+        "chunk_id", "chunk", F.col(ID_COL).alias("id_a"), F.col("simhash").alias("sig_a")
     )
     b = chunks.select(
-        "chunk_id", "chunk", F.col(id_col).alias("id_b"), F.col("simhash").alias("sig_b")
+        "chunk_id", "chunk", F.col(ID_COL).alias("id_b"), F.col("simhash").alias("sig_b")
     )
     pairs = (
         a.join(b, ["chunk_id", "chunk"])
@@ -360,14 +349,9 @@ def simhash_near_pairs(
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    block_col: str = "source",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.2,
+    docs: DataFrame, block_col: str = "source", threshold: float = 0.2
 ) -> DataFrame:
-    """Exact word n-gram Jaccard >= threshold within blocks (block join
+    """Exact word 3-gram Jaccard >= threshold within blocks (block join
     bounds the pair count; at scale the block is an LSH bucket).
 
     Shingles are hashed to 64-bit longs BEFORE the self-join: the block
@@ -376,14 +360,14 @@ def ngram_jaccard_pairs(
     strings); Jaccard over distinct 64-bit hashes equals Jaccard over the
     strings up to negligible collision probability.
     """
-    sh = with_word_shingles(
-        docs.select(id_col, block_col, text_col), text_col, n
-    ).withColumn("sh_h", F.expr("transform(shingles, s -> xxhash64(s))"))
+    sh = with_word_shingles(docs.select(ID_COL, block_col, TEXT_COL)).withColumn(
+        "sh_h", F.expr("transform(shingles, s -> xxhash64(s))")
+    )
     a = sh.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id_a"), F.col("sh_h").alias("sh_a")
+        F.col(block_col).alias("blk"), F.col(ID_COL).alias("id_a"), F.col("sh_h").alias("sh_a")
     )
     b = sh.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id_b"), F.col("sh_h").alias("sh_b")
+        F.col(block_col).alias("blk"), F.col(ID_COL).alias("id_b"), F.col("sh_h").alias("sh_b")
     )
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
     return (

@@ -4,8 +4,8 @@ Connected components live in operators/cc.py; this module adds PageRank —
 the canonical "iterative joins with a driver loop" pattern the KG needs
 for entity salience ranking (which canonical entities matter most).
 
-Determinism: ranks are FIXED-POINT BIGINTs (micro-units of `scale`), all
-updates are integer multiply/divide — no float summation-order drift, so
+Determinism: ranks are FIXED-POINT BIGINTs (micro-units of
+`DEFAULT_SCALE`), all updates are integer multiply/divide — no float summation-order drift, so
 any engine (Spark, DuckDB, hand computation) produces bit-identical ranks
 at every iteration. That is what lets an ITERATIVE algorithm sit under
 the driver's value-hash oracle gate (see queries_analytics.pagerank_*).
@@ -29,18 +29,14 @@ from pyspark.sql import DataFrame, functions as F
 
 DEFAULT_SCALE = 1_000_000_000_000   # 1e12 micro-units
 DAMPING_NUM, DAMPING_DEN = 85, 100  # d = 0.85 as an exact ratio
+CHECKPOINT_EVERY = 2                # rounds between rank-lineage truncations
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    iterations: int = 8,
-    scale: int = DEFAULT_SCALE,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame, iterations: int = 8) -> DataFrame:
     """(src, dst) directed edges -> (node, rank_int) after `iterations`.
 
-    rank0 = scale // N for every node appearing as src or dst;
-    rank_{t+1}(v) = (15*scale)//(100*N) + (85 * sum_{u->v} rank_t(u)//outdeg(u))//100
+    With S = DEFAULT_SCALE: rank0 = S // N for every node appearing as src
+    or dst; rank_{t+1}(v) = (15*S)//(100*N) + (85 * sum_{u->v} rank_t(u)//outdeg(u))//100
 
     Integer divisions make the recurrence exactly reproducible on any
     engine. Returns (node string, rank_int bigint).
@@ -53,14 +49,14 @@ def pagerank_fixed_point(
         .distinct()
     )
     n_nodes = nodes.count()
-    teleport = (DAMPING_DEN - DAMPING_NUM) * scale // (DAMPING_DEN * n_nodes)
+    teleport = (DAMPING_DEN - DAMPING_NUM) * DEFAULT_SCALE // (DAMPING_DEN * n_nodes)
 
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # edges with out-degree attached, partitioned once on src and reused
     # every round (the rank join below re-keys only the tiny ranks table)
     e_deg = e.join(outdeg, "src").localCheckpoint(eager=False)
 
-    ranks = nodes.withColumn("rank_int", F.lit(scale // n_nodes).cast("bigint"))
+    ranks = nodes.withColumn("rank_int", F.lit(DEFAULT_SCALE // n_nodes).cast("bigint"))
     for i in range(iterations):
         contribs = (
             e_deg.join(
@@ -87,16 +83,12 @@ def pagerank_fixed_point(
                 ).alias("rank_int"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < iterations:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
-def pagerank_sql_unrolled(
-    edges_cte: str,
-    iterations: int = 8,
-    scale: int = DEFAULT_SCALE,
-) -> str:
+def pagerank_sql_unrolled(edges_cte: str, iterations: int = 8) -> str:
     """DuckDB twin of `pagerank_fixed_point` as an UNROLLED CTE chain
     (standard SQL forbids aggregation in a recursive term, so each
     iteration is its own CTE over the previous one — mechanical and exact).
@@ -110,9 +102,9 @@ def pagerank_sql_unrolled(
         "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
         (
             "nn AS (SELECT count(*) AS n,"
-            f" CAST(({DAMPING_DEN - DAMPING_NUM} * {scale})"
+            f" CAST(({DAMPING_DEN - DAMPING_NUM} * {DEFAULT_SCALE})"
             f" // ({DAMPING_DEN} * count(*)) AS BIGINT) AS tele,"
-            f" CAST({scale} // count(*) AS BIGINT) AS r_init"
+            f" CAST({DEFAULT_SCALE} // count(*) AS BIGINT) AS r_init"
             " FROM nodes)"
         ),
         "deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src)",

@@ -58,10 +58,12 @@ DEFAULT_MIN_INTERSECT = 6
 # cheaper for 0.3pp recall, both sides of the 0.95 gate with margin.
 DEFAULT_MAX_BUCKET = 16
 DEFAULT_PREFIX_LEN = 14
+SHINGLE_N = 3                  # character n-gram size of both linking paths
 
 
-def with_shingles(df: DataFrame, col: str = "entity_id", n: int = 3) -> DataFrame:
-    """Add `shingles`: distinct character n-grams of the slug column."""
+def with_shingles(df: DataFrame, col: str = "entity_id") -> DataFrame:
+    """Add `shingles`: distinct character `SHINGLE_N`-grams of the slug column."""
+    n = SHINGLE_N
     return df.withColumn(
         "shingles",
         F.expr(
@@ -132,8 +134,6 @@ def minhash_signatures(
 def minhash_signature_table(
     df_with_shingles: DataFrame,
     id_col: str,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
     keep_shingle_sets: bool = True,
     keep_minhashes: bool = False,
     hash_family: str = "portable",
@@ -159,7 +159,8 @@ def minhash_signature_table(
         id_col, F.explode("shingles").alias("_s")
     ).select(id_col, hash_fn("_s").alias("_h"))
     return minhash_signatures(
-        hashed, id_col, num_hashes, band_size, keep_shingle_sets, keep_minhashes
+        hashed, id_col, DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE, keep_shingle_sets,
+        keep_minhashes,
     )
 
 
@@ -234,32 +235,20 @@ def _lsh_pairs(sig: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
     )
 
 
-def _prefix_pairs(
-    base: DataFrame, id_col: str, max_bucket: int, prefix_len: int
-) -> DataFrame:
+def _prefix_pairs(base: DataFrame, id_col: str) -> DataFrame:
     """Secondary blocker: exact slug-prefix buckets (capped) -> pairs,
     single-shuffle via `_bucket_pairs`."""
     pref = base.select(
-        F.col(id_col), F.substring(id_col, 1, prefix_len).alias("pfx")
-    ).filter(F.length(id_col) >= prefix_len)
-    return _bucket_pairs(_spread(pref, ["pfx"]), ["pfx"], id_col, max_bucket)
+        F.col(id_col), F.substring(id_col, 1, DEFAULT_PREFIX_LEN).alias("pfx")
+    ).filter(F.length(id_col) >= DEFAULT_PREFIX_LEN)
+    return _bucket_pairs(_spread(pref, ["pfx"]), ["pfx"], id_col, DEFAULT_MAX_BUCKET)
 
 
-def verified_edges(
-    entities: DataFrame,
-    id_col: str = "entity_id",
-    threshold: float = DEFAULT_CONTAINMENT_THRESHOLD,
-    min_intersect: int = DEFAULT_MIN_INTERSECT,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    prefix_len: int = DEFAULT_PREFIX_LEN,
-    hash_family: str = "portable",
-) -> DataFrame:
+def verified_edges(entities: DataFrame, hash_family: str = "portable") -> DataFrame:
     """Candidate pairs -> exact-similarity-verified sameAs edges.
 
     Score = overlap coefficient (containment) of the exact hashed-shingle
-    sets; an edge also needs `min_intersect` shared shingles so trivially
+    sets; an edge also needs `DEFAULT_MIN_INTERSECT` shared shingles so trivially
     short slugs cannot reach the threshold by chance. The signature table
     is built once and reused for blocking AND verification (three
     consumers -> cached; it is O(|distinct entities|), far smaller than
@@ -272,15 +261,15 @@ def verified_edges(
     ``spark.catalog.clearCache()`` between jobs; otherwise repeated
     invocations accumulate executor storage.
     """
+    id_col = "entity_id"
     base = entities.select(id_col).distinct()
     sig = minhash_signature_table(
-        _spread(with_shingles(base, id_col)), id_col, num_hashes, band_size,
-        hash_family=hash_family,
+        _spread(with_shingles(base, id_col)), id_col, hash_family=hash_family
     ).cache()
 
     pairs = (
-        _lsh_pairs(sig, id_col, max_bucket)
-        .unionByName(_prefix_pairs(base, id_col, max_bucket, prefix_len))
+        _lsh_pairs(sig, id_col, DEFAULT_MAX_BUCKET)
+        .unionByName(_prefix_pairs(base, id_col))
         .transform(lambda df: _spread(df, ["src", "dst"]))
         .dropDuplicates()
     )
@@ -302,22 +291,15 @@ def verified_edges(
         joined.withColumn("containment", containment)
         .withColumn("jaccard", jac)
         .filter(
-            (F.col("containment") >= threshold) & (inter >= F.lit(min_intersect))
+            (F.col("containment") >= DEFAULT_CONTAINMENT_THRESHOLD)
+            & (inter >= F.lit(DEFAULT_MIN_INTERSECT))
         )
         .select("src", "dst", "containment", "jaccard")
     )
 
 
 def verified_edges_py(
-    slugs: list[str],
-    threshold: float = DEFAULT_CONTAINMENT_THRESHOLD,
-    min_intersect: int = DEFAULT_MIN_INTERSECT,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    prefix_len: int = DEFAULT_PREFIX_LEN,
-    n: int = 3,
-    hash_family: str = "portable",
+    slugs: list[str], hash_family: str = "portable"
 ) -> list[tuple[str, str, float, float]]:
     """Exact Python twin of `verified_edges` for driver-side execution.
 
@@ -343,19 +325,21 @@ def verified_edges_py(
     _h64 = shingle_hash_py(hash_family)
 
     ids = sorted(set(slugs))
-    params = minhash_params(num_hashes)
-    n_bands = num_hashes // band_size
+    params = minhash_params(DEFAULT_NUM_HASHES)
+    n_bands = DEFAULT_NUM_HASHES // DEFAULT_BAND_SIZE
 
     hs: dict[str, frozenset[int]] = {}
     bands: dict[str, list[str]] = {}
     for s in ids:
-        grams = {s[i : i + n] for i in range(max(len(s) - n + 1, 1))}
+        grams = {s[i : i + SHINGLE_N] for i in range(max(len(s) - SHINGLE_N + 1, 1))}
         hset = frozenset(_h64(g) for g in grams)
         hs[s] = hset
         h31 = [h % MERSENNE_P for h in hset]
         mh = [min((a * h + b) % MERSENNE_P for h in h31) for a, b in params]
         bands[s] = [
-            ",".join(str(mh[b * band_size + j]) for j in range(band_size))
+            ",".join(
+                str(mh[b * DEFAULT_BAND_SIZE + j]) for j in range(DEFAULT_BAND_SIZE)
+            )
             for b in range(n_bands)
         ]
 
@@ -363,12 +347,12 @@ def verified_edges_py(
     for s in ids:
         for b_id, b_hash in enumerate(bands[s]):
             buckets[("b", b_id, b_hash)].append(s)
-        if len(s) >= prefix_len:
-            buckets[("p", s[:prefix_len])].append(s)
+        if len(s) >= DEFAULT_PREFIX_LEN:
+            buckets[("p", s[:DEFAULT_PREFIX_LEN])].append(s)
 
     pairs: set[tuple[str, str]] = set()
     for members in buckets.values():
-        if 2 <= len(members) <= max_bucket:
+        if 2 <= len(members) <= DEFAULT_MAX_BUCKET:
             ms = sorted(members)
             for i, x in enumerate(ms):
                 for y in ms[i + 1 :]:
@@ -377,10 +361,10 @@ def verified_edges_py(
     edges = []
     for src, dst in sorted(pairs):
         inter = len(hs[src] & hs[dst])
-        if inter < min_intersect:
+        if inter < DEFAULT_MIN_INTERSECT:
             continue
         containment = inter / min(len(hs[src]), len(hs[dst]))
-        if containment >= threshold:
+        if containment >= DEFAULT_CONTAINMENT_THRESHOLD:
             jac = inter / len(hs[src] | hs[dst])
             edges.append((src, dst, containment, jac))
     return edges

@@ -5,12 +5,13 @@ extract.js:8-10): where OCDS hands the reference a parties array per record,
 a web page hands us raw text, so mentions are detected as capitalized name
 spans (persons, companies with legal suffixes, keyword-led institutions).
 
-The batch pipeline extracts spans in one Arrow-batched pandas UDF
-(`detect_spans_fused`); `detect_mentions` is the JVM path over extracted
-text (`regexp_extract_all` inside WholeStageCodegen) that the streaming
-jobs use. The regex is a single pattern valid under BOTH Java and Python
-`re` semantics (only char classes / non-capturing groups / \\s), so the two
-paths and the datagen golden derivation can never drift (parity-tested).
+Spans are extracted in one Arrow-batched pandas UDF (`detect_spans_fused`),
+which both the batch plan and the streaming jobs (`detect_mentions`) run;
+`detect_spans` is its JVM parity oracle over extracted text
+(`regexp_extract_all`). The regex is a single pattern valid under BOTH Java
+and Python `re` semantics (only char classes / non-capturing groups / \\s),
+so the two paths and the datagen golden derivation can never drift
+(parity-tested).
 
 Membership detection (analogue of the six membership constructors,
 reference extract.js:1102-1218): sentences "X, <role> de Y" -> memberOf
@@ -81,7 +82,7 @@ CONTACT_GATE_TOKENS = ("@", "tel")
 PRODUCT_GATE_TOKENS = ("Producto ",)
 
 
-def detect_spans(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def detect_spans(pages: DataFrame) -> DataFrame:
     """Fused single-pass extraction: ONE scan of `text` computes the
     mention-span, membership-span AND contact-span arrays.
 
@@ -98,7 +99,7 @@ def detect_spans(pages: DataFrame, text_col: str = "text") -> DataFrame:
     (e.g. 'hotel', 'cartel') merely run the regex and match nothing —
     identical output, pure CPU win at every scale.
     """
-    t = F.col(text_col)
+    t = F.col("text")
 
     def _gate(tokens):
         g = t.contains(tokens[0])
@@ -127,9 +128,7 @@ def detect_spans(pages: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def detect_spans_fused(
-    pages: DataFrame, html_col: str = "html", text_col: str = "text"
-) -> DataFrame:
+def detect_spans_fused(pages: DataFrame) -> DataFrame:
     """html -> (mention, membership, contact) span arrays entirely inside
     the Python worker; the extracted TEXT never crosses Arrow back to the
     JVM.
@@ -144,7 +143,7 @@ def detect_spans_fused(
     strings per page: less Arrow serialization, no JVM regex pass, same
     output — `detect_spans` (the JVM path) is kept as the parity oracle.
 
-    Text passthrough matches `with_extracted_text`: a non-null `text_col`
+    Text passthrough matches `with_extracted_text`: a non-null `text`
     is used as-is (incremental re-runs), html parsed otherwise. The
     substring gates mirror `detect_spans` exactly.
     """
@@ -192,15 +191,13 @@ def detect_spans_fused(
         )
 
     text_expr = (
-        F.col(text_col)
-        if text_col in pages.columns
-        else F.lit(None).cast("string")
+        F.col("text") if "text" in pages.columns else F.lit(None).cast("string")
     )
     return pages.select(
         "url",
         "warc_ts",
         url_domain("url").alias("domain"),
-        _spans(F.col(html_col), text_expr).alias("_s"),
+        _spans(F.col("html"), text_expr).alias("_s"),
     ).select("url", "warc_ts", "domain", "_s.*")
 
 
@@ -220,6 +217,13 @@ def surface_dim(spans: DataFrame) -> DataFrame:
     """
     return _normalized(
         spans.select(F.explode("mention_spans").alias("surface")).distinct()
+    )
+
+
+def _mention_rows(spans: DataFrame) -> DataFrame:
+    """spans -> one (url, warc_ts, domain, surface) row per mention."""
+    return spans.select(
+        "url", "warc_ts", "domain", F.explode("mention_spans").alias("surface")
     )
 
 
@@ -253,10 +257,7 @@ def mentions_via_dim(
     plans/pipeline.build_triples counts the (cached) dim and passes the
     decision in (threshold `max_broadcast_surfaces`).
     """
-    exploded = spans.select(
-        "url", "warc_ts", "domain", F.explode("mention_spans").alias("surface")
-    )
-    return exploded.join(F.broadcast(dim) if broadcast else dim, "surface")
+    return _mention_rows(spans).join(F.broadcast(dim) if broadcast else dim, "surface")
 
 
 def canon_mention_rows(spans: DataFrame, surf2canon_bc) -> DataFrame:
@@ -512,15 +513,11 @@ def memberships_from_spans(spans: DataFrame) -> DataFrame:
     ).filter((F.col("person_id") != "") & (F.col("org_id") != ""))
 
 
-def detect_mentions(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """JVM path: pages(url, warc_ts, text, ...) -> one row per mention.
-
-    Plan shape: project(url, warc_ts, text) -> regexp_extract_all ->
-    explode -> normalize. Narrow (no shuffle); Catalyst prunes every other
-    page column at the scan.
-    """
-    surfaces = F.explode(F.regexp_extract_all(F.col(text_col), F.lit(MENTION_RE), 0))
-    spans = pages.select(
-        "url", "warc_ts", url_domain("url").alias("domain"), surfaces.alias("surface")
+def detect_mentions(pages: DataFrame) -> DataFrame:
+    """pages(url, warc_ts, html[, text]) -> one row per mention, normalized:
+    the batch plan's extractor (`detect_spans_fused`) with its mention
+    spans exploded. Narrow (no shuffle), so the streaming jobs run it per
+    micro-batch."""
+    return _normalized(
+        _mention_rows(detect_spans_fused(pages)), "url", "warc_ts", "domain"
     )
-    return _normalized(spans, "url", "warc_ts", "domain")

@@ -63,7 +63,7 @@ def source_run(col="warc_ts") -> F.Column:
     return F.date_format(c, "yyyy-MM")
 
 
-def merge_entities(mentions: DataFrame, id_col: str = "entity_id") -> DataFrame:
+def merge_entities(mentions: DataFrame) -> DataFrame:
     """Classified mentions -> merged entities table (one shuffle on id).
 
     `name_norm` rides in the first-wins ordering struct so two different
@@ -74,7 +74,7 @@ def merge_entities(mentions: DataFrame, id_col: str = "entity_id") -> DataFrame:
     first_order = F.struct(F.col("warc_ts"), F.col("url"), F.col("name_norm"))
     agg = (
         mentions.withColumn("_rank", type_rank("entity_type"))
-        .groupBy(id_col)
+        .groupBy("entity_id")
         .agg(
             F.min_by("name_norm", first_order).alias("name"),
             rank_type(F.max("_rank")).alias("entity_type"),
@@ -94,9 +94,7 @@ def merge_entities(mentions: DataFrame, id_col: str = "entity_id") -> DataFrame:
     ).drop("_names")
 
 
-def merge_entities_salted(
-    mentions: DataFrame, id_col: str = "entity_id", salt_buckets: int = 16
-) -> DataFrame:
+def merge_entities_salted(mentions: DataFrame, salt_buckets: int = 16) -> DataFrame:
     """Two-level (salted) variant for HOT entity keys (north_rule skew path).
 
     Level 1 groups on (id, salt) — spreads a hot entity over `salt_buckets`
@@ -113,7 +111,7 @@ def merge_entities_salted(
     lvl1 = (
         mentions.withColumn("_rank", type_rank("entity_type"))
         .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
-        .groupBy(id_col, "_salt")
+        .groupBy("entity_id", "_salt")
         .agg(
             F.min_by("name_norm", first_order).alias("p_name"),
             F.min(first_order).alias("p_order"),
@@ -127,7 +125,7 @@ def merge_entities_salted(
             F.collect_set(source_run("warc_ts")).alias("p_runs"),
         )
     )
-    agg = lvl1.groupBy(id_col).agg(
+    agg = lvl1.groupBy("entity_id").agg(
         F.min_by("p_name", "p_order").alias("name"),
         rank_type(F.max("p_rank")).alias("entity_type"),
         F.array_sort(F.array_distinct(F.flatten(F.collect_list("p_names")))).alias(

@@ -15,6 +15,10 @@ from pyspark.sql import DataFrame, functions as F
 
 from ocds_entity_extract_spark.functions.vectors import cosine
 
+# The embedding tables the search operators read: (vec_id, embedding).
+ID_COL, VEC_COL = "vec_id", "embedding"
+IVF_PROBES = 12                # centroids `ann_topk_ivf` searches
+
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     rng = random.Random(seed)
@@ -22,15 +26,11 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
 
 
 def with_lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 7,
+    df: DataFrame, vec_col: str = VEC_COL, dim: int = 64, n_planes: int = 8
 ) -> DataFrame:
     """Add `bucket`: sign-pattern of dot products with n_planes seeded
     hyperplanes, packed into one long."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
         plane_lit = F.array(*[F.lit(float(x)) for x in p])
@@ -47,11 +47,8 @@ def ann_topk_lsh(
     embeddings: DataFrame,
     query_vec_id: int,
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_planes: int = 8,
     dim: int | None = None,
-    multi_probe: bool = True,
     probe_hamming: int | None = None,
 ) -> DataFrame:
     """Top-k by cosine among vectors in the query's LSH bucket, plus (by
@@ -66,13 +63,13 @@ def ann_topk_lsh(
     ~= P(signature within probe radius) = sum over the radius of the
     binomial terms, so recall is bought only with candidate fraction;
     probe breadth is the knob that trades them (the bench reports both
-    radii). `multi_probe` is kept as the legacy boolean (== radius 1/0).
+    radii).
 
     `dim` should be passed (or read from upstream metadata); the
     `.first()` fallback costs an extra driver job per call.
     """
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select(VEC_COL).first()[0])
     if probe_hamming is None:
         # DEFAULT radius scales with n_planes so naive callers never pay a
         # silent near-scan: radius 2 only from 8 planes up (candidate
@@ -84,10 +81,10 @@ def ann_topk_lsh(
         # at n=4/radius 1 for 31%, 0.9 at radius 2 for 69% — no free lunch
         # below ~8 planes); size n_planes ~ log2(corpus/target_bucket) and
         # pass probe_hamming explicitly to pin a recall budget.
-        probe_hamming = (2 if n_planes >= 8 else 1) if multi_probe else 0
-    bucketed = with_lsh_bucket(embeddings, vec_col, dim, n_planes)
-    qrow = bucketed.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qv"), F.col("bucket").alias("qbucket")
+        probe_hamming = 2 if n_planes >= 8 else 1
+    bucketed = with_lsh_bucket(embeddings, VEC_COL, dim, n_planes)
+    qrow = bucketed.filter(F.col(ID_COL) == query_vec_id).select(
+        F.col(VEC_COL).alias("qv"), F.col("bucket").alias("qbucket")
     )
     masks = [0]
     if probe_hamming >= 1:
@@ -106,29 +103,23 @@ def ann_topk_lsh(
     else:
         cond = F.col("bucket") == F.col("qbucket")
     return (
-        bucketed.filter(F.col(id_col) != query_vec_id)
+        bucketed.filter(F.col(ID_COL) != query_vec_id)
         .join(F.broadcast(qrow), cond)
-        .select(id_col, F.round(cosine(F.col(vec_col), F.col("qv")), 3).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
+        .select(ID_COL, F.round(cosine(F.col(VEC_COL), F.col("qv")), 3).alias("score"))
+        .orderBy(F.desc("score"), F.asc(ID_COL))
         .limit(k)
     )
 
 
-def ann_topk_bruteforce(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    qv = embeddings.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qv")
+def ann_topk_bruteforce(embeddings: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
+    qv = embeddings.filter(F.col(ID_COL) == query_vec_id).select(
+        F.col(VEC_COL).alias("qv")
     )
     return (
-        embeddings.filter(F.col(id_col) != query_vec_id)
+        embeddings.filter(F.col(ID_COL) != query_vec_id)
         .crossJoin(F.broadcast(qv))
-        .select(id_col, F.round(cosine(F.col(vec_col), F.col("qv")), 3).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
+        .select(ID_COL, F.round(cosine(F.col(VEC_COL), F.col("qv")), 3).alias("score"))
+        .orderBy(F.desc("score"), F.asc(ID_COL))
         .limit(k)
     )
 
@@ -138,12 +129,9 @@ def ann_topk_ivf(
     query_vec_id: int,
     k: int = 10,
     n_centroids: int = 16,
-    n_probe: int = 12,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-style ANN: coarse quantization into centroid buckets, probe the
-    `n_probe` centroids nearest the query, exact top-k inside them.
+    `IVF_PROBES` centroids nearest the query, exact top-k inside them.
 
     Centroids are a deterministic sample (vec_id 1..n_centroids — a real
     deployment k-means-trains them; sampling keeps the operator fully
@@ -158,23 +146,23 @@ def ann_topk_ivf(
     from pyspark.sql.window import Window
 
     cents = embeddings.filter(
-        (F.col(id_col) >= 1) & (F.col(id_col) <= n_centroids)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-    sim = F.round(cosine(F.col(vec_col), F.col("cv")), 3)
+        (F.col(ID_COL) >= 1) & (F.col(ID_COL) <= n_centroids)
+    ).select(F.col(ID_COL).alias("cid"), F.col(VEC_COL).alias("cv"))
+    sim = F.round(cosine(F.col(VEC_COL), F.col("cv")), 3)
     asg = (
         embeddings.crossJoin(F.broadcast(cents))
         .withColumn("_sim", sim)
         .withColumn(
             "_rn",
             F.row_number().over(
-                Window.partitionBy(id_col).orderBy(F.desc("_sim"), F.asc("cid"))
+                Window.partitionBy(ID_COL).orderBy(F.desc("_sim"), F.asc("cid"))
             ),
         )
         .filter(F.col("_rn") == 1)
-        .select(id_col, vec_col, "cid")
+        .select(ID_COL, VEC_COL, "cid")
     )
-    q = embeddings.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qv")
+    q = embeddings.filter(F.col(ID_COL) == query_vec_id).select(
+        F.col(VEC_COL).alias("qv")
     )
     probes = (
         cents.crossJoin(F.broadcast(q))
@@ -185,16 +173,16 @@ def ann_topk_ivf(
                 Window.partitionBy(F.lit(1)).orderBy(F.desc("_sim"), F.asc("cid"))
             ),
         )
-        .filter(F.col("_rn") <= n_probe)
+        .filter(F.col("_rn") <= IVF_PROBES)
         .select("cid")
     )
     return (
         asg.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != query_vec_id)
+        .filter(F.col(ID_COL) != query_vec_id)
         .crossJoin(F.broadcast(q))
         .select(
-            id_col, F.round(cosine(F.col(vec_col), F.col("qv")), 3).alias("score")
+            ID_COL, F.round(cosine(F.col(VEC_COL), F.col("qv")), 3).alias("score")
         )
-        .orderBy(F.desc("score"), F.asc(id_col))
+        .orderBy(F.desc("score"), F.asc(ID_COL))
         .limit(k)
     )

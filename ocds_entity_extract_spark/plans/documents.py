@@ -396,9 +396,8 @@ def membership_documents(
     )
 
 
-def write_ndjson_grouped(
-    df: DataFrame, path: str, group_col: str = "entity_type"
-) -> None:
-    """NDJSON stream sink: one directory per group (≙ stream.js [SPLIT]
-    groups / insert.js per-collection inserts), parallel JSON writers."""
-    df.write.mode("overwrite").partitionBy(group_col).json(path)
+def write_ndjson_grouped(df: DataFrame, path: str) -> None:
+    """NDJSON stream sink: one directory per entity_type (≙ stream.js
+    [SPLIT] groups / insert.js per-collection inserts), parallel JSON
+    writers."""
+    df.write.mode("overwrite").partitionBy("entity_type").json(path)

@@ -18,9 +18,9 @@ Only stages 4-6 shuffle. The cached intermediates are all far smaller than
 pages: `spans` (feeds the mention, membership and contact branches —
 without it the pandas-UDF extraction would run once per consumer), the
 surface `dim`, and the canonical `mapping`. The O(mentions) stream itself
-is deliberately NOT cached — each consumer rebuilds it with a narrow
-explode + broadcast probe over the cached spans (see the note at the
-mentions binding below). At cluster scale swap cache() for
+is deliberately NOT cached — its one consumer, the merge, rebuilds it with
+a narrow explode + broadcast probe over the cached spans (see the note at
+the merge below). At cluster scale swap cache() for
 persist(DISK_ONLY) or a materialized intermediate table.
 
 Emitted predicates (≙ the reference's six entity kinds + membership edges,
@@ -81,7 +81,6 @@ from ocds_entity_extract_spark.session import local_frame
 class PipelineResult:
     triples: DataFrame
     entities: DataFrame
-    mentions: DataFrame
     mapping: DataFrame          # entity_id -> canonical_id
     sameas_edges: DataFrame
     member_edges: DataFrame     # (url, member_canon, role, org_canon, is_purchase)
@@ -160,7 +159,7 @@ def build_triples(
     # pytest-gated by test_build_triples_driver_vs_distributed_linking.
     dict_plan = dim_count is not None and dim_count <= max_broadcast_surfaces
     # NOTE: the mention stream is deliberately NOT cached. It is the one
-    # corpus-sized intermediate (O(mentions) rows), and every consumer can
+    # corpus-sized intermediate (O(mentions) rows), and its consumer can
     # rebuild it with a narrow explode + broadcast probe over the CACHED
     # spans table — recomputing that is cheaper than serializing ~the
     # corpus into executor storage and reading it back (phase-split
@@ -168,10 +167,9 @@ def build_triples(
     # cache-bound and inversely scaling 8->32 cores; the mention-stream
     # cache write was the largest single memory-traffic term). At cluster
     # scale the same argument says "rebuild from the spans table" beats
-    # "persist the mention stream".
-    mentions = mentions_via_dim(spans, dim, broadcast=dict_plan)
-
-    entities = merge_entities(mentions)
+    # "persist the mention stream". The merge is its only consumer: every
+    # page->canonical read goes through `page_canon` below.
+    entities = merge_entities(mentions_via_dim(spans, dim, broadcast=dict_plan))
 
     # the DISTINCT entity-id universe is exactly the dim's id column
     # (mentions_via_dim is an inner join on surface), so linking and CC
@@ -216,19 +214,16 @@ def build_triples(
             canon = linking_canon_dict(
                 sorted(set(dim_pdf["entity_id"])), hash_family=linking_hash_family
             )
-            mapping_plain = local_frame(
+            # a LocalRelation with size statistics: the planner broadcasts
+            # it into every downstream join without a hint (a hint would
+            # dangle on the frame's non-join readers)
+            mapping = local_frame(
                 spark, sorted(canon.items()), "entity_id string, canonical_id string"
             )
         else:
-            mapping_plain = distributed_mapping()
-            _mp = mapping_plain.toPandas()
+            mapping = distributed_mapping()
+            _mp = mapping.toPandas()
             canon = dict(zip(_mp["entity_id"], _mp["canonical_id"]))
-        # bounded by the dim budget -> always broadcastable: the hint turns
-        # every downstream mapping JOIN (contacts, the contact-person slug)
-        # into a map-side probe instead of a shuffle of the corpus-sized
-        # mention stream. Non-join consumers read the UNHINTED frame so the
-        # hint never dangles on a non-join relation.
-        mapping = F.broadcast(mapping_plain)
         surf_bc = spark.sparkContext.broadcast(
             {s: canon[e] for s, e in zip(dim_pdf["surface"], dim_pdf["entity_id"])}
         )
@@ -288,7 +283,7 @@ def build_triples(
         # member_edge_rows for why this twin of the join plan stays)
         member_edges = member_edge_rows(spans, spark.sparkContext.broadcast(canon))
     else:
-        mapping = mapping_plain = distributed_mapping()
+        mapping = distributed_mapping()
 
         def page_canon(sub: DataFrame) -> DataFrame:
             # Dedup at the NARROWEST point first: duplicate (url, entity)
@@ -337,7 +332,7 @@ def build_triples(
         addrs = infer_institution_regions(inst_aliases, spark)
         areas_tbl = area_nodes(addrs, spark)
         sameas = (
-            mapping_plain.filter(F.col("entity_id") != F.col("canonical_id"))
+            mapping.filter(F.col("entity_id") != F.col("canonical_id"))
             .select(
                 F.col("entity_id").alias("subj"),
                 F.lit("sameAs").alias("pred"),
@@ -480,16 +475,15 @@ def build_triples(
 
     # contact_details edges (≙ party.contactPoint -> contact_details,
     # reference extract.js:889-891): page-level contacts attributed to the
-    # entities mentioned on that page. No broadcast hint: contacts is
-    # usually tiny (contact-bearing pages only) and AQE will pick a
-    # broadcast join from runtime sizes, but a footer-contact-heavy crawl
-    # can make it O(pages) — a forced hint would be the same scale-killer
-    # the surface-dim join had in round 1.
-    contacts = contacts_from_spans(spans)
+    # canonical entities mentioned on that page, through the plan's
+    # `page_canon` over the contact-bearing pages only. No broadcast hint:
+    # contacts is usually tiny (contact-bearing pages only) and AQE will
+    # pick a broadcast join from runtime sizes, but a footer-contact-heavy
+    # crawl can make it O(pages) — a forced hint would be the same
+    # scale-killer the surface-dim join had in round 1.
     contact_edges = (
-        mentions.select("url", "entity_id")
-        .join(contacts, "url")
-        .join(mapping, "entity_id")
+        page_canon(spans.filter(F.size("contact_spans") > 0))
+        .join(contacts_from_spans(spans), "url")
         .select("canonical_id", "contact_type", "contact_value")
         .distinct()
     )
@@ -506,7 +500,6 @@ def build_triples(
     return PipelineResult(
         triples=triples,
         entities=entities,
-        mentions=mentions,
         mapping=mapping,
         sameas_edges=sameas,
         member_edges=member_edges,

@@ -1,7 +1,7 @@
-"""Declared StructType schemas for every table in the pipeline.
+"""Declared StructType schemas for the pipeline's input tables.
 
 The reference is schema-on-read (every access guarded by hasOwnProperty,
-e.g. reference extract.js:8,42,62); here every stage has a fixed declared
+e.g. reference extract.js:8,42,62); here the inputs have a fixed declared
 schema so Catalyst can prune columns and push filters to the parquet scan.
 
 `PAGES_SCHEMA` is the exact `input_hint` shape from BASELINE.json:
@@ -11,18 +11,12 @@ pages(url string, warc_ts timestamp, html binary, text string, lang string).
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    DoubleType,
-    IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
-
-# ---- input --------------------------------------------------------------
 
 PAGES_SCHEMA = StructType(
     [
@@ -39,73 +33,5 @@ CLASSIFIER_SCHEMA = StructType(
     [
         StructField("name", StringType(), False),
         StructField("type", StringType(), False),
-    ]
-)
-
-# ---- intermediate -------------------------------------------------------
-
-MENTION_STRUCT = StructType(
-    [
-        StructField("surface", StringType(), False),   # raw matched span
-        StructField("start", IntegerType(), False),    # char offset in text
-    ]
-)
-
-# one row per detected mention (post-explode)
-MENTIONS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("domain", StringType(), False),
-        StructField("surface", StringType(), False),
-        StructField("name_norm", StringType(), False),   # whitespace-collapsed
-        StructField("entity_id", StringType(), False),   # slug (pre-canonical)
-        StructField("entity_type", StringType(), False), # person|company|institution
-    ]
-)
-
-# merged per-entity aggregate (reference's entity stores, extract.js:1380-1382)
-ENTITIES_SCHEMA = StructType(
-    [
-        StructField("entity_id", StringType(), False),
-        StructField("name", StringType(), False),
-        StructField("entity_type", StringType(), False),
-        StructField("other_names", ArrayType(StringType()), False),
-        StructField("mention_count", LongType(), False),
-        StructField("page_count", LongType(), False),
-        StructField("first_seen", TimestampType(), True),
-        StructField("last_seen", TimestampType(), True),
-        StructField("sources", ArrayType(StringType()), False),
-        # crawl-run provenance set (≙ reference sourceRun, extract.js:674-682)
-        StructField("source_runs", ArrayType(StringType()), False),
-    ]
-)
-
-# ---- output -------------------------------------------------------------
-
-TRIPLES_SCHEMA = StructType(
-    [
-        StructField("subj", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj", StringType(), False),
-    ]
-)
-
-LINEAGE_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("stage", StringType(), False),
-        StructField("partition_key", StringType(), True),
-        StructField("row_count", LongType(), False),
-        StructField("content_hash", StringType(), True),
-        StructField("committed_ts", TimestampType(), False),
-    ]
-)
-
-METRICS_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("metric", StringType(), False),
-        StructField("value", DoubleType(), False),
     ]
 )

@@ -53,10 +53,8 @@ def pending_pages(cat: Catalog, pages: DataFrame, scope: str, n_chunks: int = 64
     return chunked.join(done, "chunk", "left_anti")
 
 
-def commit_chunks(
-    cat: Catalog, scope: str, chunks: list[int], ts: dt.datetime | None = None
-) -> None:
-    ts = ts or dt.datetime.now(dt.timezone.utc)
+def commit_chunks(cat: Catalog, scope: str, chunks: list[int]) -> None:
+    ts = dt.datetime.now(dt.timezone.utc)
     df = local_frame(
         cat.spark,
         [(scope, int(c), ts) for c in chunks],
@@ -71,9 +69,9 @@ def run_incremental(
     scope: str,
     process_fn,
     n_chunks: int = 64,
-    table: str = "triples_incremental",
 ) -> int:
-    """Process only pending chunks; returns number of chunks committed.
+    """Process only pending chunks into `triples_incremental`; returns
+    number of chunks committed.
 
     `process_fn(pages_subset) -> DataFrame(subj, pred, obj, chunk)` — the
     chunk column rides along so the write is partition-idempotent.
@@ -83,6 +81,6 @@ def run_incremental(
     if not todo:
         return 0
     out = process_fn(pending)
-    cat.overwrite_partitions(table, out, partition_by=["chunk"])
+    cat.overwrite_partitions("triples_incremental", out, partition_by=["chunk"])
     commit_chunks(cat, scope, todo)
     return len(todo)

@@ -2,17 +2,18 @@
 
 The reference is a pure batch job (SURVEY.md §2.10 — no stream semantics
 anywhere; its resumable analogue is streaming/incremental.py). This module
-additionally exposes the NARROW stages of the KG pipeline (text extraction
-pandas UDF + mention detection + classification) as a streaming
-transformation, so a pages stream (file source here; Kafka/Iceberg CDC at
-cluster scale) yields per-window mention counts with late-data handling:
+additionally exposes the NARROW stages of the KG pipeline (the fused
+text-extraction + span pandas UDF, normalization and classification) as a
+streaming transformation, so a pages stream (file source here;
+Kafka/Iceberg CDC at cluster scale) yields per-window mention counts with
+late-data handling:
 
-    pages readStream -> extract_text (Arrow UDF) -> detect_mentions ->
+    pages readStream -> detect_mentions (detect_spans_fused, Arrow UDF) ->
     withWatermark(warc_ts) -> groupBy(window, entity_type) -> count
 
-Everything before the aggregation is stateless/narrow — identical code to
-the batch plan (the DataFrame API is the unifying surface, so batch and
-streaming can never drift). The aggregation is the only stateful operator;
+Everything before the aggregation is stateless/narrow — the batch plan's
+extractor (`build_triples` runs the same `detect_spans_fused`), so batch
+and streaming can never drift. The aggregation is the only stateful operator;
 the watermark bounds its state so it survives unbounded streams.
 """
 
@@ -21,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocds_entity_extract_spark.functions.classify import with_entity_type
-from ocds_entity_extract_spark.functions.html import with_extracted_text
 from ocds_entity_extract_spark.operators.mentions import detect_mentions
 from ocds_entity_extract_spark.schemas import PAGES_SCHEMA
 
@@ -40,7 +40,7 @@ def stream_pages(
 
 def streaming_mentions(pages_stream: DataFrame) -> DataFrame:
     """Stateless streaming mention rows — the same narrow plan as batch."""
-    return with_entity_type(detect_mentions(with_extracted_text(pages_stream)))
+    return with_entity_type(detect_mentions(pages_stream))
 
 
 def windowed_mention_counts(

@@ -1,7 +1,7 @@
 """CLI driver argument/validation parity (S1 — reference index.js:13-31).
 
 Error-path tests run without a SparkSession; `test_cli_docs_agree_with_triples`
-runs both sinks end to end on a two-page corpus."""
+runs both sinks end to end on a three-page corpus."""
 
 from __future__ import annotations
 
@@ -66,9 +66,10 @@ def test_pyfiles_artifact_complete(tmp_path):
 
 @pytest.mark.parametrize("output", ["db", "stream"])
 def test_cli_docs_agree_with_triples(spark, tmp_path, output):
-    """The CLI writes an entity doc for every `type` subject and a
-    membership doc for every `memberOf` triple — including a NEW contact
-    person (ana-torres, from her email) and her 'funcionario' edge."""
+    """The CLI writes an entity doc for every `type` subject, a membership
+    doc for every `memberOf` triple — including a NEW contact person
+    (ana-torres, from her email) and her 'funcionario' edge — and an area
+    doc for every area an `inArea`/`partOf` triple names."""
     from ocds_entity_extract_spark.schemas import PAGES_SCHEMA
 
     ts = dt.datetime(2025, 3, 1, tzinfo=dt.timezone.utc)
@@ -77,6 +78,7 @@ def test_cli_docs_agree_with_triples(spark, tmp_path, output):
         "<p>contacto: ana.torres@salud.gob.mx para dudas.</p>",
         "<p>hoy Grupo Aurora Delta S.A. firmó.</p>"
         "<p>contacto: luis.vega@aurora.mx</p>",
+        "<p>la Secretaría de Educación de Jalisco abrió registro.</p>",
     ]
     rows = [
         (f"https://noticias.example.mx/n/{i}", ts + dt.timedelta(seconds=i),
@@ -91,17 +93,24 @@ def test_cli_docs_agree_with_triples(spark, tmp_path, output):
 
     if output == "db":
         read = lambda t: spark.read.parquet(os.path.join(wh, t))  # noqa: E731
-        triples, ents, mems = (
-            read("triples"), read("entity_docs"), read("membership_docs")
+        triples, ents, mems, areas = (
+            read("triples"), read("entity_docs"), read("membership_docs"),
+            read("area_docs"),
         )
     else:
         read = lambda t: spark.read.json(os.path.join(wh, "out", t))  # noqa: E731
-        triples, ents, mems = read("triples"), read("entities"), read("memberships")
+        triples, ents, mems, areas = (
+            read("triples"), read("entities"), read("memberships"), read("areas")
+        )
     t = {(r["subj"], r["pred"], r["obj"]) for r in triples.collect()}
     types = {s for s, p, _o in t if p == "type"}
     member_of = {(s, o) for s, p, o in t if p == "memberOf"}
     assert {"ana-torres", "luis-vega"} <= types
     assert ("ana-torres", "secretaria-de-salud") in member_of
+    in_area = {o for _s, p, o in t if p == "inArea"}
+    part_of = {x for s, p, o in t if p == "partOf" for x in (s, o)}
+    assert in_area and part_of
+    assert {r["id"] for r in areas.collect()} == in_area | part_of
     assert {r["id"] for r in ents.collect()} == types
     assert {
         (r["person_id"], r["organization_id"]) for r in mems.collect()

@@ -171,10 +171,31 @@ def test_driver_side_linking_matches_distributed(spark, pages_df):
     assert dist_map == sorted(linking_canon_dict(slugs).items())
 
 
+def _dangling_hints(df) -> int:
+    """ResolvedHint nodes of `df`'s analyzed plan that no join consumes.
+
+    The optimizer moves a hint into the nearest join above it through
+    unary nodes only; any other hint (e.g. on the returned frame itself)
+    is dropped with a HintErrorLogger warning on every read of the frame."""
+    def walk(node, under_join):
+        kids = []
+        it = node.children().iterator()
+        while it.hasNext():
+            kids.append(it.next())
+        name = node.nodeName()
+        n = int(name == "ResolvedHint" and not under_join)
+        for k in kids:
+            n += walk(k, name == "Join" or (under_join and len(kids) == 1))
+        return n
+
+    return walk(df._jdf.queryExecution().analyzed(), False)
+
+
 def test_build_triples_driver_vs_distributed_linking(spark, pages_df):
     """build_triples emits the identical triple set — and the identical row
     set of every frame the documents read — whichever linking and assembly
-    path the size thresholds select."""
+    path the size thresholds select; no returned frame carries a join hint
+    that no join consumes."""
     from ocds_entity_extract_spark.plans.pipeline import build_triples
 
     frames = (
@@ -183,6 +204,8 @@ def test_build_triples_driver_vs_distributed_linking(spark, pages_df):
     )
 
     def row_sets(res):
+        for f in frames:
+            assert _dangling_hints(getattr(res, f)) == 0, f
         return {f: {tuple(r) for r in getattr(res, f).collect()} for f in frames}
 
     fast = row_sets(build_triples(spark, pages_df))

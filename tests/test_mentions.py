@@ -18,9 +18,8 @@ def _collect_set(df):
 
 def test_detects_embedded_entities(spark, pages_df, small_corpus):
     _, _, aux = small_corpus
-    pages_t = with_extracted_text(pages_df)
     found_ids = {
-        r["entity_id"] for r in detect_mentions(pages_t).select("entity_id").distinct().collect()
+        r["entity_id"] for r in detect_mentions(pages_df).select("entity_id").distinct().collect()
     }
     from ocds_entity_extract_spark.datagen import simple_name_py
 

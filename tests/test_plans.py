@@ -48,10 +48,9 @@ def test_broadcast_join_in_dim_query(spark, sf_dir):
 
 def test_mentions_stage_is_narrow(spark, pages_df):
     """pages -> mentions is shuffle-free (no Exchange in the plan)."""
-    from ocds_entity_extract_spark.functions.html import with_extracted_text
     from ocds_entity_extract_spark.operators.mentions import detect_mentions
 
-    plan = plan_of(detect_mentions(with_extracted_text(pages_df)))
+    plan = plan_of(detect_mentions(pages_df))
     assert "Exchange" not in plan
 
 
@@ -60,7 +59,6 @@ def test_classifier_override_broadcasts(spark, pages_df, small_corpus):
         load_classifier_override,
         with_entity_type,
     )
-    from ocds_entity_extract_spark.functions.html import with_extracted_text
     from ocds_entity_extract_spark.operators.mentions import detect_mentions
     from ocds_entity_extract_spark.schemas import CLASSIFIER_SCHEMA
 
@@ -69,7 +67,7 @@ def test_classifier_override_broadcasts(spark, pages_df, small_corpus):
         spark, spark.createDataFrame(aux["classifier_override"], CLASSIFIER_SCHEMA)
     )
     plan = plan_of(
-        with_entity_type(detect_mentions(with_extracted_text(pages_df)), override)
+        with_entity_type(detect_mentions(pages_df), override)
     )
     assert "BroadcastHashJoin" in plan
 

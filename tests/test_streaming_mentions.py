@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from ocds_entity_extract_spark.datagen import generate_corpus
 from ocds_entity_extract_spark.functions.classify import with_entity_type
-from ocds_entity_extract_spark.functions.html import with_extracted_text
 from ocds_entity_extract_spark.operators.mentions import detect_mentions
 from ocds_entity_extract_spark.streaming.stream_mentions import (
     run_to_memory_available_now,
@@ -61,7 +60,7 @@ def test_streaming_counts_match_batch(spark, tmp_path):
     }
 
     batch = (
-        with_entity_type(detect_mentions(with_extracted_text(spark.read.parquet(path))))
+        with_entity_type(detect_mentions(spark.read.parquet(path)))
         .groupBy(F.window("warc_ts", "1 hour").alias("win"), "entity_type")
         .agg(F.count(F.lit(1)).alias("mention_count"))
         .select(F.col("win.start").alias("window_start"), "entity_type", "mention_count")

@@ -31,11 +31,10 @@ def test_stateful_profiles_match_batch(spark, tmp_path):
     }
 
     from ocds_entity_extract_spark.functions.classify import with_entity_type
-    from ocds_entity_extract_spark.functions.html import with_extracted_text
     from ocds_entity_extract_spark.operators.mentions import detect_mentions
 
     batch = (
-        with_entity_type(detect_mentions(with_extracted_text(spark.read.parquet(path))))
+        with_entity_type(detect_mentions(spark.read.parquet(path)))
         .groupBy("entity_id")
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -77,20 +77,22 @@ def main() -> int:
             spark.catalog.clearCache()
         el = time.time() - t0
         if name not in oracles:
-            print(f"ok?   {name}: rows-only {len(sdf)} rows, {el:.1f}s")
+            print(f"ok?   {name}: rows-only {len(sdf)} rows, spark {el:.1f}s")
             continue
+        t0 = time.time()
         try:
             odf = con.sql(oracles[name]).df()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: duckdb error {e}")
             continue
+        el_duck = time.time() - t0
         sn, sc, sh = frame_hash(sdf)
         on, oc, oh = frame_hash(odf)
         status = "OK  " if (sn, sh) == (on, oh) and sc == oc else "FAIL"
         if status == "FAIL":
             failures.append(name)
-        print(f"{status}  {name}: spark({sn},{sh}) duck({on},{oh}) cols {'=' if sc == oc else f'{sc} vs {oc}'} {el:.1f}s")
+        print(f"{status}  {name}: spark({sn},{sh}) duck({on},{oh}) cols {'=' if sc == oc else f'{sc} vs {oc}'} spark {el:.1f}s duck {el_duck:.1f}s")
         if status == "FAIL" and sn and on:
             import pandas as pd
 
