@@ -171,7 +171,7 @@ def main() -> None:
                 emb, qid, 10, n_planes=4, dim=64, probe_hamming=2
             ).collect()
         }
-        ivf = {r["vec_id"] for r in ann_topk_ivf(emb, qid, 10).collect()}
+        ivf = {r["vec_id"] for r in ann_topk_ivf(emb, qid).collect()}
         lsh_r.append(len(bf & lsh) / max(len(bf), 1))
         lsh2_r.append(len(bf & lsh2) / max(len(bf), 1))
         ivf_r.append(len(bf & ivf) / max(len(bf), 1))

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ocds_entity_extract_spark.functions.text import launder, simple_name
+from ocds_entity_extract_spark.functions.text import simple_name
 from ocds_entity_extract_spark.session import local_frame
 
 # (iso2, spanish name) — ISO-3166 at reference parity (~80+ entries, ≙ the
@@ -103,7 +103,7 @@ def mx_state_dim(spark: SparkSession) -> DataFrame:
     return (
         base.select("state_name", "iso_code")
         .unionByName(alias)
-        .withColumn("name_slug", simple_name(launder("state_name")))
+        .withColumn("name_slug", simple_name("state_name"))
     )
 
 
@@ -128,7 +128,7 @@ def with_state_code(df: DataFrame, spark: SparkSession) -> DataFrame:
     regions fall back to 'MX-' + slug (reference builds ids even for
     unknown spellings)."""
     dim = mx_state_dim(spark)
-    probe = df.withColumn("_sslug", simple_name(launder(F.col("region"))))
+    probe = df.withColumn("_sslug", simple_name(F.col("region")))
     joined = probe.join(
         F.broadcast(dim), probe["_sslug"] == dim["name_slug"], "left"
     )

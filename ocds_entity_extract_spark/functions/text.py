@@ -4,10 +4,11 @@ Re-derives the `company-laundry` string surface the reference calls
 (reference extract.js call sites, SURVEY.md §2.9):
 - collapse_ws  ≙ classifier-name normalization `replace(/\\s+/g,' ')`
                  (reference classify.js:19)
-- launder      ≙ laundry.launder: trim + whitespace collapse + uppercase-stable
 - strip_accents≙ the `diacritics` dep used by laundry.simpleName
 - simple_name  ≙ laundry.simpleName: lowercase, de-diacritic,
-                 non-alphanumeric runs -> '-', trimmed
+                 non-alphanumeric runs -> '-', trimmed (whitespace runs
+                 included, so it also covers laundry.launder's trim +
+                 whitespace collapse)
                  (used for entity ids, reference extract.js:419,451,530,...)
 
 All are pure Column expressions — no Python in the hot path. `strip_accents`
@@ -29,11 +30,6 @@ def collapse_ws(col: Column | str) -> Column:
     """Collapse whitespace runs to single spaces and trim."""
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.regexp_replace(c, r"\s+", " "))
-
-
-def launder(col: Column | str) -> Column:
-    """Whitespace/case cleanup before slugging (laundry.launder analogue)."""
-    return collapse_ws(col)
 
 
 def strip_accents(col: Column | str) -> Column:

@@ -112,18 +112,32 @@ def upsert_table(
     leaves the key duplicated across two partitions, exactly the bug the
     probe exists to prevent. When `partition_by` is None the whole table
     rewrites (fine for dims, wrong for facts — partition facts).
+    The first write, of a table that does not exist yet, keeps the latest
+    update row per key too.
     """
     from pyspark.sql.window import Window
 
+    latest = Window.partitionBy(*key_cols).orderBy(
+        F.col(order_col).desc(), F.col("_src").desc()
+    )
+
+    def latest_per_key(df: DataFrame) -> DataFrame:
+        return (
+            df.withColumn("_rn", F.row_number().over(latest))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_src")
+        )
+
+    upd = updates.withColumn("_src", F.lit(1))
     if not cat.exists(table):
+        first = latest_per_key(upd)
         if partition_by:
-            cat.overwrite_partitions(table, updates, partition_by)
+            cat.overwrite_partitions(table, first, partition_by)
         else:
-            cat.replace_table(table, updates)
+            cat.replace_table(table, first)
         return
 
     existing = cat.read(table).withColumn("_src", F.lit(0))
-    upd = updates.withColumn("_src", F.lit(1))
     if partition_by:
         # prune the read-back to partitions the update touches — PLUS any
         # partition holding a stale row of a key the update MOVED to a new
@@ -150,19 +164,7 @@ def upsert_table(
             )
             touched = touched.unionByName(stale_parts).distinct()
         existing = existing.join(F.broadcast(touched), partition_by, "left_semi")
-    merged = (
-        existing.unionByName(upd)
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(*key_cols).orderBy(
-                    F.col(order_col).desc(), F.col("_src").desc()
-                )
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
+    merged = latest_per_key(existing.unionByName(upd))
     # materialize before overwriting the files being read (parquet has no
     # snapshot isolation; Iceberg's writeTo does this transactionally)
     merged = merged.localCheckpoint(eager=True)

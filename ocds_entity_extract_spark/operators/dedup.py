@@ -22,15 +22,23 @@ from pyspark.sql.types import LongType
 
 # Every dedup entry point reads documents keyed by `doc_id` with body `text`.
 ID_COL, TEXT_COL = "doc_id", "text"
-# MinHash-LSH: K minhashes in bands of r; a bucket over MAX_BUCKET members
-# is dropped (the skew guard of linking._bucket_pairs).
-NUM_HASHES, BAND_SIZE, MAX_BUCKET = 16, 2, 64
+# Word n-gram size of every shingle: tiny synthetic vocab -> 3; real corpora
+# use 8-13.
+SHINGLE_N = 3
+# MinHash-LSH (signatures as linking.minhash_signatures builds them): a
+# bucket over MAX_BUCKET members is dropped (the skew guard of
+# linking._bucket_pairs).
+MAX_BUCKET = 64
 JACCARD_THRESHOLD = 0.5
+# n-gram Jaccard: documents are compared only inside one `source` block.
+BLOCK_COL, NGRAM_THRESHOLD = "source", 0.2
 
 
-def with_word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """Add `shingles`: distinct word n-grams (joined with single spaces)."""
-    toks = F.split(F.col(text_col), r"\s+")
+def with_word_shingles(df: DataFrame) -> DataFrame:
+    """Add `shingles`: distinct word `SHINGLE_N`-grams of `text` (joined
+    with single spaces)."""
+    n = SHINGLE_N
+    toks = F.split(F.col(TEXT_COL), r"\s+")
     return df.withColumn("_toks", toks).withColumn(
         "shingles",
         F.expr(
@@ -65,7 +73,7 @@ def _hashed_shingles(docs: DataFrame, hash_family: str, *carry: str) -> DataFram
     if src.rdd.getNumPartitions() < target:
         src = src.repartition(target)
     return (
-        with_word_shingles(src, TEXT_COL)
+        with_word_shingles(src)
         .select(
             ID_COL,
             *carry,
@@ -117,11 +125,10 @@ def _verified(
 
 
 def minhash_candidate_pairs(
-    docs: DataFrame,
-    jaccard_threshold: float = JACCARD_THRESHOLD,
-    hash_family: str = "portable",
+    docs: DataFrame, hash_family: str = "portable"
 ) -> DataFrame:
-    """documents -> verified near-dup pairs (id_a, id_b, jaccard).
+    """documents -> verified near-dup pairs (id_a, id_b, jaccard >=
+    `JACCARD_THRESHOLD`).
 
     Signature build is the codegen path (explode the materialized hashed
     shingles -> grouped affine mins, see linking.minhash_signatures)
@@ -146,22 +153,18 @@ def minhash_candidate_pairs(
     )
 
     sh = _hashed_shingles(docs, hash_family)
-    sig = minhash_signatures(
-        sh.select(ID_COL, F.explode("hs").alias("_h")), ID_COL, NUM_HASHES, BAND_SIZE
-    )
+    sig = minhash_signatures(sh.select(ID_COL, F.explode("hs").alias("_h")), ID_COL)
     pairs = (
         _lsh_pairs(sig, ID_COL, MAX_BUCKET)
         .withColumnRenamed("src", "id_a")
         .withColumnRenamed("dst", "id_b")
     )
-    return _verified(sh, pairs, jaccard_threshold).select(
+    return _verified(sh, pairs, JACCARD_THRESHOLD).select(
         "id_a", "id_b", "jaccard"
     )
 
 
-def minhash_incremental_pairs(
-    docs: DataFrame, is_new_col: str, hash_family: str = "portable"
-) -> DataFrame:
+def minhash_incremental_pairs(docs: DataFrame, is_new_col: str) -> DataFrame:
     """Incremental dedup: verified near-dup pairs TOUCHING a new document.
 
     The production shape at corpus scale — a new crawl batch is deduped
@@ -182,18 +185,17 @@ def minhash_incremental_pairs(
     index (the signature table is the natural Iceberg side output of the
     previous run) so only the new batch's text is shingled; here both
     sides recompute from text because the sandbox oracle needs the whole
-    path deterministic from the input table.
+    path deterministic from the input table (shingles hash with the md5
+    "portable" family, as in the oracle).
     """
     from pyspark.sql.window import Window
 
     from ocds_entity_extract_spark.operators.linking import minhash_signatures
 
     sh = _hashed_shingles(
-        docs.withColumn("_new", F.col(is_new_col)), hash_family, "_new"
+        docs.withColumn("_new", F.col(is_new_col)), "portable", "_new"
     )
-    sig = minhash_signatures(
-        sh.select(ID_COL, F.explode("hs").alias("_h")), ID_COL, NUM_HASHES, BAND_SIZE
-    )
+    sig = minhash_signatures(sh.select(ID_COL, F.explode("hs").alias("_h")), ID_COL)
     buckets = (
         sig.join(sh.select(ID_COL, "_new"), ID_COL)
         .select(ID_COL, "_new", F.explode("bands").alias("b"))
@@ -348,11 +350,10 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, block_col: str = "source", threshold: float = 0.2
-) -> DataFrame:
-    """Exact word 3-gram Jaccard >= threshold within blocks (block join
-    bounds the pair count; at scale the block is an LSH bucket).
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Exact word `SHINGLE_N`-gram Jaccard >= `NGRAM_THRESHOLD` within
+    `BLOCK_COL` blocks (block join bounds the pair count; at scale the
+    block is an LSH bucket).
 
     Shingles are hashed to 64-bit longs BEFORE the self-join: the block
     join is quadratic within each block, so the per-pair intersect work and
@@ -360,20 +361,20 @@ def ngram_jaccard_pairs(
     strings); Jaccard over distinct 64-bit hashes equals Jaccard over the
     strings up to negligible collision probability.
     """
-    sh = with_word_shingles(docs.select(ID_COL, block_col, TEXT_COL)).withColumn(
+    sh = with_word_shingles(docs.select(ID_COL, BLOCK_COL, TEXT_COL)).withColumn(
         "sh_h", F.expr("transform(shingles, s -> xxhash64(s))")
     )
     a = sh.select(
-        F.col(block_col).alias("blk"), F.col(ID_COL).alias("id_a"), F.col("sh_h").alias("sh_a")
+        F.col(BLOCK_COL).alias("blk"), F.col(ID_COL).alias("id_a"), F.col("sh_h").alias("sh_a")
     )
     b = sh.select(
-        F.col(block_col).alias("blk"), F.col(ID_COL).alias("id_b"), F.col("sh_h").alias("sh_b")
+        F.col(BLOCK_COL).alias("blk"), F.col(ID_COL).alias("id_b"), F.col("sh_h").alias("sh_b")
     )
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
     return (
         a.join(b, "blk")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("blk").alias(block_col), "id_a", "id_b", "jaccard")
+        .filter(F.col("jaccard") >= NGRAM_THRESHOLD)
+        .select(F.col("blk").alias(BLOCK_COL), "id_a", "id_b", "jaccard")
     )

@@ -30,9 +30,10 @@ from pyspark.sql import DataFrame, functions as F
 DEFAULT_SCALE = 1_000_000_000_000   # 1e12 micro-units
 DAMPING_NUM, DAMPING_DEN = 85, 100  # d = 0.85 as an exact ratio
 CHECKPOINT_EVERY = 2                # rounds between rank-lineage truncations
+ITERATIONS = 8                      # rounds the DuckDB twin unrolls
 
 
-def pagerank_fixed_point(edges: DataFrame, iterations: int = 8) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame, iterations: int = ITERATIONS) -> DataFrame:
     """(src, dst) directed edges -> (node, rank_int) after `iterations`.
 
     With S = DEFAULT_SCALE: rank0 = S // N for every node appearing as src
@@ -88,14 +89,15 @@ def pagerank_fixed_point(edges: DataFrame, iterations: int = 8) -> DataFrame:
     return ranks
 
 
-def pagerank_sql_unrolled(edges_cte: str, iterations: int = 8) -> str:
-    """DuckDB twin of `pagerank_fixed_point` as an UNROLLED CTE chain
-    (standard SQL forbids aggregation in a recursive term, so each
-    iteration is its own CTE over the previous one — mechanical and exact).
+def pagerank_sql_unrolled(edges_cte: str) -> str:
+    """DuckDB twin of `pagerank_fixed_point` over `ITERATIONS` rounds as an
+    UNROLLED CTE chain (standard SQL forbids aggregation in a recursive
+    term, so each iteration is its own CTE over the previous one —
+    mechanical and exact).
 
     `edges_cte` must be a CTE body selecting (src, dst), referenced here
-    as `e`. Emits CTEs: e, nodes, nn(n, tele), deg, r0..r{iterations};
-    the caller SELECTs FROM r{iterations}.
+    as `e`. Emits CTEs: e, nodes, nn(n, tele), deg, r0..r{ITERATIONS};
+    the caller SELECTs FROM r{ITERATIONS}.
     """
     parts = [
         f"e AS ({edges_cte})",
@@ -110,7 +112,7 @@ def pagerank_sql_unrolled(edges_cte: str, iterations: int = 8) -> str:
         "deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src)",
         "r0 AS (SELECT node, (SELECT r_init FROM nn) AS rank_int FROM nodes)",
     ]
-    for i in range(1, iterations + 1):
+    for i in range(1, ITERATIONS + 1):
         prev = f"r{i - 1}"
         parts.append(
             f"c{i} AS (SELECT e.dst AS node,"

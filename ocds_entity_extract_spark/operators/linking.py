@@ -61,14 +61,15 @@ DEFAULT_PREFIX_LEN = 14
 SHINGLE_N = 3                  # character n-gram size of both linking paths
 
 
-def with_shingles(df: DataFrame, col: str = "entity_id") -> DataFrame:
-    """Add `shingles`: distinct character `SHINGLE_N`-grams of the slug column."""
+def with_shingles(df: DataFrame) -> DataFrame:
+    """Add `shingles`: distinct character `SHINGLE_N`-grams of the
+    `entity_id` slug."""
     n = SHINGLE_N
     return df.withColumn(
         "shingles",
         F.expr(
-            f"array_distinct(transform(sequence(1, greatest(length({col}) - {n - 1}, 1)),"
-            f" i -> substring({col}, i, {n})))"
+            f"array_distinct(transform(sequence(1, greatest(length(entity_id) - {n - 1}, 1)),"
+            f" i -> substring(entity_id, i, {n})))"
         ),
     )
 
@@ -76,15 +77,14 @@ def with_shingles(df: DataFrame, col: str = "entity_id") -> DataFrame:
 def minhash_signatures(
     hashed: DataFrame,
     id_col: str,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
     keep_shingle_sets: bool = False,
     keep_minhashes: bool = False,
 ) -> DataFrame:
     """(id, _h) rows, one hashed shingle per row -> (id, [sh_hashed,
     n_shingles,] bands [, mh0..]) in ONE shuffle: a grouped min per affine
     family member (codegen + map-side combine; see functions/phash). The
-    one signature builder of entity linking and document dedup.
+    one signature builder of entity linking and document dedup:
+    `DEFAULT_NUM_HASHES` minhashes in bands of `DEFAULT_BAND_SIZE`.
 
     With `keep_shingle_sets` the distinct hashed shingle set rides along
     for later exact verification (small per-id sets like entity slugs;
@@ -96,6 +96,7 @@ def minhash_signatures(
         minhash_params,
     )
 
+    num_hashes, band_size = DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
     # projected once, not re-derived inside each of the K aggregates
     hashed = hashed.withColumn("_h31", F.pmod(F.col("_h"), F.lit(MERSENNE_P)))
     aggs = [
@@ -134,11 +135,10 @@ def minhash_signatures(
 def minhash_signature_table(
     df_with_shingles: DataFrame,
     id_col: str,
-    keep_shingle_sets: bool = True,
     keep_minhashes: bool = False,
     hash_family: str = "portable",
 ) -> DataFrame:
-    """(id, shingles) -> (id, [n_shingles, sh_hashed,] bands) in ONE shuffle.
+    """(id, shingles) -> (id, n_shingles, sh_hashed, bands) in ONE shuffle.
 
     explode -> hash once per shingle -> `minhash_signatures` (the
     md5-derived "portable" family is bit-identical in DuckDB, so
@@ -159,8 +159,7 @@ def minhash_signature_table(
         id_col, F.explode("shingles").alias("_s")
     ).select(id_col, hash_fn("_s").alias("_h"))
     return minhash_signatures(
-        hashed, id_col, DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE, keep_shingle_sets,
-        keep_minhashes,
+        hashed, id_col, keep_shingle_sets=True, keep_minhashes=keep_minhashes
     )
 
 
@@ -264,7 +263,7 @@ def verified_edges(entities: DataFrame, hash_family: str = "portable") -> DataFr
     id_col = "entity_id"
     base = entities.select(id_col).distinct()
     sig = minhash_signature_table(
-        _spread(with_shingles(base, id_col)), id_col, hash_family=hash_family
+        _spread(with_shingles(base)), id_col, hash_family=hash_family
     ).cache()
 
     pairs = (

@@ -53,14 +53,13 @@ def rank_type(col) -> F.Column:
     return _case(col, list(RANK_TYPE.items())[:-1], "person")
 
 
-def source_run(col="warc_ts") -> F.Column:
-    """Crawl-run id for a capture timestamp: the monthly crawl bucket
+def source_run() -> F.Column:
+    """Crawl-run id of the `warc_ts` capture timestamp: the monthly crawl bucket
     (Common-Crawl-style run granularity). ≙ the reference's sourceRun
     provenance distinction (extract.js:674-682), which stamps each source
     with the extraction run it came from — here derived from the capture
     time so it is stable across re-runs of the engine itself."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM")
+    return F.date_format(F.col("warc_ts"), "yyyy-MM")
 
 
 def merge_entities(mentions: DataFrame) -> DataFrame:
@@ -84,9 +83,7 @@ def merge_entities(mentions: DataFrame) -> DataFrame:
             F.min("warc_ts").alias("first_seen"),
             F.max("warc_ts").alias("last_seen"),
             F.array_sort(F.collect_set("domain")).alias("sources"),
-            F.array_sort(F.collect_set(source_run("warc_ts"))).alias(
-                "source_runs"
-            ),
+            F.array_sort(F.collect_set(source_run())).alias("source_runs"),
         )
     )
     return agg.withColumn(
@@ -122,7 +119,7 @@ def merge_entities_salted(mentions: DataFrame, salt_buckets: int = 16) -> DataFr
             F.min("warc_ts").alias("p_first"),
             F.max("warc_ts").alias("p_last"),
             F.collect_set("domain").alias("p_sources"),
-            F.collect_set(source_run("warc_ts")).alias("p_runs"),
+            F.collect_set(source_run()).alias("p_runs"),
         )
     )
     agg = lvl1.groupBy("entity_id").agg(

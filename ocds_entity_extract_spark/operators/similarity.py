@@ -17,7 +17,9 @@ from ocds_entity_extract_spark.functions.vectors import cosine
 
 # The embedding tables the search operators read: (vec_id, embedding).
 ID_COL, VEC_COL = "vec_id", "embedding"
-IVF_PROBES = 12                # centroids `ann_topk_ivf` searches
+# `ann_topk_ivf`: top IVF_K among the IVF_PROBES nearest of IVF_CENTROIDS
+# centroids.
+IVF_K, IVF_CENTROIDS, IVF_PROBES = 10, 16, 12
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
@@ -25,17 +27,15 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def with_lsh_bucket(
-    df: DataFrame, vec_col: str = VEC_COL, dim: int = 64, n_planes: int = 8
-) -> DataFrame:
-    """Add `bucket`: sign-pattern of dot products with n_planes seeded
-    hyperplanes, packed into one long."""
+def with_lsh_bucket(df: DataFrame, dim: int = 64, n_planes: int = 8) -> DataFrame:
+    """Add `bucket`: sign-pattern of the `embedding` column's dot products
+    with n_planes seeded hyperplanes, packed into one long."""
     planes = _hyperplanes(dim, n_planes)
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
         plane_lit = F.array(*[F.lit(float(x)) for x in p])
         d = F.aggregate(
-            F.zip_with(F.col(vec_col), plane_lit, lambda x, y: x * y),
+            F.zip_with(F.col(VEC_COL), plane_lit, lambda x, y: x * y),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
@@ -82,7 +82,7 @@ def ann_topk_lsh(
         # below ~8 planes); size n_planes ~ log2(corpus/target_bucket) and
         # pass probe_hamming explicitly to pin a recall budget.
         probe_hamming = 2 if n_planes >= 8 else 1
-    bucketed = with_lsh_bucket(embeddings, VEC_COL, dim, n_planes)
+    bucketed = with_lsh_bucket(embeddings, dim, n_planes)
     qrow = bucketed.filter(F.col(ID_COL) == query_vec_id).select(
         F.col(VEC_COL).alias("qv"), F.col("bucket").alias("qbucket")
     )
@@ -124,16 +124,12 @@ def ann_topk_bruteforce(embeddings: DataFrame, query_vec_id: int, k: int = 10) -
     )
 
 
-def ann_topk_ivf(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_centroids: int = 16,
-) -> DataFrame:
-    """IVF-style ANN: coarse quantization into centroid buckets, probe the
-    `IVF_PROBES` centroids nearest the query, exact top-k inside them.
+def ann_topk_ivf(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
+    """IVF-style ANN: coarse quantization into `IVF_CENTROIDS` centroid
+    buckets, probe the `IVF_PROBES` centroids nearest the query, exact
+    top-`IVF_K` inside them.
 
-    Centroids are a deterministic sample (vec_id 1..n_centroids — a real
+    Centroids are a deterministic sample (vec_id 1..IVF_CENTROIDS — a real
     deployment k-means-trains them; sampling keeps the operator fully
     reproducible and oracle-checkable). Assignment is a broadcast of the
     tiny centroid table against the (narrow) embedding scan — the classic
@@ -146,7 +142,7 @@ def ann_topk_ivf(
     from pyspark.sql.window import Window
 
     cents = embeddings.filter(
-        (F.col(ID_COL) >= 1) & (F.col(ID_COL) <= n_centroids)
+        (F.col(ID_COL) >= 1) & (F.col(ID_COL) <= IVF_CENTROIDS)
     ).select(F.col(ID_COL).alias("cid"), F.col(VEC_COL).alias("cv"))
     sim = F.round(cosine(F.col(VEC_COL), F.col("cv")), 3)
     asg = (
@@ -184,5 +180,5 @@ def ann_topk_ivf(
             ID_COL, F.round(cosine(F.col(VEC_COL), F.col("qv")), 3).alias("score")
         )
         .orderBy(F.desc("score"), F.asc(ID_COL))
-        .limit(k)
+        .limit(IVF_K)
     )

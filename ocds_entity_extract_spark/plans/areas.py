@@ -29,7 +29,7 @@ from ocds_entity_extract_spark.functions.geo import (
     with_country_code,
     with_state_code,
 )
-from ocds_entity_extract_spark.functions.text import launder, membership_id, simple_name
+from ocds_entity_extract_spark.functions.text import membership_id, simple_name
 
 
 def infer_institution_regions(
@@ -152,7 +152,7 @@ def with_area_ancestors(
     country_id = simple_name(F.coalesce("country_code", F.lit("xx")))
     state_id = F.col("state_code")
     city_id = F.concat(
-        state_id, F.lit("-"), simple_name(launder(F.col("locality")))
+        state_id, F.lit("-"), simple_name(F.col("locality"))
     )
 
     rank = F.coalesce(

@@ -82,7 +82,6 @@ class PipelineResult:
     triples: DataFrame
     entities: DataFrame
     mapping: DataFrame          # entity_id -> canonical_id
-    sameas_edges: DataFrame
     member_edges: DataFrame     # (url, member_canon, role, org_canon, is_purchase)
     area_nodes: DataFrame       # deduped area node table
     inst_regions: DataFrame     # (entity_id=canonical, region, gov_level, ...)
@@ -273,11 +272,11 @@ def build_triples(
             node_rows,
             "area_id string, name string, classification string, parent_id string",
         )
-        _triple_schema = "subj string, pred string, obj string"
         small_triples = local_frame(
-            spark, type_rows + sameas_rows + area_rows, _triple_schema
+            spark,
+            type_rows + sameas_rows + area_rows,
+            "subj string, pred string, obj string",
         )
-        sameas = local_frame(spark, sameas_rows, _triple_schema)
         # canonicalized membership edges, one Arrow pass: each member span
         # is re-parsed and both endpoint slugs dict-probed (see
         # member_edge_rows for why this twin of the join plan stays)
@@ -415,9 +414,7 @@ def build_triples(
                 F.min("warc_ts").alias("first_seen"),
                 F.max("warc_ts").alias("last_seen"),
                 F.array_sort(F.collect_set("domain")).alias("sources"),
-                F.array_sort(F.collect_set(source_run("warc_ts"))).alias(
-                    "source_runs"
-                ),
+                F.array_sort(F.collect_set(source_run())).alias("source_runs"),
             )
             .select(
                 "entity_id",
@@ -501,7 +498,6 @@ def build_triples(
         triples=triples,
         entities=entities,
         mapping=mapping,
-        sameas_edges=sameas,
         member_edges=member_edges,
         area_nodes=areas_tbl,
         inst_regions=addrs,

@@ -514,15 +514,19 @@ def q_scalar_text_fns(spark, sf_dir):
     )
 
 
+# DuckDB twin of functions/text.cbmei_id_reformat over the expression `e`.
+_CBMEI_SQL = (
+    "CASE WHEN strpos({e}, '.') > 0 THEN {e}"
+    " WHEN length({e}) >= 12 THEN substr({e}, 1, 3) || '.' || substr({e}, 4, 3)"
+    " || '.' || substr({e}, 7, 4) || '.' || substr({e}, 11)"
+    " ELSE {e} END"
+)
+
+
 @query(
     "cbmei_id_reformat",
-    """
-    SELECT p_partkey, CASE
-        WHEN strpos(raw, '.') > 0 THEN raw
-        WHEN length(raw) >= 12 THEN
-          substring(raw, 1, 3) || '.' || substring(raw, 4, 3) || '.' ||
-          substring(raw, 7, 4) || '.' || substring(raw, 11)
-        ELSE raw END AS product_id
+    f"""
+    SELECT p_partkey, {_CBMEI_SQL.format(e='raw')} AS product_id
     FROM (SELECT p_partkey, lpad(CAST(p_partkey * 37 AS VARCHAR), 12, '0') AS raw
           FROM part)
     """,

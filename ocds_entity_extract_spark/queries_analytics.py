@@ -19,6 +19,7 @@ from ocds_entity_extract_spark.functions.phash import (
     portable_hash64,
     portable_hash64_sql,
 )
+from ocds_entity_extract_spark.operators.dedup import SHINGLE_N
 from ocds_entity_extract_spark.queries import TS_FMT_DUCK, TS_FMT_SPARK, _t, query
 
 
@@ -361,15 +362,16 @@ _PAGERANK_EDGES_CTE = """
     FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
 """
 
-_PAGERANK_ITERS = 8
-
 
 def _pagerank_oracle_sql() -> str:
-    from ocds_entity_extract_spark.operators.graph import pagerank_sql_unrolled
+    from ocds_entity_extract_spark.operators.graph import (
+        ITERATIONS,
+        pagerank_sql_unrolled,
+    )
 
     return (
-        pagerank_sql_unrolled(_PAGERANK_EDGES_CTE, _PAGERANK_ITERS)
-        + f"\nSELECT node, rank_int FROM r{_PAGERANK_ITERS} WHERE rank_int >"
+        pagerank_sql_unrolled(_PAGERANK_EDGES_CTE)
+        + f"\nSELECT node, rank_int FROM r{ITERATIONS} WHERE rank_int >"
         " (SELECT r_init FROM nn)"
     )
 
@@ -397,7 +399,7 @@ def q_pagerank_copurchase(spark, sf_dir):
         pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
         .unionByName(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
     )
-    ranks = pagerank_fixed_point(edges, iterations=_PAGERANK_ITERS)
+    ranks = pagerank_fixed_point(edges)
     n_nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -936,9 +938,6 @@ def q_pii_scrub(spark, sf_dir):
     )
 
 
-_DECON_N = 3   # n-gram size: tiny synthetic vocab → 3; real corpora use 8-13
-
-
 @query(
     "decontamination",
     rf"""
@@ -947,8 +946,8 @@ _DECON_N = 3   # n-gram size: tiny synthetic vocab → 3; real corpora use 8-13
     ),
     sh AS (
       SELECT doc_id,
-             unnest(list_distinct([array_to_string(t[i:i+{_DECON_N - 1}], ' ')
-               for i in range(1, greatest(len(t) - {_DECON_N - 1}, 1) + 1)]))
+             unnest(list_distinct([array_to_string(t[i:i+{SHINGLE_N - 1}], ' ')
+               for i in range(1, greatest(len(t) - {SHINGLE_N - 1}, 1) + 1)]))
                AS s
       FROM toks
     ),
@@ -970,7 +969,7 @@ def q_decontamination(spark, sf_dir):
     from ocds_entity_extract_spark.operators.dedup import with_word_shingles
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sh = with_word_shingles(d, "text", n=_DECON_N).select(
+    sh = with_word_shingles(d).select(
         "doc_id", F.explode("shingles").alias("s")
     )
     bench = (

@@ -17,7 +17,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ocds_entity_extract_spark.functions.text import collapse_ws, simple_name, simple_name_py
+from ocds_entity_extract_spark.operators.dedup import NGRAM_THRESHOLD, SHINGLE_N
 from ocds_entity_extract_spark.queries import (
+    _CBMEI_SQL,
     ORACLE_SQL,
     SPARK_QUERIES,
     TS_FMT_SPARK,
@@ -650,10 +652,7 @@ def q_linking_signatures(spark, sf_dir):
         .distinct()
     )
     sig = minhash_signature_table(
-        with_shingles(slugs, "entity_id"),
-        "entity_id",
-        keep_shingle_sets=True,
-        keep_minhashes=True,
+        with_shingles(slugs), "entity_id", keep_minhashes=True
     )
     return sig.select(
         "entity_id",
@@ -666,11 +665,11 @@ def q_linking_signatures(spark, sf_dir):
 
 @query(
     "ngram_jaccard_pairs",
-    r"""
+    rf"""
     WITH sh AS (
       SELECT doc_id, source,
-             list_distinct([array_to_string(toks[i:i+2], ' ')
-                            for i in range(1, greatest(len(toks) - 2, 1) + 1)]) AS s
+             list_distinct([array_to_string(toks[i:i+{SHINGLE_N - 1}], ' ')
+                            for i in range(1, greatest(len(toks) - {SHINGLE_N - 1}, 1) + 1)]) AS s
       FROM (SELECT doc_id, source, string_split_regex(text, '\s+') AS toks
             FROM documents)
     ), pairs AS (
@@ -679,7 +678,7 @@ def q_linking_signatures(spark, sf_dir):
                    / len(list_distinct(list_concat(a.s, b.s))), 4) AS jaccard
       FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id
     )
-    SELECT source, id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.2
+    SELECT source, id_a, id_b, jaccard FROM pairs WHERE jaccard >= {NGRAM_THRESHOLD}
     """,
 )
 def q_ngram_jaccard_pairs(spark, sf_dir):
@@ -689,7 +688,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     from ocds_entity_extract_spark.operators.dedup import ngram_jaccard_pairs
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    return ngram_jaccard_pairs(d, block_col="source", threshold=0.2)
+    return ngram_jaccard_pairs(d)
 
 
 # =====================================================================
@@ -779,15 +778,21 @@ def q_ann_topk_lsh(spark, sf_dir):
     return ann_topk_lsh(e, query_vec_id=0, k=10, n_planes=4, dim=EMBEDDING_DIM)
 
 
-def _ann_ivf_oracle_sql(n_centroids: int = 16, n_probe: int = 12) -> str:
+def _ann_ivf_oracle_sql() -> str:
     """DuckDB twin of ann_topk_ivf: centroids are embedding rows (vec_id
     1..K), so no literals are needed — both engines derive assignment and
     probe sets from the same data with identical (rounded sim, cid)
     tie-breaking."""
+    from ocds_entity_extract_spark.operators.similarity import (
+        IVF_CENTROIDS,
+        IVF_K,
+        IVF_PROBES,
+    )
+
     return f"""
     WITH c AS (
         SELECT vec_id AS cid, embedding AS cv FROM embeddings
-        WHERE vec_id BETWEEN 1 AND {n_centroids}
+        WHERE vec_id BETWEEN 1 AND {IVF_CENTROIDS}
       ),
       q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
       asg AS (
@@ -808,13 +813,13 @@ def _ann_ivf_oracle_sql(n_centroids: int = 16, n_probe: int = 12) -> str:
                    ORDER BY round(list_cosine_similarity(c.cv, q.qv), 3) DESC, c.cid
                  ) AS rn
           FROM c CROSS JOIN q
-        ) WHERE rn <= {n_probe}
+        ) WHERE rn <= {IVF_PROBES}
       )
     SELECT a.vec_id, round(list_cosine_similarity(a.embedding, q.qv), 3) AS score
     FROM asg a JOIN probes USING (cid) CROSS JOIN q
     WHERE a.vec_id != 0
     ORDER BY score DESC, a.vec_id
-    LIMIT 10
+    LIMIT {IVF_K}
     """
 
 
@@ -826,7 +831,7 @@ def q_ann_topk_ivf(spark, sf_dir):
     from ocds_entity_extract_spark.operators.similarity import ann_topk_ivf
 
     e = _t(spark, sf_dir, "embeddings")
-    return ann_topk_ivf(e, query_vec_id=0, k=10, n_centroids=16)
+    return ann_topk_ivf(e, query_vec_id=0)
 
 
 # =====================================================================
@@ -1195,7 +1200,7 @@ def q_embedding_bucket_centroids(spark, sf_dir):
     from ocds_entity_extract_spark.operators.similarity import with_lsh_bucket
 
     e = _t(spark, sf_dir, "embeddings")
-    b = with_lsh_bucket(e, "embedding", dim=EMBEDDING_DIM, n_planes=4)
+    b = with_lsh_bucket(e, dim=EMBEDDING_DIM, n_planes=4)
     pos = b.select("bucket", F.posexplode("embedding").alias("pos", "v"))
     return pos.groupBy("bucket", "pos").agg(
         # +0.0 folds IEEE -0.0 to 0.0 (engines disagree on the sign of a
@@ -1216,7 +1221,7 @@ def q_dedup_near_embedding_lsh(spark, sf_dir):
     from ocds_entity_extract_spark.operators.similarity import with_lsh_bucket
 
     e = _t(spark, sf_dir, "embeddings")
-    b = with_lsh_bucket(e, "embedding", dim=EMBEDDING_DIM, n_planes=4)
+    b = with_lsh_bucket(e, dim=EMBEDDING_DIM, n_planes=4)
     a = b.select(
         "bucket", F.col("vec_id").alias("vid_a"), F.col("embedding").alias("va")
     )
@@ -1504,11 +1509,37 @@ def _kg_page_ctes(pages: str) -> str:
     )"""
 
 
+def _merge_ctes(src: str) -> str:
+    """`ent`: operators/merge.merge_entities over mention rows `src`
+    (entity_id, name_norm, rank, url, warc_ts, domain) — the per-slug merge
+    aggregates with the first-wins name (ordered by warc_ts, url,
+    name_norm) and the crawl-run set (monthly `warc_ts` buckets)."""
+    return f"""
+    rankedocc AS (
+      SELECT *, row_number() OVER (
+        PARTITION BY entity_id ORDER BY warc_ts, url, name_norm
+      ) AS rn
+      FROM {src}
+    ),
+    ent AS (
+      SELECT entity_id,
+             max(CASE WHEN rn = 1 THEN name_norm END) AS name,
+             max(rank) AS rank,
+             CAST(count(*) AS BIGINT) AS mention_count,
+             CAST(count(DISTINCT url) AS BIGINT) AS page_count,
+             min(warc_ts) AS first_seen,
+             max(warc_ts) AS last_seen,
+             list_distinct(list(name_norm)) AS names,
+             list_distinct(list(domain)) AS sources,
+             list_distinct(list(strftime(warc_ts, '%Y-%m'))) AS source_runs
+      FROM rankedocc GROUP BY entity_id
+    )"""
+
+
 def _kg_mention_ctes(pages: str) -> str:
     """Stages 2-4 (detect -> normalize/slug -> classify -> merge): one
     `typed` row per MENTION_RE span (name_norm, slug, keyword/suffix rank,
-    domain) and `ent`, the per-slug merge aggregates with the first-wins
-    name (ordered by warc_ts, url, name_norm)."""
+    domain) and `ent` (`_merge_ctes`)."""
     from ocds_entity_extract_spark.functions.classify import (
         COMPANY_SUFFIX_SLUG_RE,
         INSTITUTION_KEYWORDS,
@@ -1535,25 +1566,7 @@ def _kg_mention_ctes(pages: str) -> str:
                   WHEN regexp_matches(entity_id, '{COMPANY_SUFFIX_SLUG_RE}') THEN 2
                   ELSE 1 END AS rank
       FROM feat WHERE entity_id <> ''
-    ),
-    rankedocc AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY entity_id ORDER BY warc_ts, url, name_norm
-      ) AS rn
-      FROM typed
-    ),
-    ent AS (
-      SELECT entity_id,
-             max(CASE WHEN rn = 1 THEN name_norm END) AS name,
-             max(rank) AS rank,
-             CAST(count(*) AS BIGINT) AS mention_count,
-             CAST(count(DISTINCT url) AS BIGINT) AS page_count,
-             min(warc_ts) AS first_seen,
-             max(warc_ts) AS last_seen,
-             list_distinct(list(name_norm)) AS names,
-             list_distinct(list(domain)) AS sources
-      FROM rankedocc GROUP BY entity_id
-    )"""
+    ),""" + _merge_ctes("typed")
 
 
 def _kg_link_ctes(pages: str, override: str) -> str:
@@ -1783,12 +1796,7 @@ def _kg_product_ctes() -> str:
       FROM pm
     ),
     items AS (
-      SELECT *,
-             CASE WHEN strpos(pid, '.') > 0 THEN pid
-                  WHEN length(pid) >= 12
-                  THEN substr(pid, 1, 3) || '.' || substr(pid, 4, 3) || '.'
-                       || substr(pid, 7, 4) || '.' || substr(pid, 11)
-                  ELSE pid END AS product_id
+      SELECT *, {_CBMEI_SQL.format(e='pid')} AS product_id
       FROM it WHERE pid <> ''
     )"""
 
@@ -2084,7 +2092,7 @@ def q_kg_merged_entities_salted(spark, sf_dir):
     return _kg_merged_frame(spark, sf_dir, salted=True)
 
 
-_SOURCE_RUNS_ORACLE = """
+_SOURCE_RUNS_ORACLE = f"""
     WITH m AS (
       SELECT 'grupo-alfa-' || CAST(doc_id % 7 AS VARCHAR) AS entity_id,
              'Grupo Alfa ' || CAST(doc_id % 7 AS VARCHAR) AS name_norm,
@@ -2092,28 +2100,19 @@ _SOURCE_RUNS_ORACLE = """
                || CAST(doc_id AS VARCHAR) AS url,
              TIMESTAMP '2025-01-01 00:00:00'
                + to_days(CAST(doc_id AS INTEGER)) AS warc_ts,
-             'd' || CAST(doc_id % 13 AS VARCHAR) || '.example.mx' AS domain
+             'd' || CAST(doc_id % 13 AS VARCHAR) || '.example.mx' AS domain,
+             2 AS rank  -- every mention is a 'company'
       FROM documents
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY entity_id ORDER BY warc_ts, url, name_norm
-      ) AS rn
-      FROM m
-    )
+    ),{_merge_ctes('m')}
     SELECT entity_id,
-           max(CASE WHEN rn = 1 THEN name_norm END) AS name,
-           CAST(count(*) AS BIGINT) AS mention_count,
-           CAST(count(DISTINCT url) AS BIGINT) AS page_count,
-           strftime(min(warc_ts), '%Y-%m-%d %H:%M:%S') AS first_seen,
-           strftime(max(warc_ts), '%Y-%m-%d %H:%M:%S') AS last_seen,
-           array_to_string(list_sort(list_distinct(list(domain))), ',')
-             AS sources,
-           array_to_string(
-             list_sort(list_distinct(list(strftime(warc_ts, '%Y-%m')))), ',')
-             AS source_runs
-    FROM ranked
-    GROUP BY entity_id
+           name,
+           mention_count,
+           page_count,
+           strftime(first_seen, '%Y-%m-%d %H:%M:%S') AS first_seen,
+           strftime(last_seen, '%Y-%m-%d %H:%M:%S') AS last_seen,
+           array_to_string(list_sort(sources), ',') AS sources,
+           array_to_string(list_sort(source_runs), ',') AS source_runs
+    FROM ent
     """
 
 

@@ -25,6 +25,8 @@ from ocds_entity_extract_spark.functions.classify import with_entity_type
 from ocds_entity_extract_spark.operators.mentions import detect_mentions
 from ocds_entity_extract_spark.schemas import PAGES_SCHEMA
 
+WINDOW, WATERMARK = "1 hour", "2 hours"   # `windowed_mention_counts`
+
 
 def stream_pages(
     spark: SparkSession,
@@ -43,21 +45,17 @@ def streaming_mentions(pages_stream: DataFrame) -> DataFrame:
     return with_entity_type(detect_mentions(pages_stream))
 
 
-def windowed_mention_counts(
-    pages_stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window mention counts per entity type.
+def windowed_mention_counts(pages_stream: DataFrame) -> DataFrame:
+    """Watermarked `WINDOW` tumbling-window mention counts per entity type.
 
     The watermark caps aggregation state: windows older than
-    (max event time - watermark) are finalized and dropped, which is what
+    (max event time - `WATERMARK`) are finalized and dropped, which is what
     makes the aggregation safe on an unbounded page stream.
     """
     m = streaming_mentions(pages_stream)
     return (
-        m.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("win"), "entity_type")
+        m.withWatermark("warc_ts", WATERMARK)
+        .groupBy(F.window("warc_ts", WINDOW).alias("win"), "entity_type")
         .agg(F.count(F.lit(1)).alias("mention_count"))
         .select(
             F.col("win.start").alias("window_start"),

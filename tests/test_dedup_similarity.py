@@ -42,7 +42,7 @@ def test_word_shingles(spark):
 def test_minhash_finds_near_dups(spark):
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in minhash_candidate_pairs(_docs(spark), jaccard_threshold=0.5).collect()
+        for r in minhash_candidate_pairs(_docs(spark)).collect()
     }
     assert (1, 2) in pairs
     assert (1, 4) in pairs       # exact dup has jaccard 1.0
@@ -113,7 +113,7 @@ def test_simhash_near_pairs(spark):
 def test_ngram_jaccard_blocked(spark):
     out = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(_docs(spark), threshold=0.2).collect()
+        for r in ngram_jaccard_pairs(_docs(spark)).collect()
     }
     assert (1, 2) in out
     assert (1, 4) not in out             # different block ('a' vs 'b')
@@ -204,7 +204,7 @@ def test_ann_ivf_contains_bucket_topk(spark):
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     bf = ann_topk_bruteforce(e, 0, 10).collect()
-    ivf = ann_topk_ivf(e, 0, 10).collect()
+    ivf = ann_topk_ivf(e, 0).collect()
     assert len(ivf) == 10
     assert ivf[0]["score"] <= bf[0]["score"]
     ivf_ids = {r["vec_id"] for r in ivf}
@@ -275,8 +275,6 @@ def test_incremental_equals_restricted_full(spark):
     }
     assert inc == full
     assert len(inc) > 0
-    with pytest.raises(ValueError, match="hash_family"):
-        minhash_incremental_pairs(docs, "is_new", hash_family="xxhash")
 
 
 def test_incremental_boundary_batches(spark):

@@ -199,7 +199,7 @@ def test_build_triples_driver_vs_distributed_linking(spark, pages_df):
     from ocds_entity_extract_spark.plans.pipeline import build_triples
 
     frames = (
-        "triples", "mapping", "sameas_edges", "member_edges", "area_nodes",
+        "triples", "mapping", "member_edges", "area_nodes",
         "inst_regions", "contact_edges",
     )
 

@@ -130,6 +130,23 @@ def test_upsert_latest_wins(spark, tmp_path):
     }
 
 
+@pytest.mark.parametrize("partition_by", [None, ["part"]], ids=["unpartitioned", "partitioned"])
+def test_upsert_new_table_latest_wins(spark, tmp_path, partition_by):
+    """The first upsert, into a table that does not exist yet, keeps one
+    row per key (the latest), as every later upsert does."""
+    from ocds_entity_extract_spark.materialize import upsert_table
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    upd = spark.createDataFrame(
+        [("a", "p1", 1, "old"), ("a", "p1", 2, "new")],
+        "id string, part string, ver int, val string",
+    )
+    upsert_table(cat, "t", upd, ["id"], "ver", partition_by=partition_by)
+
+    got = [(r["id"], r["ver"], r["val"]) for r in cat.read("t").collect()]
+    assert got == [("a", 2, "new")]
+
+
 def test_upsert_moved_key_rewrites_old_partition(spark, tmp_path):
     """An update that moves key K to a different partition value must also
     rewrite K's OLD partition — otherwise the stale row survives there and

@@ -51,7 +51,7 @@ def test_streaming_counts_match_batch(spark, tmp_path):
 
     stream = stream_pages(spark, path, max_files_per_trigger=2)
     assert stream.isStreaming
-    counts = windowed_mention_counts(stream, window="1 hour", watermark="2 hours")
+    counts = windowed_mention_counts(stream)
     run_to_memory_available_now(counts, "stream_counts")
 
     got = {
