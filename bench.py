@@ -159,16 +159,16 @@ def main() -> None:
     emb.count()
     lsh_r, lsh2_r, ivf_r = [], [], []
     for qid in (0, 17, 33):
-        bf = {r["vec_id"] for r in ann_topk_bruteforce(emb, qid, 10).collect()}
+        bf = {r["vec_id"] for r in ann_topk_bruteforce(emb, qid).collect()}
         # DEFAULT path (cost-safe since round 5: radius scales with
         # n_planes — radius 1 at the bench's n_planes=4, ~31% candidate
         # fraction) is the headline recall; radius 2 kept as the
         # recall-vs-fraction diagnostic (~69% of the corpus at 4 planes)
-        lsh = {r["vec_id"] for r in ann_topk_lsh(emb, qid, 10, n_planes=4, dim=64).collect()}
+        lsh = {r["vec_id"] for r in ann_topk_lsh(emb, qid, n_planes=4, dim=64).collect()}
         lsh2 = {
             r["vec_id"]
             for r in ann_topk_lsh(
-                emb, qid, 10, n_planes=4, dim=64, probe_hamming=2
+                emb, qid, n_planes=4, dim=64, probe_hamming=2
             ).collect()
         }
         ivf = {r["vec_id"] for r in ann_topk_ivf(emb, qid).collect()}

@@ -120,33 +120,25 @@ def range_join_binned(
     left_ts: str,
     right_ts: str,
     window_seconds: int,
-    bin_seconds: int | None = None,
 ) -> DataFrame:
     """Equi-join rewrite of the interval join ``r.ts in [l.ts, l.ts + W)``
     for rows sharing ``key``.
 
     Spark has no range-join optimizer rule (a raw inequality join plans as
-    a nested loop), so the scalable formulation BINS time: each left row
-    lands in ``ceil(W/bin)+1`` coarse bins, each right row in one, the
-    join is a plain shuffled equi-join on (key, bin), and the exact range
-    predicate filters residuals afterward. Fan-out is the bin count —
-    bounded and chosen by the caller — not the pair count.
+    a nested loop), so the scalable formulation BINS time into W-second
+    bins: each left row lands in the two bins its window touches, each
+    right row in one, the join is a plain shuffled equi-join on
+    (key, bin), and the exact range predicate filters residuals afterward.
+    Fan-out is two per left row, not the pair count.
 
     Returns the joined rows (all left columns + right's ts/payload) for
     the caller to aggregate.
     """
-    bin_seconds = bin_seconds or window_seconds
-    n_bins = window_seconds // bin_seconds + 1
-    if n_bins > 16:
-        raise ValueError(
-            f"bin fan-out {n_bins} > 16; raise bin_seconds"
-        )
-
     # floor division (not double-divide + cast, which truncates toward
     # zero): pre-1970 timestamps are negative and must land in the
     # FLOOR bin or boundary-straddling pairs are silently dropped
     def _bin_of(ts_col):
-        return F.floor(ts_col / F.lit(bin_seconds)).cast("bigint")
+        return F.floor(ts_col / F.lit(window_seconds)).cast("bigint")
 
     l_binned = left.withColumn(
         "_bin",

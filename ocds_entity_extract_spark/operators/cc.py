@@ -35,6 +35,10 @@ from pyspark.sql import DataFrame, functions as F
 
 from ocds_entity_extract_spark.session import local_frame
 
+# star rounds before `connected_components` gives up (rounds grow about as
+# log2 of the longest path)
+MAX_ITER = 20
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     sym = edges.select("src", "dst").union(
@@ -117,7 +121,6 @@ def _cc_driver_side(edges: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 20,
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
     """(src, dst) undirected edges -> (entity_id, canonical_id) mapping.
@@ -132,8 +135,7 @@ def connected_components(
     alternating-star distributed loop runs. Pass ``small_graph_threshold=0``
     to force the distributed path. The loop runs until the edge set is a
     star forest (see the module docstring) and raises RuntimeError if
-    `max_iter` rounds do not reach one; rounds grow about as log2 of the
-    longest path.
+    `MAX_ITER` rounds do not reach one.
     """
     cur = (
         edges.select(
@@ -147,9 +149,9 @@ def connected_components(
         return _cc_driver_side(cur)
     rounds = 0
     while not _is_star_forest(cur):
-        if rounds == max_iter:
+        if rounds == MAX_ITER:
             raise RuntimeError(
-                f"connected_components: no star-forest fixpoint after {max_iter} rounds"
+                f"connected_components: no star-forest fixpoint after {MAX_ITER} rounds"
             )
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         rounds += 1

@@ -32,6 +32,8 @@ MAX_BUCKET = 64
 JACCARD_THRESHOLD = 0.5
 # n-gram Jaccard: documents are compared only inside one `source` block.
 BLOCK_COL, NGRAM_THRESHOLD = "source", 0.2
+# SimHash near-dups: at most MAX_HAMMING differing signature bits.
+MAX_HAMMING = 6
 
 
 def with_word_shingles(df: DataFrame) -> DataFrame:
@@ -308,10 +310,10 @@ def with_simhash(docs: DataFrame) -> DataFrame:
     return docs.withColumn("simhash", simhash64(F.col(TEXT_COL)))
 
 
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame) -> DataFrame:
     """SimHash near-dup join: block on 4 x 16-bit chunks (pigeonhole: any
-    pair within hamming distance <= 6 shares at least one exact chunk when
-    split into 4), verify hamming via bit_count(xor)."""
+    pair within hamming distance <= `MAX_HAMMING` shares at least one exact
+    chunk when split into 4), verify hamming via bit_count(xor)."""
     sh = with_simhash(docs).select(ID_COL, "simhash")
     chunks = sh.select(
         ID_COL,
@@ -345,7 +347,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
         pairs.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
         .select("id_a", "id_b", "hamming")
     )
 

@@ -30,11 +30,11 @@ from pyspark.sql import DataFrame, functions as F
 DEFAULT_SCALE = 1_000_000_000_000   # 1e12 micro-units
 DAMPING_NUM, DAMPING_DEN = 85, 100  # d = 0.85 as an exact ratio
 CHECKPOINT_EVERY = 2                # rounds between rank-lineage truncations
-ITERATIONS = 8                      # rounds the DuckDB twin unrolls
+ITERATIONS = 8                      # rounds, as the DuckDB twin unrolls
 
 
-def pagerank_fixed_point(edges: DataFrame, iterations: int = ITERATIONS) -> DataFrame:
-    """(src, dst) directed edges -> (node, rank_int) after `iterations`.
+def pagerank_fixed_point(edges: DataFrame) -> DataFrame:
+    """(src, dst) directed edges -> (node, rank_int) after `ITERATIONS`.
 
     With S = DEFAULT_SCALE: rank0 = S // N for every node appearing as src
     or dst; rank_{t+1}(v) = (15*S)//(100*N) + (85 * sum_{u->v} rank_t(u)//outdeg(u))//100
@@ -58,7 +58,7 @@ def pagerank_fixed_point(edges: DataFrame, iterations: int = ITERATIONS) -> Data
     e_deg = e.join(outdeg, "src").localCheckpoint(eager=False)
 
     ranks = nodes.withColumn("rank_int", F.lit(DEFAULT_SCALE // n_nodes).cast("bigint"))
-    for i in range(iterations):
+    for i in range(ITERATIONS):
         contribs = (
             e_deg.join(
                 ranks.withColumnRenamed("node", "src"), "src"
@@ -84,7 +84,7 @@ def pagerank_fixed_point(edges: DataFrame, iterations: int = ITERATIONS) -> Data
                 ).alias("rank_int"),
             )
         )
-        if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < iterations:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < ITERATIONS:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 

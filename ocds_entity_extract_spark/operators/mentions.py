@@ -6,9 +6,8 @@ a web page hands us raw text, so mentions are detected as capitalized name
 spans (persons, companies with legal suffixes, keyword-led institutions).
 
 Spans are extracted in one Arrow-batched pandas UDF (`detect_spans_fused`),
-which both the batch plan and the streaming jobs (`detect_mentions`) run;
-`detect_spans` is its JVM parity oracle over extracted text
-(`regexp_extract_all`). The regex is a single pattern valid under BOTH Java
+which the pipeline runs; `detect_spans` is its JVM parity oracle over
+extracted text (`regexp_extract_all`). The regex is a single pattern valid under BOTH Java
 and Python `re` semantics (only char classes / non-capturing groups / \\s),
 so the two paths and the datagen golden derivation can never drift
 (parity-tested).
@@ -202,7 +201,8 @@ def detect_spans_fused(pages: DataFrame) -> DataFrame:
 
 
 def surface_dim(spans: DataFrame) -> DataFrame:
-    """DISTINCT mention surfaces -> (surface, name_norm, entity_id).
+    """DISTINCT mention surfaces -> (surface, name_norm, entity_id); empty
+    slugs dropped.
 
     Dictionary-encoding of the normalization: surface forms are Zipf-
     distributed, so the distinct set is orders of magnitude smaller than
@@ -215,22 +215,8 @@ def surface_dim(spans: DataFrame) -> DataFrame:
     surfaces map-side, so no Python pre-dedup pass precedes it (SCALE.md
     "Surface dim" has the measurement that removed one).
     """
-    return _normalized(
-        spans.select(F.explode("mention_spans").alias("surface")).distinct()
-    )
-
-
-def _mention_rows(spans: DataFrame) -> DataFrame:
-    """spans -> one (url, warc_ts, domain, surface) row per mention."""
-    return spans.select(
-        "url", "warc_ts", "domain", F.explode("mention_spans").alias("surface")
-    )
-
-
-def _normalized(surfaces: DataFrame, *keep: str) -> DataFrame:
-    """`keep` + surface + (name_norm, entity_id); empty slugs dropped."""
+    surfaces = spans.select(F.explode("mention_spans").alias("surface")).distinct()
     return surfaces.select(
-        *keep,
         "surface",
         collapse_ws("surface").alias("name_norm"),
         simple_name("surface").alias("entity_id"),
@@ -257,7 +243,10 @@ def mentions_via_dim(
     plans/pipeline.build_triples counts the (cached) dim and passes the
     decision in (threshold `max_broadcast_surfaces`).
     """
-    return _mention_rows(spans).join(F.broadcast(dim) if broadcast else dim, "surface")
+    mentions = spans.select(
+        "url", "warc_ts", "domain", F.explode("mention_spans").alias("surface")
+    )
+    return mentions.join(F.broadcast(dim) if broadcast else dim, "surface")
 
 
 def canon_mention_rows(spans: DataFrame, surf2canon_bc) -> DataFrame:
@@ -511,13 +500,3 @@ def memberships_from_spans(spans: DataFrame) -> DataFrame:
         simple_name(F.regexp_extract("m", MEMBERSHIP_RE, 3)).alias("org_id"),
         "is_purchase",
     ).filter((F.col("person_id") != "") & (F.col("org_id") != ""))
-
-
-def detect_mentions(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html[, text]) -> one row per mention, normalized:
-    the batch plan's extractor (`detect_spans_fused`) with its mention
-    spans exploded. Narrow (no shuffle), so the streaming jobs run it per
-    micro-batch."""
-    return _normalized(
-        _mention_rows(detect_spans_fused(pages)), "url", "warc_ts", "domain"
-    )

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, functions as F
 # default, so any type not listed ranks as person.
 TYPE_RANK = {"institution": 3, "company": 2, "person": 1}
 RANK_TYPE = {r: t for t, r in TYPE_RANK.items()}
+# `merge_entities_salted` spreads each entity over SALT_BUCKETS reducers.
+SALT_BUCKETS = 16
 
 
 def _case(col, pairs, default) -> F.Column:
@@ -91,10 +93,10 @@ def merge_entities(mentions: DataFrame) -> DataFrame:
     ).drop("_names")
 
 
-def merge_entities_salted(mentions: DataFrame, salt_buckets: int = 16) -> DataFrame:
+def merge_entities_salted(mentions: DataFrame) -> DataFrame:
     """Two-level (salted) variant for HOT entity keys (north_rule skew path).
 
-    Level 1 groups on (id, salt) — spreads a hot entity over `salt_buckets`
+    Level 1 groups on (id, salt) — spreads a hot entity over `SALT_BUCKETS`
     reducers; level 2 merges the per-salt partials. Every aggregate used is
     decomposable (min_by/min/max/count/sum/set-union), so the two-level
     result is identical to the one-level result (tested).
@@ -107,7 +109,7 @@ def merge_entities_salted(mentions: DataFrame, salt_buckets: int = 16) -> DataFr
     first_order = F.struct(F.col("warc_ts"), F.col("url"), F.col("name_norm"))
     lvl1 = (
         mentions.withColumn("_rank", type_rank("entity_type"))
-        .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
+        .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS)))
         .groupBy("entity_id", "_salt")
         .agg(
             F.min_by("name_norm", first_order).alias("p_name"),

@@ -17,9 +17,10 @@ from ocds_entity_extract_spark.functions.vectors import cosine
 
 # The embedding tables the search operators read: (vec_id, embedding).
 ID_COL, VEC_COL = "vec_id", "embedding"
-# `ann_topk_ivf`: top IVF_K among the IVF_PROBES nearest of IVF_CENTROIDS
-# centroids.
-IVF_K, IVF_CENTROIDS, IVF_PROBES = 10, 16, 12
+# Every search returns the TOP_K nearest; `ann_topk_ivf` searches the
+# IVF_PROBES nearest of IVF_CENTROIDS centroids.
+TOP_K = 10
+IVF_CENTROIDS, IVF_PROBES = 16, 12
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
@@ -46,12 +47,11 @@ def with_lsh_bucket(df: DataFrame, dim: int = 64, n_planes: int = 8) -> DataFram
 def ann_topk_lsh(
     embeddings: DataFrame,
     query_vec_id: int,
-    k: int = 10,
     n_planes: int = 8,
     dim: int | None = None,
     probe_hamming: int | None = None,
 ) -> DataFrame:
-    """Top-k by cosine among vectors in the query's LSH bucket, plus (by
+    """Top-`TOP_K` by cosine among vectors in the query's LSH bucket, plus (by
     default) all hamming-1 neighbor buckets — multi-probe LSH recovers the
     recall a single-probe bucket loses when the query sits near a
     hyperplane, at the cost of n_planes extra (tiny) bucket scans.
@@ -107,11 +107,11 @@ def ann_topk_lsh(
         .join(F.broadcast(qrow), cond)
         .select(ID_COL, F.round(cosine(F.col(VEC_COL), F.col("qv")), 3).alias("score"))
         .orderBy(F.desc("score"), F.asc(ID_COL))
-        .limit(k)
+        .limit(TOP_K)
     )
 
 
-def ann_topk_bruteforce(embeddings: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
+def ann_topk_bruteforce(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
     qv = embeddings.filter(F.col(ID_COL) == query_vec_id).select(
         F.col(VEC_COL).alias("qv")
     )
@@ -120,14 +120,14 @@ def ann_topk_bruteforce(embeddings: DataFrame, query_vec_id: int, k: int = 10) -
         .crossJoin(F.broadcast(qv))
         .select(ID_COL, F.round(cosine(F.col(VEC_COL), F.col("qv")), 3).alias("score"))
         .orderBy(F.desc("score"), F.asc(ID_COL))
-        .limit(k)
+        .limit(TOP_K)
     )
 
 
 def ann_topk_ivf(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
     """IVF-style ANN: coarse quantization into `IVF_CENTROIDS` centroid
     buckets, probe the `IVF_PROBES` centroids nearest the query, exact
-    top-`IVF_K` inside them.
+    top-`TOP_K` inside them.
 
     Centroids are a deterministic sample (vec_id 1..IVF_CENTROIDS — a real
     deployment k-means-trains them; sampling keeps the operator fully
@@ -180,5 +180,5 @@ def ann_topk_ivf(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
             ID_COL, F.round(cosine(F.col(VEC_COL), F.col("qv")), 3).alias("score")
         )
         .orderBy(F.desc("score"), F.asc(ID_COL))
-        .limit(IVF_K)
+        .limit(TOP_K)
     )

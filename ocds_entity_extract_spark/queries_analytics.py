@@ -652,6 +652,36 @@ def q_value_percentiles_approx(spark, sf_dir):
 # Structured Streaming under the value-hash gate
 # =====================================================================
 
+def _drained_stream(spark, sf_dir, table, schema, build, sink, output_mode):
+    """Stream `table` through `build` into the memory sink `sink`, drained
+    with trigger(availableNow), and return the sink's table. File-stream
+    sources require a DIRECTORY, so the single-file test table is exposed
+    through a symlinked temp dir (a real deployment streams a
+    directory/Kafka topic anyway)."""
+    import hashlib
+    import pathlib
+
+    src = pathlib.Path(sf_dir) / f"{table}.parquet"
+    key = hashlib.md5(str(src).encode()).hexdigest()[:10]
+    d = pathlib.Path(f"/tmp/sg_stream_{key}/{table}")
+    d.mkdir(parents=True, exist_ok=True)
+    link = d / src.name
+    if not link.is_symlink():
+        link.symlink_to(src)
+
+    name = f"{sink}_{key}"
+    q = (
+        build(spark.readStream.schema(schema).parquet(str(d)))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    return spark.table(name)
+
+
 @query(
     "streaming_hourly_counts",
     f"""
@@ -668,40 +698,17 @@ def q_streaming_hourly_counts(spark, sf_dir):
 
     The watermark bounds aggregation state for unbounded streams; with an
     availableNow drain over a bounded source it never discards data, so
-    the result must equal the batch GROUP BY. File-stream sources require
-    a DIRECTORY, so the single-file test table is exposed through a
-    symlinked temp dir (a real deployment streams a directory/Kafka topic
-    anyway)."""
-    import hashlib
-    import pathlib
-
-    src = pathlib.Path(sf_dir) / "events.parquet"
-    key = hashlib.md5(str(src).encode()).hexdigest()[:10]
-    d = pathlib.Path(f"/tmp/sg_stream_{key}/events")
-    d.mkdir(parents=True, exist_ok=True)
-    link = d / "events.parquet"
-    if not link.is_symlink():
-        link.symlink_to(src)
-
-    stream = spark.readStream.schema(
+    the result must equal the batch GROUP BY."""
+    agg = _drained_stream(
+        spark, sf_dir, "events",
         "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double, props string"
-    ).parquet(str(d))
-    agg = (
-        stream.withWatermark("ts", "2 hours")
+        " event_type string, value double, props string",
+        lambda stream: stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+        "q_stream_hourly", "complete",
     )
-    sink = f"q_stream_hourly_{key}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(sink).select(
+    return agg.select(
         F.date_format("w.start", TS_FMT_SPARK).alias("hour_ts"),
         "event_type",
         "n",
@@ -724,33 +731,14 @@ def q_streaming_dedup_exact(spark, sf_dir):
     is O(distinct contents), and on an unbounded deployment a watermark on
     the arrival time bounds it further (bounded drain here, so none is
     needed — nothing is ever late)."""
-    import hashlib
-    import pathlib
-
-    src = pathlib.Path(sf_dir) / "documents.parquet"
-    key = hashlib.md5(str(src).encode()).hexdigest()[:10]
-    d = pathlib.Path(f"/tmp/sg_stream_{key}/documents")
-    d.mkdir(parents=True, exist_ok=True)
-    link = d / "documents.parquet"
-    if not link.is_symlink():
-        link.symlink_to(src)
-
-    stream = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(str(d))
-    deduped = stream.select(
-        "lang", F.md5(F.col("text").cast("binary")).alias("content_md5")
-    ).dropDuplicates(["lang", "content_md5"])
-    sink = f"q_stream_dedup_{key}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drained_stream(
+        spark, sf_dir, "documents",
+        "doc_id long, text string, lang string, source string, n_chars long",
+        lambda stream: stream.select(
+            "lang", F.md5(F.col("text").cast("binary")).alias("content_md5")
+        ).dropDuplicates(["lang", "content_md5"]),
+        "q_stream_dedup", "append",
     )
-    q.awaitTermination(300)
-    return spark.table(sink)
 
 
 # =====================================================================

@@ -572,10 +572,12 @@ def q_simhash_docs(spark, sf_dir):
     return with_simhash(d).select("doc_id", "simhash")
 
 
-def _simhash_pairs_oracle_sql(max_hamming: int = 6) -> str:
+def _simhash_pairs_oracle_sql() -> str:
     """DuckDB twin of operators/dedup.simhash_near_pairs: 4 x 16-bit chunk
     blocking (pigeonhole) + hamming verification via bit_count(xor) —
     identical arithmetic-shift/mask/bit_count semantics on signed longs."""
+    from ocds_entity_extract_spark.operators.dedup import MAX_HAMMING
+
     return f"""
     WITH {_simhash_cte()},
       chunks AS (
@@ -590,7 +592,7 @@ def _simhash_pairs_oracle_sql(max_hamming: int = 6) -> str:
           ON a.chunk_id = b.chunk_id AND a.chunk = b.chunk AND a.doc_id < b.doc_id
       )
     SELECT id_a, id_b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-    FROM pairs WHERE bit_count(xor(sa, sb)) <= {max_hamming}
+    FROM pairs WHERE bit_count(xor(sa, sb)) <= {MAX_HAMMING}
     """
 
 
@@ -775,7 +777,7 @@ def q_ann_topk_lsh(spark, sf_dir):
     from ocds_entity_extract_spark.operators.similarity import ann_topk_lsh
 
     e = _t(spark, sf_dir, "embeddings")
-    return ann_topk_lsh(e, query_vec_id=0, k=10, n_planes=4, dim=EMBEDDING_DIM)
+    return ann_topk_lsh(e, query_vec_id=0, n_planes=4, dim=EMBEDDING_DIM)
 
 
 def _ann_ivf_oracle_sql() -> str:
@@ -785,8 +787,8 @@ def _ann_ivf_oracle_sql() -> str:
     tie-breaking."""
     from ocds_entity_extract_spark.operators.similarity import (
         IVF_CENTROIDS,
-        IVF_K,
         IVF_PROBES,
+        TOP_K,
     )
 
     return f"""
@@ -819,7 +821,7 @@ def _ann_ivf_oracle_sql() -> str:
     FROM asg a JOIN probes USING (cid) CROSS JOIN q
     WHERE a.vec_id != 0
     ORDER BY score DESC, a.vec_id
-    LIMIT {IVF_K}
+    LIMIT {TOP_K}
     """
 
 
@@ -1044,9 +1046,7 @@ def q_dataset_split(spark, sf_dir):
 def q_events_sessionize(spark, sf_dir):
     """Gap-based sessionization (30-min inactivity splits a session): the
     lag-flag + running-sum window idiom — per-user shuffle once, both
-    windows and the final per-session aggregation reuse that partitioning.
-    The batch twin of the stateful-streaming profile operator
-    (streaming/stateful.py)."""
+    windows and the final per-session aggregation reuse that partitioning."""
     from pyspark.sql.window import Window
 
     e = _t(spark, sf_dir, "events")

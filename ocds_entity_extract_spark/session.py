@@ -324,32 +324,34 @@ def _finished_archive(path: str) -> bool:
 def _sweep_archives(home: str, key: str, published: str | None) -> str | None:
     """Delete dead writers' dumps, then either this key's unsafe archives
     (returning its newest finished one) or, once `published` is, every
-    other archive."""
-    found = []
+    other archive but the newest of another key, so two sessions with
+    different JVM options that share a temp dir keep one archive each."""
+    found, others, drop = [], [], []
     for e in os.scandir(home):
         if e.name.endswith(".part"):
-            drop = not _writer_alive(e.name)
-        elif not e.name.endswith(".jsa"):
+            if not _writer_alive(e.name):
+                drop.append(e.path)
+        elif not e.name.endswith(".jsa") or e.path == published:
             continue
-        elif published:
-            drop = e.path != published
-        elif e.name.startswith(key + "."):
-            drop = not _finished_archive(e.path)
-            if not drop:
-                found.append((e.stat().st_mtime_ns, e.path))
+        elif not e.name.startswith(key + "."):
+            if published:
+                others.append((e.stat().st_mtime_ns, e.path))
+        elif published or not _finished_archive(e.path):
+            drop.append(e.path)
         else:
-            continue
-        if drop:
-            try:
-                os.unlink(e.path)
-            except OSError:
-                pass
+            found.append((e.stat().st_mtime_ns, e.path))
+    drop += [path for _, path in sorted(others)[:-1]]
+    for path in drop:
+        try:
+            os.unlink(path)
+        except OSError:
+            pass
     return max(found)[1] if found else None
 
 
 def _publish_archive(proc: subprocess.Popen, writer: str) -> None:
     """At interpreter exit: let the driver JVM finish its dump, publish it as
-    `<key>.<size>.jsa` and delete the engine's other archives."""
+    `<key>.<size>.jsa` and delete the engine's older archives."""
     if proc.poll() is None:
         if not proc.stdin.closed:
             proc.stdin.close()  # the driver JVM exits when its stdin closes

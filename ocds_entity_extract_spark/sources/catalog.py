@@ -11,18 +11,15 @@ HONESTY LEDGER — which emulation pieces the real Iceberg replaces
 outright (they lean on the parquet DIRECTORY layout and exist only
 because plain parquet has no table metadata or snapshots):
 
-- `materialize.upsert_table` (read + latest-wins + dynamic overwrite +
-  explicit drained-directory delete + localCheckpoint-as-isolation)
-  -> `MERGE INTO t USING u ON keys ...` — one transactional statement;
-  the moved-key probe, the drained-partition rmtree and the
-  `_delete_partition_dirs` Hive-unescape walk all disappear (Iceberg
-  tracks files in metadata, never lists directories, and commits
-  snapshots atomically, so there is no read-your-own-overwrite hazard).
-- `materialize.compact_table` -> `CALL system.rewrite_data_files` —
-  snapshot-isolated, no localCheckpoint, no glob-based sizing.
 - `overwrite_partitions` (partitionOverwriteMode=dynamic)
   -> `writeTo(t).overwritePartitions()` — same semantics, transactional.
 - `exists` (directory probe) -> catalog metadata lookup.
+
+Not emulated, because no program calls them: `MERGE INTO` upserts and
+`CALL system.rewrite_data_files` compaction. Over plain parquet both need
+a read-back, a latest-wins rewrite, directory deletes for drained
+partitions and a checkpoint standing in for snapshot isolation; Iceberg
+does each in one transactional statement.
 
 What does NOT change with the swap: every plan in plans/ and operators/
 (they only consume DataFrames), the lineage/metrics rows, the content-hash
@@ -63,13 +60,8 @@ class Catalog:
             w = w.partitionBy(*partition_by)
         w.save(self.path(table))
 
-    def append(
-        self, table: str, df: DataFrame, partition_by: list[str] | None = None
-    ) -> None:
-        w = df.write.mode("append").format(self.fmt)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(self.path(table))
+    def append(self, table: str, df: DataFrame) -> None:
+        df.write.mode("append").format(self.fmt).save(self.path(table))
 
     def overwrite_partitions(
         self, table: str, df: DataFrame, partition_by: list[str]

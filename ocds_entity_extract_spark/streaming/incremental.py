@@ -7,7 +7,7 @@ restarts. This is the Iceberg incremental-read pattern (snapshot-id
 watermarks) emulated over parquet:
 
 - input is chunked by a deterministic partition key
-  (`chunk = pmod(xxhash64(url), n_chunks)` — at cluster scale: the Iceberg
+  (`chunk = pmod(xxhash64(url), N_CHUNKS)` — at cluster scale: the Iceberg
   partition/snapshot id);
 - a `checkpoints` table records (run_scope, chunk, committed_ts);
 - resume = anti-join pages against committed chunks, process the rest,
@@ -29,10 +29,11 @@ from ocds_entity_extract_spark.session import local_frame
 from ocds_entity_extract_spark.sources.catalog import Catalog
 
 CHECKPOINT_TABLE = "checkpoints"
+N_CHUNKS = 64
 
 
-def with_chunk(pages: DataFrame, n_chunks: int = 64) -> DataFrame:
-    return pages.withColumn("chunk", F.pmod(F.xxhash64("url"), F.lit(n_chunks)))
+def with_chunk(pages: DataFrame) -> DataFrame:
+    return pages.withColumn("chunk", F.pmod(F.xxhash64("url"), F.lit(N_CHUNKS)))
 
 
 def committed_chunks(cat: Catalog, scope: str) -> DataFrame:
@@ -46,9 +47,9 @@ def committed_chunks(cat: Catalog, scope: str) -> DataFrame:
     )
 
 
-def pending_pages(cat: Catalog, pages: DataFrame, scope: str, n_chunks: int = 64) -> DataFrame:
+def pending_pages(cat: Catalog, pages: DataFrame, scope: str) -> DataFrame:
     """Pages whose chunk has no committed watermark (anti-join resume)."""
-    chunked = with_chunk(pages, n_chunks)
+    chunked = with_chunk(pages)
     done = committed_chunks(cat, scope)
     return chunked.join(done, "chunk", "left_anti")
 
@@ -63,20 +64,17 @@ def commit_chunks(cat: Catalog, scope: str, chunks: list[int]) -> None:
     cat.append(CHECKPOINT_TABLE, df)
 
 
-def run_incremental(
-    cat: Catalog,
-    pages: DataFrame,
-    scope: str,
-    process_fn,
-    n_chunks: int = 64,
-) -> int:
+def run_incremental(cat: Catalog, pages: DataFrame, scope: str, process_fn) -> int:
     """Process only pending chunks into `triples_incremental`; returns
     number of chunks committed.
 
     `process_fn(pages_subset) -> DataFrame(subj, pred, obj, chunk)` — the
     chunk column rides along so the write is partition-idempotent.
+
+    The driver collects the distinct pending chunk ids, which are at most
+    `N_CHUNKS` rows whatever the corpus size.
     """
-    pending = pending_pages(cat, pages, scope, n_chunks)
+    pending = pending_pages(cat, pages, scope)
     todo = [r["chunk"] for r in pending.select("chunk").distinct().collect()]
     if not todo:
         return 0

@@ -104,7 +104,7 @@ def test_simhash_properties(spark):
 
 def test_simhash_near_pairs(spark):
     pairs = {
-        (r["id_a"], r["id_b"]) for r in simhash_near_pairs(_docs(spark), max_hamming=12).collect()
+        (r["id_a"], r["id_b"]) for r in simhash_near_pairs(_docs(spark)).collect()
     }
     assert (1, 4) in pairs
     assert (1, 2) in pairs
@@ -136,9 +136,9 @@ def _vecs(spark):
 
 
 def test_bruteforce_topk_order(spark):
-    rows = ann_topk_bruteforce(_vecs(spark), query_vec_id=0, k=3).collect()
-    assert [r["vec_id"] for r in rows] == [3, 1, 2]
-    assert rows[0]["score"] >= rows[1]["score"] >= rows[2]["score"]
+    rows = ann_topk_bruteforce(_vecs(spark), query_vec_id=0).collect()
+    assert [r["vec_id"] for r in rows] == [3, 1, 2, 4]
+    assert rows[0]["score"] >= rows[1]["score"] >= rows[2]["score"] >= rows[3]["score"]
 
 
 def test_lsh_bucket_deterministic(spark):
@@ -148,7 +148,7 @@ def test_lsh_bucket_deterministic(spark):
 
 
 def test_lsh_topk_subset_of_bucket(spark):
-    rows = ann_topk_lsh(_vecs(spark), query_vec_id=0, k=3, n_planes=2).collect()
+    rows = ann_topk_lsh(_vecs(spark), query_vec_id=0, n_planes=2).collect()
     got = [r["vec_id"] for r in rows]
     # close vectors share the query's hyperplane signs; opposite vector must not
     assert 4 not in got
@@ -203,7 +203,7 @@ def test_ann_ivf_contains_bucket_topk(spark):
     )
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bf = ann_topk_bruteforce(e, 0, 10).collect()
+    bf = ann_topk_bruteforce(e, 0).collect()
     ivf = ann_topk_ivf(e, 0).collect()
     assert len(ivf) == 10
     assert ivf[0]["score"] <= bf[0]["score"]

@@ -23,13 +23,13 @@ def _star_edges(spark):
 def test_hub_outranks_spokes(spark):
     ranks = {
         r["node"]: r["rank_int"]
-        for r in pagerank_fixed_point(_star_edges(spark), iterations=6).collect()
+        for r in pagerank_fixed_point(_star_edges(spark)).collect()
     }
     assert ranks["h"] > ranks["a"] == ranks["b"] == ranks["c"]
 
 
 def test_rank_mass_conserved_within_rounding(spark):
-    ranks = pagerank_fixed_point(_star_edges(spark), iterations=6).collect()
+    ranks = pagerank_fixed_point(_star_edges(spark)).collect()
     total = sum(r["rank_int"] for r in ranks)
     # integer floors lose < 1 unit per node per division; teleport exact
     assert 0.999 * DEFAULT_SCALE < total <= DEFAULT_SCALE
@@ -39,11 +39,11 @@ def test_partitioning_invariance(spark):
     e = _star_edges(spark)
     a = {
         r["node"]: r["rank_int"]
-        for r in pagerank_fixed_point(e, iterations=5).collect()
+        for r in pagerank_fixed_point(e).collect()
     }
     b = {
         r["node"]: r["rank_int"]
-        for r in pagerank_fixed_point(e.repartition(7), iterations=5).collect()
+        for r in pagerank_fixed_point(e.repartition(7)).collect()
     }
     assert a == b
 

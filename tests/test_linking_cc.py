@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ocds_entity_extract_spark.operators import cc as cc_module
 from ocds_entity_extract_spark.operators.cc import (
     canonical_mapping,
     connected_components,
@@ -91,7 +92,7 @@ def test_connected_components_basic(spark):
     assert cc["x"] == "x" and cc["y"] == "x"
 
 
-def test_connected_components_chain_and_star(spark):
+def test_connected_components_chain_and_star(spark, monkeypatch):
     # long chain exercises multi-round convergence
     chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(15)]
     edges = spark.createDataFrame(chain, "src string, dst string")
@@ -102,8 +103,9 @@ def test_connected_components_chain_and_star(spark):
     assert len(cc) == 16
     # the distributed loop needs more than 2 rounds here: running out of
     # rounds must fail loudly, not map from a non-converged edge set
+    monkeypatch.setattr(cc_module, "MAX_ITER", 2)
     with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(edges, small_graph_threshold=0, max_iter=2)
+        connected_components(edges, small_graph_threshold=0)
 
 
 def test_cc_driver_vs_distributed_parity(spark):

@@ -4,11 +4,14 @@ references."""
 
 from __future__ import annotations
 
+from ocds_entity_extract_spark.functions.classify import with_entity_type
 from ocds_entity_extract_spark.functions.html import with_extracted_text
 from ocds_entity_extract_spark.operators.mentions import (
-    detect_mentions,
     detect_spans,
+    detect_spans_fused,
     memberships_from_spans,
+    mentions_via_dim,
+    surface_dim,
 )
 
 
@@ -18,9 +21,11 @@ def _collect_set(df):
 
 def test_detects_embedded_entities(spark, pages_df, small_corpus):
     _, _, aux = small_corpus
-    found_ids = {
-        r["entity_id"] for r in detect_mentions(pages_df).select("entity_id").distinct().collect()
-    }
+    # the mention rows build_triples merges: fused spans probed against the
+    # classified surface dim
+    spans = detect_spans_fused(pages_df)
+    mentions = mentions_via_dim(spans, with_entity_type(surface_dim(spans)))
+    found_ids = {r["entity_id"] for r in mentions.select("entity_id").distinct().collect()}
     from ocds_entity_extract_spark.datagen import simple_name_py
 
     # every entity surface that datagen embedded must be detectable

@@ -56,7 +56,7 @@ def test_order_independence(spark):
 
 def test_salted_equals_unsalted(spark):
     plain = merge_entities(_df(spark, ROWS)).collect()
-    salted = merge_entities_salted(_df(spark, ROWS), salt_buckets=4).collect()
+    salted = merge_entities_salted(_df(spark, ROWS)).collect()
     key = lambda r: r["entity_id"]  # noqa: E731
     assert sorted([r.asDict() for r in plain], key=lambda d: d["entity_id"]) == sorted(
         [r.asDict() for r in salted], key=lambda d: d["entity_id"]

@@ -1,16 +1,22 @@
-"""Every optional parameter of the engine is set by some caller.
+"""Every optional parameter of the engine is set by a program, and every
+public function of the engine is used by one.
 
 An *option* is a parameter with a default on a module-level function or a
 class method in ``ocds_entity_extract_spark/**/*.py`` (the query registries
-``queries*.py`` and ``datagen.py`` aside). It counts as *set* when any call
-in the repo's ``.py`` files passes it, by keyword or by position, a value
-that is not provably its default, or may pass it through ``*args`` or
-``**kwargs``. A passed value is provably the default when both are literals
-(``ast.literal_eval``) of one type and equal; a bare name that is a
-module-level literal constant of the caller's or the callee's module is
-compared as its literal. An option that no call sets has one value in use,
-so it belongs in the body as a constant; this test keeps that rule from
-eroding.
+``queries*.py`` and ``datagen.py`` aside). It counts as *set* when a call in
+a non-test ``.py`` file of the repo (the package, the CLI, ``bench/``,
+``perfbench/``, ``tools/``, the driver entry) passes it, by keyword or by
+position, a value that is not provably its default, or may pass it through
+``*args`` or ``**kwargs``. A call through a ``from m import f as g`` alias
+counts as a call of ``f``. A passed value is provably the default when both
+are literals (``ast.literal_eval``) of one type and equal; a bare name that
+is a module-level literal constant of the caller's or the callee's module is
+compared as its literal. An option that only tests set has one value in
+use, so it belongs in the body as a constant.
+
+Likewise every public module-level function and class of those package
+modules is referenced by name from a non-test file; one that only tests
+reach is deleted, or allowlisted below with its reason.
 """
 from __future__ import annotations
 
@@ -19,10 +25,21 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "ocds_entity_extract_spark"
+TESTS = ROOT / "tests"
 SKIP_DIRS = {"spark-warehouse", ".work", "__pycache__", ".git"}
 
 # The Iceberg table-format seam (sources/catalog.py) is a deployment setting.
 ALLOWED_UNSET = {"Catalog.__init__(fmt)"}
+
+# Public package names that only tests reference, each with its reason.
+ALLOWED_UNREFERENCED = {
+    # reference oracles the tests compare the production paths against
+    "detect_spans": "JVM regex oracle of detect_spans_fused",
+    "with_extracted_text": "JVM text oracle of the fused span UDF",
+    "extract_text_bytes_parser": "byte-level oracle of extract_text",
+    # the north rule's resumable-batch path (ROADMAP open item 6)
+    "run_incremental": "resumable chunked batch over the catalog",
+}
 
 _UNKNOWN = object()
 
@@ -31,6 +48,16 @@ def _py_files(root):
     for p in sorted(root.rglob("*.py")):
         if not SKIP_DIRS.intersection(p.relative_to(root).parts):
             yield p
+
+
+def _program_files():
+    """Every `.py` file of the repo outside `tests/`."""
+    return [p for p in _py_files(ROOT) if TESTS not in p.parents]
+
+
+def _package_modules():
+    return [p for p in _py_files(PKG)
+            if not (p.name.startswith("queries") or p.name == "datagen.py")]
 
 
 def _literal(node):
@@ -73,9 +100,7 @@ def _same(a, b):
 def _options():
     """(qualified name, short name, module constants, [(param, positional index or None, default)])."""
     out = []
-    for path in _py_files(PKG):
-        if path.name.startswith("queries") or path.name == "datagen.py":
-            continue
+    for path in _package_modules():
         tree = ast.parse(path.read_text())
         consts = _constants(tree)
         for node in tree.body:
@@ -99,21 +124,28 @@ def _options():
     return out
 
 
-def _calls():
-    """short callee name -> list of (caller constants, positional args, keywords, has **kwargs, has *args)."""
+def _calls(paths):
+    """short callee name -> list of (caller constants, positional args, keywords, has **kwargs, has *args).
+
+    A bare-name call through a `from m import f as g` alias is filed under `f`."""
     calls = {}
-    for path in _py_files(ROOT):
+    for path in paths:
         try:
             tree = ast.parse(path.read_text())
         except SyntaxError:
             continue
         consts = _constants(tree)
+        aliases = {a.asname: a.name for node in ast.walk(tree) if isinstance(node, ast.ImportFrom)
+                   for a in node.names if a.asname}
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
             f = node.func
-            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-            if name is None:
+            if isinstance(f, ast.Attribute):
+                name = f.attr
+            elif isinstance(f, ast.Name):
+                name = aliases.get(f.id, f.id)
+            else:
                 continue
             calls.setdefault(name, []).append((
                 consts,
@@ -139,7 +171,7 @@ def _sets(call, callee_consts, param, idx, default):
 
 
 def _never_set():
-    calls = _calls()
+    calls = _calls(_program_files())
     unset = set()
     n = 0
     for qual, short, consts, opts in _options():
@@ -150,6 +182,41 @@ def _never_set():
     return n, unset
 
 
+def _unreferenced():
+    """Public module-level functions and classes of the package modules that
+    no non-test file names (by a load, an attribute or an import)."""
+    names = set()
+    for path in _program_files():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                names.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                names.update(a.name for a in node.names)
+    public = set()
+    for path in _package_modules():
+        public.update(node.name for node in ast.parse(path.read_text()).body
+                      if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                      and not node.name.startswith("_"))
+    return public - names
+
+
 def test_every_option_is_set_by_a_caller():
     n, unset = _never_set()
-    assert unset == ALLOWED_UNSET, (n, sorted(unset - ALLOWED_UNSET))
+    assert unset == ALLOWED_UNSET, (n, sorted(unset ^ ALLOWED_UNSET))
+
+
+def test_every_public_function_is_used_by_a_program():
+    unused = _unreferenced()
+    assert unused == set(ALLOWED_UNREFERENCED), sorted(unused ^ set(ALLOWED_UNREFERENCED))
+
+
+def test_aliased_call_counts_as_its_target(tmp_path):
+    mod = tmp_path / "caller.py"
+    mod.write_text("from pkg.cli import main as cli_main\n\ncli_main(['--out', 'x'])\n")
+    calls = _calls([mod])
+    assert "cli_main" not in calls
+    (consts, args, kws, star_kw, star), = calls["main"]
+    assert [ast.literal_eval(a) for a in args] == [["--out", "x"]]
+    assert not (kws or star_kw or star)

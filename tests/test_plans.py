@@ -47,11 +47,22 @@ def test_broadcast_join_in_dim_query(spark, sf_dir):
 
 
 def test_mentions_stage_is_narrow(spark, pages_df):
-    """pages -> mentions is shuffle-free (no Exchange in the plan)."""
-    from ocds_entity_extract_spark.operators.mentions import detect_mentions
+    """pages -> mentions is shuffle-free: the span extraction has no
+    Exchange, and the mention probe adds none to the surface dim's
+    distinct, which it broadcasts."""
+    from ocds_entity_extract_spark.functions.classify import with_entity_type
+    from ocds_entity_extract_spark.operators.mentions import (
+        detect_spans_fused,
+        mentions_via_dim,
+        surface_dim,
+    )
 
-    plan = plan_of(detect_mentions(pages_df))
-    assert "Exchange" not in plan
+    spans = detect_spans_fused(pages_df)
+    dim = with_entity_type(surface_dim(spans))
+    assert "Exchange" not in plan_of(spans)
+    probe = plan_of(mentions_via_dim(spans, dim))
+    assert "BroadcastHashJoin" in probe
+    assert probe.count("+- Exchange") == plan_of(dim).count("+- Exchange")
 
 
 def test_classifier_override_broadcasts(spark, pages_df, small_corpus):
@@ -59,7 +70,10 @@ def test_classifier_override_broadcasts(spark, pages_df, small_corpus):
         load_classifier_override,
         with_entity_type,
     )
-    from ocds_entity_extract_spark.operators.mentions import detect_mentions
+    from ocds_entity_extract_spark.operators.mentions import (
+        detect_spans_fused,
+        surface_dim,
+    )
     from ocds_entity_extract_spark.schemas import CLASSIFIER_SCHEMA
 
     _, _, aux = small_corpus
@@ -67,7 +81,7 @@ def test_classifier_override_broadcasts(spark, pages_df, small_corpus):
         spark, spark.createDataFrame(aux["classifier_override"], CLASSIFIER_SCHEMA)
     )
     plan = plan_of(
-        with_entity_type(detect_mentions(pages_df), override)
+        with_entity_type(surface_dim(detect_spans_fused(pages_df)), override)
     )
     assert "BroadcastHashJoin" in plan
 

@@ -10,6 +10,7 @@ everywhere else Spark keeps its own.
 
 from __future__ import annotations
 
+import itertools
 import os
 import pathlib
 import shutil
@@ -357,25 +358,41 @@ def test_sessions_starting_together_never_share_a_dump(tmp_path):
 
 
 def test_publishing_an_archive_deletes_other_keys_and_dead_dumps(tmp_path):
+    """Publishing keeps the new archive and the newest one of another key,
+    so two sessions with different JVM options that share a temp dir stop
+    evicting each other; older keys' archives and dead writers' dumps go."""
     spark_home, env, conf = _fake_install(tmp_path)
-    launch = _launch(tmp_path, spark_home, env, conf)
     home = tmp_path / "tmp" / _ARCHIVE_DIR
+    exited = types.SimpleNamespace(poll=lambda: 0, returncode=0)
+    mtimes = itertools.count(time.time_ns(), 10**9)
+
+    def env_with(stack):
+        return {**env, "JAVA_TOOL_OPTIONS": f"-Xss{stack}"}
+
+    def publish(stack):
+        launch = _launch(tmp_path, spark_home, env_with(stack), conf)
+        pathlib.Path(launch.writer).write_bytes(_ARCHIVE_MAGIC + b"\1" * 4092)
+        t = next(mtimes)
+        os.utime(launch.writer, ns=(t, t))
+        _publish_archive(exited, launch.writer)
+        return f"{_key_of(launch)}.4096.jsa"
+
+    a = publish("1m")
     dead = subprocess.Popen(["true"])
     dead.wait()
-    (home / f"{'a' * 20}.4096.jsa").write_bytes(_ARCHIVE_MAGIC + bytes(4092))
     (home / f"{'b' * 20}.{dead.pid}.1.part").write_bytes(bytes(4096))
-    (home / f"{'c' * 20}.{os.getpid()}.1.part").write_bytes(bytes(4096))
-    exited = types.SimpleNamespace(poll=lambda: 0, returncode=0)
-    pathlib.Path(launch.writer).write_bytes(_ARCHIVE_MAGIC + b"\1" * 4092)
-    _publish_archive(exited, launch.writer)
-    key = _key_of(launch)
-    assert sorted(p.name for p in home.iterdir()) == sorted(
-        ["conf", f"{key}.4096.jsa", f"{'c' * 20}.{os.getpid()}.1.part"]
-    )
-    assert f"{key}.4096.jsa" in _launch(tmp_path, spark_home, env, conf).java_options
+    live = f"{'c' * 20}.{os.getpid()}.1.part"
+    (home / live).write_bytes(bytes(4096))
+    b = publish("2m")
+    assert sorted(p.name for p in home.iterdir()) == sorted(["conf", a, b, live])
+    assert a in _launch(tmp_path, spark_home, env_with("1m"), conf).java_options
+    assert b in _launch(tmp_path, spark_home, env_with("2m"), conf).java_options
 
-    cut_short = _launch(tmp_path, spark_home, {**env, "JAVA_TOOL_OPTIONS": "-Xss4m"}, conf)
+    c = publish("4m")
+    assert sorted(p.name for p in home.iterdir()) == sorted(["conf", b, c, live])
+
+    cut_short = _launch(tmp_path, spark_home, env_with("8m"), conf)
     pathlib.Path(cut_short.writer).write_bytes(bytes(4096))
     _publish_archive(exited, cut_short.writer)
     assert not pathlib.Path(cut_short.writer).exists()
-    assert (home / f"{key}.4096.jsa").exists()
+    assert (home / b).exists() and (home / c).exists()
