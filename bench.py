@@ -51,40 +51,6 @@ HEADLINE = [
 
 KG_PAGES = int(os.environ.get("SPARK_GRAFT_KG_PAGES", "60000"))
 
-# best recorded per-query median across rounds 3 AND 4 (BENCH_r03/r04) —
-# regression checks compare against the best-known, not just last round,
-# so a slide can never hide behind an older, slower baseline
-_BEST = {
-    "pricing_summary": 0.475, "orders_lineitem_join": 0.704,
-    "dim_broadcast_join": 0.454, "exists_semi_join": 0.4,
-    "first_order_window": 0.391, "salted_group_agg": 0.222,
-    "supplier_date_range": 0.213, "dedup_exact": 0.185,
-    "dedup_minhash_docs": 2.513, "dedup_minhash_docs_fast": 1.851,
-    "simhash_docs": 0.129,
-    "ann_topk_bruteforce": 0.39, "ann_topk_lsh": 0.759,
-    "ann_topk_ivf": 1.051, "token_stats_total": 0.126,
-    "doc_fingerprints": 0.112,
-    "dedup_clusters": 4.14, "kg_merged_entities": 1.559,
-    "kg_merged_entities_salted": 1.511,
-    "kg_pipeline_triples": 1.827, "kg_pipeline_products": 1.203,
-    "events_sessionize": 0.551, "asof_join_events": 0.305,
-    "corpus_curation": 0.541, "kg_pipeline": 3.296,
-    "url_dedup_canonical": 0.403,
-}
-
-
-def _regressions(timings: dict[str, float], factor: float = 1.2) -> dict:
-    """Queries whose median moved > `factor`x vs the best recorded round —
-    called out in the JSON so a regression can't hide in the total.
-    factor tightened 1.3 -> 1.2 in round 5 after a 1.28x corpus_curation
-    slide reported as {} in round 4."""
-    out = {}
-    for k, v in timings.items():
-        base = _BEST.get(k)
-        if base and v > base * factor:
-            out[k] = {"best": base, "now": v, "ratio": round(v / base, 2)}
-    return out
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -227,7 +193,6 @@ def main() -> None:
                 "queries": timings,
                 "queries_min": timings_min,
                 "reps": reps,
-                "regressions_vs_best": _regressions(timings),
                 "sf": sf,
                 "kg_pages": KG_PAGES,
                 "kg_triples": n_triples,

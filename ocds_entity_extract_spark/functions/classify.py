@@ -42,7 +42,7 @@ COMPANY_SUFFIX_SLUG_RE = (
 )
 
 
-def heuristic_type_col(name_norm, slug) -> F.Column:
+def heuristic_type_col(slug) -> F.Column:
     """Keyword/suffix heuristic as one Column expr (no override applied)."""
     first_tok = F.element_at(F.split(slug, "-"), 1)
     return (
@@ -125,7 +125,7 @@ def with_entity_type(mentions: DataFrame, override: DataFrame | None = None) -> 
     classifier dict, reference classify.js:16-24 / extract.js:189-195);
     the heuristic is pure codegen.
     """
-    heur = heuristic_type_col(F.col("name_norm"), F.col("entity_id"))
+    heur = heuristic_type_col(F.col("entity_id"))
     if override is None:
         return mentions.withColumn("entity_type", heur)
     joined = mentions.join(

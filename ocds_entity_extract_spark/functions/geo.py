@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ocds_entity_extract_spark.functions.text import simple_name
+from ocds_entity_extract_spark.functions.text import simple_name, simple_name_py
 from ocds_entity_extract_spark.session import local_frame
 
 # (iso2, spanish name) — ISO-3166 at reference parity (~80+ entries, ≙ the
@@ -83,6 +83,14 @@ MX_STATE_ALIASES: list[tuple[str, str]] = [
     ("CDMX", "Ciudad de México"),
 ]
 
+# (state_name, iso_code, name_slug): every state, then every alias spelling
+# under its canonical state's code — the rows of `mx_state_dim`
+MX_STATE_DIM: list[tuple[str, str, str]] = [
+    (n, c, simple_name_py(n)) for n, c in MX_STATES
+] + [
+    (a, dict(MX_STATES)[canon], simple_name_py(a)) for a, canon in MX_STATE_ALIASES
+]
+
 
 def country_dim(spark: SparkSession) -> DataFrame:
     """(code, name_es, name_slug) — join on code or slugged name."""
@@ -93,17 +101,8 @@ def country_dim(spark: SparkSession) -> DataFrame:
 def mx_state_dim(spark: SparkSession) -> DataFrame:
     """(state_name, iso_code, name_slug) with alias rows folded in —
     one broadcast dim replaces both reference switches (extract.js:991-1100)."""
-    base = local_frame(spark, MX_STATES, "state_name string, iso_code string")
-    alias = local_frame(
-        spark,
-        MX_STATE_ALIASES, "alias string, canonical string"
-    ).join(base, F.col("canonical") == F.col("state_name")).select(
-        F.col("alias").alias("state_name"), "iso_code"
-    )
-    return (
-        base.select("state_name", "iso_code")
-        .unionByName(alias)
-        .withColumn("name_slug", simple_name("state_name"))
+    return local_frame(
+        spark, MX_STATE_DIM, "state_name string, iso_code string, name_slug string"
     )
 
 

@@ -47,18 +47,14 @@ def asof_join(
     key: str,
     left_ts: str,
     right_ts: str,
-    payload: list[str] | None = None,
-    matched_ts_col: str | None = None,
+    payload: list[str],
+    matched_ts_col: str,
 ) -> DataFrame:
     """Backward as-of join; returns all left columns + right ``payload``
-    columns (null where no right row precedes the left row).
-
-    ``matched_ts_col``: optionally also emit the matched right timestamp
-    under this name (for tolerance filtering by the caller).
+    columns (null where no right row precedes the left row), plus the
+    matched right timestamp as ``matched_ts_col`` (for tolerance filtering
+    by the caller).
     """
-    payload = payload or [
-        c for c in right.columns if c not in (key, right_ts)
-    ]
     r_types = dict(right.dtypes)
 
     l_tagged = left.withColumn(_SIDE, F.lit(1)).withColumn(
@@ -104,12 +100,9 @@ def asof_join(
     )
     for c in payload:
         carried = carried.withColumn(c, F.col("_m")[c])
-    if matched_ts_col:
-        carried = carried.withColumn(matched_ts_col, F.col("_m")[_TS])
+    carried = carried.withColumn(matched_ts_col, F.col("_m")[_TS])
 
-    out_cols = list(left.columns) + payload + (
-        [matched_ts_col] if matched_ts_col else []
-    )
+    out_cols = list(left.columns) + payload + [matched_ts_col]
     return carried.filter(F.col(_SIDE) == 1).select(*out_cols)
 
 

@@ -167,7 +167,7 @@ def connected_components(
 def canonical_mapping(
     all_ids: DataFrame,
     edges: DataFrame,
-    small_graph_threshold: int = 1_000_000,
+    small_graph_threshold: int,
 ) -> DataFrame:
     """All distinct ids + sameAs edges -> total (entity_id, canonical_id) map
     (identity for singleton nodes). ``small_graph_threshold`` passes through

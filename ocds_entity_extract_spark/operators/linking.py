@@ -243,7 +243,7 @@ def _prefix_pairs(base: DataFrame, id_col: str) -> DataFrame:
     return _bucket_pairs(_spread(pref, ["pfx"]), ["pfx"], id_col, DEFAULT_MAX_BUCKET)
 
 
-def verified_edges(entities: DataFrame, hash_family: str = "portable") -> DataFrame:
+def verified_edges(entities: DataFrame, hash_family: str) -> DataFrame:
     """Candidate pairs -> exact-similarity-verified sameAs edges.
 
     Score = overlap coefficient (containment) of the exact hashed-shingle
@@ -253,7 +253,7 @@ def verified_edges(entities: DataFrame, hash_family: str = "portable") -> DataFr
     consumers -> cached; it is O(|distinct entities|), far smaller than
     the mention stream — at cluster scale persist to DISK_ONLY instead).
 
-    `hash_family`: "portable" (the oracled default) or "fast" (xxhash64,
+    `hash_family`: "portable" (the oracled family) or "fast" (xxhash64,
     the production family) — see `minhash_signature_table`.
 
     Cache lifecycle: long-lived sessions (query harnesses) should call
@@ -298,7 +298,7 @@ def verified_edges(entities: DataFrame, hash_family: str = "portable") -> DataFr
 
 
 def verified_edges_py(
-    slugs: list[str], hash_family: str = "portable"
+    slugs: list[str], hash_family: str
 ) -> list[tuple[str, str, float, float]]:
     """Exact Python twin of `verified_edges` for driver-side execution.
 
@@ -370,7 +370,7 @@ def verified_edges_py(
 
 
 def linking_canon_dict(
-    slugs: list[str], hash_family: str = "portable"
+    slugs: list[str], hash_family: str
 ) -> dict[str, str]:
     """ids -> {entity_id: canonical_id} via `verified_edges_py` + union-find,
     identity entries for singletons. The driver-side twin of

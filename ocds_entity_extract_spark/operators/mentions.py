@@ -228,7 +228,7 @@ surface_dim_batched = surface_dim
 
 
 def mentions_via_dim(
-    spans: DataFrame, dim: DataFrame, broadcast: bool = True
+    spans: DataFrame, dim: DataFrame, broadcast: bool
 ) -> DataFrame:
     """Explode spans and resolve normalization via the surface dim — one
     hash probe per mention instead of per-mention regexes.
@@ -236,7 +236,7 @@ def mentions_via_dim(
     `broadcast=True` hints the dim into a broadcast hash join (right when
     the distinct-surface count is KNOWN small — the caller has counted or
     bounded it). `broadcast=False` leaves the join unhinted: AQE picks
-    broadcast vs shuffle from runtime sizes, the safe default when the
+    broadcast vs shuffle from runtime sizes, the safe choice when the
     distinct-surface set may outgrow executor memory (10^9+ distinct
     surfaces at full-crawl scale would OOM every executor under a forced
     hint — the round-1 scale-killer this parameter removes).

@@ -28,7 +28,7 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def with_lsh_bucket(df: DataFrame, dim: int = 64, n_planes: int = 8) -> DataFrame:
+def with_lsh_bucket(df: DataFrame, dim: int, n_planes: int) -> DataFrame:
     """Add `bucket`: sign-pattern of the `embedding` column's dot products
     with n_planes seeded hyperplanes, packed into one long."""
     planes = _hyperplanes(dim, n_planes)
@@ -47,8 +47,8 @@ def with_lsh_bucket(df: DataFrame, dim: int = 64, n_planes: int = 8) -> DataFram
 def ann_topk_lsh(
     embeddings: DataFrame,
     query_vec_id: int,
-    n_planes: int = 8,
-    dim: int | None = None,
+    n_planes: int,
+    dim: int,
     probe_hamming: int | None = None,
 ) -> DataFrame:
     """Top-`TOP_K` by cosine among vectors in the query's LSH bucket, plus (by
@@ -65,11 +65,8 @@ def ann_topk_lsh(
     probe breadth is the knob that trades them (the bench reports both
     radii).
 
-    `dim` should be passed (or read from upstream metadata); the
-    `.first()` fallback costs an extra driver job per call.
+    `dim` is the embedding length (from upstream metadata).
     """
-    if dim is None:
-        dim = len(embeddings.select(VEC_COL).first()[0])
     if probe_hamming is None:
         # DEFAULT radius scales with n_planes so naive callers never pay a
         # silent near-scan: radius 2 only from 8 planes up (candidate

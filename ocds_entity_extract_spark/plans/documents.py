@@ -61,9 +61,9 @@ def initials_col(slug_col) -> F.Column:
 def entity_documents(
     entities: DataFrame,
     mapping: DataFrame,
-    member_edges: DataFrame | None = None,
-    contact_edges: DataFrame | None = None,
-    inst_regions: DataFrame | None = None,
+    member_edges: DataFrame,
+    contact_edges: DataFrame,
+    inst_regions: DataFrame,
     contact_persons: DataFrame | None = None,
 ) -> DataFrame:
     """Merged entities -> canonical output documents.
@@ -102,25 +102,19 @@ def entity_documents(
     rows for NEW contactPoint persons, ≙ createPerson extract.js:372-390 —
     unioned in as already-canonical person docs; their 'funcionario'
     memberships arrive via member_edges like everyone else's).
-    Pass None for a mention-only corpus — the derived fields come out
-    zero/null/empty.
+    Pass empty frames for a mention-only corpus — the derived fields come
+    out zero/null/empty.
 
     Counter families (≙ the reference's contract_count vs purchase_count
     split gated on isPurchase(metadata.source), extract.js:546-578): each
     membership edge counts toward `counters.contract_count.{role}` or
     `counters.purchase_count.{role}` by its page's `is_purchase` flag
     (product-bearing page = purchase); `counters.membership_count.{role}`
-    stays the family-blind total. Edges tables without the flag (legacy
-    inputs) count as contracts.
+    stays the family-blind total.
 
     Entities whose membership roles include 'funcionario' carry it as an
     extra classification entry (≙ otherTypes, extract.js:380).
     """
-    if "source_runs" not in entities.columns:
-        # legacy entities tables (pre-sourceRun) still roll up cleanly
-        entities = entities.withColumn(
-            "source_runs", F.array().cast("array<string>")
-        )
     canon = (
         entities.join(mapping, "entity_id")
         .groupBy("canonical_id")
@@ -175,76 +169,49 @@ def entity_documents(
             )
         )
 
-    if member_edges is not None:
-        # edges without the is_purchase flag (legacy inputs) = contracts
-        is_purch = (
-            F.col("is_purchase")
-            if "is_purchase" in member_edges.columns
-            else F.lit(False)
-        )
-        one_if = lambda cond: F.sum(  # noqa: E731
-            F.when(cond, F.lit(1)).otherwise(F.lit(0))
-        ).cast("long")
-        role_aggs = []
-        for bucket, roles in ROLE_BUCKETS.items():
-            in_bucket = F.col("role").isin(*roles)
-            role_aggs += [
-                one_if(in_bucket).alias(f"n_{bucket}"),
-                one_if(in_bucket & ~is_purch).alias(f"n_{bucket}_contract"),
-                one_if(in_bucket & is_purch).alias(f"n_{bucket}_purchase"),
-            ]
-        as_member = member_edges.groupBy(
-            F.col("member_canon").alias("canonical_id")
-        ).agg(
-            *role_aggs,
-            F.min(
-                F.when(F.col("org_canon") != F.col("member_canon"), F.col("org_canon"))
-            ).alias("_parent_id"),
-        )
-        as_parent = member_edges.groupBy(
-            F.col("org_canon").alias("canonical_id")
-        ).agg(F.countDistinct("member_canon").cast("long").alias("member_count"))
-        canon = canon.join(as_member, "canonical_id", "left").join(
-            as_parent, "canonical_id", "left"
-        )
-    else:
-        for bucket in ROLE_BUCKETS:
-            for fam in ("", "_contract", "_purchase"):
-                canon = canon.withColumn(
-                    f"n_{bucket}{fam}", F.lit(None).cast("long")
+    is_purch = F.col("is_purchase")
+    one_if = lambda cond: F.sum(  # noqa: E731
+        F.when(cond, F.lit(1)).otherwise(F.lit(0))
+    ).cast("long")
+    role_aggs = []
+    for bucket, roles in ROLE_BUCKETS.items():
+        in_bucket = F.col("role").isin(*roles)
+        role_aggs += [
+            one_if(in_bucket).alias(f"n_{bucket}"),
+            one_if(in_bucket & ~is_purch).alias(f"n_{bucket}_contract"),
+            one_if(in_bucket & is_purch).alias(f"n_{bucket}_purchase"),
+        ]
+    as_member = member_edges.groupBy(
+        F.col("member_canon").alias("canonical_id")
+    ).agg(
+        *role_aggs,
+        F.min(
+            F.when(F.col("org_canon") != F.col("member_canon"), F.col("org_canon"))
+        ).alias("_parent_id"),
+    )
+    as_parent = member_edges.groupBy(
+        F.col("org_canon").alias("canonical_id")
+    ).agg(F.countDistinct("member_canon").cast("long").alias("member_count"))
+    per_entity_contacts = contact_edges.groupBy("canonical_id").agg(
+        F.array_sort(
+            F.collect_set(
+                F.struct(
+                    F.col("contact_type").alias("type"),
+                    F.col("contact_value").alias("value"),
                 )
-        canon = canon.withColumn(
-            "_parent_id", F.lit(None).cast("string")
-        ).withColumn("member_count", F.lit(None).cast("long"))
-
-    if contact_edges is not None:
-        per_entity_contacts = contact_edges.groupBy("canonical_id").agg(
-            F.array_sort(
-                F.collect_set(
-                    F.struct(
-                        F.col("contact_type").alias("type"),
-                        F.col("contact_value").alias("value"),
-                    )
-                )
-            ).alias("_contacts")
-        )
-        canon = canon.join(per_entity_contacts, "canonical_id", "left")
-    else:
-        canon = canon.withColumn(
-            "_contacts", F.lit(None).cast("array<struct<type:string,value:string>>")
-        )
-
-    if inst_regions is not None:
-        canon = canon.join(
-            inst_regions.select(
-                F.col("entity_id").alias("canonical_id"),
-                F.col("gov_level").alias("_region_gov"),
-            ),
-            "canonical_id",
-            "left",
-        )
-    else:
-        canon = canon.withColumn("_region_gov", F.lit(None).cast("string"))
+            )
+        ).alias("_contacts")
+    )
+    regions = inst_regions.select(
+        F.col("entity_id").alias("canonical_id"),
+        F.col("gov_level").alias("_region_gov"),
+    )
+    canon = (
+        canon.join(as_member, "canonical_id", "left")
+        .join(as_parent, "canonical_id", "left")
+        .join(per_entity_contacts, "canonical_id", "left")
+        .join(regions, "canonical_id", "left")
+    )
 
     etype = rank_type("_rank")
     subclass = subclassification_col(

@@ -652,18 +652,24 @@ def q_value_percentiles_approx(spark, sf_dir):
 # Structured Streaming under the value-hash gate
 # =====================================================================
 
+_DRAIN_TIMEOUT_S = 300
+
+
 def _drained_stream(spark, sf_dir, table, schema, build, sink, output_mode):
     """Stream `table` through `build` into the memory sink `sink`, drained
     with trigger(availableNow), and return the sink's table. File-stream
     sources require a DIRECTORY, so the single-file test table is exposed
     through a symlinked temp dir (a real deployment streams a
-    directory/Kafka topic anyway)."""
+    directory/Kafka topic anyway). A drain that has not finished in
+    `_DRAIN_TIMEOUT_S` is stopped and raises: its sink holds a partial
+    result."""
     import hashlib
     import pathlib
+    import tempfile
 
     src = pathlib.Path(sf_dir) / f"{table}.parquet"
     key = hashlib.md5(str(src).encode()).hexdigest()[:10]
-    d = pathlib.Path(f"/tmp/sg_stream_{key}/{table}")
+    d = pathlib.Path(tempfile.gettempdir()) / f"sg_stream_{key}" / table
     d.mkdir(parents=True, exist_ok=True)
     link = d / src.name
     if not link.is_symlink():
@@ -678,7 +684,9 @@ def _drained_stream(spark, sf_dir, table, schema, build, sink, output_mode):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"stream {name} not drained in {_DRAIN_TIMEOUT_S}s")
     return spark.table(name)
 
 

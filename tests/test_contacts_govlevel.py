@@ -82,6 +82,7 @@ def _doc_rows(spark, ids_types):
     df = spark.createDataFrame(rows, schema)
     df = df.withColumn("first_seen", F.col("first_seen").cast("timestamp"))
     df = df.withColumn("last_seen", F.col("last_seen").cast("timestamp"))
+    df = df.withColumn("source_runs", F.array().cast("array<string>"))
     mapping = spark.createDataFrame(
         [(slug, slug) for slug, _ in ids_types],
         "entity_id string, canonical_id string",
@@ -89,7 +90,7 @@ def _doc_rows(spark, ids_types):
     return df, mapping
 
 
-def test_gov_level_rules(spark):
+def test_gov_level_rules(spark, no_doc_edges):
     ents, mapping = _doc_rows(
         spark,
         [
@@ -111,7 +112,7 @@ def test_gov_level_rules(spark):
     d = {
         r["id"]: r["gov_level"]
         for r in entity_documents(
-            ents, mapping, inst_regions=inst_regions
+            ents, mapping, *no_doc_edges[:2], inst_regions=inst_regions
         ).collect()
     }
     assert d["municipio-de-centro"] == "city"
@@ -123,8 +124,8 @@ def test_gov_level_rules(spark):
     assert d["juan-perez"] is None
 
 
-def test_contact_details_default_empty(spark):
+def test_contact_details_default_empty(spark, no_doc_edges):
     ents, mapping = _doc_rows(spark, [("secretaria-de-salud", "institution")])
-    d = entity_documents(ents, mapping).collect()[0]
+    d = entity_documents(ents, mapping, *no_doc_edges).collect()[0]
     assert d["contact_details"] == []
     assert d["gov_level"] == "country"

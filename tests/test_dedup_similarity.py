@@ -142,13 +142,13 @@ def test_bruteforce_topk_order(spark):
 
 
 def test_lsh_bucket_deterministic(spark):
-    a = {r["vec_id"]: r["bucket"] for r in with_lsh_bucket(_vecs(spark), dim=4).collect()}
-    b = {r["vec_id"]: r["bucket"] for r in with_lsh_bucket(_vecs(spark), dim=4).collect()}
+    a = {r["vec_id"]: r["bucket"] for r in with_lsh_bucket(_vecs(spark), dim=4, n_planes=8).collect()}
+    b = {r["vec_id"]: r["bucket"] for r in with_lsh_bucket(_vecs(spark), dim=4, n_planes=8).collect()}
     assert a == b
 
 
 def test_lsh_topk_subset_of_bucket(spark):
-    rows = ann_topk_lsh(_vecs(spark), query_vec_id=0, n_planes=2).collect()
+    rows = ann_topk_lsh(_vecs(spark), query_vec_id=0, n_planes=2, dim=4).collect()
     got = [r["vec_id"] for r in rows]
     # close vectors share the query's hyperplane signs; opposite vector must not
     assert 4 not in got

@@ -37,7 +37,7 @@ def _entities(spark):
     df = spark.createDataFrame(rows, ENT_SCHEMA)
     return df.withColumn("first_seen", F.col("first_seen").cast("timestamp")).withColumn(
         "last_seen", F.col("last_seen").cast("timestamp")
-    )
+    ).withColumn("source_runs", F.array().cast("array<string>"))
 
 
 def _mapping(spark):
@@ -60,28 +60,30 @@ def _member_edges(spark):
          ("u3", "juan-perez-lopez", "director general", "secretaria-de-salud"),
          ("u4", "direccion-de-obras", "titular", "secretaria-de-salud")],
         "url string, member_canon string, role string, org_canon string",
-    )
+    ).withColumn("is_purchase", F.lit(False))
 
 
-def _docs(spark):
+def _docs(spark, no_doc_edges):
+    _, contact_edges, inst_regions = no_doc_edges
     return {
         r["id"]: r
         for r in entity_documents(
-            _entities(spark), _mapping(spark), _member_edges(spark)
+            _entities(spark), _mapping(spark), _member_edges(spark),
+            contact_edges, inst_regions,
         ).collect()
     }
 
 
-def test_company_subtype_from_alias_slug(spark):
+def test_company_subtype_from_alias_slug(spark, no_doc_edges):
     """Subtype survives even when the canonical alias is suffix-less
     (≙ laundry.companyType on the full legal name, extract.js:732-737)."""
-    d = _docs(spark)["grupo-delta"]
+    d = _docs(spark, no_doc_edges)["grupo-delta"]
     assert d["entity_type"] == "company"
     assert d["subclassification"] == ["s-a-de-c-v"]
 
 
-def test_institution_subclass_chain(spark):
-    d = _docs(spark)
+def test_institution_subclass_chain(spark, no_doc_edges):
+    d = _docs(spark, no_doc_edges)
     # keyword institutions -> keyword subclass (details.classification analogue)
     assert d["secretaria-de-salud"]["subclassification"] == ["secretaria"]
     assert d["direccion-de-obras"]["subclassification"] == ["direccion"]
@@ -91,8 +93,8 @@ def test_institution_subclass_chain(spark):
     assert d["juan-perez-lopez"]["subclassification"] == []
 
 
-def test_parent_id_orgs_only(spark):
-    d = _docs(spark)
+def test_parent_id_orgs_only(spark, no_doc_edges):
+    d = _docs(spark, no_doc_edges)
     # org-org membership -> parent_id (extract.js:866-868)
     assert d["direccion-de-obras"]["parent_id"] == "secretaria-de-salud"
     # persons never get parent_id (their memberships are role counters)
@@ -100,8 +102,8 @@ def test_parent_id_orgs_only(spark):
     assert d["secretaria-de-salud"]["parent_id"] is None
 
 
-def test_role_counters_and_member_counts(spark):
-    d = _docs(spark)
+def test_role_counters_and_member_counts(spark, no_doc_edges):
+    d = _docs(spark, no_doc_edges)
     juan = d["juan-perez-lopez"]["counters"]["membership_count"]
     assert juan["director_general"] == 2
     assert juan["titular"] == 1
@@ -111,8 +113,8 @@ def test_role_counters_and_member_counts(spark):
     assert d["grupo-delta"]["counters"]["members"] == 1
 
 
-def test_identifiers_set_union(spark):
-    d = _docs(spark)["grupo-delta"]
+def test_identifiers_set_union(spark, no_doc_edges):
+    d = _docs(spark, no_doc_edges)["grupo-delta"]
     ids = {(r["scheme"], r["id"]) for r in d["identifiers"]}
     # both alias slugs under 'slug' + both source domains under 'domain'
     assert ids == {
@@ -123,8 +125,8 @@ def test_identifiers_set_union(spark):
     }
 
 
-def test_entity_documents_without_memberships(spark):
-    docs = entity_documents(_entities(spark), _mapping(spark)).collect()
+def test_entity_documents_without_memberships(spark, no_doc_edges):
+    docs = entity_documents(_entities(spark), _mapping(spark), *no_doc_edges).collect()
     d = {r["id"]: r for r in docs}["direccion-de-obras"]
     assert d["parent_id"] is None
     assert d["counters"]["membership_count"]["titular"] == 0

@@ -32,7 +32,7 @@ def _entities(spark):
     df = spark.createDataFrame(rows, ENT_SCHEMA.replace("timestamp", "string"))
     return df.withColumn("first_seen", F.col("first_seen").cast("timestamp")).withColumn(
         "last_seen", F.col("last_seen").cast("timestamp")
-    )
+    ).withColumn("source_runs", F.array().cast("array<string>"))
 
 
 def _mapping(spark):
@@ -42,8 +42,11 @@ def _mapping(spark):
     )
 
 
-def test_entity_documents_merge_aliases(spark):
-    docs = {r["id"]: r for r in entity_documents(_entities(spark), _mapping(spark)).collect()}
+def test_entity_documents_merge_aliases(spark, no_doc_edges):
+    docs = {
+        r["id"]: r
+        for r in entity_documents(_entities(spark), _mapping(spark), *no_doc_edges).collect()
+    }
     acme = docs["acme"]
     # alias group folded: type precedence company > person, counters summed
     assert acme["entity_type"] == "company"
@@ -70,8 +73,8 @@ def test_membership_documents(spark):
     assert d["evidence_pages"] == 2
 
 
-def test_ndjson_grouped_sink(spark, tmp_path):
-    docs = entity_documents(_entities(spark), _mapping(spark))
+def test_ndjson_grouped_sink(spark, tmp_path, no_doc_edges):
+    docs = entity_documents(_entities(spark), _mapping(spark), *no_doc_edges)
     out = str(tmp_path / "ndjson")
     write_ndjson_grouped(docs, out)
     files = glob.glob(f"{out}/entity_type=*/*.json")

@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import os
+import tempfile
+
+import pytest
 
 
 def test_entry_smoke_covers_all_predicates(spark, monkeypatch):
@@ -37,3 +40,32 @@ def test_registry_reorder_is_complete_and_sample_leads_with_flagship():
         "tfidf_top_terms",
     ):
         assert k in first50, k
+
+
+def test_undrained_stream_is_stopped_and_raises(spark, monkeypatch, tmp_path):
+    """A streaming query that misses its drain deadline is stopped and
+    raises rather than returning a half-filled sink; its symlinked source
+    dir lives under the temp dir."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocds_entity_extract_spark import queries_analytics as qa
+
+    sf_dir, tmp = tmp_path / "sf", tmp_path / "tmp"
+    sf_dir.mkdir()
+    tmp.mkdir()
+    pq.write_table(
+        pa.table({
+            "event_id": [1], "ts": [dt.datetime(2024, 1, 1)], "user_id": [1],
+            "event_type": ["click"], "value": [1.0], "props": ["{}"],
+        }),
+        sf_dir / "events.parquet",
+    )
+    monkeypatch.setattr(qa, "_DRAIN_TIMEOUT_S", 0.001)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    with pytest.raises(TimeoutError):
+        qa.q_streaming_hourly_counts(spark, str(sf_dir))
+    assert not spark.streams.active
+    assert [p.name for p in tmp.glob("sg_stream_*/events")] == ["events"]

@@ -50,7 +50,7 @@ def test_alias_pairs_found_and_verified(spark):
         "constructora-omega-s-c",            # unrelated
     ]
     edges = {
-        (r["src"], r["dst"]) for r in verified_edges(_ids(spark, ids)).collect()
+        (r["src"], r["dst"]) for r in verified_edges(_ids(spark, ids), "portable").collect()
     }
     assert ("grupo-aurora-delta", "grupo-aurora-delta-s-a-de-c-v") in edges
     assert ("grupo-aurora-delta-s-a-de-c-v", "grupo-aurora-delta-sa-de-cv") in edges or (
@@ -138,7 +138,7 @@ def test_cc_driver_vs_distributed_parity(spark):
 def test_canonical_mapping_includes_singletons(spark):
     all_ids = _ids(spark, ["a", "b", "zz-singleton"])
     edges = spark.createDataFrame([("b", "a")], "src string, dst string")
-    m = {r["entity_id"]: r["canonical_id"] for r in canonical_mapping(all_ids, edges).collect()}
+    m = {r["entity_id"]: r["canonical_id"] for r in canonical_mapping(all_ids, edges, 1_000_000).collect()}
     assert m == {"a": "a", "b": "a", "zz-singleton": "zz-singleton"}
 
 
@@ -162,15 +162,15 @@ def test_driver_side_linking_matches_distributed(spark, pages_df):
     assert len(slugs) > 50
 
     dist_edges = sorted(
-        (r["src"], r["dst"]) for r in verified_edges(ids).collect()
+        (r["src"], r["dst"]) for r in verified_edges(ids, "portable").collect()
     )
-    py_edges = sorted((s, d) for s, d, _c, _j in verified_edges_py(slugs))
+    py_edges = sorted((s, d) for s, d, _c, _j in verified_edges_py(slugs, "portable"))
     assert dist_edges == py_edges and len(py_edges) > 0
 
     dist_map = sorted(
-        map(tuple, canonical_mapping(ids, verified_edges(ids)).collect())
+        map(tuple, canonical_mapping(ids, verified_edges(ids, "portable"), 1_000_000).collect())
     )
-    assert dist_map == sorted(linking_canon_dict(slugs).items())
+    assert dist_map == sorted(linking_canon_dict(slugs, "portable").items())
 
 
 def _dangling_hints(df) -> int:

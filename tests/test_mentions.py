@@ -24,7 +24,7 @@ def test_detects_embedded_entities(spark, pages_df, small_corpus):
     # the mention rows build_triples merges: fused spans probed against the
     # classified surface dim
     spans = detect_spans_fused(pages_df)
-    mentions = mentions_via_dim(spans, with_entity_type(surface_dim(spans)))
+    mentions = mentions_via_dim(spans, with_entity_type(surface_dim(spans)), broadcast=True)
     found_ids = {r["entity_id"] for r in mentions.select("entity_id").distinct().collect()}
     from ocds_entity_extract_spark.datagen import simple_name_py
 

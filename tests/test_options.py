@@ -1,5 +1,5 @@
-"""Every optional parameter of the engine is set by a program, and every
-public function of the engine is used by one.
+"""Every optional parameter of the engine is set by a program, every default
+is taken by one, and every public function of the engine is reached by one.
 
 An *option* is a parameter with a default on a module-level function or a
 class method in ``ocds_entity_extract_spark/**/*.py`` (the query registries
@@ -14,9 +14,18 @@ is a module-level literal constant of the caller's or the callee's module is
 compared as its literal. An option that only tests set has one value in
 use, so it belongs in the body as a constant.
 
-Likewise every public module-level function and class of those package
-modules is referenced by name from a non-test file; one that only tests
-reach is deleted, or allowlisted below with its reason.
+An option's default is *taken* when a non-test call omits that argument, or
+may omit it through ``*args``/``**kwargs``. A default that only tests take
+is not a default of any program: the parameter is required, and the code
+that only the default reached goes. Functions that no program calls are the
+function rule's business, not this one's.
+
+Every public module-level function and class of those package modules is
+*reached* from a program: the walk starts at the module-level code of every
+non-test file, every decorated definition (the ``@query`` registries) and
+the allowlisted names below, and follows each name a reached body loads or
+reads as an attribute to the module-level definitions of that name. One
+that only tests reach is deleted, or allowlisted below with its reason.
 """
 from __future__ import annotations
 
@@ -182,24 +191,78 @@ def _never_set():
     return n, unset
 
 
-def _unreferenced():
-    """Public module-level functions and classes of the package modules that
-    no non-test file names (by a load, an attribute or an import)."""
-    names = set()
-    for path in _program_files():
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-                names.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                names.add(node.attr)
-            elif isinstance(node, ast.ImportFrom):
-                names.update(a.name for a in node.names)
-    public = set()
-    for path in _package_modules():
-        public.update(node.name for node in ast.parse(path.read_text()).body
-                      if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                      and not node.name.startswith("_"))
-    return public - names
+def _omits(call, param, idx):
+    """Whether `call` omits the argument, or may omit it through a star."""
+    _consts, args, kws, _star_kw, _star = call
+    return param not in kws and not (idx is not None and len(args) > idx)
+
+
+def _defaults_not_taken():
+    """Options with a program call, none of which omits the argument."""
+    calls = _calls(_program_files())
+    return {
+        f"{qual}({param})"
+        for qual, short, _consts, opts in _options()
+        if calls.get(short)
+        for param, idx, _default in opts
+        if not any(_omits(c, param, idx) for c in calls[short])
+    }
+
+
+def _loads(node, aliases):
+    """Names `node` loads (through `from m import f as g` aliases) or reads
+    as attributes."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            yield aliases.get(n.id, n.id)
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+
+
+def _reach(paths, names):
+    """Names reached from the module-level code and decorated definitions of
+    `paths`, then from `names`; returns (from programs, also from `names`)."""
+    defs, roots = {}, []
+    for path in paths:
+        tree = ast.parse(path.read_text())
+        aliases = {a.asname: a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+                   for a in n.names if a.asname}
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append((node, aliases))
+                if not node.decorator_list:
+                    continue
+            roots.append((node, aliases))
+
+    reached = set()
+
+    def walk(todo):
+        todo = [n for n in todo if n not in reached]
+        reached.update(todo)
+        while todo:
+            for node, aliases in defs.get(todo.pop(), ()):
+                for name in _loads(node, aliases):
+                    if name not in reached:
+                        reached.add(name)
+                        todo.append(name)
+
+    walk([name for node, aliases in roots for name in _loads(node, aliases)])
+    from_programs = set(reached)
+    walk(list(names))
+    return from_programs, reached
+
+
+def _public(paths):
+    return {node.name for path in paths for node in ast.parse(path.read_text()).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and not node.name.startswith("_")}
+
+
+def _unreferenced(programs, modules, allowed):
+    """Public module-level functions and classes of `modules` that no program
+    reaches; what only an `allowed` name reaches is not reported."""
+    from_programs, reached = _reach(programs, allowed)
+    return _public(modules) - from_programs - (reached - set(allowed))
 
 
 def test_every_option_is_set_by_a_caller():
@@ -207,9 +270,28 @@ def test_every_option_is_set_by_a_caller():
     assert unset == ALLOWED_UNSET, (n, sorted(unset ^ ALLOWED_UNSET))
 
 
+def test_every_default_is_taken_by_a_program():
+    not_taken = _defaults_not_taken()
+    assert not not_taken, sorted(not_taken)
+
+
 def test_every_public_function_is_used_by_a_program():
-    unused = _unreferenced()
+    unused = _unreferenced(_program_files(), _package_modules(), ALLOWED_UNREFERENCED)
     assert unused == set(ALLOWED_UNREFERENCED), sorted(unused ^ set(ALLOWED_UNREFERENCED))
+
+
+def test_function_named_only_by_an_unreached_function_is_reported(tmp_path):
+    mod = tmp_path / "mod.py"
+    mod.write_text(
+        "def used():\n    return 1\n\n\n"
+        "def orphan():\n    return helper()\n\n\n"
+        "def helper():\n    return 2\n\n\n"
+        "def allowed():\n    return kept()\n\n\n"
+        "def kept():\n    return 3\n"
+    )
+    prog = tmp_path / "prog.py"
+    prog.write_text("from mod import used as run\n\nrun()\n")
+    assert _unreferenced([mod, prog], [mod], {"allowed"}) == {"orphan", "helper", "allowed"}
 
 
 def test_aliased_call_counts_as_its_target(tmp_path):

@@ -60,7 +60,7 @@ def test_mentions_stage_is_narrow(spark, pages_df):
     spans = detect_spans_fused(pages_df)
     dim = with_entity_type(surface_dim(spans))
     assert "Exchange" not in plan_of(spans)
-    probe = plan_of(mentions_via_dim(spans, dim))
+    probe = plan_of(mentions_via_dim(spans, dim, broadcast=True))
     assert "BroadcastHashJoin" in probe
     assert probe.count("+- Exchange") == plan_of(dim).count("+- Exchange")
 

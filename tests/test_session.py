@@ -165,7 +165,7 @@ def test_pyfiles_submission_from_foreign_cwd(tmp_path):
 _SESSION = (
     "import sys; sys.path.insert(0, sys.argv[1]);"
     "from ocds_entity_extract_spark.session import get_spark;"
-    "spark = get_spark(master='local[1]');"
+    "spark = get_spark('cds-test', master='local[1]');"
     "print('rows', spark.range(10).count())"
 )
 
