@@ -67,12 +67,11 @@ def main() -> None:
     qs = entrymod.queries()
     reps = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
     timings: dict[str, float] = {}
-    timings_min: dict[str, float] = {}
     total = 0.0
     # median of >= 3 reps per query: single-rep (and best-of-2) numbers on
     # a co-tenant box cannot separate plan regressions from ±25-30% window
     # noise (round-2 finding); the median is the steady-state cost, the min
-    # is reported alongside as the least-contaminated floor
+    # goes to stderr only, so the JSON line stays short
     for name in HEADLINE:
         fn = qs[name]
         els = []
@@ -83,7 +82,6 @@ def main() -> None:
         els.sort()
         med = els[len(els) // 2] if reps % 2 else (els[reps // 2 - 1] + els[reps // 2]) / 2
         timings[name] = round(med, 3)
-        timings_min[name] = round(els[0], 3)
         total += med
         print(
             f"# {name}: {n} rows, median {med:.2f}s min {els[0]:.2f}s"
@@ -165,8 +163,8 @@ def main() -> None:
     )
     pages.count()  # materialize input outside the timed window
     # best-of-2: single-box wall clock swings ±20-30% (page cache, DVFS,
-    # JIT); the minimum is the least-contaminated estimate (same policy as
-    # bench/scaling.py). Both runs are printed to stderr.
+    # JIT); the minimum is the least-contaminated estimate. Both runs are
+    # printed to stderr.
     kg_el, n_triples = None, 0
     for rep in range(2):
         t0 = time.time()
@@ -191,7 +189,6 @@ def main() -> None:
                 "value": round(total, 3),
                 "unit": "sec",
                 "queries": timings,
-                "queries_min": timings_min,
                 "reps": reps,
                 "sf": sf,
                 "kg_pages": KG_PAGES,

@@ -3,8 +3,14 @@
 CPU vs run time, GC) — the offline evidence tool behind the scaling
 narrative in BENCH/BASELINE.md.
 
-    SPARK_GRAFT_EVENTLOG=/tmp/evlog python bench/pipeline_job.py 8 4000000
-    python bench/evlog_report.py /tmp/evlog/<app-id>
+    python tools/make_pyfiles.py
+    spark-submit --conf spark.eventLog.enabled=true \
+        --conf spark.eventLog.dir=/tmp/evlog \
+        --py-files dist/ocds_entity_extract_spark.zip tools/submit_job.py 20000
+    python bench/evlog_report.py /tmp/evlog/eventlog_v2_<app-id>
+
+Any Spark application's event log works; `perfbench/run.py --trace 1`
+aggregates its own per run and then deletes it.
 
 Prints one row per stage (sorted by total executor run time) plus totals:
 

@@ -1,15 +1,28 @@
 #!/usr/bin/env python
-"""One KG-pipeline run at a given parallelism — the scaling-evidence unit.
+"""One KG-pipeline run: the unit of the N -> 4N scaling pair (bench/scaling.py).
 
-    python bench/pipeline_job.py <cores> <n_pages>
+    python bench/pipeline_job.py <master> <n_pages> [driver|distributed]
 
-Prints one JSON line {"cores": N, "n_pages": P, "secs": S, "triples": T,
-"pages_per_sec": ..., "triples_per_sec": ...}.
+`master` is `local[N]` (N task threads in one JVM) or
+`local-cluster[n,c,mem]` (n executor JVMs of c cores each, forked by an
+in-process standalone Master/Worker, with a `mem - 512` MB heap each and a
+4 GB driver). Modes:
 
-The corpus is materialized ONCE as parquet (deterministic, cached on disk
-across invocations) and read back with spark.read.parquet — the same scan
-path a real pages table would use (pruning/pushdown apply), and JVM
-startup + corpus generation stay outside the timed window.
+- driver (default): the engine's own size-adaptive plan;
+- distributed: every size-adaptive escape hatch off (distributed LSH
+  linking, alternating-star CC, AQE-decided joins: the plan a 10^9-surface
+  crawl runs), and the merged-entities table is counted too, so the merge
+  groupBy is inside the window.
+
+Prints one JSON line {"master", "cores", "n_pages", "mode", "secs",
+"triples", "entities", "jvms", "triples_hash", "pages_per_sec",
+"triples_per_sec"}. `jvms` counts the driver and every registered executor;
+`triples_hash` is bit_xor(xxhash64(subj, pred, obj)) over the triples.
+
+The corpus is materialized once as parquet under $SPARK_GRAFT_TMP (default
+/tmp), cached across invocations, and read back with spark.read.parquet.
+JVM start, executor registration, worker warmup, corpus generation and the
+triple hash stay outside the timed window.
 """
 
 from __future__ import annotations
@@ -17,10 +30,24 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+MODES = ("driver", "distributed")
+# scan+extract task waves per core: page cost is uniform (bounded html), so
+# fewer, larger tasks win; every pass over the cached spans table inherits
+# this partitioning (waves=2 cut 8-core extract+assembly ~20% vs 4)
+WAVES = 2
+# lz4 over zstd: the job is CPU-bound and zstd's compression CPU lands on
+# the bottleneck (4M pages: local[2] 273.6 s vs 216.6 s, local[8] 107.8 s
+# vs 80.7 s)
+CODEC = "lz4"
+# the production per-shingle hash family (xxhash64), in both modes
+HASH_FAMILY = "fast"
 
 
 def _datagen_fingerprint() -> str:
@@ -59,137 +86,91 @@ def corpus_path(n_pages: int, seed: int = 42) -> str:
 
 
 def main() -> None:
-    cores = int(sys.argv[1])
-    n_pages = int(sys.argv[2])
+    master, n_pages = sys.argv[1], int(sys.argv[2])
+    mode = sys.argv[3] if len(sys.argv) > 3 else "driver"
+    if mode not in MODES:
+        sys.exit(f"mode must be one of {MODES}, not {mode!r}")
 
-    from ocds_entity_extract_spark.plans.pipeline import build_triples
-    from ocds_entity_extract_spark.session import get_spark
-
-    path = corpus_path(n_pages)
-
-    # Size file splits so the dominant scan+extract stage runs ~2 task
-    # waves per core (SPARK_GRAFT_WAVES overrides): page cost is uniform
-    # (bounded html), so stragglers are mild and FEWER, larger tasks win —
-    # every downstream pass over the cached spans table inherits this
-    # partitioning, and per-task Arrow/scheduling overhead (~20ms/task)
-    # is the dominant cost of the post-extraction phase at high core
-    # counts (measured: waves=2 cut the 8-core extract+assembly ~20% vs
-    # waves=4 with no 2-core regression). (Cluster analogue: tune split
-    # size so map stages get a couple of waves per executor slot.)
-    corpus_bytes = sum(
-        f.stat().st_size for f in pathlib.Path(path).glob("*.parquet")
-    )
-    waves = int(os.environ.get("SPARK_GRAFT_WAVES", "2"))
-    split = max(1 << 20, corpus_bytes // (cores * waves))
-    # AQE's coalesce target must also scale with cores: a FIXED advisory
-    # partition size caps reduce-side parallelism at shuffle_bytes/advisory
-    # partitions no matter how many cores exist — at 32 cores the default
-    # 16 MB left the big mention-distinct shuffle on ~17 reducers (half the
-    # box idle; measured 21.5s -> 17.7s post-extraction phase at 2M pages
-    # by moving to 4 MB). Scale it as ~corpus/(8*cores), floored at 4 MB
-    # (2 MB measured WORSE — per-partition overhead wins below that).
-    advisory = max(4 << 20, corpus_bytes // (cores * 8))
-    spark = get_spark(
-        app_name=f"scaling-{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=max(8, cores * 2),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(split),
-            "spark.sql.files.openCostInBytes": str(128 * 1024),
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(advisory),
-            # lz4, deliberately: zstd was A/B'd at the 4M-page distributed
-            # plan (round 5) on the theory that smaller shuffles help the
-            # bus-bound phases — it LOST on both axes (local[2] 273.6s vs
-            # 216.6s, local[8] 107.8s vs 80.7s): this job is CPU/memory-
-            # bound and zstd's extra compression CPU lands exactly on the
-            # bottleneck. On a real cluster with network shuffles the
-            # trade can flip — hence the env hook, not a hardcode.
-            "spark.io.compression.codec": os.environ.get(
-                "SPARK_GRAFT_CODEC", "lz4"
-            ),
-            # per-stage evidence hook (shuffle bytes, executor CPU vs
-            # wall): SPARK_GRAFT_EVENTLOG=<dir> writes the Spark event log
-            # for offline attribution of the sub-scaling phases; off for
-            # pooled evidence runs (logging IO must not ride the window)
-            **(
-                {
-                    "spark.eventLog.enabled": "true",
-                    "spark.eventLog.dir": os.environ["SPARK_GRAFT_EVENTLOG"],
-                }
-                if os.environ.get("SPARK_GRAFT_EVENTLOG")
-                else {}
-            ),
-        },
-    )
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
-
-    # Python-worker warmup: spawn + import pandas on every core OUTSIDE the
-    # timed window (cluster startup cost, same class as JVM startup; workers
-    # are reused across stages via spark.python.worker.reuse).
     from pyspark.sql import functions as F
 
-    _warm = F.pandas_udf(lambda s: s, "long")
-    spark.range(0, cores * 4, 1, cores * 2).select(F.sum(_warm("id"))).collect()
+    from ocds_entity_extract_spark.plans.pipeline import build_triples
+    from ocds_entity_extract_spark.session import _master_cores, get_spark
+
+    cores = _master_cores(master, os.cpu_count() or 1)
+    path = corpus_path(n_pages)
+    corpus_bytes = sum(f.stat().st_size for f in pathlib.Path(path).glob("*.parquet"))
+    conf = {
+        "spark.sql.files.maxPartitionBytes": str(max(1 << 20, corpus_bytes // (cores * WAVES))),
+        "spark.sql.files.openCostInBytes": str(128 * 1024),
+        # a fixed advisory size caps reduce-side parallelism at
+        # shuffle_bytes/advisory, so it scales with cores, floored at 4 MB
+        # (2 MB measured worse)
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(
+            max(4 << 20, corpus_bytes // (cores * 8))
+        ),
+        "spark.io.compression.codec": CODEC,
+    }
+    lc = re.fullmatch(r"local-cluster\[(\d+),(\d+),(\d+)\]", master)
+    if lc:
+        n_exec, exec_cores, worker_mb = map(int, lc.groups())
+        # executor work dirs (launch scripts, logs) beside the corpus, not in
+        # $SPARK_HOME/work; the in-process Worker reads this at launch
+        os.environ.setdefault(
+            "SPARK_WORKER_DIR", os.path.join(os.environ.get("SPARK_GRAFT_TMP", "/tmp"), "lc_work")
+        )
+        conf.update({
+            "spark.executor.memory": f"{worker_mb - 512}m",
+            "spark.driver.memory": "4g",
+            # executor Python workers import the engine (cloudpickle ships
+            # module-level UDF helpers by reference), as --py-files would
+            "spark.executorEnv.PYTHONPATH": ROOT,
+            # size the executor JVM's GC and thread pools by its own slots,
+            # as a cgroup-limited container would, not by the box's cores
+            "spark.executor.extraJavaOptions": (
+                f"-XX:+UseParallelGC -XX:ActiveProcessorCount={exec_cores}"
+                f" -XX:ParallelGCThreads={max(2, exec_cores)}"
+            ),
+            "spark.worker.cleanup.enabled": "true",
+        })
+    spark = get_spark(app_name=f"scaling-{master}", master=master, extra_conf=conf)
+    sc = spark.sparkContext
+
+    def jvms() -> int:
+        return sc._jsc.sc().getExecutorMemoryStatus().size()
+
+    deadline = time.time() + 120
+    while lc and jvms() <= n_exec and time.time() < deadline:
+        time.sleep(0.5)
+    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
+    # start a Python worker (and import pandas) on every core
+    warm = F.pandas_udf(lambda s: s, "long")
+    spark.range(0, cores * 4, 1, cores * 2).select(F.sum(warm("id"))).collect()
 
     pages = spark.read.parquet(path)
-
-    # SPARK_GRAFT_MODE selects which engine plan the scaling evidence
-    # measures (BENCH/scaling_history.jsonl rows carry the mode; pools
-    # never mix):
-    #   driver      (default) the engine's OWN size-adaptive plan. At the
-    #               4M-page corpus (~110k surfaces, past
-    #               max_driver_linking=100k) that now means DISTRIBUTED
-    #               MinHash-LSH linking + union-find CC on the collected
-    #               edge set + the zero-shuffle broadcast-dict assembly
-    #               (the two thresholds are orthogonal, see
-    #               plans/pipeline.py) — so the distributed linking stage
-    #               is inside this headline window too.
-    #   distributed EVERY size-adaptive escape hatch forced OFF
-    #               (max_driver_linking=0: distributed LSH linking;
-    #               cc_small_graph_threshold=0: alternating-star CC, no
-    #               union-find collect; surface_broadcast='aqe': dim join
-    #               AND assembly left to runtime decisions — the
-    #               join + corpus-sized (url, canon) distinct exchange
-    #               runs, the plan a 10^9-surface crawl would need). This
-    #               mode also materializes the merged-entities table
-    #               (merge_entities's corpus-wide groupBy shuffle), so the
-    #               measured job covers all four shuffle stages the
-    #               round-3 verdict flagged as outside the evidence
-    #               window: mention-distinct exchange, merge groupBy, LSH
-    #               self-join, star CC.
-    mode = os.environ.get("SPARK_GRAFT_MODE", "driver")
-    # the measured window runs the PRODUCTION per-shingle hash family
-    # (xxhash64, ~5x cheaper than the md5-derived oracle family; the
-    # oracled queries keep "portable" for DuckDB twin-ability — round-4
-    # verdict item #1). Both modes use the same family, so the
-    # identical-triples parity gate between them is unaffected.
-    kw = {"linking_hash_family": os.environ.get("SPARK_GRAFT_HASH", "fast")}
+    kw = {"linking_hash_family": HASH_FAMILY}
     if mode == "distributed":
-        kw.update(
-            max_driver_linking=0,
-            surface_broadcast="aqe",
-            cc_small_graph_threshold=0,
-        )
+        kw.update(max_driver_linking=0, surface_broadcast="aqe", cc_small_graph_threshold=0)
 
     t0 = time.time()
     res = build_triples(spark, pages, **kw)
     n_triples = res.triples.count()
     n_entities = res.entities.count() if mode == "distributed" else None
     secs = time.time() - t0
-    print(
-        json.dumps(
-            {
-                "cores": cores,
-                "n_pages": n_pages,
-                "mode": mode,
-                "secs": round(secs, 3),
-                "triples": n_triples,
-                "entities": n_entities,
-                "pages_per_sec": round(n_pages / secs, 1),
-                "triples_per_sec": round(n_triples / secs, 1),
-            }
-        )
-    )
+    triples_hash = res.triples.agg(F.bit_xor(F.xxhash64("subj", "pred", "obj"))).first()[0]
+    print(json.dumps({
+        "master": master,
+        "cores": cores,
+        "n_pages": n_pages,
+        "mode": mode,
+        "secs": round(secs, 3),
+        "triples": n_triples,
+        "entities": n_entities,
+        "jvms": jvms(),
+        "triples_hash": triples_hash,
+        "pages_per_sec": round(n_pages / secs, 1),
+        "triples_per_sec": round(n_triples / secs, 1),
+    }))
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -1,551 +1,104 @@
 #!/usr/bin/env python
-"""Scaling-efficiency evidence: same KG-pipeline job, same input, at multiple
-parallelism levels (the sandbox proxy for N vs 4N executors per BASELINE.md).
-Each level runs in its own subprocess (own JVM).
+"""The north rule's N -> 4N pair on one box: the same job at 1 and 4 cores.
 
-    python bench/scaling.py [n_pages] [cores_csv] [reps]
-    python bench/scaling.py 2000000 2,8,32 2
+    python bench/scaling.py <n_pages> threads|executors [reps] [driver|distributed]
 
-Each level runs `reps` times (default 2) and the BEST wall-clock is kept —
-single-machine runs have ±20-30% noise (page cache, CPU frequency, JIT),
-and the minimum is the least-contaminated estimate of the job's true cost.
+- threads: local[1] -> local[4], task threads in one JVM heap;
+- executors: local-cluster[1,1,2560] -> local-cluster[4,1,2560], one
+  executor JVM per core with a 2 GB heap each, beside a 4 GB driver JVM.
 
-Efficiency is reported for every 4x pair in the level list:
-eff(a->b) = (thr_b / thr_a) / (b / a); gate: >= 0.8 on the headline pair.
+Each rep (default 3) runs bench/pipeline_job.py at both levels in fresh
+processes, alternating which goes first, then times a fixed pure-Python
+control as 1 and 4 processes in the same window. Prints one JSON line:
+per-level seconds and medians, efficiency = (median_N / median_4N) / 4, the
+control's efficiency (its 1-process time over its 4-process time: what
+perfect scaling reads on this box) and their ratio, `normalized`. Exits
+non-zero when a run fails or the runs' triple-set hashes differ.
 
-Why two pairs: a single box shares one memory bus across all cores. The
-string/Arrow-heavy stages saturate memory bandwidth somewhere between 8 and
-32 local threads (a pure-CPU control workload scales 8->32 essentially
-perfectly, see BENCH/BASELINE.md), so the 2->8 pair evidences the job's
-algorithmic scaling (what N->4N EXECUTORS — each with its own memory bus —
-would see), while 8->32 shows the single-box bandwidth ceiling.
+On one box the 4N level shares the memory bus, and on the executors axis
+the driver JVM shares the cores too; a real cluster adds neither.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
-import os
 import pathlib
+import statistics
 import subprocess
 import sys
 import time
 
-ROOT = pathlib.Path(__file__).resolve().parent.parent
-HISTORY = ROOT / "BENCH" / "scaling_history.jsonl"
-
-# modules whose source determines the measured job — ONLY what
-# pipeline_job transitively executes (query registries, tests, and
-# operators the KG job never imports — dedup/similarity/asof/graph/
-# multimodal — are excluded, so work on them can't spuriously invalidate
-# pooled evidence)
-_FP_GLOBS = [
-    "ocds_entity_extract_spark/plans/*.py",
-    "ocds_entity_extract_spark/operators/mentions.py",
-    "ocds_entity_extract_spark/operators/linking.py",
-    "ocds_entity_extract_spark/operators/cc.py",
-    "ocds_entity_extract_spark/operators/merge.py",
-    "ocds_entity_extract_spark/functions/*.py",
-    "ocds_entity_extract_spark/session.py",
-    "ocds_entity_extract_spark/schemas.py",
-    "ocds_entity_extract_spark/datagen.py",
-    "bench/pipeline_job.py",
-]
+JOB = pathlib.Path(__file__).resolve().parent / "pipeline_job.py"
+AXES = {
+    "threads": ("local[1]", "local[4]"),
+    "executors": ("local-cluster[1,1,2560]", "local-cluster[4,1,2560]"),
+}
+CONTROL = "x = 0\nfor i in range(10_000_000):\n    x += i * i"
 
 
-def engine_fingerprint() -> str:
-    """Hash of the pipeline-relevant source: history rows pool ONLY within
-    one fingerprint, so evidence can never mix engine versions."""
-    h = hashlib.sha256()
-    for g in _FP_GLOBS:
-        for p in sorted(ROOT.glob(g)):
-            h.update(p.read_bytes())
-    return h.hexdigest()[:12]
-
-
-def append_history(rec: dict) -> None:
-    HISTORY.parent.mkdir(exist_ok=True)
-    with HISTORY.open("a") as f:
-        f.write(json.dumps(rec) + "\n")
-
-
-def load_history(fp: str, n_pages: int) -> tuple[dict[str, list[dict]], list[dict]]:
-    """({mode: round rows} for this fingerprint+corpus, all control rows).
-
-    Rows pool per (fingerprint, n_pages, MODE) — the driver fast path and
-    the forced-distributed plan are different jobs and must never share a
-    minima pool (rows written before the mode field default to 'driver')."""
-    rounds: dict[str, list[dict]] = {}
-    controls: list[dict] = []
-    if HISTORY.exists():
-        for line in HISTORY.read_text().splitlines():
-            if not line.strip():
-                continue
-            r = json.loads(line)
-            if r.get("kind") == "round" and r.get("fp") == fp and r.get(
-                "n_pages"
-            ) == n_pages:
-                rounds.setdefault(r.get("mode", "driver"), []).append(r)
-            elif r.get("kind") == "control":
-                controls.append(r)
-    return rounds, controls
-
-
-def lc_summary(fp: str, n_pages: int) -> str:
-    """Markdown section summarizing the EXECUTOR-axis evidence (real
-    executor JVMs via local-cluster, bench/scaling_lc.py) for this engine
-    fingerprint and the CURRENT lc-harness source (scaling_lc.lc_fingerprint),
-    forced-distributed rows only — the same pool bench/scaling_lc.py
-    reports, through the same formatter. Empty when no row matches. Full
-    methodology in BENCH/LOCAL_CLUSTER.md."""
-    from scaling_lc import lc_fingerprint, load_rounds, pooled
-
-    lcfp = lc_fingerprint()
-    rounds = load_rounds(fp, lcfp, n_pages, "distributed")
-    if not rounds:
-        return ""
-    pool = pooled(rounds, n_pages)
-    return f"""## N -> 4N EXECUTORS (real executor JVMs, local-cluster proxy)
-
-The tables above scale THREADS in one shared JVM heap; the north rule
-scales EXECUTORS. bench/scaling_lc.py scales the number of real executor
-JVMs (`local-cluster[n,cores,mem]`, one CoarseGrainedExecutorBackend
-process each, own heap/GC/Python workers/shuffle server, pools sized by
-the executor's own slot count via -XX:ActiveProcessorCount — what a
-cgroup-limited container presents on a real cluster), holding per-executor
-cores and heap fixed. Same forced-distributed job, same corpus, same
-pooled-minima methodology (lc-harness fingerprint {lcfp}; full
-methodology + bias notes in BENCH/LOCAL_CLUSTER.md):
-
-{pool["table"]}
-
-{pool["eff_lines"]}
-
-"""
-
-
-def cpu_control(levels: list[int]) -> dict[int, float]:
-    """Pure-CPU control: n independent python processes doing integer work.
-
-    Measures what PERFECT parallel scaling looks like on this box at each
-    level (captures DVFS per-core frequency drop as more cores activate,
-    without any memory/JVM/shuffle effects). Job efficiency is reported
-    raw AND normalized by the control's own efficiency.
-    """
-    import time
-
-    def run(n: int) -> float:
-        t0 = time.time()
-        ps = [
-            subprocess.Popen(
-                [sys.executable, "-c", "x=0\nfor i in range(30_000_000): x+=i*i"]
-            )
-            for _ in range(n)
-        ]
-        for p in ps:
-            p.wait()
-        return time.time() - t0
-
-    run(2)  # warm the governor
-    return {n: n / run(n) for n in levels}  # work-units per second
-
-
-def run_once(cores: int, n_pages: int, mode: str = "driver") -> dict:
+def job(master: str, n_pages: int, mode: str) -> dict | None:
+    """One pipeline_job.py run in a fresh process; None when it fails."""
     out = subprocess.run(
-        [sys.executable, str(ROOT / "bench" / "pipeline_job.py"), str(cores), str(n_pages)],
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=str(ROOT),
-        env={
-            **os.environ,
-            # engine-default driver memory (8g, session.py) — in local mode
-            # the driver heap IS the executor heap, and the old 16g
-            # override measured ~8-12% SLOWER than default at the 4M
-            # corpus (round-5 codec A/B ran direct pipeline_job at
-            # default: local[2] 216.6s / local[8] 77.3s vs the 16g pool's
-            # 225.8 / 86.9 plateau — bigger heap, later GC, worse
-            # locality on a bus-bound job). Rows from both configs pool;
-            # minima take the honest best.
-            "SPARK_GRAFT_MODE": mode,
-        },
+        [sys.executable, str(JOB), master, str(n_pages), mode],
+        capture_output=True, text=True, cwd=JOB.parent.parent,
     )
-    line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if out.returncode or not lines:
+        print(f"# {master} failed (exit {out.returncode}):\n{out.stderr[-3000:]}", file=sys.stderr)
+        return None
+    return json.loads(lines[-1])
 
 
-def run_levels_interleaved(
-    levels: list[int], n_pages: int, reps: int, fp: str, run_id: str,
-    mode: str = "driver",
-) -> dict[int, dict]:
-    """ROUND-ROBIN reps across levels (2,8,32, 2,8,32, ...), best-of kept.
-
-    Per-level blocks confound slow box-level drift (host co-tenancy,
-    thermal state, page cache) with the parallelism level itself —
-    measured on this sandbox the SAME binary's local[8] block moved
-    82.8s -> 105.6s between two back-to-back runs, a 27% swing that
-    dwarfs the effect under test. Interleaving makes every level sample
-    every time window, so drift cancels out of the between-level RATIO
-    (the quantity the gate is about) instead of biasing it. Every round is
-    also appended to BENCH/scaling_history.jsonl (keyed by the engine
-    fingerprint), so evidence POOLS across invocations/windows instead of
-    each run overwriting the last — on a co-tenant box no single window is
-    clean at every level, but per-level minima across windows converge to
-    the job's true cost.
-    """
-    best: dict[int, dict] = {}
-    for i in range(reps):
-        for c in levels:
-            r = run_once(c, n_pages, mode)
-            print(
-                f"#   round {i} [{mode}] local[{c}]: {r['secs']}s",
-                file=sys.stderr,
-            )
-            append_history(
-                {
-                    "kind": "round",
-                    "fp": fp,
-                    "run": run_id,
-                    "mode": mode,
-                    "n_pages": n_pages,
-                    "cores": c,
-                    "secs": r["secs"],
-                    "triples": r["triples"],
-                    "entities": r.get("entities"),
-                    "ts": round(time.time(), 1),
-                }
-            )
-            if c not in best or r["secs"] < best[c]["secs"]:
-                best[c] = r
-    return best
+def control(n: int) -> float:
+    """Seconds for n processes each running CONTROL at once."""
+    t0 = time.perf_counter()
+    procs = [subprocess.Popen([sys.executable, "-c", CONTROL]) for _ in range(n)]
+    for p in procs:
+        p.wait()
+    return time.perf_counter() - t0
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    report_only = "--report-only" in sys.argv[1:]
-    mode = "driver"
-    for a in sys.argv[1:]:
-        if a.startswith("--mode="):
-            mode = a.split("=", 1)[1]
-    assert mode in ("driver", "distributed"), mode
-    n_pages = int(args[0]) if args else 2_000_000
-    if len(args) > 2:                            # legacy: n_pages low high [reps]
-        try:
-            levels = [int(args[1]), int(args[2])]
-            reps = int(args[3]) if len(args) > 3 else 2
-        except ValueError:
-            levels = [int(c) for c in args[1].split(",")]
-            reps = int(args[2])
-    elif len(args) > 1:
-        levels = [int(c) for c in args[1].split(",")]
-        reps = 2
-    else:
-        levels, reps = [2, 8, 32], 2
+    n_pages, axis = int(sys.argv[1]), sys.argv[2]
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    mode = sys.argv[4] if len(sys.argv) > 4 else "driver"
+    levels = AXES[axis]
+    secs: dict[str, list[float]] = {m: [] for m in levels}
+    ctrl: dict[int, list[float]] = {1: [], 4: []}
+    hashes, triples, failed = set(), set(), 0
+    for rep in range(reps):
+        for master in levels if rep % 2 == 0 else levels[::-1]:
+            r = job(master, n_pages, mode)
+            if r is None:
+                failed += 1
+                continue
+            print(f"# rep {rep} {master}: {r['secs']} s", file=sys.stderr)
+            secs[master].append(r["secs"])
+            hashes.add(r["triples_hash"])
+            triples.add(r["triples"])
+        for n in (1, 4) if rep % 2 == 0 else (4, 1):
+            ctrl[n].append(round(control(n), 3))
 
-    fp = engine_fingerprint()
-    run_id = f"r{int(time.time())}"
-    if not report_only:
-        print(
-            f"# running {reps} interleaved rounds over {levels} "
-            f"(fp {fp}, mode {mode}) ...",
-            file=sys.stderr,
-        )
-        run_levels_interleaved(levels, n_pages, reps, fp, run_id, mode)
-        print("# running pure-CPU control ...", file=sys.stderr)
-        ctrl = cpu_control(levels)
-        pairs0 = [
-            (a, b)
-            for i, a in enumerate(levels)
-            for b in levels[i + 1:]
-            if b == 4 * a
-        ]
-        append_history(
-            {
-                "kind": "control",
-                "run": run_id,
-                "pair_eff": {
-                    f"{a}->{b}": round((ctrl[b] / ctrl[a]) / (b / a), 3)
-                    for a, b in pairs0
-                },
-                "ts": round(time.time(), 1),
-            }
-        )
-
-    rounds_by_mode, controls = load_history(fp, n_pages)
-    if not rounds_by_mode:
-        print("# no history rows for this fingerprint — run without "
-              "--report-only first", file=sys.stderr)
-        return 1
-
-    def _ctrl_list(a, b):
-        vals = [
-            c["pair_eff"][f"{a}->{b}"]
-            for c in controls
-            if f"{a}->{b}" in c.get("pair_eff", {})
-        ]
-        return sorted(vals)
-
-    def _median(vs):
-        return vs[len(vs) // 2] if len(vs) % 2 else (vs[len(vs) // 2 - 1] + vs[len(vs) // 2]) / 2
-
-    MODE_NOTES = {
-        "driver": (
-            "the engine's OWN size-adaptive plan (all defaults). Since the "
-            "round-4 uncapped entity universe the 4M-page corpus carries "
-            "~110k distinct surfaces — past max_driver_linking=100k — so "
-            "the adaptive threshold itself selects DISTRIBUTED MinHash-LSH "
-            "linking; CC runs union-find on the collected edge set (nodes "
-            "≪ 1M) and assembly uses the zero-shuffle broadcast-dict pass "
-            "(dict fits max_broadcast_surfaces — thresholds are "
-            "orthogonal, plans/pipeline.py). Job = triples.count()."
-        ),
-        "distributed": (
-            "every size-adaptive escape hatch FORCED OFF "
-            "(max_driver_linking=0, cc_small_graph_threshold=0, "
-            "surface_broadcast='aqe') — the exact plan a 100 TB corpus "
-            "would run: corpus-sized mention-distinct exchange, "
-            "distributed MinHash-LSH self-join, alternating-star "
-            "connected components, AQE-decided dim join. Job = "
-            "triples.count() + entities.count(), so the merged-entities "
-            "groupBy shuffle (merge_entities) is inside the timed window "
-            "too."
-        ),
-    }
-
-    sections = []
-    summary: dict = {"fingerprint": fp, "modes": {}}
-    gate_ok = True
-    total_rounds = 0
-    for m in sorted(rounds_by_mode):
-        rounds = rounds_by_mode[m]
-        total_rounds += len(rounds)
-        levels_m = sorted({r["cores"] for r in rounds})
-        best = {
-            c: min((r for r in rounds if r["cores"] == c), key=lambda r: r["secs"])
-            for c in levels_m
-        }
-        n_rounds = {c: sum(1 for r in rounds if r["cores"] == c) for c in levels_m}
-        windows = sorted({r["run"] for r in rounds})
-        pairs = [
-            (a, b)
-            for i, a in enumerate(levels_m)
-            for b in levels_m[i + 1:]
-            if b == 4 * a
-        ]
-        effs = {
-            (a, b): (best[a]["secs"] / best[b]["secs"]) / (b / a)
-            for a, b in pairs
-        }
-        # Paired WITHIN-window ratios: interleaving cancels slow box
-        # drift inside one window, so a window's own min-vs-min ratio is
-        # drift-free even when the whole window is loud; the median
-        # across windows is a robust estimator that — unlike the pooled
-        # per-level minima — does not require every level to have caught
-        # a quiet co-tenancy moment. Agreement between the two views is
-        # the evidence the pooled figure is converged, not a sampling
-        # artifact of which level got lucky.
-        by_run: dict[str, dict[int, float]] = {}
-        for r in rounds:
-            w = by_run.setdefault(r["run"], {})
-            w[r["cores"]] = min(w.get(r["cores"], r["secs"]), r["secs"])
-        paired = {
-            p: sorted(
-                (w[p[0]] / w[p[1]]) / (p[1] / p[0])
-                for w in by_run.values()
-                if p[0] in w and p[1] in w
-            )
-            for p in pairs
-        }
-        ctrl_effs = {
-            p: _median(_ctrl_list(*p)) if _ctrl_list(*p) else None for p in pairs
-        }
-        headline = pairs[0] if pairs else (levels_m[0], levels_m[-1])
-
-        rows = "\n".join(
-            f"| local[{c}] | {best[c]['secs']} | {round(n_pages / best[c]['secs'], 1)} |"
-            f" {round(best[c]['triples'] / best[c]['secs'], 1)} | {n_rounds[c]} |"
-            for c in levels_m
-        )
-
-        def _eff_row(a, b, e):
-            ce = ctrl_effs[(a, b)]
-            cl = _ctrl_list(a, b)
-            if ce:
-                return (
-                    f"- **local[{a}] -> local[{b}] (x4 cores): {e:.3f}** "
-                    f"(pure-CPU control, median of {len(cl)} windows: {ce:.3f}, "
-                    f"range {cl[0]:.2f}-{cl[-1]:.2f}; control-normalized: {e / ce:.3f})"
-                )
-            return f"- **local[{a}] -> local[{b}] (x4 cores): {e:.3f}**"
-
-        eff_rows = "\n".join(_eff_row(a, b, e) for (a, b), e in effs.items())
-        paired_rows = "\n".join(
-            f"- local[{a}] -> local[{b}]: median {_median(v):.3f}, "
-            f"best window {v[-1]:.3f}, worst {v[0]:.3f} "
-            f"({len(v)} windows with both levels)"
-            for (a, b), v in paired.items()
-            if v
-        )
-        if paired_rows:
-            paired_rows = (
-                "\nPaired within-window ratios (each window's own "
-                "min-vs-min — drift cancels inside a window by the "
-                "interleaving, so this view needs no quiet window; its "
-                "agreement with the pooled number above shows the pool "
-                "is converged, not lucky):\n\n" + paired_rows + "\n"
-            )
-        t_all = {best[c]["triples"] for c in levels_m}
-        ident = f"{len(t_all) == 1} ({t_all.pop()})"
-        sections.append(f"""## mode `{m}` — {MODE_NOTES.get(m, '')}
-
-Pooled per-level minima over {len(rounds)} interleaved rounds across
-{len(windows)} measurement windows at this fingerprint+mode.
-
-| parallelism | wall (s) | pages/s | triples/s | rounds pooled |
-|---|---|---|---|---|
-{rows}
-
-Scaling efficiency per 4x pair, measured as (thr_4N/thr_N) / 4
-(target >= 0.8 per BASELINE.json north_rule on the headline pair
-local[{headline[0]}]->local[{headline[1]}]):
-
-{eff_rows}
-{paired_rows}
-Triples emitted identical at every level and round: {ident}.
-""")
-        summary["modes"][m] = {
-            "rounds_pooled": len(rounds),
-            "windows": len(windows),
-            "efficiencies": {f"{a}->{b}": round(e, 3) for (a, b), e in effs.items()},
-            "control_efficiencies": {
-                f"{a}->{b}": ctrl_effs[(a, b)] for a, b in pairs
-            },
-            "normalized": {
-                f"{a}->{b}": round(e / ctrl_effs[(a, b)], 3)
-                for (a, b), e in effs.items()
-                if ctrl_effs[(a, b)]
-            },
-            "paired_window": {
-                f"{a}->{b}": {
-                    "n_windows": len(v),
-                    "median": round(_median(v), 3),
-                    "best": round(v[-1], 3),
-                }
-                for (a, b), v in paired.items()
-                if v
-            },
-            "levels": {
-                str(c): {
-                    "cores": c,
-                    "n_pages": n_pages,
-                    "secs": best[c]["secs"],
-                    "triples": best[c]["triples"],
-                    "pages_per_sec": round(n_pages / best[c]["secs"], 1),
-                    "triples_per_sec": round(best[c]["triples"] / best[c]["secs"], 1),
-                    "rounds": n_rounds[c],
-                }
-                for c in levels_m
-            },
-        }
-        # gate on RAW efficiency for the headline pair (the north-rule
-        # number) in EVERY measured mode; control-normalized is context
-        gate_ok = gate_ok and effs.get(headline, 0.0) >= 0.8
-
-    lo, hi = (2, 8)
-    md = f"""# BENCH/BASELINE — scaling evidence (N vs 4N proxy)
-
-Same KG-pipeline job (pages -> triples, full plan incl. pandas-UDF text
-extraction, mention detection, classification, merge, MinHash-LSH linking,
-connected components, triple assembly) on the SAME deterministic input
-({n_pages} pages, seed=42), each level in a fresh JVM. Timing excludes JVM
-startup, Python-worker warmup, corpus generation and input materialization.
-
-Evidence is POOLED per-level minima over every interleaved round recorded
-for this exact engine version (fingerprint {fp}) in
-BENCH/scaling_history.jsonl, keyed by (fingerprint, corpus size, MODE) —
-{total_rounds} rounds total. Rounds are ROUND-ROBIN-interleaved across
-levels within each window, and minima pool ACROSS windows, because host
-co-tenancy moves identical binaries ±25-30% between windows (the
-per-window pure-CPU control quantifies it) — no single window is clean at
-every level, but the per-level minimum converges to the job's true cost.
-
-Two modes are measured (round-3 verdict ask #1): the engine's own
-size-adaptive plan at this corpus size (`driver`) AND the forced
-fully-distributed plan (`distributed`) — the latter is the plan that runs
-at 100 TB, so its 2->8 pair is the evidence that the shuffle stages
-(mention-distinct exchange, merge groupBy, LSH self-join, star CC)
-scale, not just the extraction scan. Both modes emit the IDENTICAL
-triple set — the per-mode tables show the same triple count at every
-level and round, and set-equality (plus per-predicate P/R vs the golden
-corpus) is pytest-gated in
-tests/test_linking_cc.py::test_build_triples_driver_vs_distributed_linking
-— so the two timing sections compare PLANS on fixed output, not
-different outputs.
-
-{chr(10).join(sections)}
-{lc_summary(fp, n_pages)}## Why the low pair is the headline (single-box ceiling + control)
-
-All {os.cpu_count()} sandbox cores share ONE memory bus and one frequency/
-thermal budget. The pure-CPU control (independent python processes doing
-integer work — no JVM, no shuffles, no shared state) measures what PERFECT
-parallel code achieves on this box at each 4x step; the job's efficiency
-divided by the control's is the share attributable to the PLAN rather than
-the hardware. The high pair additionally hits the shared memory-bandwidth
-ceiling (the engine's hot stages move strings/Arrow batches) — a
-single-box artifact: on a real cluster each of the 4N executors brings its
-own memory bus and power budget, which is what the
-local[{lo}] -> local[{hi}] pair models. The high pair is reported anyway
-as the transparent single-box stress number.
-
-## Out-of-pool quiet-window reference (round-5 codec A/B, same job)
-
-The round-5 shuffle-codec A/B ran the IDENTICAL forced-distributed job
-directly (bench/pipeline_job.py, lz4 arm, engine-default config) in a
-quiet co-tenancy window: local[2] 216.6s / local[8] 77.3s — raw 2->8
-0.700. Those runs predate the final file state by a comment-only margin,
-so they are reported as context rather than pooled as evidence; they
-bound what the pooled minima converge to when the box cooperates (the
-pool's per-level minima above are >= these by construction of minima —
-any gap is co-tenancy the pool hasn't yet seen a quiet window for, not
-engine cost).
-
-## Per-stage event-log attribution (round 5 — why the residual is the box, not the plan)
-
-Spark event logs (SPARK_GRAFT_EVENTLOG=<dir>, parsed by
-bench/evlog_report.py) for one forced-distributed run per level on the
-same warm 4M-page corpus. Shuffle BYTES are co-tenancy-independent (the
-plan's payload); CPU-seconds include memory-stall cycles, so their
-inflation at higher thread counts on one socket is the direct signature
-of bus saturation:
-
-| metric (whole job, JVM side) | local[2] | local[8] | reading |
-|---|---|---|---|
-| shuffle write / read bytes | 665 / 675 MB | 764 / 774 MB | payload ~invariant (the +15% is per-task-dedup granularity at more tasks) — no skew, no plan blow-up |
-| executor CPU core-seconds | 255.9 | 360.8 | **+41% CPU for identical work** = stall-cycle inflation, 8 threads on one socket |
-| JVM GC seconds | 11.8 | 145.3 | one shared heap, 4x allocation rate |
-| biggest exchange, map side (corpus (url,canon) distinct) | 37.6 cpu-s / 438 MB | 49.5 cpu-s / 445 MB | same bytes, +32% CPU |
-| hottest spans-cache consumer stage | 65.7 cpu-s | 131.1 cpu-s | same work, **2x CPU** — cache-scan bandwidth |
-| extraction stage (Python workers) | 356.6 core-s | 353.9 core-s | FLAT core-seconds: partition-parallel Python scales cleanly |
-| cpu/run ratio on shuffle stages | 0.95-1.00 | 0.90-0.94 | stages are compute/stall-bound, never fetch/IO-blocked |
-
-Reading: the plan moves the SAME ~0.7 GB of shuffle payload at every
-level and its stages are never blocked on fetches — the raw pair is
-capped by the single socket inflating JVM CPU-seconds (+41% total, 2x on
-cache-streaming stages) and GC (12x) as threads share one memory bus and
-one heap. The dominant extraction stage (Python workers, ~58% of the
-2-core job) is flat in core-seconds — the faithful proxy for the
-north-rule's N -> 4N EXECUTOR step, where each executor adds its own
-memory controller and heap. Round-5 plan work removed the product-triple
-exchange outright and moved linking to the xxhash64 family; what remains
-sub-scaling on one box is, by these numbers, hardware contention rather
-than shuffle volume, skew, or a hidden serial stage.
-"""
-    (ROOT / "BENCH").mkdir(exist_ok=True)
-    (ROOT / "BENCH" / "BASELINE.md").write_text(md)
-    print(md)
-    print(json.dumps(summary))
-    return 0 if gate_ok else 1
+    median = {m: round(statistics.median(v), 3) if v else None for m, v in secs.items()}
+    lo, hi = median.values()
+    eff = lo / hi / 4 if lo and hi else None
+    ctrl_eff = statistics.median(ctrl[1]) / statistics.median(ctrl[4])
+    print(json.dumps({
+        "axis": axis,
+        "mode": mode,
+        "n_pages": n_pages,
+        "secs": secs,
+        "median": median,
+        "efficiency": round(eff, 3) if eff else None,
+        "control_secs": ctrl,
+        "control_efficiency": round(ctrl_eff, 3),
+        "normalized": round(eff / ctrl_eff, 3) if eff else None,
+        "triples": sorted(triples),
+        "triples_hash": sorted(hashes),
+        "failed": failed,
+    }))
+    return 1 if failed or len(hashes) != 1 else 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    sys.exit(main())

@@ -4,8 +4,8 @@ Scale stance (100 TB / 1000-executor design, tested on local[N]):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting for
   hot domains/entities (north_rule requirement), dynamic join strategy.
 - Arrow enabled for all pandas-UDF stages (the only Python in the hot path).
-- `spark.sql.shuffle.partitions` sized by caller (max(8, 2N) for local[N];
-  on a real cluster this is ~2-3x total cores and AQE coalesces down).
+- `spark.sql.shuffle.partitions` is max(8, 2x the master's cores) (see
+  `_master_cores`; on a real cluster ~2-3x total cores, AQE coalesces down).
 - Nested schema pruning stays on (default) so struct-typed mention columns
   prune at the parquet scan.
 - In local mode the Python workers come from `pyworker` (Spark's daemon with
@@ -42,19 +42,13 @@ from pyspark.sql.types import DataType, StructType
 def get_spark(
     app_name: str,
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        # local[N] → N*2 shuffle partitions; AQE coalesces small ones.
-        n = cpus if "local" not in master or "*" in master else _local_n(master, cpus)
-        shuffle_partitions = max(8, n * 2)
-
-    conf = {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+    conf = {  # 2 shuffle partitions per core; AQE coalesces small ones
+        "spark.sql.shuffle.partitions": str(max(8, 2 * _master_cores(master, cpus))),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # coalesce small shuffles by SIZE, not up to defaultParallelism:
@@ -166,11 +160,13 @@ def _daemon_module(master: str) -> str | None:
     return None
 
 
-def _local_n(master: str, default: int) -> int:
-    try:
-        return int(master.split("[", 1)[1].rstrip("]"))
-    except (IndexError, ValueError):
-        return default
+def _master_cores(master: str, cpus: int) -> int:
+    """Task slots of a `local`, `local[N]` or `local-cluster[n,c,mem]`
+    master; `cpus` for `local[*]` and any other."""
+    m = re.fullmatch(r"local(?:\[(\d+)\]|-cluster\[(\d+),(\d+),\d+\])?", master)
+    if not m:
+        return cpus
+    return int(m[2]) * int(m[3]) if m[2] else int(m[1] or 1)
 
 
 # Environment through which Spark's launcher puts more entries on the driver
@@ -353,6 +349,8 @@ def _publish_archive(proc: subprocess.Popen, writer: str) -> None:
     """At interpreter exit: let the driver JVM finish its dump, publish it as
     `<key>.<size>.jsa` and delete the engine's older archives."""
     if proc.poll() is None:
+        if SparkContext._active_spark_context is not None:  # else its accumulator
+            SparkContext._active_spark_context.stop()  # server reads a closed socket
         if not proc.stdin.closed:
             proc.stdin.close()  # the driver JVM exits when its stdin closes
         try:

@@ -7,7 +7,7 @@ from ocds_entity_extract_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark(app_name="tests", master="local[4]")
     yield s
     s.stop()
 

@@ -236,8 +236,8 @@ def test_build_triples_parity_on_coined_corpus(spark, monkeypatch):
     universe extends past the handcrafted vocabulary into COINED tokens
     (datagen._coined_token — the regime the 4M-page scaling corpus runs
     in), the engine's own adaptive plan and the fully-forced distributed
-    plan (the exact knobs bench/pipeline_job.py's SPARK_GRAFT_MODE=
-    distributed sets) emit the identical triple set, and the golden
+    plan (the exact knobs bench/pipeline_job.py's `distributed` mode
+    sets) emit the identical triple set, and the golden
     linking quality holds (precision/recall >= 0.95, the BASELINE gate)."""
     import ocds_entity_extract_spark.datagen as dg
     from ocds_entity_extract_spark.plans.pipeline import build_triples

@@ -4,100 +4,51 @@
 standalone Master/Worker path used by spark-submit on a cluster), so this
 test covers what single-JVM local[N] cannot: module-pickled pandas UDFs
 imported by EXECUTOR-side Python workers (spark.executorEnv.PYTHONPATH —
-the --py-files analogue, bench/submit.sh), cross-process shuffle fetches,
-and broadcast distribution to non-driver block managers. It is the pytest
-twin of the executor-scaling evidence in BENCH/LOCAL_CLUSTER.md
-(bench/pipeline_job_lc.py).
+the --py-files analogue), cross-process shuffle fetches, and broadcast
+distribution to non-driver block managers. The job is bench/pipeline_job.py,
+the executor axis of bench/scaling.py.
 
 One SparkContext per process, so the local-cluster session runs in a
 subprocess; the assertion is OUTPUT IDENTITY — the triple set hash from
 the multi-JVM run must equal the one computed by the in-process local[4]
-session on the same 300-page corpus.
+session on the same 300-page parquet corpus.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import pathlib
 import subprocess
 import sys
 
+from pyspark.sql import functions as F
+
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
-_SUBPROC = r"""
-import hashlib, json, sys
-sys.path.insert(0, {root!r})
-from ocds_entity_extract_spark.datagen import generate_corpus
-from ocds_entity_extract_spark.functions.classify import load_classifier_override
-from ocds_entity_extract_spark.plans.pipeline import build_triples
-from ocds_entity_extract_spark.schemas import CLASSIFIER_SCHEMA, PAGES_SCHEMA
-from ocds_entity_extract_spark.session import get_spark
 
-spark = get_spark(
-    app_name="lc-test",
-    master="local-cluster[2,1,1536]",
-    shuffle_partitions=8,
-    extra_conf={{
-        "spark.executor.memory": "1g",
-        "spark.driver.memory": "2g",
-        "spark.executorEnv.PYTHONPATH": {root!r},
-    }},
-)
-pages_rows, golden, aux = generate_corpus(n_pages=300, seed=42)
-pages = spark.createDataFrame(pages_rows, schema=PAGES_SCHEMA)
-override = None
-if aux["classifier_override"]:
-    override = load_classifier_override(
-        spark,
-        spark.createDataFrame(aux["classifier_override"], schema=CLASSIFIER_SCHEMA),
-    )
-res = build_triples(spark, pages, override)
-got = sorted((r["subj"], r["pred"], r["obj"]) for r in res.triples.collect())
-h = hashlib.md5(json.dumps(got).encode()).hexdigest()
-# at least one task must have run on a NON-driver executor JVM
-execs = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size()
-print(json.dumps({{"hash": h, "n": len(got), "executors": execs}}))
-spark.stop()
-"""
-
-
-def _triple_hash(spark, small_corpus):
-    from ocds_entity_extract_spark.functions.classify import load_classifier_override
+def test_local_cluster_matches_local_mode(spark, tmp_path, monkeypatch):
     from ocds_entity_extract_spark.plans.pipeline import build_triples
-    from ocds_entity_extract_spark.schemas import CLASSIFIER_SCHEMA, PAGES_SCHEMA
 
-    pages_rows, _, aux = small_corpus
-    pages = spark.createDataFrame(pages_rows, schema=PAGES_SCHEMA)
-    override = None
-    if aux["classifier_override"]:
-        override = load_classifier_override(
-            spark,
-            spark.createDataFrame(aux["classifier_override"], schema=CLASSIFIER_SCHEMA),
-        )
-    res = build_triples(spark, pages, override)
-    got = sorted((r["subj"], r["pred"], r["obj"]) for r in res.triples.collect())
-    return hashlib.md5(json.dumps(got).encode()).hexdigest(), len(got)
-
-
-def test_local_cluster_matches_local_mode(spark, small_corpus, tmp_path):
-    want_hash, want_n = _triple_hash(spark, small_corpus)
-
-    script = tmp_path / "lc_job.py"
-    script.write_text(_SUBPROC.format(root=str(ROOT)))
     out = subprocess.run(
-        [sys.executable, str(script)],
+        [sys.executable, str(ROOT / "bench" / "pipeline_job.py"), "local-cluster[2,1,1536]", "300"],
         capture_output=True,
         text=True,
         timeout=600,
         cwd=str(ROOT),
-        env={**os.environ, "SPARK_GRAFT_MASTER": ""},
+        env={**os.environ, "SPARK_GRAFT_TMP": str(tmp_path)},
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-    got = json.loads(line)
+    got = json.loads([ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1])
     # driver + 2 executor JVMs registered
-    assert got["executors"] >= 3, got
-    assert got["n"] == want_n
-    assert got["hash"] == want_hash
+    assert got["jvms"] >= 3, got
+
+    monkeypatch.setenv("SPARK_GRAFT_TMP", str(tmp_path))
+    monkeypatch.syspath_prepend(str(ROOT / "bench"))
+    from pipeline_job import HASH_FAMILY, corpus_path
+
+    pages = spark.read.parquet(corpus_path(300))
+    triples = build_triples(spark, pages, linking_hash_family=HASH_FAMILY).triples
+    want = triples.agg(F.bit_xor(F.xxhash64("subj", "pred", "obj"))).first()[0]
+    assert got["triples"] == triples.count()
+    assert got["triples_hash"] == want

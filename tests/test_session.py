@@ -32,6 +32,7 @@ from ocds_entity_extract_spark.session import (
     _archive_key,
     _daemon_module,
     _driver_launch,
+    _master_cores,
     _publish_archive,
 )
 from tools.make_pyfiles import build as build_pyfiles
@@ -123,6 +124,15 @@ def test_engine_daemon_only_under_local_master():
     assert _daemon_module("local[2]") == "ocds_entity_extract_spark.pyworker"
 
 
+def test_master_cores():
+    assert _master_cores("local", 16) == 1
+    assert _master_cores("local[3]", 16) == 3
+    assert _master_cores("local[*]", 16) == 16
+    assert _master_cores("local-cluster[4,2,2560]", 16) == 8
+    assert _master_cores("spark://host:7077", 16) == 16
+    assert _master_cores("yarn", 16) == 16
+
+
 def _clean_env() -> dict:
     return {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
 
@@ -166,7 +176,8 @@ _SESSION = (
     "import sys; sys.path.insert(0, sys.argv[1]);"
     "from ocds_entity_extract_spark.session import get_spark;"
     "spark = get_spark('cds-test', master='local[1]');"
-    "print('rows', spark.range(10).count())"
+    "print('rows', spark.range(10).count());"
+    "print('py rows', spark.sparkContext.parallelize(range(3)).map(abs).count())"
 )
 
 
@@ -215,6 +226,16 @@ def test_archive_writing_session_keeps_jvm_logs_off_stdout(two_sessions):
     assert [p.name for p in home.glob("*.jsa")], "no archive was published"
     jvm_lines = [ln for ln in runs[0].stdout.splitlines() if "[cds]" in ln or "[warning]" in ln]
     assert not jvm_lines, jvm_lines[:5]
+
+
+def test_archive_writing_session_exits_without_traceback(two_sessions):
+    """The session ran a Python task, so pyspark's accumulator server holds
+    a connection from the JVM; ending the JVM to publish the archive must
+    not leave that server reading a closed socket."""
+    _, runs, _ = two_sessions
+    assert "py rows 3" in runs[0].stdout
+    for noise in ("Exception occurred during processing of request", "EOFError"):
+        assert noise not in runs[0].stderr, runs[0].stderr[-4000:]
 
 
 def _fake_install(tmp_path):
